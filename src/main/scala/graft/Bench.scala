@@ -120,62 +120,13 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the environment contract (local[32], shuffle
-    // partitions = cores); the driver overrides via SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_NO_EXT=1 skips the GraftExtensions injection — the
-    // same A/B aid Verify has, for isolating injected-rule overhead
-    // when adjudicating a flagged regression; the driver never sets it
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The fixtures are SINGLE parquet files (driver layout contract);
-      // at the default 128 MB maxPartitionBytes the 10× upscale tables
-      // (lineitem 113 MB) scan as ONE task and every downstream stage
-      // drains a single-threaded producer — the round-10 "superlinear"
-      // q_fact_build was mostly this. 16 MB ≈ sized so the upscale
-      // tables get tens of scan tasks; on a real cluster the same knob
-      // is tuned to executor-core count vs file sizes.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_GRAFT_NO_EXT")) builder
-                 else builder.config("spark.sql.extensions",
-                   "graft.functions.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Task-metric accounting: per-query shuffle/spill volume is
-    // the scale signal timings can't give (a query can be fast at
-    // sf0.1 while shuffling its whole input — the thing that dies at
-    // 100 TB). Counters accumulate on task end; ListenerBridge.drain
-    // flushes the bus so per-run deltas are exact.
-    val sc = spark.sparkContext
-    val mShuffle = new java.util.concurrent.atomic.AtomicLong
-    val mSpill = new java.util.concurrent.atomic.AtomicLong
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          mShuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          mSpill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    // Best-effort bus flush: waitUntilEmpty THROWS TimeoutException
-    // after 10 s if the dispatch thread is starved (exactly the
-    // contention regime the min-of-runs reporting exists for) — a
-    // drain failure must never turn a successfully timed query into a
-    // bench error, only leave that run's byte deltas approximate.
-    def drainQuiet(): Unit =
-      try org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
-      catch { case _: Throwable => () }
+    val spark = GraftSession()
+    val profile = new QueryProfile(spark)
     // Warm the session (noop sink registration, codegen, parquet
     // footer caches) on the tiny sf so the first timed query doesn't
-    // absorb one-time startup cost. Drain afterward so the warmup's
-    // in-flight task events don't bleed into the first query's deltas.
-    try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
+    // absorb one-time startup cost.
+    try profile.run(SparkEntry.entry(spark).write.mode("overwrite").format("noop").save())
     catch { case _: Throwable => () }
-    drainQuiet()
     // One warmup + THREE measured passes per query, report the MIN over
     // all four executions: single-run timings are not regression-
     // trustworthy (round-1 showed a 19× spread between near-identical
@@ -197,34 +148,14 @@ object Bench {
     case class Run(sec: Double, shuffleB: Long, spillB: Long)
     def execOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 dir: String): Run = {
-      val (s0, p0) = (mShuffle.get, mSpill.get)
-      val t0 = System.nanoTime()
-      try { fn(spark, dir).write.mode("overwrite").format("noop").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            // flush in-flight task-end events BEFORE reading deltas
-            // (outside the timed window; best-effort — see drainQuiet)
-            drainQuiet()
-            Run(sec, mShuffle.get - s0, mSpill.get - p0) }
-      catch { case e: Throwable =>
+                 dir: String): Run =
+      try {
+        val p = profile.run(fn(spark, dir).write.mode("overwrite").format("noop").save())
+        Run(p.wallSec, p.shuffleBytes, p.spillBytes)
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        // drain here too: a failed run's stragglers must not be
-        // charged to the NEXT run's byte deltas
-        drainQuiet()
         Run(-1.0, 0, 0) // a failed query reports -1, never a plausible fast time
       }
-      finally {
-        // free per-query resident state: the closure/PageRank queries
-        // leave their final localCheckpoint blocks persisted (one
-        // small RDD per invocation, reclaimed only on GC) — across
-        // 97 queries × 4 runs the accumulation degraded the
-        // late-alphabet queries ~10× (q_transitions 0.8 s isolated
-        // vs 11.6 s in-suite). No declared query shares persisted
-        // state across invocations, so a blanket unpersist is safe.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(false))
-      }
-    }
     // Streaming queries (q_stream_*) run 1 warm + 1 measured instead
     // of 1 + 3: their wall-clock is Structured-Streaming machinery
     // (temp-dir staging, forced micro-batches, checkpoint dirs) —
@@ -452,7 +383,7 @@ object Bench {
           .flatMap(n => ok.find(_.name == n))
         val qs = (top ++ extra).map(s => "\"" + s.name + "\":" + fmt(s.best, 2))
           .mkString("{", ",", "}")
-        s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","cpus":$cpus,""" +
+        s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","cpus":${GraftSession.cores},""" +
           s""""queries":$qs,"omitted":${stats.size - top.size - extra.size},$vols,$errs,""" +
           s"""$regs$scaling$upline$up30line,"sf":"$sfDir"}"""
       }

@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_NO_EXT=1 skips the GraftExtensions injection — an
-    // A/B debugging aid for isolating injected-rule overhead; the
-    // driver never sets it (plans are value-identical either way).
-    val spark = (if (sys.env.contains("SPARK_GRAFT_NO_EXT")) builder
-                 else builder.config("spark.sql.extensions",
-                   "graft.functions.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b restricts dump AND oracle manifest — a
     // local iteration aid (tools/check.py then checks just the subset);
@@ -33,11 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same per-query hygiene as Bench: closure/PageRank queries leave
-      // their final localCheckpoint blocks persisted; free them so the
-      // dump never degrades from accumulated executor storage
-      finally spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(false))
+      finally QueryProfile.endQuery(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

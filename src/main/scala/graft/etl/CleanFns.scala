@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object CleanFns {
 
-  /** F1+F2: trim + lower (reference `ETL/user_ETL.py:47-53`). */
-  def cleanLower(c: Column): Column = lower(trim(c))
-
   /** F1+F3: trim + title-case (reference `ETL/user_ETL.py:48-49`,
     * `ETL/loc_ETL.py:48-52`). `initcap` splits on whitespace only;
     * the pandas `.title()` divergence on `"men's"`-style strings is

@@ -26,13 +26,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Nondeterministic-but-cheap variant for pipelines where any
-    * representative row is acceptable (maps to a hash aggregate, no
-    * window sort).
-    */
-  def anyWins(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   // NOTE (round 18): a struct-MIN aggregate variant of firstWins
   // (the lastWins shape, mirrored) was measured against the window
   // form on the StarSchema paths and is a wash — min(struct) is not

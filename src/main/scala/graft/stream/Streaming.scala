@@ -40,19 +40,6 @@ object Streaming {
         col("event_type"), col("n_events"), col("sum_value"))
   }
 
-  /** Session windows (gap-based) per user with a watermark — the
-    * streaming twin of [[EventQueries.eventsSession]].
-    */
-  def sessionizedSums(events: DataFrame, gap: String = "30 minutes",
-                      lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("sum_value"))
-
   /** Stateful exact dedup within the watermark horizon — the streaming
     * analogue of the reference's upsert-keyed idempotence
     * (`ETL/fact_ETL.py:129-143` dedups on OrderNumber across batches).

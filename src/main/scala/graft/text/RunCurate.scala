@@ -163,14 +163,7 @@ object RunCurate {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_corpus"
     val minQ = if (args.length > 2) args(2).toDouble else 0.5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val t0 = System.nanoTime()
     val stats = curate(spark, sfDir, outDir, minQ)
     val total = (System.nanoTime() - t0) / 1e9

@@ -24,7 +24,6 @@ object StreamClockBridge {
     */
   final class Handle(val query: StreamingQuery, clock: ManualClock) {
     def advance(ms: Long): Unit = clock.advance(ms)
-    def timeMillis: Long = clock.getTimeMillis()
 
     /** Waits (wall-bounded) until batch `n` has COMPLETED. Progress is
       * reported after commit, so lastProgress.batchId >= n means batch

@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
   * rules demand, so a refactor that silently drops a broadcast hint,
   * widens a scan, or un-pushes a filter fails CI instead of surfacing
   * as a 100×-scale regression. (`graft.Explain` is the interactive
-  * twin; these are the assertions worth freezing.)
+  * twin, planning on the bench's `GraftSession` config; these are the
+  * assertions worth freezing, checked on the test session.)
   */
 class PlanAuditSpec extends SparkSpec {
 
