@@ -22,6 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object RunEtl {
 
+  /** One stage of a pipeline run (also RunCurate's and RunIndex's). */
   final case class StageStat(stage: String, rows: Long, seconds: Double)
 
   /** Build the full warehouse snapshot under `outDir`. Returns

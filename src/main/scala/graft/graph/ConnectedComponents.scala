@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 /** Distributed connected components by iterative min-label
   * propagation — the transitive-closure step that turns one-hop
   * near-dup buckets (MinHash band collisions, SimHash Hamming pairs)
@@ -26,7 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Lineage: labels are `localCheckpoint`-ed each round — without
   * truncation the plan doubles per iteration and the optimizer
-  * re-walks it quadratically. On a cluster with dynamic allocation
+  * re-walks it quadratically — and each superseded round is released
+  * with [[graft.Stage.free]] once the next one has materialized. On a cluster with dynamic allocation
   * prefer `spark.sparkContext.setCheckpointDir` + `checkpoint()`
   * (localCheckpoint blocks die with their executor); at 100 TB the
   * halving variant (large-star/small-star, Kiveris et al.,
@@ -36,71 +39,16 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** localCheckpoint persists RDD-level blocks that Dataset.unpersist
-    * cannot reach (it only consults the cache manager), so track the
-    * persisted-RDD ids around each checkpoint and free superseded
-    * checkpoints explicitly — otherwise executor storage holds stale
-    * copies until the ContextCleaner happens to GC them. The id diff
-    * is race-free as long as the calling driver thread is the only
-    * job submitter (true for the fixpoint loops here and the dedup
-    * pipelines in `graft.text`).
-    */
-  private[graft] def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val chk = df.localCheckpoint(true)
-    (chk, (sc.getPersistentRDDs.keySet -- before).toSet)
-  }
-
-  /** [[checkpointTracked]] with a LAZY localCheckpoint: the plan is
-    * truncated immediately (the returned frame reads a LogicalRDD),
-    * but materialization is deferred to the caller's next action over
-    * the FULL frame — which lets a fixpoint loop fuse the round's
-    * materialization job and its convergence probe into ONE driver
-    * job (the eager form pays a dedicated doCheckpoint job first).
-    * The caller MUST run an action that scans every partition (count
-    * over the whole frame — never isEmpty/take, which short-circuit
-    * and leave partitions to a second fill-in job) before freeing the
-    * previous round's blocks. Id tracking still works: localCheckpoint
-    * persists (registers) the RDD at call time, not at first compute.
-    */
-  private[graft] def lazyCheckpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val chk = df.localCheckpoint(false)
-    (chk, (sc.getPersistentRDDs.keySet -- before).toSet)
-  }
-
-  /** Unpersist the blocks tracked by [[checkpointTracked]]. Safe only
-    * after every consumer of the checkpointed frame has materialized:
-    * localCheckpoint blocks are NOT recomputable.
-    */
-  private[graft] def free(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-  }
-
   /** @param edges undirected edge list; orientation and duplicates
     *              are normalized away internally.
     * @return (node, component) where component = min node id
     *         reachable from `node`; every endpoint of `edges` appears
     *         exactly once. The result reads lazily from the final
-    *         round's localCheckpoint, whose blocks stay persisted
-    *         (ContextCleaner reclaims them on GC); callers that
-    *         materialize the result and want the blocks back now
-    *         should use [[runTracked]].
+    *         round's localCheckpoint; callers free its blocks with
+    *         [[graft.Stage.free]] once the result has materialized.
     */
   def run(edges: DataFrame, src: String = "src", dst: String = "dst",
-          maxIter: Int = 50): DataFrame =
-    runTracked(edges, src, dst, maxIter)._1
-
-  /** [[run]], plus the persisted-RDD ids backing the returned labels —
-    * pass them to [[free]] once the result has been materialized.
-    */
-  def runTracked(edges: DataFrame, src: String = "src", dst: String = "dst",
-                 maxIter: Int = 50): (DataFrame, Set[Int]) = {
-    def free(ids: Set[Int]): Unit = this.free(edges, ids)
-
+          maxIter: Int = 50): DataFrame = {
     val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
     // LAZY checkpoints for both setup frames: round 1's convergence
     // count is the first action over them, so ONE job materializes
@@ -110,8 +58,8 @@ object ConnectedComponents {
     // frames are consumed by two subtrees inside that job; the block
     // store's per-partition locks make the second consumer read, not
     // recompute.
-    val (sym, symIds) = lazyCheckpointTracked(
-      e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct())
+    val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
+      .localCheckpoint(false)
     // Fold ROUND 1 into initialization: labels₀(v) = min(N(v) ∪ {v})
     // comes out of the same aggregate that enumerates the distinct
     // nodes (sym is symmetric, so every endpoint appears as `a`) —
@@ -120,9 +68,9 @@ object ConnectedComponents {
     // two operations keyed the same way share one pass). Labels are
     // identical to the old code's after its first round, so the loop
     // below converges to the same fixpoint in one fewer iteration.
-    var (labels, labelIds) = lazyCheckpointTracked(
-      sym.groupBy(col("a")).agg(min(col("b")).as("mb"))
-        .select(col("a").as("node"), least(col("a"), col("mb")).as("lbl")))
+    var labels = sym.groupBy(col("a")).agg(min(col("b")).as("mb"))
+      .select(col("a").as("node"), least(col("a"), col("mb")).as("lbl"))
+      .localCheckpoint(false)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -135,11 +83,11 @@ object ConnectedComponents {
       // probe becomes a shuffle-free filter over the checkpointed
       // result — one join + one shuffle per round instead of two (the
       // old probe re-joined next against labels every round)
-      val (next, nextIds) = lazyCheckpointTracked(
-        labels.withColumn("own", lit(true)).union(nbr)
-          .groupBy("node")
-          .agg(min(col("lbl")).as("lbl"),
-            min(when(col("own"), col("lbl"))).as("prev_lbl")))
+      val next = labels.withColumn("own", lit(true)).union(nbr)
+        .groupBy("node")
+        .agg(min(col("lbl")).as("lbl"),
+          min(when(col("own"), col("lbl"))).as("prev_lbl"))
+        .localCheckpoint(false)
       // Convergence probe as a RAW RDD count over the lazily-
       // checkpointed internal rows: one driver job per round that BOTH
       // materializes the round's blocks (count scans every partition;
@@ -154,20 +102,19 @@ object ConnectedComponents {
       converged = next.queryExecution.toRdd
         .filter(r => !java.util.Objects.equals(r.get(iL, dt), r.get(iP, dt)))
         .count() == 0L
-      free(labelIds)
+      Stage.free(labels)
       labels = next.select(col("node"), col("lbl"))
-      labelIds = nextIds
       iter += 1
     }
-    free(symIds)
+    Stage.free(sym)
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter rounds " +
           "(diameter exceeds maxIter — raise it or use the halving variant)")
-    (labels.select(col("node"), col("lbl").as("component")), labelIds)
+    labels.select(col("node"), col("lbl").as("component"))
   }
 
-  /** [[runTracked]] with one STAR-CONTRACTION round in front: orient
+  /** [[run]] with one STAR-CONTRACTION round in front: orient
     * every edge (min, max), contract each node to the minimum of its
     * incident small-endpoints (plus itself where it IS one), run the
     * fixpoint only on the contracted graph of those local minima, and
@@ -184,9 +131,11 @@ object ConnectedComponents {
     * the 10×/30× legs pay for. Self-loops are dropped by orientation
     * (they never affect components); nodes incident ONLY to
     * self-loops do not occur in this codebase's edge lists.
+    * [[graft.Stage.free]] on the result frees the fixpoint's label
+    * blocks together with any staged input of `edges`.
     */
-  def runContractedTracked(edges: DataFrame, src: String = "src",
-                           dst: String = "dst"): (DataFrame, Set[Int]) = {
+  def runContracted(edges: DataFrame, src: String = "src",
+                    dst: String = "dst"): DataFrame = {
     val e = edges.select(
         least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -197,11 +146,10 @@ object ConnectedComponents {
       .filter(col("r") =!= col("r0"))
       .select(col("r0").as("src"), col("r").as("dst"))
       .distinct()
-    val (repComp, ids) = runTracked(repEdges)
-    val lbl = nodeMin
+    val repComp = run(repEdges)
+    nodeMin
       .join(repComp.withColumnRenamed("node", "r0"), Seq("r0"), "left")
       .select(col("node"), coalesce(col("component"), col("r0")).as("component"))
-    (lbl, ids)
   }
 
   /** The O(log d)-round variant: alternating Large-Star / Small-Star
@@ -223,14 +171,12 @@ object ConnectedComponents {
     */
   def runHalving(edges: DataFrame, src: String = "src", dst: String = "dst",
                  maxIter: Int = 50): DataFrame = {
-    def free(ids: Set[Int]): Unit = this.free(edges, ids)
-
     val e0 = edges.select(col(src).as("u"), col(dst).as("v"))
       .filter(col("u") =!= col("v"))
-    val (nodes, _) = checkpointTracked(
-      e0.select(col("u").as("node"))
-        .union(e0.select(col("v").as("node"))).distinct())
-    var (cur, curIds) = checkpointTracked(e0.distinct())
+    val nodes = e0.select(col("u").as("node"))
+      .union(e0.select(col("v").as("node"))).distinct()
+      .localCheckpoint(true)
+    var cur = e0.distinct().localCheckpoint(true)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -255,11 +201,10 @@ object ConnectedComponents {
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins2.select(col("u"), col("m").as("v")))
         .distinct()
-      val (next, nextIds) = checkpointTracked(small)
+      val next = small.localCheckpoint(true)
       converged = next.except(cur).isEmpty && cur.except(next).isEmpty
-      free(curIds)
+      Stage.free(cur)
       cur = next
-      curIds = nextIds
       iter += 1
     }
     if (!converged)
@@ -269,7 +214,7 @@ object ConnectedComponents {
     // carry no outgoing edge and self-label via the coalesce. The
     // final `cur` and `nodes` checkpoints stay persisted — the result
     // reads from them lazily and localCheckpoint blocks are not
-    // recomputable (the ContextCleaner reclaims them on GC).
+    // recomputable; Stage.free(result) releases both.
     nodes
       .join(cur.select(col("u").as("node"), col("v").as("root")), Seq("node"), "left")
       .select(col("node"), coalesce(col("root"), col("node")).as("component"))

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 /** Fixed-round HITS (Kleinberg 1999) in scaled INTEGER arithmetic —
   * the hubs-and-authorities companion to [[PageRank]]. Hubs are nodes
   * whose out-edges reach high-authority nodes; authorities are nodes
@@ -36,29 +38,26 @@ object Hits {
     * join, never dropped. Initial scores are `scale` for every node.
     */
   def integerHits(edges: DataFrame, rounds: Int, scale: Long): DataFrame = {
-    import ConnectedComponents.{checkpointTracked, free}
-    val (e, eIds) = checkpointTracked(edges.select(col("src"), col("dst")))
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val nodes = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
-    var (hub, hubIds) = checkpointTracked(nodes.withColumn("h", lit(scale)))
-    var (auth, authIds) = checkpointTracked(nodes.withColumn("a", lit(scale)))
+    var hub = nodes.withColumn("h", lit(scale)).localCheckpoint(true)
+    var auth = nodes.withColumn("a", lit(scale)).localCheckpoint(true)
     for (_ <- 1 to rounds) {
       val rawA = e.join(hub.withColumnRenamed("v", "src"), "src")
         .select(col("dst").as("v"), col("h"))
         .groupBy("v").agg(sum(col("h")).as("raw"))
-      val (nextA, nextAIds) = checkpointTracked(renorm(nodes, rawA, scale, "a"))
-      free(auth, authIds)
+      val nextA = renorm(nodes, rawA, scale, "a").localCheckpoint(true)
+      Stage.free(auth)
       auth = nextA
-      authIds = nextAIds
       val rawH = e.join(auth.withColumnRenamed("v", "dst"), "dst")
         .select(col("src").as("v"), col("a"))
         .groupBy("v").agg(sum(col("a")).as("raw"))
-      val (nextH, nextHIds) = checkpointTracked(renorm(nodes, rawH, scale, "h"))
-      free(hub, hubIds)
+      val nextH = renorm(nodes, rawH, scale, "h").localCheckpoint(true)
+      Stage.free(hub)
       hub = nextH
-      hubIds = nextHIds
     }
-    free(e, eIds)
+    Stage.free(e)
     hub.join(auth, "v")
   }
 

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 /** Fixed-iteration PageRank in scaled INTEGER arithmetic — the graph
   * centrality companion to [[ConnectedComponents]] (Page/Brin 1998;
   * d = 0.85 damping as 85/100 integer fractions).
@@ -39,40 +41,38 @@ object PageRank {
     * rᵢ₊₁(v) = ⌊15·scale/(100·N)⌋ + Σ_{u→v} ⌊85·rᵢ(u)/(100·deg(u))⌋.
     */
   def integerRanks(edges: DataFrame, iterations: Int, scale: Long): DataFrame = {
-    import ConnectedComponents.{checkpointTracked, free}
     // checkpoint the edge list ONCE: each iteration references it from
     // two branches (contrib join + the nodes/deg side), so without
     // lineage truncation the (often expensive) edge derivation — e.g.
     // the MinHash banding pipeline in q_pagerank — is recomputed
     // per reference per round (observed: 44 identical document scans
-    // in the 3-round physical plan). Same localCheckpoint discipline
-    // and block hygiene as the CC fixpoint loop.
-    val (e, eIds) = checkpointTracked(
-      edges.select(col("src"), col("dst")))
+    // in the 3-round physical plan). Each superseded round is freed
+    // with Stage.free once the next one is materialized, as in the CC
+    // fixpoint loop.
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = deg.select(col("src").as("v"), col("deg"))
     val n = nodes.agg(count(lit(1)).as("n_nodes"))
-    var (ranks, rankIds) = checkpointTracked(
-      nodes.crossJoin(broadcast(n))
-        .select(col("v"), col("deg"),
-          expr(s"CAST($scale DIV n_nodes AS BIGINT)").as("r")))
+    var ranks = nodes.crossJoin(broadcast(n))
+      .select(col("v"), col("deg"),
+        expr(s"CAST($scale DIV n_nodes AS BIGINT)").as("r"))
+      .localCheckpoint(true)
     for (_ <- 1 to iterations) {
       val contrib = e
         .join(ranks.withColumnRenamed("v", "src"), "src")
         .select(col("dst").as("v"),
           expr("CAST((85 * r) DIV (100 * deg) AS BIGINT)").as("c"))
         .groupBy("v").agg(sum(col("c")).as("contrib"))
-      val (next, nextIds) = checkpointTracked(
-        nodes.join(contrib, Seq("v"), "left")
-          .crossJoin(broadcast(n))
-          .select(col("v"), col("deg"),
-            expr(s"CAST((15 * $scale) DIV (100 * n_nodes)" +
-              " + coalesce(contrib, 0) AS BIGINT)").as("r")))
-      free(ranks, rankIds)
+      val next = nodes.join(contrib, Seq("v"), "left")
+        .crossJoin(broadcast(n))
+        .select(col("v"), col("deg"),
+          expr(s"CAST((15 * $scale) DIV (100 * n_nodes)" +
+            " + coalesce(contrib, 0) AS BIGINT)").as("r"))
+        .localCheckpoint(true)
+      Stage.free(ranks)
       ranks = next
-      rankIds = nextIds
     }
-    free(e, eIds)
+    Stage.free(e)
     ranks
   }
 }

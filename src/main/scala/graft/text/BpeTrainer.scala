@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 /** Multi-round BPE merge training (Sennrich, Haddow & Birch, ACL
   * 2016) — the driver-paced extension of [[DocOps.bpePairs]] (which
   * oracle-verifies exactly one round's pair statistics). Each round:
@@ -89,15 +91,14 @@ object BpeTrainer {
 
   /** Run `rounds` merge elections. Returns the merges in order plus
     * the final symbol table (reads from the final round's
-    * localCheckpoint; superseded rounds' blocks are freed via the
-    * [[graft.graph.ConnectedComponents.checkpointTracked]] protocol).
+    * localCheckpoint, released with [[graft.Stage.free]]; superseded
+    * rounds' blocks are freed as each next round materializes).
     * Stops early if no pair remains (all words fused to one symbol).
     */
   def train(vocab: DataFrame, rounds: Int): (Seq[Merge], Dataset[SymWord]) = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, free}
     val spark = vocab.sparkSession
     import spark.implicits._
-    var (words, ids) = checkpointTracked(initSymbols(vocab).toDF)
+    var words = initSymbols(vocab).toDF.localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var r = 0
     var exhausted = false
@@ -111,11 +112,11 @@ object BpeTrainer {
         case None => exhausted = true
         case Some((a, b, n)) =>
           merges += Merge(a, b, n)
-          val (next, nextIds) = checkpointTracked(
-            words.as[SymWord].map(w => SymWord(applyMerge(w.symbols, a, b), w.freq)).toDF)
-          free(words, ids) // safe: `next` is materialized by the eager checkpoint
+          val next = words.as[SymWord]
+            .map(w => SymWord(applyMerge(w.symbols, a, b), w.freq)).toDF
+            .localCheckpoint(true)
+          Stage.free(words) // safe: `next` is materialized by the eager checkpoint
           words = next
-          ids = nextIds
       }
       r += 1
     }
@@ -133,7 +134,7 @@ object BpeTrainer {
       .groupBy("word")
       .agg(count(lit(1)).as("freq"))
     val (merges, fin) = train(vocab, rounds)
-    fin.unpersist()
+    Stage.free(fin)
     merges
   }
 }

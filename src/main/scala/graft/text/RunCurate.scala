@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.etl.RunEtl.StageStat
 import graft.schema.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,8 +43,6 @@ import org.apache.spark.sql.functions._
   * and nothing is pairwise.
   */
 object RunCurate {
-
-  final case class StageStat(stage: String, rows: Long, seconds: Double)
 
   /** Lexicon-argmax language prediction over a STAGED tokens column:
     * score every candidate language by marker hits, pick the best,

@@ -1,5 +1,7 @@
 package graft.text
 
+import graft.Stage
+import graft.graph.ConnectedComponents
 import graft.schema.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1421,40 +1423,23 @@ object TextQueries {
     * oracle computes (the [[etl.AggMaintain]] / [[deltaDedup]]
     * incremental-≡-batch contract, graph edition). Demo recomputes
     * the base labeling; a deployment reads it from the snapshot store
-    * exactly like [[deltaDedup]]'s band index.
-    */
-  /** Connected components of a MIN-ORIENTED edge list — every edge
-    * (a, b) has a < b with `a` a band representative — by star
-    * contraction: each node's incidence set is the reps of its edges
-    * plus itself where it is a rep; contract every node to its MIN
-    * incident rep, connect reps that co-occur in one node's incidence,
-    * run the driver-paced fixpoint on the contracted REP graph only,
-    * and lift labels back through the node→min-rep map. The labeling
-    * is IDENTICAL to the raw fixpoint over the symmetrized edges: a
-    * component's global min node always appears as a rep (every edge
-    * is min-oriented, so a non-rep minimum would have a smaller
-    * neighbor — contradiction), rep-graph connectivity mirrors node
-    * connectivity through shared incidences, and min-rep labels lift
-    * exactly. Same construction [[docComponentsTracked]] uses for the
-    * full band graph (oracle-proven there), generalized to edge
-    * SUBSETS (ccRefresh's pre-batch graph, ccForget's survivor and
-    * touched subgraphs) — the fixpoint runs at rep grain instead of
+    * exactly like [[deltaDedup]]'s band index. The base labeling (and
+    * [[ccForget]]'s touched-subgraph re-run) runs
+    * [[ConnectedComponents.runContracted]] over min-oriented band edges
+    * — the star contraction [[docComponentsWithCollisions]] applies to
+    * the full band graph, so the fixpoint iterates at rep grain, not
     * doc grain, which is what the 10×/30× legs pay for.
     */
-  private[text] def contractedComponentsTracked(p: DataFrame): (DataFrame, Set[Int]) =
-    graft.graph.ConnectedComponents.runContractedTracked(p, "a", "b")
-
   def ccRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents
-    val (p, pIds) = ConnectedComponents.checkpointTracked(
-      bandReps(Tables.documents(spark, sfDir))
-        .filter(col("rep") < col("doc_id"))
-        .select(col("rep").as("a"), col("doc_id").as("b"))
-        .distinct())
+    val p = bandReps(Tables.documents(spark, sfDir))
+      .filter(col("rep") < col("doc_id"))
+      .select(col("rep").as("a"), col("doc_id").as("b"))
+      .distinct()
+      .localCheckpoint(true)
     def isNew(c: Column): Column = pmod(c, lit(10)) === CcBatchResidue
     val oldE = p.filter(!isNew(col("a")) && !isNew(col("b")))
     val newE = p.filter(isNew(col("a")) || isNew(col("b")))
-    val (base, baseIds) = contractedComponentsTracked(oldE)
+    val base = ConnectedComponents.runContracted(oldE, "a", "b")
     val contracted = newE
       .join(base.select(col("node").as("a"), col("component").as("compA")),
         Seq("a"), "left")
@@ -1466,7 +1451,7 @@ object TextQueries {
     val deltaSym = contracted.select(col("u").as("src"), col("w").as("dst"))
       .unionByName(contracted.select(col("w").as("src"), col("u").as("dst")))
       .distinct()
-    val (delta, deltaIds) = ConnectedComponents.runTracked(deltaSym)
+    val delta = ConnectedComponents.run(deltaSym)
     val nodes = p.select(col("a").as("node"))
       .unionByName(p.select(col("b").as("node"))).distinct()
     val lbl = nodes.join(base, Seq("node"), "left")
@@ -1479,8 +1464,8 @@ object TextQueries {
       .orderBy("component")
     // same block hygiene as docComponents: pin the tiny result, then
     // free the collision set and both fixpoints' label blocks
-    val (res, _) = ConnectedComponents.checkpointTracked(out)
-    ConnectedComponents.free(p, pIds ++ baseIds ++ deltaIds)
+    val res = out.localCheckpoint(true)
+    Stage.free(p, base, delta)
     res
   }
 
@@ -1517,14 +1502,13 @@ object TextQueries {
     * the snapshot store.
     */
   def ccForget(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents
-    val (p, pIds) = ConnectedComponents.checkpointTracked(
-      bandReps(Tables.documents(spark, sfDir))
-        .filter(col("rep") < col("doc_id"))
-        .select(col("rep").as("a"), col("doc_id").as("b"))
-        .distinct())
+    val p = bandReps(Tables.documents(spark, sfDir))
+      .filter(col("rep") < col("doc_id"))
+      .select(col("rep").as("a"), col("doc_id").as("b"))
+      .distinct()
+      .localCheckpoint(true)
     def erased(c: Column): Column = pmod(c, lit(11)) === ForgetResidue
-    val (base, baseIds) = contractedComponentsTracked(p)
+    val base = ConnectedComponents.runContracted(p, "a", "b")
     val touched = base.filter(erased(col("node")))
       .select(col("component").as("tc")).distinct()
     val kept = p.filter(!erased(col("a")) && !erased(col("b")))
@@ -1539,7 +1523,7 @@ object TextQueries {
         "left_anti")
     // affected is an (a, b) subset of p — still min-oriented, so the
     // same contraction applies to the touched-subgraph re-run
-    val (aff, affIds) = contractedComponentsTracked(affected)
+    val aff = ConnectedComponents.runContracted(affected, "a", "b")
     val untouchedLbl = untouched.select(col("a").as("node"))
       .unionByName(untouched.select(col("b").as("node"))).distinct()
       .join(base, Seq("node"))
@@ -1548,8 +1532,8 @@ object TextQueries {
       .groupBy("component").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > 1)
       .orderBy("component")
-    val (res, _) = ConnectedComponents.checkpointTracked(out)
-    ConnectedComponents.free(p, pIds ++ baseIds ++ affIds)
+    val res = out.localCheckpoint(true)
+    Stage.free(p, base, aff)
     res
   }
 
@@ -1605,34 +1589,32 @@ object TextQueries {
     * identical rounds as CTEs.
     */
   def kcore(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, lazyCheckpointTracked, free}
     val pairs = bandReps(Tables.documents(spark, sfDir))
       .filter(col("rep") < col("doc_id"))
       .select(col("rep").as("a"), col("doc_id").as("b"))
       .distinct()
-    var (e, eIds) = checkpointTracked(
-      pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst"))))
+    var e = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+      .localCheckpoint(true)
     val rows = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long, Long)]
     for (r <- 1 to KcoreRounds) {
-      val (deg, dIds) = lazyCheckpointTracked(
-        e.groupBy("src").agg(count(lit(1)).as("deg")))
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint(false)
       // one job: materializes the degree blocks AND collects both
       // scalars (the global aggregate scans every partition)
       val cnt = deg.agg(count(lit(1)).as("n"),
         count(when(col("deg") >= KcoreK, 1)).as("k")).head()
       val (nCur, nKeep) = (cnt.getLong(0), cnt.getLong(1))
       val keep = deg.filter(col("deg") >= KcoreK).select(col("src").as("v"))
-      val (e2, e2Ids) = lazyCheckpointTracked(
-        e.join(keep.select(col("v").as("src")), "src")
-          .join(keep.select(col("v").as("dst")), "dst")
-          .select(col("src"), col("dst")))
+      val e2 = e.join(keep.select(col("v").as("src")), "src")
+        .join(keep.select(col("v").as("dst")), "dst")
+        .select(col("src"), col("dst"))
+        .localCheckpoint(false)
       val nE = e2.count() / 2
-      free(e, eIds); free(keep, dIds)
-      e = e2; eIds = e2Ids
+      Stage.free(e, deg)
+      e = e2
       rows += ((r, nCur - nKeep, nKeep, nE))
     }
-    free(e, eIds)
+    Stage.free(e)
     import spark.implicits._
     rows.toSeq.toDF("round", "n_removed", "n_nodes", "n_edges")
       .orderBy("round")
@@ -1673,53 +1655,48 @@ object TextQueries {
     * Shape: driver-paced frontier expansion, one equi-join + anti-
     * join per depth (work ∝ frontier-adjacent edges, never the whole
     * graph); every round's frontier and the accumulated visited set
-    * are `checkpointTracked` with superseded blocks freed, per the
-    * iterative-kernel rule. Seed selection is a TakeOrdered over the
-    * distinct node set (bounded output, no global sort
-    * materialization). The oracle unrolls the same [[BfsDepth]]
+    * are localCheckpoint-ed and superseded blocks freed with
+    * [[graft.Stage.free]], per the iterative-kernel rule. Seed
+    * selection is a TakeOrdered over the distinct node set (bounded
+    * output, no global sort materialization). The oracle unrolls the same [[BfsDepth]]
     * levels as CTEs with EXCEPT-based visited masking.
     *
     * All-integer outputs; no float parity surface at all.
     */
   def bfsKhop(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, lazyCheckpointTracked, free}
     val pairs = bandReps(Tables.documents(spark, sfDir))
       .filter(col("rep") < col("doc_id"))
       .select(col("rep").as("a"), col("doc_id").as("b"))
       .distinct()
-    val (edges, eIds) = checkpointTracked(
-      pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst"))))
+    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+      .localCheckpoint(true)
     val seeds = edges.select(col("src").as("v")).distinct()
       .orderBy("v").limit(BfsSeeds)
-    var (visited, visIds) = checkpointTracked(
-      seeds.select(col("v").as("seed"), col("v"), lit(0).as("dist")))
+    var visited = seeds.select(col("v").as("seed"), col("v"), lit(0).as("dist"))
+      .localCheckpoint(true)
     var frontier = visited
-    var frontIds = Set.empty[Int]
     for (d <- 1 to BfsDepth) {
       // frontier LAZY: vis2's eager checkpoint below is a narrow union
       // over (visited ∪ next) that scans every `next` partition, so it
       // doubles as next's materialization — one fused job per depth
       // instead of two (the CC fixpoint's fused-probe discipline)
-      val (next, nIds) = lazyCheckpointTracked(
-        frontier.join(edges, frontier("v") === edges("src"))
-          .select(col("seed"), col("dst").as("v")).distinct()
-          .join(visited.select(col("seed"), col("v")), Seq("seed", "v"), "left_anti")
-          .withColumn("dist", lit(d)))
-      val (vis2, v2Ids) = checkpointTracked(visited.unionByName(next))
-      free(visited, visIds)
-      if (frontIds.nonEmpty) free(frontier, frontIds)
-      visited = vis2; visIds = v2Ids
-      frontier = next; frontIds = nIds
+      val next = frontier.join(edges, frontier("v") === edges("src"))
+        .select(col("seed"), col("dst").as("v")).distinct()
+        .join(visited.select(col("seed"), col("v")), Seq("seed", "v"), "left_anti")
+        .withColumn("dist", lit(d))
+        .localCheckpoint(false)
+      val vis2 = visited.unionByName(next).localCheckpoint(true)
+      Stage.free(visited, frontier)
+      visited = vis2
+      frontier = next
     }
     val out = visited.groupBy("seed", "dist")
       .agg(count(lit(1)).as("n_nodes"))
       .filter(col("dist") > 0)
       .orderBy("seed", "dist")
       .localCheckpoint(true)
-    free(visited, visIds)
-    if (frontIds.nonEmpty) free(frontier, frontIds)
-    free(edges, eIds)
+    Stage.free(visited, frontier, edges)
     out
   }
 
@@ -1934,26 +1911,25 @@ object TextQueries {
   /** [[docComponents]] plus the CHECKPOINTED collision set it was
     * built from — for consumers that need both the labeling and the
     * collision edges ([[splitLeakage]]) without paying the minhash
-    * signature scan twice. The returned `br` stays resident (its ids
-    * are returned, NOT freed); callers that don't consume it use
-    * [[docComponents]], which frees it immediately.
+    * signature scan twice. The returned collision set stays resident
+    * (the caller frees it with [[graft.Stage.free]]); callers that
+    * don't consume it use [[docComponents]], which frees it
+    * immediately.
     */
-  private[text] def docComponentsTracked(
-      docs: DataFrame): (DataFrame, DataFrame, Set[Int]) = {
-    import graft.graph.ConnectedComponents
+  private[text] def docComponentsWithCollisions(
+      docs: DataFrame): (DataFrame, DataFrame) = {
     // materialize the collision stage once: it feeds THREE consumers
     // (docMin, repEdges, and the final attach join), and without the
     // checkpoint each re-evaluates the full minhash signature scan —
     // the single most expensive expression in the pipeline. The
     // materialized set is (doc_id, rep) pairs, tiny next to the text.
-    val (br, brIds) = ConnectedComponents.checkpointTracked(
-      bandReps(docs).select("doc_id", "rep").distinct())
+    val br = bandReps(docs).select("doc_id", "rep").distinct().localCheckpoint(true)
     val docMin = br.groupBy("doc_id").agg(min(col("rep")).as("rep0"))
     val repEdges = br.join(docMin, "doc_id")
       .filter(col("rep") =!= col("rep0"))
       .select(col("rep0").as("src"), col("rep").as("dst"))
       .distinct()
-    val (repComp, repIds) = ConnectedComponents.runTracked(repEdges)
+    val repComp = ConnectedComponents.run(repEdges)
     val out = docMin.join(repComp.withColumnRenamed("node", "rep0"),
         Seq("rep0"), "left")
       .select(col("doc_id"),
@@ -1963,16 +1939,15 @@ object TextQueries {
     // are unreachable by Dataset.unpersist, and without this every
     // invocation (Bench runs each closure query twice per session)
     // parks a persisted RDD until ContextCleaner GC.
-    val (res, _) = ConnectedComponents.checkpointTracked(out)
-    ConnectedComponents.free(docs, repIds)
-    (res, br, brIds)
+    val res = out.localCheckpoint(true)
+    Stage.free(repComp)
+    (res, br)
   }
 
   private[text] def docComponents(docs: DataFrame): DataFrame = {
-    import graft.graph.ConnectedComponents
-    val (res, _, brIds) = docComponentsTracked(docs)
-    // collision set not consumed here — free it NOW (see tracked doc)
-    ConnectedComponents.free(docs, brIds)
+    val (res, br) = docComponentsWithCollisions(docs)
+    // collision set not consumed here — free it NOW
+    Stage.free(br)
     res
   }
 
@@ -2314,11 +2289,9 @@ object TextQueries {
     * 16 MB: the 30× upscale's signature table (~35 MB, 79k sigs)
     * crosses it — the scale path gets exercised by the 30× bench leg,
     * not just trusted — while sf0.01/sf0.1 (~2 MB) stay comfortably
-    * under (broadcast gate plan unchanged). Overridable for A/B
-    * timing.
+    * under (broadcast gate plan unchanged).
     */
-  private val PpBroadcastBytes =
-    sys.env.getOrElse("SPARK_GRAFT_PPJOIN_BCAST_BYTES", s"${16L * 1024 * 1024}").toLong
+  private val PpBroadcastBytes = 16L * 1024 * 1024
 
   /** EXACT set-similarity self-join via prefix filtering (SSJoin /
     * PPJoin family — Chaudhuri et al. ICDE'06, Bayardo et al. WWW'07,
@@ -4037,7 +4010,7 @@ object TextQueries {
     // one signature scan for BOTH the labeling and the edge list: the
     // closure's checkpointed collision set IS the edge set (already
     // distinct (doc_id, rep) pairs)
-    val (comp, br, brIds) = docComponentsTracked(docs)
+    val (comp, br) = docComponentsWithCollisions(docs)
     val edges = br
       .filter(col("doc_id") =!= col("rep"))
       .select(col("rep").as("a"), col("doc_id").as("b"))
@@ -4070,9 +4043,8 @@ object TextQueries {
     // materialize the 2-row result, then free the checkpointed
     // collision set NOW — Bench runs each query 4+ times per session
     // and un-freed blocks accumulate until ContextCleaner GC
-    import graft.graph.ConnectedComponents
-    val (res, _) = ConnectedComponents.checkpointTracked(out)
-    ConnectedComponents.free(docs, brIds)
+    val res = out.localCheckpoint(true)
+    Stage.free(br)
     res
   }
 

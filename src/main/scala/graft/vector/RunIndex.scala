@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.etl.RunEtl.StageStat
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,8 +26,6 @@ import org.apache.spark.sql.functions._
 object RunIndex {
 
   import VectorQueries.{LshBits, LshStride, TopK}
-
-  final case class StageStat(stage: String, rows: Long, seconds: Double)
 
   private def staged(vecs: DataFrame): DataFrame =
     vecs.withColumn("bucket",

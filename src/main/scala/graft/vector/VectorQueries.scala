@@ -1,5 +1,7 @@
 package graft.vector
 
+import graft.Stage
+import graft.graph.ConnectedComponents
 import graft.schema.Tables
 import graft.text.TextFns.{duckRound4, round4}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -467,22 +469,22 @@ object VectorQueries {
     *
     * Shape: driver-paced [[KCenterSeeds]] rounds (the
     * ConnectedComponents discipline — per-round min-distance state is
-    * checkpointTracked and superseded blocks freed); each round is one
+    * localCheckpoint-ed and superseded blocks freed with
+    * [[graft.Stage.free]]); each round is one
     * broadcast-seed map + one 1-row TakeOrdered collect — linear per
     * round, never pairwise. Parity: distances are 1 − the staged-norm
     * cosine (identical fold, identical division, exact subtraction);
     * argmax ties break on vec_id over identical bits.
     */
   def kcenter(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, free}
     val vecs = withVecs(spark, sfDir).localCheckpoint(true)
     def seedOf(id: Long) = broadcast(vecs.filter(col("vec_id") === id)
       .select(col("v").as("sv"), col("nrm").as("snrm")))
-    var (dists, ids) = checkpointTracked(
-      vecs.filter(col("vec_id") =!= 0L).crossJoin(seedOf(0L))
-        .select(col("vec_id"), col("v"), col("nrm"),
-          (lit(1.0) - VectorFns.dot(col("v"), col("sv")) /
-            (col("nrm") * col("snrm"))).as("d")))
+    var dists = vecs.filter(col("vec_id") =!= 0L).crossJoin(seedOf(0L))
+      .select(col("vec_id"), col("v"), col("nrm"),
+        (lit(1.0) - VectorFns.dot(col("v"), col("sv")) /
+          (col("nrm") * col("snrm"))).as("d"))
+      .localCheckpoint(true)
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
     (1 to KCenterSeeds).foreach { rank =>
       val top = dists.orderBy(col("d").desc, col("vec_id")).limit(1)
@@ -490,14 +492,14 @@ object VectorQueries {
       val (sid, sel) = (top.getLong(0), top.getDouble(1))
       picked += ((rank, sid, sel))
       if (rank < KCenterSeeds) {
-        val (next, nextIds) = checkpointTracked(
-          dists.crossJoin(seedOf(sid))
-            .select(col("vec_id"), col("v"), col("nrm"),
-              least(col("d"), lit(1.0) - VectorFns.dot(col("v"), col("sv")) /
-                (col("nrm") * col("snrm"))).as("d")))
-        free(dists, ids)
-        dists = next; ids = nextIds
-      } else free(dists, ids)
+        val next = dists.crossJoin(seedOf(sid))
+          .select(col("vec_id"), col("v"), col("nrm"),
+            least(col("d"), lit(1.0) - VectorFns.dot(col("v"), col("sv")) /
+              (col("nrm") * col("snrm"))).as("d"))
+          .localCheckpoint(true)
+        Stage.free(dists)
+        dists = next
+      } else Stage.free(dists)
     }
     import org.apache.spark.sql.SparkSession
     val s = spark
@@ -1725,7 +1727,6 @@ object VectorQueries {
     * exactly the `q_cc_clusters` pattern.
     */
   def semanticDedupExact(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents
     val cells = withCappedBlock(assignedCells(withVecs(spark, sfDir)), "cell")
     val edges = cells.as("a").join(cells.as("b"),
         col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
@@ -1733,10 +1734,10 @@ object VectorQueries {
         col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm")))
       .filter(col("sim") >= NearDupThreshold)
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
-    // star-contraction front (runContractedTracked scaladoc): the
-    // fixpoint iterates over the local-minima graph only — identical
-    // labeling, fewer rounds of edge-grain shuffle at scale
-    val (comp, compIds) = ConnectedComponents.runContractedTracked(edges)
+    // star-contraction front (runContracted scaladoc): the fixpoint
+    // iterates over the local-minima graph only — identical labeling,
+    // fewer rounds of edge-grain shuffle at scale
+    val comp = ConnectedComponents.runContracted(edges)
     val out = cells.select(col("vec_id"), col("cell"))
       .join(comp.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
@@ -1745,9 +1746,10 @@ object VectorQueries {
         when(col("sem_rep") === col("vec_id"), 1L).otherwise(0L))
       .orderBy("vec_id")
     // materialize the small labeling so the per-round checkpoint
-    // blocks can be freed now (the docComponents convention)
-    val (res, _) = ConnectedComponents.checkpointTracked(out)
-    ConnectedComponents.free(out, compIds)
+    // blocks can be freed now (the docComponents convention); `comp`
+    // also reads the staged cells, which `res` no longer needs
+    val res = out.localCheckpoint(true)
+    Stage.free(comp)
     res
   }
 
@@ -1860,7 +1862,6 @@ object VectorQueries {
     * regardless of corpus size.
     */
   def mmrRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, free}
     val vecs = withVecs(spark, sfDir)
     val probe = vecs.filter(col("vec_id") === 0)
       .select(col("v").as("pv"), col("nrm").as("pnrm"))
@@ -1871,18 +1872,18 @@ object VectorQueries {
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(MmrPool)
       .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("rel"))
-    val (cands, candIds) = checkpointTracked(pool)
-    val (pairs, pairIds) = checkpointTracked(
-      cands.as("a").join(cands.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("cid"), col("b.vec_id").as("sid"),
-          round6(VectorFns.cosineStaged(
-            col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))).as("ps")))
-    var (sel, selIds) = checkpointTracked(
-      cands
-        .orderBy(round6(col("rel") * 0.5).desc, col("vec_id"))
-        .limit(1)
-        .select(lit(1).as("pick"), col("vec_id"), col("label"),
-          (col("rel") * 0.5).as("score")))
+    val cands = pool.localCheckpoint(true)
+    val pairs = cands.as("a").join(cands.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("cid"), col("b.vec_id").as("sid"),
+        round6(VectorFns.cosineStaged(
+          col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))).as("ps"))
+      .localCheckpoint(true)
+    var sel = cands
+      .orderBy(round6(col("rel") * 0.5).desc, col("vec_id"))
+      .limit(1)
+      .select(lit(1).as("pick"), col("vec_id"), col("label"),
+        (col("rel") * 0.5).as("score"))
+      .localCheckpoint(true)
     (2 to MmrK).foreach { k =>
       val pickK = cands
         .join(sel.select("vec_id"), Seq("vec_id"), "left_anti")
@@ -1894,13 +1895,11 @@ object VectorQueries {
         .orderBy(round6(col("score")).desc, col("vec_id"))
         .limit(1)
         .select(lit(k).as("pick"), col("vec_id"), col("label"), col("score"))
-      val (next, nextIds) = checkpointTracked(sel.unionByName(pickK))
-      free(sel, selIds)
+      val next = sel.unionByName(pickK).localCheckpoint(true)
+      Stage.free(sel)
       sel = next
-      selIds = nextIds
     }
-    free(cands, candIds)
-    free(pairs, pairIds)
+    Stage.free(cands, pairs)
     sel.select(col("pick"), col("vec_id"), col("label"),
         round4(col("score")).as("score"))
       .orderBy("pick")
@@ -2317,7 +2316,8 @@ object VectorQueries {
     * truss decomposition, which no single SQL pass can express
     * (each deletion can cascade). Driver-paced like
     * [[graft.graph.ConnectedComponents]]: each round's survivor set is
-    * checkpointTracked and superseded blocks are freed, so round n
+    * localCheckpoint-ed and superseded blocks are freed with
+    * [[graft.Stage.free]], so round n
     * never re-derives round n−1's joins. Converges in ≤ maxIter
     * rounds or returns the current survivors (peeling only deletes, so
     * every round strictly shrinks or terminates). Spec-gated
@@ -2325,22 +2325,21 @@ object VectorQueries {
     * oracle-gated face is [[trussSupport]]'s round-0 census.
     */
   private[vector] def trussPeel(edges: DataFrame, k: Int, maxIter: Int = 20): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, free}
-    var (cur, curIds) = checkpointTracked(edges.select(col("u"), col("w")))
+    var cur = edges.select(col("u"), col("w")).localCheckpoint(true)
     var n = cur.count()
     var iter = 0
     var stable = false
     while (!stable && iter < maxIter) {
       // stage the round's degree orientation once (three join legs);
       // freed as soon as `next` is materialized (eager checkpoint)
-      val (ori, oriIds) = checkpointTracked(degreeOrient(cur))
-      val (next, nextIds) = checkpointTracked(
-        edgeSupportOriented(cur, ori)
-          .filter(col("support") >= k - 2).select(col("u"), col("w")))
-      free(cur, oriIds)
+      val ori = degreeOrient(cur).localCheckpoint(true)
+      val next = edgeSupportOriented(cur, ori)
+        .filter(col("support") >= k - 2).select(col("u"), col("w"))
+        .localCheckpoint(true)
+      Stage.free(ori)
       val m = next.count()
-      if (m == n) { stable = true; free(next, nextIds) }
-      else { free(cur, curIds); cur = next; curIds = nextIds; n = m }
+      if (m == n) { stable = true; Stage.free(next) }
+      else { Stage.free(cur); cur = next; n = m }
       iter += 1
     }
     cur
@@ -2363,9 +2362,8 @@ object VectorQueries {
     * fact-scale cumulative would go through PrefixScan instead).
     */
   def trussSupport(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, free}
     val edges = collisionEdges(spark, sfDir)
-    val (ori, oriIds) = checkpointTracked(degreeOrient(edges))
+    val ori = degreeOrient(edges).localCheckpoint(true)
     val census = edgeSupportOriented(edges, ori)
       .groupBy("support").agg(count(lit(1)).as("n_edges"))
     val w = org.apache.spark.sql.expressions.Window
@@ -2373,11 +2371,12 @@ object VectorQueries {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     // materialize the bounded census (≤ max-support rows), then free
     // the staged orientation now rather than on ContextCleaner GC
-    val (res, _) = checkpointTracked(census
+    val res = census
       .withColumn("cum_edges", sum(col("n_edges")).over(w))
       .select(col("support"), col("n_edges"), col("cum_edges"))
-      .orderBy("support"))
-    free(edges, oriIds)
+      .orderBy("support")
+      .localCheckpoint(true)
+    Stage.free(ori)
     res
   }
 
@@ -3470,9 +3469,8 @@ object VectorQueries {
     * BROADCAST back, so re-assignment is a per-row map — the round
     * cost is one aggregate + one scan, no vector ever shuffles.
     * Driver-paced per the CLAUDE.md iterative-kernel rule: each
-    * round's assignment is localCheckpoint'd eagerly
-    * ([[graft.graph.ConnectedComponents.checkpointTracked]]) and the
-    * superseded round freed — an un-checkpointed round-r plan would
+    * round's assignment is localCheckpoint'd eagerly and the
+    * superseded round freed ([[graft.Stage.free]]) — an un-checkpointed round-r plan would
     * re-derive every earlier round once per reference (the q_pagerank
     * 44-scan pathology), and the lineage would double per round.
     *
@@ -3483,17 +3481,14 @@ object VectorQueries {
     * forms.
     */
   def kmeansRefine(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents.{checkpointTracked, free}
-    val (vecs, vecIds) = checkpointTracked(withVecs(spark, sfDir))
-    var (assigned, ids) = checkpointTracked(assignStep(vecs, codebookBy(vecs, "label")))
+    val vecs = withVecs(spark, sfDir).localCheckpoint(true)
+    var assigned = assignStep(vecs, codebookBy(vecs, "label")).localCheckpoint(true)
     (1 to KmRounds).foreach { _ =>
-      val (next, nextIds) =
-        checkpointTracked(assignStep(vecs, codebookBy(assigned, "cell")))
-      free(assigned, ids) // safe: `next` is materialized by the eager checkpoint
+      val next = assignStep(vecs, codebookBy(assigned, "cell")).localCheckpoint(true)
+      Stage.free(assigned) // safe: `next` is materialized by the eager checkpoint
       assigned = next
-      ids = nextIds
     }
-    free(vecs, vecIds) // the output reads only the final checkpointed round
+    Stage.free(vecs) // the output reads only the final checkpointed round
     assigned.groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"),
         sum(round6(col("sim")).cast("decimal(18,6)")).as("sim_dec"))
@@ -4199,14 +4194,13 @@ object VectorQueries {
     *
     * Shape: the same within-cell pair pass (never all-pairs), the
     * driver-paced min-label closure over the core-core edges only
-    * ([[graft.graph.ConnectedComponents]], checkpointTracked rounds),
+    * ([[graft.graph.ConnectedComponents]], localCheckpoint rounds),
     * one edge join for border attachment. The oracle replays the
     * closure as a recursive CTE (the `q_cc_clusters` pattern) —
     * exponential-path-free because the recursive UNION deduplicates
     * states.
     */
   def dbscanClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.graph.ConnectedComponents
     val cells = withCappedBlock(assignedCells(withVecs(spark, sfDir)), "cell")
     val prs = cells.as("a").join(cells.as("b"),
         col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
@@ -4224,7 +4218,7 @@ object VectorQueries {
       .join(core.select(col("vec_id").as("x")), "x")
       .join(core.select(col("vec_id").as("y")), "y")
       .select(col("x").as("src"), col("y").as("dst"))
-    val (comp, compIds) = ConnectedComponents.runContractedTracked(coreE)
+    val comp = ConnectedComponents.runContracted(coreE)
     val coreComp = core
       .join(comp.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -4241,8 +4235,10 @@ object VectorQueries {
         sum(when(!col("is_core"), 1L).otherwise(0L)).as("n_border"),
         count(lit(1)).as("n_total"))
       .orderBy("cluster")
-    val (res, _) = ConnectedComponents.checkpointTracked(out)
-    ConnectedComponents.free(out, compIds)
+    // pin the bounded census, then free the fixpoint's label blocks
+    // together with the staged pairs and cells `comp` was built from
+    val res = out.localCheckpoint(true)
+    Stage.free(comp)
     res
   }
 

@@ -75,7 +75,7 @@ class WindowAuditSpec extends SparkSpec {
         } catch {
           case e: Throwable => failures += s"$name: ${e.getMessage}"
         } finally {
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+          QueryProfile.endQuery(spark)
         }
       }
     }

@@ -45,10 +45,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   private def componentsContracted(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val (lbl, ids) =
-      ConnectedComponents.runContractedTracked(edges.toDF("src", "dst"))
+    val lbl = ConnectedComponents.runContracted(edges.toDF("src", "dst"))
     val got = lbl.as[(Long, Long)].collect().toMap
-    ConnectedComponents.free(lbl, ids)
+    graft.Stage.free(lbl)
     got
   }
 
@@ -68,6 +67,18 @@ class ConnectedComponentsSpec extends SparkSpec {
       Seq((1L, 5L), (5L, 9L), (9L, 12L), (12L, 30L), (20L, 21L))) ==
       Map(1L -> 1L, 5L -> 1L, 9L -> 1L, 12L -> 1L, 30L -> 1L,
         20L -> 20L, 21L -> 20L))
+    // min-oriented edge lists (every edge a < b, `a` a band
+    // representative — the q_cc_refresh / q_cc_forget bandReps shape):
+    // star, rep-chained components (a rep that is another band's
+    // member), singleton edges, and a deterministic pseudo-random batch
+    val rnd = new scala.util.Random(42)
+    val randomEdges = (1 to 120).map { _ =>
+      val x = rnd.nextInt(60).toLong; val y = rnd.nextInt(60).toLong
+      (math.min(x, y), math.max(x, y) + 1)
+    }
+    val minOriented = (Seq((1L, 5L), (5L, 9L), (9L, 12L), (2L, 7L), (2L, 8L),
+      (20L, 21L)) ++ randomEdges).distinct
+    assert(componentsContracted(minOriented) == components(minOriented))
   }
 
   private def componentsHalving(edges: Seq[(Long, Long)]): Map[Long, Long] =

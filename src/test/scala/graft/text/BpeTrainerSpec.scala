@@ -27,7 +27,7 @@ class BpeTrainerSpec extends SparkSpec {
     assert(sym == Map(
       "lo w" -> 5L, "lo w e r" -> 2L,
       "n e w est" -> 6L, "w i d est" -> 3L))
-    fin.unpersist()
+    graft.Stage.free(fin)
   }
 
   test("applyMerge is leftmost-first non-overlapping") {
@@ -45,7 +45,7 @@ class BpeTrainerSpec extends SparkSpec {
     val before = weighted(BpeTrainer.initSymbols(classicVocab))
     val (merges, fin) = BpeTrainer.train(classicVocab, 3)
     assert(weighted(fin) == before - merges.map(_.n).sum)
-    fin.unpersist()
+    graft.Stage.free(fin)
   }
 
   test("training is deterministic and matches q_bpe_pairs round-1 argmax") {
@@ -60,11 +60,21 @@ class BpeTrainerSpec extends SparkSpec {
     assert(m1.head.n == top.getLong(1))
   }
 
+  test("trainOnDocuments leaves no new persistent RDD") {
+    // every round's symbol table is a localCheckpoint; the final one
+    // must be freed too, not just the superseded rounds
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    BpeTrainer.trainOnDocuments(spark, sfTiny, 2)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked localCheckpoint blocks: $leaked")
+  }
+
   test("train stops early when every word is a single symbol") {
     val tiny = Seq(("ab", 3L)).toDF("word", "freq")
     val (merges, fin) = BpeTrainer.train(tiny, 10)
     assert(merges.map(m => (m.a, m.b)) == Seq(("a", "b")))
     assert(fin.collect().toSeq == Seq(BpeTrainer.SymWord(Seq("ab"), 3L)))
-    fin.unpersist()
+    graft.Stage.free(fin)
   }
 }

@@ -60,29 +60,6 @@ class TextQueriesSpec extends SparkSpec {
     assert(splits == Set("train", "val", "test"))
   }
 
-  test("contractedComponentsTracked equals the raw fixpoint on min-oriented edges") {
-    // the q_cc_refresh / q_cc_forget base-labeling contraction: on any
-    // edge list with a < b (every edge min-oriented — the bandReps
-    // shape), the rep-contracted labeling must equal label propagation
-    // over the symmetrized graph. Cases: star, rep-chained components
-    // (a rep that is another band's member), singleton edges, and a
-    // deterministic pseudo-random batch.
-    val rnd = new scala.util.Random(42)
-    val randomEdges = (1 to 120).map { _ =>
-      val x = rnd.nextInt(60).toLong; val y = rnd.nextInt(60).toLong
-      (math.min(x, y), math.max(x, y) + 1)
-    }
-    val edges = (Seq((1L, 5L), (5L, 9L), (9L, 12L), (2L, 7L), (2L, 8L),
-      (20L, 21L)) ++ randomEdges).distinct
-      .toDF("a", "b").filter(col("a") < col("b"))
-    val (contracted, ids) = TextQueries.contractedComponentsTracked(edges)
-    val raw = graft.graph.ConnectedComponents.run(edges, "a", "b")
-    val c = contracted.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val r = raw.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(c == r)
-    graft.graph.ConnectedComponents.free(edges, ids)
-  }
-
   test("minhashCluster groups exact duplicates into one cluster") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),

@@ -80,7 +80,7 @@ class MmrRerankSpec extends SparkSpec {
   test("greedy loop frees superseded checkpoints (≤1 block survives)") {
     val sc = spark.sparkContext
     // drop anything a previous test left behind so the delta is ours
-    sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.QueryProfile.endQuery(spark)
     val before = sc.getPersistentRDDs.keySet
     val out = VectorQueries.mmrRerank(spark, sfTiny)
     out.collect()
@@ -89,6 +89,6 @@ class MmrRerankSpec extends SparkSpec {
     // 4 union rounds); everything but the final selected set must have
     // been freed by the time the result materializes
     assert(leaked.size <= 1, s"leaked localCheckpoint blocks: $leaked")
-    leaked.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    graft.Stage.free(out)
   }
 }
