@@ -27,11 +27,21 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = apply(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
+  /** The events table as stored, read under the legacy flag that turns
+    * nanosecond parquet timestamps into longs (Spark's vectorized
+    * reader rejects them otherwise); [[eventTs]] normalizes its `ts`.
+    * Stream queries take their file-source schema from this frame.
+    */
+  def eventsRaw(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    apply(s, d, "events")
+  }
+  def events(s: SparkSession, d: String): DataFrame = eventTs(eventsRaw(s, d))
+
   /** `events.ts` normalization is SCHEMA-ADAPTIVE — the driver has
     * shipped this column two ways across rounds:
-    *  - nanosecond parquet timestamp (rounds ≤8), which Spark's
-    *    vectorized reader rejects: read nanos as long (documented
-    *    legacy flag) and truncate to a micros timestamp with INTEGER
+    *  - nanosecond parquet timestamp (rounds ≤8), read as a long by
+    *    [[eventsRaw]]: truncate to a micros timestamp with INTEGER
     *    division (`div`) — `/` would promote the ~1.7e18 epoch-nano
     *    long to double, whose 53-bit mantissa rounds off-by-1µs —
     *    matching DuckDB's truncating `CAST(ts AS TIMESTAMP)`;
@@ -39,16 +49,14 @@ object Tables {
     *    as TIMESTAMP_NTZ: cast to session-TZ TimestampType (every
     *    entry point pins UTC, so the instant is unchanged) to keep
     *    the downstream column type identical across both vintages.
+    * Works on batch and streaming frames alike.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = apply(s, d, "events")
+  def eventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => df.withColumn("ts", col("ts").cast("timestamp"))
     }
-  }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

@@ -1212,7 +1212,7 @@ object CorpusOps {
     * Shape: feedback tf is bounded (PrfF docs); df is one vocab-grain
     * aggregate; the final rank is an unpartitioned window over
     * candidate terms — vocab-grain, bounded by the corpus vocabulary,
-    * never by doc count (WindowAuditSpec-sanctioned).
+    * never by doc count (PlanAuditSpec window allowlist).
     */
   def prfExpand(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)

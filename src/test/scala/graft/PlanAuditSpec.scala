@@ -366,12 +366,108 @@ class PlanAuditSpec extends SparkSpec {
       s"minhashCluster re-scans parquet ${scans.size}× — band staging lost")
   }
 
+  // ---- whole-set audits: building every declared query takes ~3 ----
+  // ---- min, so ONE build serves both checks below                 ----
+
+  /** Queries sanctioned to plan an unpartitioned Window. Every entry
+    * must have a scale note at its implementation site naming the
+    * bounded input grain (and, where relevant, the fact-scale
+    * alternative — see OlapMore.momDelta / ntileQuartiles).
+    */
+  private val windowSanctioned: Set[String] = Set(
+    "q_bm25",            // vocab-grain idf rank
+    "q_changepoint",     // day-grain cumulative + struct-min argmax (calendar-bounded)
+    "q_cusum_drift",     // day-grain series (calendar-bounded)
+    "q_date_dim",        // dense date surrogate (SurrogateKeys.dense, bounded dim)
+    "q_dict_encode",     // vocab-grain code assignment
+    "q_fact_build",      // dense date surrogate via date_dim
+    "q_interpolate",     // day-grain gap fill
+    "q_ivfpq_adc",       // single-probe candidate rank (cell-capped)
+    "q_kaplan_meier",    // distinct-duration grain (bounded risk table)
+    "q_logrank",         // same bounded day-grain risk table, two cohorts (round-14)
+    "q_lorenz",          // decile-grain cumulative (10 rows; customer rank via PrefixScan)
+    "q_nelson_aalen",    // same bounded day-grain risk table as q_kaplan_meier (round-14)
+    "q_mix_schedule",    // source-grain apportionment (dim cardinality)
+    "q_mom_delta",       // month-grain lag (calendar; scale note at site)
+    "q_neg_sample",      // vocab-grain Hamilton remainder rank (round-14)
+    "q_ntile",           // dim-cardinality segmentation (scale note at site)
+    "q_percent_rank",    // nation-grain relative standing
+    "q_prf_expand",      // vocab-grain expansion-term rank (round-13)
+    "q_rank_join",       // k-row final rank over the TA answer (bounded by k=10; round-17)
+    "q_ranker_overlap",  // two-phase top-k: global rank sees <= 8k rows (round-13)
+    "q_rrf_fusion",      // per-probe fused rank over capped candidates
+    "q_runs_test",       // day-grain sign lag (calendar-bounded)
+    "q_running_total",   // month-grain running total (calendar)
+    "q_sql_lag",         // month-grain SQL-surface lag
+    "q_sql_monthly",     // month-grain SQL-surface trend
+    "q_temperature_mix", // language-grain mixture (bounded alphabet)
+    // q_truss_support left the set in round 14: its census window still
+    // runs (support-grain, bounded) but behind an eager checkpoint, so
+    // the returned frame's plan is a LogicalRDD the audit can't see —
+    // the scale note lives at the implementation site
+    "q_vocab_coverage",  // vocab-grain Zipf head
+    "q_waterfill_mix",   // source-grain water-filling
+    "q_zipf_fit"         // vocab-head grain (top-k terms)
+  )
+
+  /** Names whose physical plan holds a CartesianProduct, names whose
+    * optimized plan holds a Window with no partitionBy, and the
+    * queries that failed to build — from one build per declared query,
+    * each followed by `QueryProfile.endQuery` so no query's staged
+    * blocks outlive it.
+    *
+    * `q_stream_*` queries are not window-inspected: their builders
+    * EXECUTE a Structured-Streaming run, and their returned frames are
+    * sink reads at micro-batch-output grain, where an unpartitioned
+    * window is bounded by construction.
+    */
+  private lazy val sweep: (Set[String], Set[String], Seq[String]) = {
+    val cartesian = Set.newBuilder[String]
+    val bareWindow = Set.newBuilder[String]
+    val failures = Seq.newBuilder[String]
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try {
+        val qe = fn(spark, sfTiny).queryExecution
+        if (qe.sparkPlan.toString.contains("CartesianProduct")) cartesian += name
+        if (!name.startsWith("q_stream_") && qe.optimizedPlan.collect {
+            case w: org.apache.spark.sql.catalyst.plans.logical.Window
+                if w.partitionSpec.isEmpty => w
+          }.nonEmpty) bareWindow += name
+      } catch {
+        case e: Throwable => failures += s"$name: ${e.getMessage}"
+      } finally {
+        QueryProfile.endQuery(spark)
+      }
+    }
+    (cartesian.result(), bareWindow.result(), failures.result())
+  }
+
   test("no declared query plan contains a cartesian product") {
     // nested-loop joins are legitimate ONLY with a broadcast-tiny side
     // (kNN probe, IVF codebook); a CartesianProduct is never right
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sfTiny).queryExecution.sparkPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$name has a cartesian product")
-    }
+    val (cartesian, _, failures) = sweep
+    assert(failures.isEmpty, s"queries failed to build: ${failures.mkString("; ")}")
+    assert(cartesian.isEmpty,
+      s"cartesian products in: ${cartesian.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("unpartitioned-window query set matches the audited allowlist") {
+    // the CLAUDE.md single-partition-window rule: a `Window.orderBy`
+    // with NO partitionBy serializes through one task, acceptable only
+    // over aggregate-/dim-/calendar-grain input. This pins the exact
+    // set of queries that plan one; adding a query means partitioning
+    // its window or extending the allowlist WITH a scale note at the
+    // new site.
+    val (_, offenders, failures) = sweep
+    assert(failures.isEmpty, s"queries failed to build: ${failures.mkString("; ")}")
+    val extra = offenders -- windowSanctioned
+    val gone = windowSanctioned -- offenders
+    assert(extra.isEmpty,
+      s"NEW unpartitioned windows (partition them or extend the " +
+        s"allowlist with a scale note): ${extra.toSeq.sorted.mkString(", ")}\n" +
+        s"full current set: ${offenders.toSeq.sorted.mkString(", ")}")
+    assert(gone.isEmpty,
+      s"allowlist entries no longer planning an unpartitioned window " +
+        s"(prune them): ${gone.toSeq.sorted.mkString(", ")}")
   }
 }

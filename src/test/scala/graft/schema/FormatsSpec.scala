@@ -50,6 +50,23 @@ class FormatsSpec extends SparkSpec {
     roundTrip(Tables.events(spark, sfTiny), "events")
   }
 
+  test("eventTs gives both events.ts vintages the same TimestampType instants") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, expr, unix_micros}
+    // rounds ≤8 shipped ns-epoch parquet, read as a long: integer div
+    // truncates the sub-µs digits (a double division would round)
+    val nsLong = Seq(1704067200123456999L, 1704067200000000001L).toDF("ts")
+    // timestamp[us] parquet arrives as TIMESTAMP_NTZ
+    val ntz = Seq("2024-01-01 00:00:00.123456", "2024-01-01 00:00:00").toDF("s")
+      .select(expr("CAST(s AS TIMESTAMP_NTZ)").as("ts"))
+    for ((df, tag) <- Seq(nsLong -> "ns long", ntz -> "timestamp_ntz")) {
+      val out = Tables.eventTs(df)
+      assert(out.schema("ts").dataType == org.apache.spark.sql.types.TimestampType, tag)
+      assert(out.select(unix_micros(col("ts"))).as[Long].collect().toSeq ==
+        Seq(1704067200123456L, 1704067200000000L), tag)
+    }
+  }
+
   test("null round-trips as null, never as the sentinel string") {
     import spark.implicits._
     val df = Seq(("a", Option("x")), ("b", None), ("null", Option("null")))
