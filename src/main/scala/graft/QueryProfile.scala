@@ -115,7 +115,8 @@ object QueryProfile {
     catch { case _: Throwable => () }
 
   /** The end-of-query step of every main: flush the listener bus, then
-    * free per-query resident state. The closure/PageRank queries leave
+    * free per-query resident state — persisted RDDs and the directories
+    * [[graft.util.Scratch.dir]] made. The closure/PageRank queries leave
     * their final localCheckpoint blocks persisted (one small RDD per
     * invocation, reclaimed only on GC) — across 97 queries × 4 runs the
     * accumulation degraded the late-alphabet queries ~10× (q_transitions
@@ -125,5 +126,6 @@ object QueryProfile {
   def endQuery(spark: SparkSession): Unit = {
     drain(spark)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    graft.util.Scratch.deleteAll()
   }
 }

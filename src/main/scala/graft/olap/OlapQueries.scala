@@ -103,23 +103,34 @@ object OlapQueries {
       |ORDER BY gid, region, nation, segment""".stripMargin
 
   /** 11. Monthly revenue trend — date_trunc bucketing + sum/avg
-    * (SURVEY.md §7.3 #11). Order grain, so no fact join needed.
+    * (SURVEY.md §7.3 #11). Order grain, so no fact join needed. The
+    * cent-valued prices sum exactly as DECIMAL; the mean divides that
+    * sum once, in doubles, and both engines round4 both measures (each
+    * engine's own `round` of a raw-double avg split on the .xxxx5 mean
+    * of a seed-7 fixture month).
     */
   def monthlyTrend(spark: SparkSession, sfDir: String): DataFrame =
     Tables.orders(spark, sfDir)
       .groupBy(date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM").as("month"))
       .agg(
-        round(sum(col("o_totalprice")), 4).as("total_revenue"),
-        round(avg(col("o_totalprice")), 4).as("avg_order_value"),
+        sum(col("o_totalprice").cast("decimal(15,2)")).cast("double").as("total"),
         count(lit(1)).as("n_orders"))
+      .select(col("month"),
+        graft.text.TextFns.round4(col("total")).as("total_revenue"),
+        graft.text.TextFns.round4(col("total") / col("n_orders").cast("double"))
+          .as("avg_order_value"),
+        col("n_orders"))
       .orderBy("month")
 
   private val sqlMonthlyTrend =
-    """SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-      |       round(sum(o_totalprice), 4) AS total_revenue,
-      |       round(avg(o_totalprice), 4) AS avg_order_value,
-      |       count(*) AS n_orders
-      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
+    s"""WITH m AS (SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
+       |                  CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DOUBLE) AS total,
+       |                  count(*) AS n_orders
+       |           FROM orders GROUP BY 1)
+       |SELECT month, ${graft.text.TextFns.duckRound4("total")} AS total_revenue,
+       |       ${graft.text.TextFns.duckRound4("total / CAST(n_orders AS DOUBLE)")} AS avg_order_value,
+       |       n_orders
+       |FROM m ORDER BY 1""".stripMargin
 
   /** 12. Top-10 customers by lifetime order value — orderBy+limit
     * compiles to TakeOrderedAndProject (per-partition heap, no global

@@ -22,22 +22,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streaming {
 
-  /** Tumbling/sliding event-time window aggregation with a watermark.
-    * Late rows older than `lateness` are dropped; in append mode a
-    * window emits once its end passes the watermark.
+  /** The event-time window aggregate: per window × event type, the
+    * event count and the value sum, over tumbling windows of
+    * `windowLen` or windows sliding by `slide`. The sum is
+    * round-before-sum: each value becomes whole micro-units in
+    * DECIMAL(28,0), whose sum is exact and order-independent (a state
+    * merge across micro-batches reorders float addition), and the total
+    * is round4'd once at the edge (the CLAUDE.md parity rule). With a
+    * `lateness` watermark, rows behind it are dropped and, in append
+    * mode, a window emits once its end passes it; `None` adds no
+    * watermark (Complete and Update runs over a bounded input).
     */
   def windowedCounts(events: DataFrame, windowLen: String, slide: Option[String] = None,
-                     lateness: String = "1 hour"): DataFrame = {
-    val win = slide match {
-      case Some(s) => window(col("ts"), windowLen, s)
-      case None => window(col("ts"), windowLen)
-    }
-    events
-      .withWatermark("ts", lateness)
+                     lateness: Option[String] = Some("1 hour")): DataFrame = {
+    val win = slide.fold(window(col("ts"), windowLen))(window(col("ts"), windowLen, _))
+    lateness.fold(events)(events.withWatermark("ts", _))
+      .withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
       .groupBy(win, col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum"))
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("sum_value"))
+        col("event_type"), col("n_events"),
+        graft.text.TextFns.round4(col("vm_sum").cast("double") / 1000000.0).as("sum_value"))
   }
 
   /** Stateful exact dedup within the watermark horizon — the streaming
@@ -255,58 +260,43 @@ object Streaming {
       .toDF("user_id", "view_us", "click_us", "purchase_us")
   }
 
-  /** Stream-stream event-time interval join — click attribution: each
-    * click joins the views by the same user within the preceding
-    * `horizon`. Both sides carry watermarks and the join predicate
-    * bounds view_ts to a window around click_ts, so the state store
-    * retains each side only for watermark + horizon — the
-    * bounded-state form of a stream-stream join (an unconstrained
-    * equi-join would buffer both streams forever). At scale, state is
-    * O(active users × horizon), independent of stream length.
+  /** Stream-stream event-time interval join: each `later` row (a click,
+    * a purchase) joins the `earlier` rows of the same `user_id` whose
+    * `ts` lies in [later.ts − `horizon`, later.ts]. Both sides carry a
+    * `lateness` watermark on `ts` and the predicate bounds one side's
+    * time by the other's, so the state store keeps each side only for
+    * watermark + horizon: O(active users × (horizon + lateness)),
+    * independent of stream length (an unconstrained equi-join would
+    * buffer both streams forever).
+    *
+    * `joinType` "left_outer" emits every later row exactly once:
+    * joined to its in-horizon rows when they exist, with NULL earlier
+    * columns otherwise. An unmatched row can only emit once the
+    * earlier side's watermark proves no match can still arrive, so it
+    * is held in state until `ts + lateness` passes the global
+    * watermark: exactly-once unmatched emission, which a batch
+    * anti-join could not give without a rescan.
+    *
+    * The output is `user_id`, then the other columns of `later`, then
+    * those of `earlier`. `ts`, and any other column both sides carry,
+    * is prefixed with its side's name from `names` (`click_ts`,
+    * `view_ts`); the rest keep the caller's names.
     */
-  def clickAttribution(views: DataFrame, clicks: DataFrame,
-                       horizon: String = "30 minutes",
-                       lateness: String = "1 hour"): DataFrame = {
-    val v = views
-      .withWatermark("ts", lateness)
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-    val c = clicks
-      .withWatermark("ts", lateness)
-      .select(col("user_id"), col("ts").as("click_ts"), col("value"))
-    c.join(v,
-      col("user_id") === col("v_user") &&
-        col("view_ts") <= col("click_ts") &&
-        col("view_ts") >= col("click_ts") - expr(s"INTERVAL $horizon"))
-      .select(col("user_id"), col("view_ts"), col("click_ts"), col("value"))
-  }
-
-  /** LEFT OUTER stream-stream attribution: every click emits exactly
-    * once — joined to its in-horizon views when they exist, with a
-    * NULL `view_ts` otherwise. The outer semantics are the
-    * watermark-driven part: an unmatched click can only emit once the
-    * VIEW side's watermark proves no matching view can still arrive,
-    * so the row is held in state until `click_ts + lateness` passes
-    * the global watermark and then released with nulls — exactly-once
-    * unmatched emission, impossible without the engine's state-store
-    * eviction contract (a batch anti-join would either double-emit or
-    * need a full rescan). Same bounded state as the inner form:
-    * O(active users × (horizon + lateness)).
-    */
-  def clickAttributionOuter(views: DataFrame, clicks: DataFrame,
-                            horizon: String = "30 minutes",
-                            lateness: String = "1 hour"): DataFrame = {
-    val v = views
-      .withWatermark("ts", lateness)
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-    val c = clicks
-      .withWatermark("ts", lateness)
-      .select(col("user_id"), col("ts").as("click_ts"), col("value"))
-    c.join(v,
-      col("user_id") === col("v_user") &&
-        col("view_ts") <= col("click_ts") &&
-        col("view_ts") >= col("click_ts") - expr(s"INTERVAL $horizon"),
-      "left_outer")
-      .select(col("user_id"), col("view_ts"), col("click_ts"), col("value"))
+  def intervalJoin(later: DataFrame, earlier: DataFrame, names: (String, String),
+                   horizon: String = "30 minutes", lateness: String = "1 hour",
+                   joinType: String = "inner"): DataFrame = {
+    val shared = later.columns.toSet.intersect(earlier.columns.toSet)
+    def side(df: DataFrame, name: String, key: String) =
+      df.withWatermark("ts", lateness).select(col("user_id").as(key) +:
+        df.columns.toSeq.filter(_ != "user_id")
+          .map(c => col(c).as(if (shared(c)) s"${name}_$c" else c)): _*)
+    val (ln, en) = names
+    val (lts, ets) = (col(s"${ln}_ts"), col(s"${en}_ts"))
+    side(later, ln, "user_id").join(side(earlier, en, s"${en}_user_id"),
+      col("user_id") === col(s"${en}_user_id") &&
+        ets <= lts && ets >= lts - expr(s"INTERVAL $horizon"),
+      joinType)
+      .drop(s"${en}_user_id")
   }
 
   /** Streaming heavy-hitter monitor: maintains a persisted Misra-
@@ -582,26 +572,17 @@ object Streaming {
   private[stream] def noveltyIngestBatch(batch: DataFrame, batchId: Long, path: String,
                                          committerFor: (String, org.apache.hadoop.conf.Configuration)
                                            => SnapshotCommitter): Unit = {
-    import graft.text.{DocOps, TextFns}
+    import graft.text.DocOps
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val reportC = committerFor(s"$path/report", conf)
     val indexC = committerFor(s"$path/index", conf)
     reportC.recover(); indexC.recover()
     val grams = DocOps.docGrams(batch)
-    val novel = (indexC.current() match {
-      case Some(p) => grams.join(
-        spark.read.parquet(p.toString), Seq("gram"), "left_anti")
-      case None => grams
-    }).groupBy("source").agg(count(lit(1)).as("n_novel"))
-    val report = grams.groupBy("source")
-      .agg(countDistinct(col("doc_id")).as("n_docs"), count(lit(1)).as("n_grams"))
-      .join(novel, Seq("source"), "left_outer")
-      .withColumn("n_novel", coalesce(col("n_novel"), lit(0L)))
-      .withColumn("novelty",
-        TextFns.round4(col("n_novel").cast("double") / col("n_grams").cast("double")))
-      .withColumn("batch_id", lit(batchId))
-      .select("batch_id", "source", "n_docs", "n_grams", "n_novel", "novelty")
+    val index = indexC.current().map(p => spark.read.parquet(p.toString))
+    // 1. the batch's report against the persisted index
+    val report = DocOps.noveltyReport(grams, index)
+      .select(lit(batchId).as("batch_id"), col("*"))
     // 2. report insert-if-absent (commit FIRST; first-write-wins —
     // see scaladoc for why a replayed recomputation must never
     // overwrite the committed rows)
@@ -617,13 +598,9 @@ object Streaming {
     reportC.commit(reportStage)
     // 3. gram-index append (distinct union — replay-idempotent)
     val batchGrams = grams.select("gram").distinct()
-    val index = indexC.current() match {
-      case Some(p) => spark.read.parquet(p.toString)
-        .unionByName(batchGrams).distinct()
-      case None => batchGrams
-    }
     val indexStage = indexC.stage()
-    index.write.mode("overwrite").parquet(indexStage.toString)
+    index.fold(batchGrams)(_.unionByName(batchGrams).distinct())
+      .write.mode("overwrite").parquet(indexStage.toString)
     indexC.commit(indexStage)
     ()
   }

@@ -685,17 +685,26 @@ object DocOps {
     val docs = Tables.documents(spark, sfDir)
     val index = docGrams(docs.filter(col("doc_id") % 2 === 0))
       .select("gram").distinct()
-    val batch = docGrams(docs.filter(col("doc_id") % 2 === 1))
-    val novel = batch.join(index, Seq("gram"), "left_anti")
+    noveltyReport(docGrams(docs.filter(col("doc_id") % 2 === 1)), Some(index))
+      .orderBy("source")
+  }
+
+  /** The per-source novelty report of `grams` ([[docGrams]] rows):
+    * n_docs, n_grams, n_novel (the grams absent from the distinct-gram
+    * `index`; every gram without one) and novelty = n_novel / n_grams,
+    * round4'd. [[deltaNovelty]] and the streaming novelty ingest
+    * (`Streaming.noveltyIngestBatch`) both report through it.
+    */
+  def noveltyReport(grams: DataFrame, index: Option[DataFrame]): DataFrame = {
+    val novel = index.fold(grams)(grams.join(_, Seq("gram"), "left_anti"))
       .groupBy("source").agg(count(lit(1)).as("n_novel"))
-    batch.groupBy("source")
+    grams.groupBy("source")
       .agg(countDistinct(col("doc_id")).as("n_docs"), count(lit(1)).as("n_grams"))
       .join(novel, Seq("source"), "left_outer")
       .withColumn("n_novel", coalesce(col("n_novel"), lit(0L)))
       .withColumn("novelty",
         TextFns.round4(col("n_novel").cast("double") / col("n_grams").cast("double")))
       .select("source", "n_docs", "n_grams", "n_novel", "novelty")
-      .orderBy("source")
   }
 
   private val sqlDeltaNovelty =

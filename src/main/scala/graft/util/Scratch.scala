@@ -11,6 +11,10 @@ package graft.util
   * files hurt twice). tmpfs (/dev/shm) makes those file ops memory
   * ops.
   *
+  * Each directory lives until the end of its query
+  * ([[graft.QueryProfile.endQuery]] deletes it); callers that never
+  * end their queries through it keep theirs.
+  *
   * Scale-parameterized per the bench rules: SPARK_GRAFT_SCRATCH
   * overrides the base explicitly; otherwise /dev/shm is used when
   * writable, else java.io.tmpdir — on a production cluster, streaming
@@ -29,7 +33,24 @@ object Scratch {
     java.nio.file.Paths.get(p)
   }
 
-  /** A fresh unique directory under the scratch base. */
-  def dir(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(base, prefix)
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A fresh unique directory under the scratch base, kept until
+    * [[deleteAll]].
+    */
+  def dir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(base, prefix)
+    made.add(d)
+    d
+  }
+
+  /** Deletes every directory [[dir]] has made, with its contents.
+    * [[graft.QueryProfile.endQuery]] calls it after the caller has
+    * consumed the query's result: a returned frame reads its sink
+    * lazily, so the directory must outlive the query body. Other
+    * entries of the base (the [[graft.stream.StageCache]]) stay.
+    */
+  def deleteAll(): Unit =
+    Iterator.continually(made.poll()).takeWhile(_ != null)
+      .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
 }

@@ -66,4 +66,22 @@ class QueryProfileSpec extends SparkSpec {
       assert(p.batches.forall(_.durationMs.contains("triggerExecution")))
     } finally spark.streams.removeListener(witness)
   }
+
+  test("endQuery deletes the query's Scratch dirs and keeps the stage cache") {
+    import java.nio.file.Files
+    val sfDir = Files.createTempDirectory("graft_qp_sf")
+    val scratch = graft.util.Scratch.dir("graft_qp_spec")
+    Files.writeString(scratch.resolve("out"), "x")
+    val cached = graft.stream.StageCache.cachedIn("qp_spec", sfDir.toString) { (_, in) =>
+      Files.writeString(in.resolve("f"), "x"); ()
+    }
+    try {
+      QueryProfile.endQuery(spark)
+      assert(!Files.exists(scratch))
+      assert(Files.exists(cached.resolve("f")))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(cached.getParent.toFile)
+      org.apache.commons.io.FileUtils.deleteQuietly(sfDir.toFile)
+    }
+  }
 }

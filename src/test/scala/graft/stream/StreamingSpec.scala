@@ -21,13 +21,19 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streaming.windowedCounts(events, "10 minutes", lateness = "5 minutes")
+    val q = Streaming.windowedCounts(events, "10 minutes", lateness = Some("5 minutes"))
       .writeStream.format("memory").queryName("wc").outputMode(OutputMode.Append).start()
     try {
       input.addData(
         (ts(1), 1L, "click", 1.0), (ts(2), 2L, "click", 2.0),
         (ts(11), 1L, "view", 3.0),
-        (ts(40), 1L, "click", 9.0)) // advances watermark past both windows
+        (ts(40), 1L, "click", 9.0), // advances watermark past both windows
+        (ts(41), 1L, "purchase", 0.1), (ts(42), 2L, "purchase", 0.2))
+      q.processAllAvailable()
+      // the [40, 50) purchase sum spans two micro-batches: a double state
+      // merge gives 0.30000000000000004 + 0.3 = 0.6000000000000001
+      input.addData((ts(43), 3L, "purchase", 0.3),
+        (ts(56), 1L, "view", 1.0)) // advances watermark past [40, 50)
       q.processAllAvailable()
       val rows = spark.table("wc")
         .select("window_start", "event_type", "n_events", "sum_value")
@@ -35,6 +41,7 @@ class StreamingSpec extends SparkSpec {
         .toSet
       assert(rows.contains((ts(0), "click", 2L, 3.0)))
       assert(rows.contains((ts(10), "view", 1L, 3.0)))
+      assert(rows.contains((ts(40), "purchase", 3L, 0.6)), rows.mkString("; "))
     } finally q.stop()
   }
 
@@ -60,7 +67,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
     val q = Streaming.startParquetSink(
-      Streaming.windowedCounts(events, "10 minutes", lateness = "5 minutes"),
+      Streaming.windowedCounts(events, "10 minutes", lateness = Some("5 minutes")),
       s"$dir/out", s"$dir/chk")
     try {
       input.addData((ts(1), 1L, "click", 1.0), (ts(2), 2L, "click", 2.0))
@@ -126,8 +133,8 @@ class StreamingSpec extends SparkSpec {
     val cIn = MemoryStream[(Timestamp, Long, Double)]
     val views = vIn.toDF().toDF("ts", "user_id")
     val clicks = cIn.toDF().toDF("ts", "user_id", "value")
-    val q = Streaming.clickAttributionOuter(views, clicks,
-        horizon = "30 minutes", lateness = "10 minutes")
+    val q = Streaming.intervalJoin(clicks, views, ("click", "view"),
+        horizon = "30 minutes", lateness = "10 minutes", joinType = "left_outer")
       .writeStream.format("memory").queryName("cao").outputMode(OutputMode.Append).start()
     try {
       vIn.addData((ts(1), 1L)) // user 1 has a view in horizon
@@ -304,7 +311,8 @@ class StreamingSpec extends SparkSpec {
     val clicksIn = MemoryStream[(Timestamp, Long, String, Double)]
     val views = viewsIn.toDF().toDF("ts", "user_id", "event_type", "value")
     val clicks = clicksIn.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streaming.clickAttribution(views, clicks, horizon = "10 minutes")
+    val q = Streaming.intervalJoin(clicks, views, ("click", "view"), horizon = "10 minutes")
+      .select("user_id", "view_ts", "click_ts")
       .writeStream.format("memory").queryName("attr")
       .outputMode(OutputMode.Append).start()
     try {
