@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -522,34 +523,30 @@ object EtlQueries {
     * with exact integer n_null, one division at the edge.
     */
   def imputeMedian(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(18,6)")
     Tables.events(spark, sfDir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         count(when(col("value").isNull, lit(1))).as("n_imputed"),
-        sum(r6d(col("value"))).as("sv"),
+        sum(round6(col("value")).cast("decimal(18,6)")).as("sv"),
         percentile(col("value"), lit(0.5)).as("med"))
       .select(col("event_type"), col("n_events"), col("n_imputed"),
-        graft.text.TextFns.round4(col("med")).as("median"),
-        graft.text.TextFns.round4(
-          (col("sv") + r6d(col("med")) * col("n_imputed")).cast("double")
+        round4(col("med")).as("median"),
+        round4(
+          (col("sv") + round6(col("med")).cast("decimal(18,6)") * col("n_imputed")).cast("double")
             / col("n_events").cast("double")).as("mean_filled"))
       .orderBy("event_type")
   }
 
   private val sqlImputeMedian = {
-    val r6d = (e: String) =>
-      s"CAST((floor(($e) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(18,6))"
     s"""WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
        |                  CAST(count(CASE WHEN value IS NULL THEN 1 END) AS BIGINT) AS n_imputed,
-       |                  sum(${r6d("value")}) AS sv,
+       |                  sum(CAST(${duckRound6("value")} AS DECIMAL(18,6))) AS sv,
        |                  quantile_cont(value, 0.5) AS med
        |           FROM events GROUP BY event_type)
        |SELECT event_type, n_events, n_imputed,
-       |       ${graft.text.TextFns.duckRound4("med")} AS median,
-       |       ${graft.text.TextFns.duckRound4(
-                 s"CAST(sv + ${r6d("med")} * n_imputed AS DOUBLE) / CAST(n_events AS DOUBLE)")} AS mean_filled
+       |       ${duckRound4("med")} AS median,
+       |       ${duckRound4(
+                 s"CAST(sv + CAST(${duckRound6("med")} AS DECIMAL(18,6)) * n_imputed AS DOUBLE) / CAST(n_events AS DOUBLE)")} AS mean_filled
        |FROM g ORDER BY event_type""".stripMargin
   }
 
@@ -586,11 +583,11 @@ object EtlQueries {
         col(s"${p}_a").as("nulls_a"), col(s"${p}_b").as("nulls_b"))
     }.reduce(_ unionByName _)
     rows
-      .withColumn("null_rate_a", graft.text.TextFns.round4(
+      .withColumn("null_rate_a", round4(
         col("nulls_a").cast("double") / col("n_a").cast("double")))
-      .withColumn("null_rate_b", graft.text.TextFns.round4(
+      .withColumn("null_rate_b", round4(
         col("nulls_b").cast("double") / col("n_b").cast("double")))
-      .withColumn("drift", graft.text.TextFns.round4(
+      .withColumn("drift", round4(
         abs(col("null_rate_a") - col("null_rate_b"))))
       .select("column_name", "n_a", "n_b", "nulls_a", "nulls_b",
         "null_rate_a", "null_rate_b", "drift")
@@ -598,7 +595,6 @@ object EtlQueries {
   }
 
   private val sqlProfileDrift = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val blocks = Seq(("user_id", "nu"), ("value", "nv"), ("props", "np")).map {
       case (name, p) =>
         s"SELECT '$name' AS column_name, n_a, n_b, ${p}_a AS nulls_a, ${p}_b AS nulls_b FROM a"
@@ -615,10 +611,10 @@ object EtlQueries {
        |  FROM events),
        |     u AS $blocks
        |SELECT column_name, n_a, n_b, nulls_a, nulls_b,
-       |       ${r4("CAST(nulls_a AS DOUBLE) / CAST(n_a AS DOUBLE)")} AS null_rate_a,
-       |       ${r4("CAST(nulls_b AS DOUBLE) / CAST(n_b AS DOUBLE)")} AS null_rate_b,
-       |       ${r4(s"abs(${r4("CAST(nulls_a AS DOUBLE) / CAST(n_a AS DOUBLE)")} - " +
-                 s"${r4("CAST(nulls_b AS DOUBLE) / CAST(n_b AS DOUBLE)")})")} AS drift
+       |       ${duckRound4("CAST(nulls_a AS DOUBLE) / CAST(n_a AS DOUBLE)")} AS null_rate_a,
+       |       ${duckRound4("CAST(nulls_b AS DOUBLE) / CAST(n_b AS DOUBLE)")} AS null_rate_b,
+       |       ${duckRound4(s"abs(${duckRound4("CAST(nulls_a AS DOUBLE) / CAST(n_a AS DOUBLE)")} - " +
+                 s"${duckRound4("CAST(nulls_b AS DOUBLE) / CAST(n_b AS DOUBLE)")})")} AS drift
        |FROM u ORDER BY column_name""".stripMargin
   }
 
@@ -654,7 +650,7 @@ object EtlQueries {
       asOf = lit("1998-01-01").cast("timestamp"))
     val o = Tables.orders(spark, sfDir)
       .select(col("o_custkey"), col("o_orderdate").cast("timestamp").as("od"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
+        units(col("o_totalprice"), 100.0).cast("long").as("cents"))
     o.join(history, col("o_custkey") === col("custkey")
         && col("od") >= col("valid_from")
         && (col("valid_to").isNull || col("od") < col("valid_to")))
@@ -665,10 +661,10 @@ object EtlQueries {
   }
 
   private val sqlPitJoin =
-    """SELECT CASE WHEN c_custkey % 3 = 0 AND o_orderdate >= DATE '1998-01-01'
+    s"""SELECT CASE WHEN c_custkey % 3 = 0 AND o_orderdate >= DATE '1998-01-01'
       |            THEN 'MOVED' ELSE c_mktsegment END AS segment,
       |       count(*) AS n_orders,
-      |       round(CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0, 4) AS revenue
+      |       round(CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS DOUBLE) / 100.0, 4) AS revenue
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -798,10 +794,10 @@ object EtlQueries {
       .agg(count(lit(1)).as("n_probes"),
         count(when(col("n_hit") === col("n_pos"), lit(1))).as("n_fp"))
       .crossJoin(broadcast(nBits))
-      .select(col("bits_set"), graft.text.TextFns.round4(
+      .select(col("bits_set"), round4(
           col("bits_set").cast("double") / lit(BloomM.toDouble)).as("load"),
         col("n_probes"), col("n_fp"),
-        graft.text.TextFns.round4(col("n_fp").cast("double")
+        round4(col("n_fp").cast("double")
           / col("n_probes").cast("double")).as("fpr"))
   }
 
@@ -823,11 +819,11 @@ object EtlQueries {
        |            GROUP BY pb.key),
        |     nb AS (SELECT CAST(count(*) AS BIGINT) AS bits_set FROM bits)
        |SELECT bits_set,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  s"CAST(bits_set AS DOUBLE) / $BloomM.0")} AS load,
        |       CAST(count(*) AS BIGINT) AS n_probes,
        |       CAST(count(CASE WHEN n_hit = n_pos THEN 1 END) AS BIGINT) AS n_fp,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(count(CASE WHEN n_hit = n_pos THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS fpr
        |FROM pp CROSS JOIN nb
        |GROUP BY bits_set""".stripMargin
@@ -954,7 +950,7 @@ object EtlQueries {
     */
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)
-    val bumped = floor(col("o_totalprice") * 110.0 + 0.5) / 100.0
+    val bumped = units(col("o_totalprice"), 110.0) / 100.0 // 1.1 × price in whole cents
     val old = o.filter(col("o_orderkey") % 10 =!= 0)
       .select(col("o_orderkey").as("k1"), col("o_orderstatus").as("s1"),
         col("o_totalprice").as("p1"))
@@ -977,11 +973,11 @@ object EtlQueries {
   }
 
   private val sqlSnapshotDiff =
-    """WITH old AS (SELECT o_orderkey AS k1, o_orderstatus AS s1, o_totalprice AS p1
+    s"""WITH old AS (SELECT o_orderkey AS k1, o_orderstatus AS s1, o_totalprice AS p1
       |             FROM orders WHERE o_orderkey % 10 <> 0),
       |     nw AS (SELECT o_orderkey AS k2, o_orderstatus AS s2,
       |                   CASE WHEN o_orderkey % 5 = 0
-      |                        THEN floor(o_totalprice * 110.0 + 0.5) / 100.0
+      |                        THEN ${duckUnits("o_totalprice", 110.0)} / 100.0
       |                        ELSE o_totalprice END AS p2
       |            FROM orders WHERE o_orderkey % 7 <> 0),
       |     d AS (SELECT coalesce(s1, s2) AS status,
@@ -1030,7 +1026,7 @@ object EtlQueries {
           .as("n_inferred"),
         countDistinct(when(col("c_custkey").isNull, col("o_custkey")))
           .as("n_placeholders"))
-      .withColumn("inferred_rate", graft.text.TextFns.round4(
+      .withColumn("inferred_rate", round4(
         col("n_inferred").cast("double") / col("n_facts").cast("double")))
       .orderBy("month")
   }
@@ -1042,7 +1038,7 @@ object EtlQueries {
        |       CAST(sum(CASE WHEN p.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_inferred,
        |       CAST(count(DISTINCT CASE WHEN p.c_custkey IS NULL
        |                                THEN o_custkey END) AS BIGINT) AS n_placeholders,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN p.c_custkey IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS inferred_rate
        |FROM orders LEFT JOIN p ON o_custkey = p.c_custkey
        |GROUP BY 1 ORDER BY 1""".stripMargin
@@ -1083,12 +1079,12 @@ object EtlQueries {
     publish(ev)
     c.versions().sorted.map { v =>
       spark.read.parquet(c.snapshotAt(v).get.toString)
-        .withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+        .withColumn("vm", units(col("value"), 1e6).cast("decimal(28,0)"))
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("event_type")).as("n_types"),
           sum(col("vm")).as("vms"))
         .select(lit(v).as("version"), col("n_events"), col("n_types"),
-          graft.text.TextFns.round4(col("vms").cast("double") / 1000000.0)
+          round4(col("vms").cast("double") / 1000000.0)
             .as("sum_value"))
     }.reduce(_ unionByName _).orderBy("version")
   }
@@ -1097,8 +1093,8 @@ object EtlQueries {
     def ver(n: Int, where: String): String =
       s"""SELECT CAST($n AS BIGINT) AS version, CAST(count(*) AS BIGINT) AS n_events,
          |       CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-         |       ${graft.text.TextFns.duckRound4(
-                    "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value
+         |       ${duckRound4(
+                    s"CAST(sum(CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value
          |FROM events $where""".stripMargin
     s"""${ver(1, "WHERE event_id % 3 = 0")}
        |UNION ALL ${ver(2, "WHERE event_id % 3 <= 1")}
@@ -1159,9 +1155,9 @@ object EtlQueries {
       lit("k")).try_cast("double")
     back
       .withColumn("km",
-        when(k.isNotNull, floor(k * 1000000.0 + 0.5).cast("decimal(28,0)"))
+        when(k.isNotNull, units(k, 1e6).cast("decimal(28,0)"))
           .otherwise(lit(0).cast("decimal(28,0)")))
-      .withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("vm", units(col("value"), 1e6).cast("decimal(28,0)"))
       .withColumn("hr", expr("unix_micros(ts) div 3600000000"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -1170,10 +1166,10 @@ object EtlQueries {
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"),
         sum(col("km")).as("kms"))
       .select(col("event_type"), col("n_events"), col("n_hours"),
-        graft.text.TextFns.round4(col("vms").cast("double") / 1000000.0)
+        round4(col("vms").cast("double") / 1000000.0)
           .as("sum_value"),
         col("min_id"), col("max_id"),
-        graft.text.TextFns.round4(col("kms").cast("double") / 1000000.0)
+        round4(col("kms").cast("double") / 1000000.0)
           .as("k_sum"))
       .orderBy("event_type")
   }
@@ -1269,30 +1265,30 @@ object EtlQueries {
       .option("recursiveFileLookup", "true").parquet(s"$dir/snap")
     merged
       .withColumn("ch", coalesce(col("channel"), lit("_pre_migration")))
-      .withColumn("cents", floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+      .withColumn("cents", units(col("o_totalprice"), 100.0).cast("long"))
       .groupBy("ch")
       .agg(count(lit(1)).as("n_orders"),
         sum(col("cents").cast("decimal(38,0)")).as("cs"),
         min(col("o_orderkey")).as("min_key"))
       .select(col("ch").as("channel"), col("n_orders"),
-        graft.text.TextFns.round4(col("cs").cast("double") / 100.0).as("revenue"),
+        round4(col("cs").cast("double") / 100.0).as("revenue"),
         col("min_key"))
       .orderBy("channel")
   }
 
   private val sqlSchemaMerge =
     s"""WITH m AS (SELECT o_orderkey,
-       |             CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
+       |             CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS cents,
        |             CASE WHEN o_orderdate < DATE '1995-01-01' THEN '_pre_migration'
        |                  ELSE o_orderpriority END AS ch
        |           FROM orders)
        |SELECT ch AS channel, CAST(count(*) AS BIGINT) AS n_orders,
-       |       ${graft.text.TextFns.duckRound4("CAST(sum(cents) AS DOUBLE) / 100.0")} AS revenue,
+       |       ${duckRound4("CAST(sum(cents) AS DOUBLE) / 100.0")} AS revenue,
        |       CAST(min(o_orderkey) AS BIGINT) AS min_key
        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin
 
   private def roundtripAgg(df: DataFrame): DataFrame =
-    df.withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+    df.withColumn("vm", units(col("value"), 1e6).cast("decimal(28,0)"))
       .withColumn("hr", expr("unix_micros(ts) div 3600000000"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -1300,7 +1296,7 @@ object EtlQueries {
         sum(col("vm")).as("vms"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
       .select(col("event_type"), col("n_events"), col("n_hours"),
-        graft.text.TextFns.round4(col("vms").cast("double") / 1000000.0)
+        round4(col("vms").cast("double") / 1000000.0)
           .as("sum_value"),
         col("min_id"), col("max_id"))
       .orderBy("event_type")
@@ -1308,8 +1304,8 @@ object EtlQueries {
   private val sqlRoundtripBase =
     s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
        |       CAST(count(DISTINCT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) AS BIGINT) AS n_hours,
-       |       ${graft.text.TextFns.duckRound4(
-                  "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value,
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value,
        |       CAST(min(event_id) AS BIGINT) AS min_id,
        |       CAST(max(event_id) AS BIGINT) AS max_id
        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
@@ -1317,8 +1313,8 @@ object EtlQueries {
   private val sqlJsonlRoundtrip =
     s"""WITH a AS ($sqlRoundtripBase),
        |     k AS (SELECT event_type,
-       |             ${graft.text.TextFns.duckRound4(
-                       "CAST(sum(CASE WHEN try_cast(json_extract_string(props, '$.k') AS DOUBLE) IS NOT NULL THEN CAST(floor(try_cast(json_extract_string(props, '$.k') AS DOUBLE) * 1000000.0 + 0.5) AS DECIMAL(28,0)) ELSE CAST(0 AS DECIMAL(28,0)) END) AS DOUBLE) / 1000000.0")} AS k_sum
+       |             ${duckRound4(
+                       s"CAST(sum(CASE WHEN try_cast(json_extract_string(props, '$$.k') AS DOUBLE) IS NOT NULL THEN CAST(${duckUnits("try_cast(json_extract_string(props, '$.k') AS DOUBLE)", 1e6)} AS DECIMAL(28,0)) ELSE CAST(0 AS DECIMAL(28,0)) END) AS DOUBLE) / 1000000.0")} AS k_sum
        |           FROM events GROUP BY 1)
        |SELECT a.*, k.k_sum FROM a JOIN k ON a.event_type = k.event_type
        |ORDER BY a.event_type""".stripMargin
@@ -1400,7 +1396,7 @@ object EtlQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts").cast("timestamp")).as("ord_us"), col("event_id"),
-        floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)").as("vm"))
+        units(col("value"), 1e6).cast("decimal(28,0)").as("vm"))
     val last = Dedup.lastWins(ev, Seq("user_id", "event_type"),
       Seq(col("ord_us"), col("event_id")), Seq("event_id", "vm"))
     val tot = ev.groupBy("event_type").agg(count(lit(1)).as("n_rows"))
@@ -1411,7 +1407,7 @@ object EtlQueries {
       .join(broadcast(tot), Seq("event_type"))
       .select(col("event_type"), col("n_keys"),
         (col("n_rows") - col("n_keys")).as("n_superseded"),
-        graft.text.TextFns.round4(col("vms").cast("double") / 1000000.0)
+        round4(col("vms").cast("double") / 1000000.0)
           .as("last_value_sum"),
         col("winner_id_sum"))
       .orderBy("event_type")
@@ -1420,7 +1416,7 @@ object EtlQueries {
   private val sqlLwwUpsert =
     s"""WITH e AS (SELECT user_id, event_type,
        |                  epoch_us(CAST(ts AS TIMESTAMP)) AS ord_us, event_id,
-       |                  CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS vm
+       |                  CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0)) AS vm
        |           FROM events),
        |     w AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
        |                      ORDER BY ord_us DESC, event_id DESC) AS rn FROM e),
@@ -1429,7 +1425,7 @@ object EtlQueries {
        |           FROM e GROUP BY 1)
        |SELECT l.event_type, CAST(count(*) AS BIGINT) AS n_keys,
        |       CAST(t.n_rows - count(*) AS BIGINT) AS n_superseded,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(l.vm) AS DOUBLE) / 1000000.0")} AS last_value_sum,
        |       CAST(sum(l.event_id) AS BIGINT) AS winner_id_sum
        |FROM l JOIN t ON l.event_type = t.event_type
@@ -1462,7 +1458,7 @@ object EtlQueries {
   def mergeMatrix(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("k"),
-        floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("balc"))
+        units(col("c_acctbal"), 100.0).cast("long").as("balc"))
     val target = cust.filter(col("k") % 2 === 0)
       .select(col("k"), (col("balc") + 5000L).as("t_balc"))
     val source = cust.filter(col("k") % 3 === 0)
@@ -1485,8 +1481,8 @@ object EtlQueries {
   }
 
   private val sqlMergeMatrix =
-    """WITH cust AS (SELECT c_custkey AS k,
-      |                     CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS balc
+    s"""WITH cust AS (SELECT c_custkey AS k,
+      |                     CAST(${duckUnits("c_acctbal", 100.0)} AS BIGINT) AS balc
       |              FROM customer),
       |     t AS (SELECT k, balc + 5000 AS t_balc FROM cust WHERE k % 2 = 0),
       |     s AS (SELECT k AS sk, balc AS s_balc FROM cust WHERE k % 3 = 0),
@@ -1547,8 +1543,8 @@ object EtlQueries {
     }
     colStats("o_custkey").unionByName(colStats("o_totalprice"))
       .select(col("col_name"), col("n_rows"), col("null_cnt"),
-        graft.text.TextFns.round4(col("min_raw")).as("min_v"),
-        graft.text.TextFns.round4(col("max_raw")).as("max_v"))
+        round4(col("min_raw")).as("min_v"),
+        round4(col("max_raw")).as("max_v"))
       .orderBy("col_name")
   }
 
@@ -1556,8 +1552,8 @@ object EtlQueries {
     def side(c: String) =
       s"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
          |       CAST(count(*) - count($c) AS BIGINT) AS null_cnt,
-         |       ${graft.text.TextFns.duckRound4(s"CAST(min($c) AS DOUBLE)")} AS min_v,
-         |       ${graft.text.TextFns.duckRound4(s"CAST(max($c) AS DOUBLE)")} AS max_v
+         |       ${duckRound4(s"CAST(min($c) AS DOUBLE)")} AS min_v,
+         |       ${duckRound4(s"CAST(max($c) AS DOUBLE)")} AS max_v
          |FROM orders""".stripMargin
     s"""${side("o_custkey")}
        |UNION ALL
@@ -1590,7 +1586,7 @@ object EtlQueries {
     val dir = graft.util.Scratch.dir("graft_mor").toString
     val base = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"),
-        floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("cents"))
+        units(col("c_acctbal"), 100.0).cast("long").as("cents"))
     base.write.mode("overwrite").parquet(s"$dir/base")
     val updates = base.filter(pmod(col("c_custkey"), lit(7L)) === 0L)
       .select(col("c_custkey"), col("c_mktsegment"),
@@ -1617,8 +1613,8 @@ object EtlQueries {
   }
 
   private val sqlMorRead =
-    """WITH m AS (SELECT c_custkey, c_mktsegment,
-      |                  CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT)
+    s"""WITH m AS (SELECT c_custkey, c_mktsegment,
+      |                  CAST(${duckUnits("c_acctbal", 100.0)} AS BIGINT)
       |                    + CASE WHEN c_custkey % 7 = 0 THEN 10000 ELSE 0 END AS cents
       |           FROM customer
       |           WHERE c_custkey % 13 <> 0)
@@ -1648,8 +1644,6 @@ object EtlQueries {
     * tables are dropped.
     */
   def bucketJoinExec(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     val orders = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_orderpriority")
     val li = Tables.lineitem(spark, sfDir)
@@ -1676,7 +1670,7 @@ object EtlQueries {
       joined
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
-          sum(r6d(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
+          sum(round6(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(28,6)"))
             .as("rev_dec"))
         .select(col("o_orderpriority"), col("n_items"),
           round(col("rev_dec").cast("double"), 4).as("revenue"),
@@ -1693,8 +1687,8 @@ object EtlQueries {
   }
 
   private val sqlBucketJoin =
-    """SELECT o_orderpriority, count(*) AS n_items,
-      |       round(CAST(sum(CAST((floor(l_extendedprice * (1.0 - l_discount) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(28,6))) AS DOUBLE), 4) AS revenue,
+    s"""SELECT o_orderpriority, count(*) AS n_items,
+      |       round(CAST(sum(CAST(${duckRound6("l_extendedprice * (1.0 - l_discount)")} AS DECIMAL(28,6))) AS DOUBLE), 4) AS revenue,
       |       CAST(0 AS BIGINT) AS join_shuffles
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
@@ -1801,7 +1795,7 @@ object EtlQueries {
         sum(col("bytes")).as("delta_bytes"))
       .select(col("event_type"), col("n_events"), col("raw_bytes"),
         col("delta_bytes"),
-        graft.text.TextFns.round4(col("delta_bytes").cast("double") /
+        round4(col("delta_bytes").cast("double") /
           col("raw_bytes").cast("double")).as("ratio"))
       .orderBy("event_type")
   }
@@ -1823,7 +1817,7 @@ object EtlQueries {
        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
        |       CAST(count(*) * 8 AS BIGINT) AS raw_bytes,
        |       CAST(sum(bytes) AS BIGINT) AS delta_bytes,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(bytes) AS DOUBLE) / CAST(count(*) * 8 AS DOUBLE)")} AS ratio
        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
   }

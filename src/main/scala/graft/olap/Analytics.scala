@@ -1,6 +1,7 @@
 package graft.olap
 
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -232,14 +233,13 @@ object Analytics {
       .agg(round(sum(col("o_totalprice")), 4).as("rev"))
     val w = Window.orderBy(col("rev").desc, col("n_name"))
     byNation
-      .withColumn("pct_rank", graft.text.TextFns.round4(percent_rank().over(w)))
-      .withColumn("cume", graft.text.TextFns.round4(cume_dist().over(w)))
+      .withColumn("pct_rank", round4(percent_rank().over(w)))
+      .withColumn("cume", round4(cume_dist().over(w)))
       .select(col("n_name"), col("rev"), col("pct_rank"), col("cume"))
       .orderBy("n_name")
   }
 
   private val sqlPercentRank = {
-    import graft.text.TextFns.duckRound4
     s"""WITH byn AS (
        |  SELECT n_name, round(sum(o_totalprice), 4) AS rev
        |  FROM orders
@@ -450,7 +450,7 @@ object Analytics {
   def autocorr(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderdate").as("d"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("xc"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("xc"))
       // orderdate arrives TIMESTAMP_NTZ; session TZ is pinned UTC, so
       // NTZ→LTZ→long is the same epoch second DuckDB's epoch() sees
       .select(col("d").cast("timestamp").cast("long").as("dl"), col("xc"))
@@ -474,17 +474,16 @@ object Analytics {
     val varY = (dd("syy") - dd("sy") * dd("sy") / nD) / (nD - 1.0)
     val cov = (dd("sxy") - dd("sx") * dd("sy") / nD) / (nD - 1.0)
     m.select(col("lag"), col("n").as("n_pairs"),
-        graft.text.TextFns.round4(cov / (sqrt(varX) * sqrt(varY))).as("autocorr"))
+        round4(cov / (sqrt(varX) * sqrt(varY))).as("autocorr"))
       .orderBy("lag")
   }
 
   private val sqlAutocorr = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val varX = "(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)"
     val varY = "(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)"
     val cov = "(CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)"
     s"""WITH daily AS (SELECT CAST(epoch(o_orderdate) AS BIGINT) AS dl,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS xc
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS xc
        |               FROM orders GROUP BY 1),
        |     lags AS (SELECT CAST(UNNEST(range(1, 8)) AS BIGINT) AS lag),
        |     pairs AS (SELECT l.lag, a.xc AS x, b.xc AS y
@@ -498,7 +497,7 @@ object Analytics {
        |                  sum(CAST(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS syy
        |           FROM pairs GROUP BY 1)
        |SELECT lag, n AS n_pairs,
-       |       ${r4(s"($cov) / (sqrt($varX) * sqrt($varY))")} AS autocorr
+       |       ${duckRound4(s"($cov) / (sqrt($varX) * sqrt($varY))")} AS autocorr
        |FROM m ORDER BY lag""".stripMargin
   }
 
@@ -522,13 +521,13 @@ object Analytics {
     val monthly = Tables.orders(spark, sfDir)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("mkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("cents"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("cents"))
     val f = monthly.select((col("mkey") + 12L).as("mkey"), col("cents").as("fcents"))
     monthly.join(f, Seq("mkey"))
       .select(((col("mkey") - 1) / 12).cast("long").as("year"),
         (pmod(col("mkey") - 1, lit(12)) + 1).cast("long").as("month_no"),
         col("cents").as("actual_cents"), col("fcents").as("forecast_cents"),
-        graft.text.TextFns.round4(
+        round4(
           abs(col("cents") - col("fcents")).cast("double") /
             col("cents").cast("double")).as("ape"))
       .orderBy("year", "month_no")
@@ -536,12 +535,12 @@ object Analytics {
 
   private val sqlSeasonalNaive =
     s"""WITH m AS (SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mkey,
-       |                  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+       |                  CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
        |           FROM orders GROUP BY 1)
        |SELECT (a.mkey - 1) // 12 AS year,
        |       (a.mkey - 1) % 12 + 1 AS month_no,
        |       a.cents AS actual_cents, f.cents AS forecast_cents,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(abs(a.cents - f.cents) AS DOUBLE) / CAST(a.cents AS DOUBLE)")} AS ape
        |FROM m a JOIN m f ON a.mkey = f.mkey + 12
        |ORDER BY year, month_no""".stripMargin
@@ -566,7 +565,7 @@ object Analytics {
     val monthly = Tables.orders(spark, sfDir)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("mkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("cents"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("cents"))
       .localCheckpoint(true) // staged: pair join (two legs) + tie census
     val a = monthly.select(col("mkey").as("mi"), col("cents").as("xi"))
     val b = monthly.select(col("mkey").as("mj"), col("cents").as("xj"))
@@ -582,19 +581,18 @@ object Analytics {
     val sD = col("s_stat").cast("double")
     s.crossJoin(broadcast(ties))
       .select(col("n").as("n_months"), col("s_stat"),
-        graft.text.TextFns.round4(varS).as("var_s"),
-        graft.text.TextFns.round4(
+        round4(varS).as("var_s"),
+        round4(
           when(col("s_stat") > 0, (sD - 1.0) / sqrt(varS))
             .when(col("s_stat") < 0, (sD + 1.0) / sqrt(varS))
             .otherwise(lit(0.0))).as("z_stat"))
   }
 
   private val sqlMannKendall = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val varS = "(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * " +
       "(2.0 * CAST(n AS DOUBLE) + 5.0) - CAST(tsum AS DOUBLE)) / 18.0"
     s"""WITH m AS (SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mkey,
-       |                  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+       |                  CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
        |           FROM orders GROUP BY 1),
        |     s AS (SELECT CAST(sum(CASE WHEN b.cents > a.cents THEN 1
        |                               WHEN b.cents < a.cents THEN -1
@@ -606,8 +604,8 @@ object Analytics {
        |                   CAST(sum(t) AS BIGINT) AS n
        |            FROM tg)
        |SELECT n AS n_months, s_stat,
-       |       ${r4(varS)} AS var_s,
-       |       ${r4(s"CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0) / sqrt($varS)" +
+       |       ${duckRound4(varS)} AS var_s,
+       |       ${duckRound4(s"CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0) / sqrt($varS)" +
                  s" WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1.0) / sqrt($varS)" +
                  " ELSE 0.0 END")} AS z_stat
        |FROM s CROSS JOIN ts""".stripMargin
@@ -633,46 +631,44 @@ object Analytics {
     val monthly = Tables.orders(spark, sfDir)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("mkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("cents"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("cents"))
       .localCheckpoint(true) // staged: three self-join legs below
     val f12 = monthly.select((col("mkey") + 12L).as("mkey"), col("cents").as("fcents"))
     val f1 = monthly.select((col("mkey") + 1L).as("mkey"), col("cents").as("pcents"))
-    val d6 = (c: Column) => floor(c * 1000000.0 + 0.5).cast("decimal(28,0)")
     val sEr = monthly.join(f12, Seq("mkey"))
       .agg(count(lit(1)).as("n_forecasts"),
         sum(abs(col("cents") - col("fcents"))).as("sae"),
-        sum(d6(lit(2.0) * abs(col("cents") - col("fcents")).cast("double") /
-          (col("cents") + col("fcents")).cast("double"))).as("sm6"))
+        sum(units(lit(2.0) * abs(col("cents") - col("fcents")).cast("double") /
+          (col("cents") + col("fcents")).cast("double"), 1e6).cast("decimal(28,0)")).as("sm6"))
     val nEr = monthly.join(f1, Seq("mkey"))
       .agg(count(lit(1)).as("n_naive"),
         sum(abs(col("cents") - col("pcents"))).as("nae"))
     sEr.crossJoin(broadcast(nEr))
       .select(col("n_forecasts"),
-        graft.text.TextFns.round4(
+        round4(
           (col("sae").cast("double") / col("n_forecasts").cast("double")) /
             (col("nae").cast("double") / col("n_naive").cast("double"))).as("mase"),
-        graft.text.TextFns.round4(col("sm6").cast("double") / 1000000.0 /
+        round4(col("sm6").cast("double") / 1000000.0 /
           col("n_forecasts").cast("double")).as("smape"))
   }
 
   private val sqlMaseScores = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH m AS (SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mkey,
-       |                  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+       |                  CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
        |           FROM orders GROUP BY 1),
        |     se AS (SELECT CAST(count(*) AS BIGINT) AS n_forecasts,
        |                   CAST(sum(abs(a.cents - f.cents)) AS BIGINT) AS sae,
-       |                   sum(CAST(floor(2.0 * CAST(abs(a.cents - f.cents) AS DOUBLE)
-       |                     / CAST(a.cents + f.cents AS DOUBLE) * 1000000.0 + 0.5)
+       |                   sum(CAST(${duckUnits("2.0 * CAST(abs(a.cents - f.cents) AS DOUBLE)" +
+                     " / CAST(a.cents + f.cents AS DOUBLE)", 1e6)}
        |                     AS DECIMAL(28,0))) AS sm6
        |            FROM m a JOIN m f ON a.mkey = f.mkey + 12),
        |     ne AS (SELECT CAST(count(*) AS BIGINT) AS n_naive,
        |                   CAST(sum(abs(a.cents - p.cents)) AS BIGINT) AS nae
        |            FROM m a JOIN m p ON a.mkey = p.mkey + 1)
        |SELECT n_forecasts,
-       |       ${r4("(CAST(sae AS DOUBLE) / CAST(n_forecasts AS DOUBLE)) / " +
+       |       ${duckRound4("(CAST(sae AS DOUBLE) / CAST(n_forecasts AS DOUBLE)) / " +
                  "(CAST(nae AS DOUBLE) / CAST(n_naive AS DOUBLE))")} AS mase,
-       |       ${r4("CAST(sm6 AS DOUBLE) / 1000000.0 / CAST(n_forecasts AS DOUBLE)")} AS smape
+       |       ${duckRound4("CAST(sm6 AS DOUBLE) / 1000000.0 / CAST(n_forecasts AS DOUBLE)")} AS smape
        |FROM se CROSS JOIN ne""".stripMargin
   }
 
@@ -696,7 +692,7 @@ object Analytics {
     val mk = (c: Column) => (year(c) * 12 + month(c)).cast("long")
     val orders = Tables.orders(spark, sfDir)
       .select(col("o_custkey"), mk(col("o_orderdate")).as("mkey"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
+        units(col("o_totalprice"), 100.0).cast("long").as("cents"))
     val cohort = orders.groupBy("o_custkey").agg(min(col("mkey")).as("ckey"))
       .filter(((col("ckey") - 1) / 12).cast("long") === 1995L)
     val sizes = cohort.groupBy("ckey").agg(count(lit(1)).as("n_customers"))
@@ -710,7 +706,7 @@ object Analytics {
       .join(broadcast(sizes), Seq("ckey"))
       .select((pmod(col("ckey") - 1, lit(12)) + 1).cast("long").as("cohort_month"),
         col("age"), col("n_customers"),
-        graft.text.TextFns.round4(col("cum_cents").cast("double") / 100.0 /
+        round4(col("cum_cents").cast("double") / 100.0 /
           col("n_customers").cast("double")).as("ltv_per_user"))
       .orderBy("cohort_month", "age")
   }
@@ -718,7 +714,7 @@ object Analytics {
   private val sqlLtvCurve =
     s"""WITH o AS (SELECT o_custkey,
        |                  CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mkey,
-       |                  CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
+       |                  CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS cents
        |           FROM orders),
        |     c AS (SELECT o_custkey, min(mkey) AS ckey FROM o GROUP BY 1),
        |     c95 AS (SELECT * FROM c WHERE (ckey - 1) // 12 = 1995),
@@ -734,7 +730,7 @@ object Analytics {
        |                      AS BIGINT) AS cum_cents
        |             FROM cells)
        |SELECT (cum.ckey - 1) % 12 + 1 AS cohort_month, cum.age, sz.n_customers,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(cum_cents AS DOUBLE) / 100.0 / CAST(n_customers AS DOUBLE)")} AS ltv_per_user
        |FROM cum JOIN sz ON cum.ckey = sz.ckey
        |ORDER BY cohort_month, age""".stripMargin
@@ -821,8 +817,7 @@ object Analytics {
   def olsTrend(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .withColumn("cents",
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100.0 + 0.5).cast("long"))
+        units(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 100.0).cast("long"))
       .withColumn("m",
         ((year(col("l_shipdate")) - 1992) * 12 + month(col("l_shipdate")) - 1)
           .cast("long"))
@@ -839,16 +834,16 @@ object Analytics {
     stats.filter(col("n") >= 2)
       .withColumn("den", (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
       .select(col("brand"), col("n").as("n_months"),
-        graft.text.TextFns.round4((col("n") * col("sxy") - col("sx") * col("sy"))
+        round4((col("n") * col("sxy") - col("sx") * col("sy"))
           .cast("double") / col("den") / 100.0).as("slope"),
-        graft.text.TextFns.round4((col("sy") * col("sxx") - col("sx") * col("sxy"))
+        round4((col("sy") * col("sxx") - col("sx") * col("sxy"))
           .cast("double") / col("den") / 100.0).as("intercept"))
       .orderBy("brand")
   }
 
   private val sqlOlsTrend =
     s"""WITH li AS (SELECT l_partkey,
-       |              CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0 + 0.5) AS BIGINT) AS cents,
+       |              CAST(${duckUnits("l_extendedprice * (1.0 - l_discount)", 100.0)} AS BIGINT) AS cents,
        |              CAST((year(l_shipdate) - 1992) * 12 + month(l_shipdate) - 1 AS BIGINT) AS m
        |            FROM lineitem),
        |     bm AS (SELECT p_brand AS brand, m, sum(cents) AS y
@@ -860,8 +855,8 @@ object Analytics {
        |     d AS (SELECT *, CAST(n * sxx - sx * sx AS DOUBLE) AS den
        |           FROM st WHERE n >= 2)
        |SELECT brand, CAST(n AS BIGINT) AS n_months,
-       |       ${graft.text.TextFns.duckRound4("CAST(n * sxy - sx * sy AS DOUBLE) / den / 100.0")} AS slope,
-       |       ${graft.text.TextFns.duckRound4("CAST(sy * sxx - sx * sxy AS DOUBLE) / den / 100.0")} AS intercept
+       |       ${duckRound4("CAST(n * sxy - sx * sy AS DOUBLE) / den / 100.0")} AS slope,
+       |       ${duckRound4("CAST(sy * sxx - sx * sxy AS DOUBLE) / den / 100.0")} AS intercept
        |FROM d ORDER BY brand""".stripMargin
 
   // ---------- q_theilsen: robust Theil–Sen trend over monthly revenue ----------
@@ -886,7 +881,7 @@ object Analytics {
       .withColumn("m",
         ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
           .cast("long"))
-      .withColumn("cents", floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+      .withColumn("cents", units(col("o_totalprice"), 100.0).cast("long"))
       .groupBy("m").agg(sum(col("cents")).as("y"))
     val a = my.select(col("m").as("m1"), col("y").as("y1"))
     val b = my.select(col("m").as("m2"), col("y").as("y2"))
@@ -899,21 +894,21 @@ object Analytics {
         percentile(col("s"), lit(0.5)).as("med"),
         percentile(col("s"), lit(0.75)).as("p75"))
       .select(col("n_pairs"),
-        graft.text.TextFns.round4(col("p25") / 100.0).as("slope_p25"),
-        graft.text.TextFns.round4(col("med") / 100.0).as("slope_med"),
-        graft.text.TextFns.round4(col("p75") / 100.0).as("slope_p75"))
+        round4(col("p25") / 100.0).as("slope_p25"),
+        round4(col("med") / 100.0).as("slope_med"),
+        round4(col("p75") / 100.0).as("slope_p75"))
   }
 
   private val sqlTheilSen =
     s"""WITH my AS (SELECT CAST((year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS BIGINT) AS m,
-       |              CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS y
+       |              CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS y
        |            FROM orders GROUP BY 1),
        |     sl AS (SELECT CAST(b.y - a.y AS DOUBLE) / CAST(b.m - a.m AS DOUBLE) AS s
        |            FROM my a JOIN my b ON b.m > a.m)
        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-       |       ${graft.text.TextFns.duckRound4("quantile_cont(s, 0.25) / 100.0")} AS slope_p25,
-       |       ${graft.text.TextFns.duckRound4("quantile_cont(s, 0.5) / 100.0")} AS slope_med,
-       |       ${graft.text.TextFns.duckRound4("quantile_cont(s, 0.75) / 100.0")} AS slope_p75
+       |       ${duckRound4("quantile_cont(s, 0.25) / 100.0")} AS slope_p25,
+       |       ${duckRound4("quantile_cont(s, 0.5) / 100.0")} AS slope_med,
+       |       ${duckRound4("quantile_cont(s, 0.75) / 100.0")} AS slope_p75
        |FROM sl""".stripMargin
 
   // ---------- q_seasonal_index: classic calendar-month seasonal index ----------
@@ -937,7 +932,7 @@ object Analytics {
   def seasonalIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val ym = Tables.orders(spark, sfDir)
       .groupBy(year(col("o_orderdate")).as("y"), month(col("o_orderdate")).as("m"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long"))
         .cast("decimal(38,0)").as("cents"))
     val tot = ym.agg(sum(col("cents")).as("tot_cents"),
       count(lit(1)).as("tot_months"))
@@ -945,9 +940,9 @@ object Analytics {
       .agg(count(lit(1)).as("n_months"), sum(col("cents")).as("m_cents"))
       .crossJoin(broadcast(tot))
       .select(col("m").cast("long").as("cal_month"), col("n_months"),
-        graft.text.TextFns.round4(col("m_cents").cast("double") /
+        round4(col("m_cents").cast("double") /
           col("n_months").cast("double") / 100.0).as("avg_revenue"),
-        graft.text.TextFns.round4(
+        round4(
           (col("m_cents").cast("double") / col("n_months").cast("double")) /
             (col("tot_cents").cast("double") / col("tot_months").cast("double")))
           .as("seasonal_index"))
@@ -956,13 +951,13 @@ object Analytics {
 
   private val sqlSeasonalIndex =
     s"""WITH ym AS (SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
-       |              CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+       |              CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
        |            FROM orders GROUP BY 1, 2),
        |     tot AS (SELECT sum(cents) AS tot_cents, count(*) AS tot_months FROM ym)
        |SELECT CAST(m AS BIGINT) AS cal_month, CAST(count(*) AS BIGINT) AS n_months,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 100.0")} AS avg_revenue,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "(CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE)) / " +
                   "(CAST(tot_cents AS DOUBLE) / CAST(tot_months AS DOUBLE))")} AS seasonal_index
        |FROM ym CROSS JOIN tot
@@ -996,7 +991,7 @@ object Analytics {
       .filter(col("event_type") === "purchase")
       .select(date_trunc("hour", col("ts")).as("hr"), col("value"))
     val hourly = purchases.groupBy("hr")
-      .agg(sum(floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .agg(sum(units(col("value"), 1e6).cast("decimal(28,0)"))
         .cast("long").as("vm"))
     val spine = purchases
       .agg(min(col("hr")).as("mn"), max(col("hr")).as("mx"))
@@ -1022,20 +1017,19 @@ object Analytics {
               (col("np") - col("pp")).cast("double")))
     filled.select(
         date_format(col("hr"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        graft.text.TextFns.round4(col("vm").cast("double") / 1000000.0)
+        round4(col("vm").cast("double") / 1000000.0)
           .as("observed"),
-        graft.text.TextFns.round4(col("locf_m").cast("double") / 1000000.0)
+        round4(col("locf_m").cast("double") / 1000000.0)
           .as("locf"),
-        graft.text.TextFns.round4(col("interp_m") / 1000000.0).as("interp"))
+        round4(col("interp_m") / 1000000.0).as("interp"))
       .orderBy("hour")
   }
 
   private val sqlInterpolate = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH p AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr, value
        |           FROM events WHERE event_type = 'purchase'),
        |     hourly AS (SELECT hr,
-       |                  CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0))) AS BIGINT) AS vm
+       |                  CAST(sum(CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0))) AS BIGINT) AS vm
        |                FROM p GROUP BY 1),
        |     bnd AS (SELECT min(hr) AS mn, max(hr) AS mx FROM p),
        |     spine AS (SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS hr FROM bnd),
@@ -1064,9 +1058,9 @@ object Analytics {
        |                       CAST(np - pp AS DOUBLE) END AS interp_m
        |           FROM f)
        |SELECT strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour,
-       |       ${r4("CAST(vm AS DOUBLE) / 1000000.0")} AS observed,
-       |       ${r4("CAST(locf_m AS DOUBLE) / 1000000.0")} AS locf,
-       |       ${r4("interp_m / 1000000.0")} AS interp
+       |       ${duckRound4("CAST(vm AS DOUBLE) / 1000000.0")} AS observed,
+       |       ${duckRound4("CAST(locf_m AS DOUBLE) / 1000000.0")} AS locf,
+       |       ${duckRound4("interp_m / 1000000.0")} AS interp
        |FROM g ORDER BY hour""".stripMargin
   }
 
@@ -1124,7 +1118,7 @@ object Analytics {
     // crossJoin all re-read the day-grain aggregate (twice-read rule)
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderdate").as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("xc"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("xc"))
       .localCheckpoint(true)
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("xc")).as("tc"),
       sum(col("xc").cast("decimal(19,0)") * col("xc").cast("decimal(19,0)")).as("sxx"))
@@ -1141,7 +1135,7 @@ object Analytics {
       d(col("tc")) * d(col("tc")) / d(col("n"))
     val sst = d(col("sxx")) - d(col("tc")) * d(col("tc")) / d(col("n"))
     val pick = cum
-      .withColumn("g8", floor(gain / sst * 100000000.0 + 0.5).cast("long"))
+      .withColumn("g8", units(gain / sst, 1e8).cast("long"))
       .withColumn("dk", datediff(col("day"), to_date(lit("1970-01-01"))))
       .agg(min(struct((-col("g8")).as("a"), col("dk").as("b"),
         col("t").as("t"), col("s").as("s"))).as("p"))
@@ -1150,22 +1144,21 @@ object Analytics {
         date_format(date_add(to_date(lit("1970-01-01")), col("p.b")), "yyyy-MM-dd")
           .as("split_day"),
         col("p.t").as("n_left"), (col("n") - col("p.t")).as("n_right"),
-        graft.text.TextFns.round4(d(col("p.s")) / d(col("p.t")) / 100.0).as("mean_left"),
-        graft.text.TextFns.round4(
+        round4(d(col("p.s")) / d(col("p.t")) / 100.0).as("mean_left"),
+        round4(
           (d(col("tc")) - d(col("p.s"))) / (d(col("n")) - d(col("p.t"))) / 100.0)
           .as("mean_right"),
         ((-col("p.a")).cast("double") / 100000000.0).as("gain_frac"))
   }
 
   private val sqlChangepoint = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val gain = "(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(t AS DOUBLE) " +
       "+ (CAST(tc AS DOUBLE) - CAST(s AS DOUBLE)) * (CAST(tc AS DOUBLE) - CAST(s AS DOUBLE)) " +
       "/ (CAST(n AS DOUBLE) - CAST(t AS DOUBLE)) " +
       "- CAST(tc AS DOUBLE) * CAST(tc AS DOUBLE) / CAST(n AS DOUBLE))"
     val sst = "(CAST(sxx AS DOUBLE) - CAST(tc AS DOUBLE) * CAST(tc AS DOUBLE) / CAST(n AS DOUBLE))"
     s"""WITH daily AS (SELECT o_orderdate AS day,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS xc
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS xc
        |               FROM orders GROUP BY 1),
        |     tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(xc) AS BIGINT) AS tc,
        |                    sum(CAST(xc AS DECIMAL(19,0)) * CAST(xc AS DECIMAL(19,0))) AS sxx
@@ -1175,14 +1168,14 @@ object Analytics {
        |                    CAST(sum(xc) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS s,
        |                    n, tc, sxx
        |             FROM daily CROSS JOIN tot),
-       |     cand AS (SELECT CAST(floor($gain / $sst * 100000000.0 + 0.5) AS BIGINT) AS g8,
+       |     cand AS (SELECT CAST(${duckUnits(s"$gain / $sst", 1e8)} AS BIGINT) AS g8,
        |                     date_diff('day', DATE '1970-01-01', day) AS dk, t, s
        |              FROM cum WHERE t < n),
        |     pick AS (SELECT min({'a': -g8, 'b': dk, 't': t, 's': s}) AS p FROM cand)
        |SELECT strftime(DATE '1970-01-01' + CAST((p).b AS INTEGER), '%Y-%m-%d') AS split_day,
        |       CAST((p).t AS BIGINT) AS n_left, CAST(n - (p).t AS BIGINT) AS n_right,
-       |       ${r4("CAST((p).s AS DOUBLE) / CAST((p).t AS DOUBLE) / 100.0")} AS mean_left,
-       |       ${r4("(CAST(tc AS DOUBLE) - CAST((p).s AS DOUBLE)) / (CAST(n AS DOUBLE) - CAST((p).t AS DOUBLE)) / 100.0")} AS mean_right,
+       |       ${duckRound4("CAST((p).s AS DOUBLE) / CAST((p).t AS DOUBLE) / 100.0")} AS mean_left,
+       |       ${duckRound4("(CAST(tc AS DOUBLE) - CAST((p).s AS DOUBLE)) / (CAST(n AS DOUBLE) - CAST((p).t AS DOUBLE)) / 100.0")} AS mean_right,
        |       CAST(-(p).a AS DOUBLE) / 100000000.0 AS gain_frac
        |FROM pick CROSS JOIN tot""".stripMargin
   }
@@ -1210,16 +1203,15 @@ object Analytics {
     * before its cross-month sum.
     */
   def medianPolish(spark: SparkSession, sfDir: String): DataFrame = {
-    def r6(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
     val o = Tables.orders(spark, sfDir)
     val c = Tables.customer(spark, sfDir)
     val cells = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("m"),
         col("c_mktsegment").as("seg"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("cc"),
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("cc"),
         count(lit(1)).as("n"))
       .select(col("m"), col("seg"),
-        r6(col("cc").cast("double") / 100.0 / col("n").cast("double")).as("x"))
+        round6(col("cc").cast("double") / 100.0 / col("n").cast("double")).as("x"))
       .localCheckpoint(true) // staged: four sweep joins read the grid
     def rowSweep(df: DataFrame, xc: String, out: String): DataFrame = {
       val rm = df.groupBy("m").agg(expr(s"percentile($xc, 0.5)").as("rm"))
@@ -1231,22 +1223,21 @@ object Analytics {
     }
     val s1 = colSweep(rowSweep(cells, "x", "x1"), "x1", "x2", "cm1")
     val s2 = colSweep(rowSweep(s1, "x2", "x3"), "x3", "x4", "cm2")
-    s2.withColumn("ar6", r6(abs(col("x4"))).cast("decimal(28,6)"))
+    s2.withColumn("ar6", round6(abs(col("x4"))).cast("decimal(28,6)"))
       .groupBy("seg", "cm1", "cm2")
       .agg(count(lit(1)).as("n_months"), sum(col("ar6")).as("ars"))
       .select(col("seg"), col("n_months"),
-        graft.text.TextFns.round4(col("cm1") + col("cm2")).as("seg_effect"),
-        graft.text.TextFns.round4(
+        round4(col("cm1") + col("cm2")).as("seg_effect"),
+        round4(
           col("ars").cast("double") / col("n_months").cast("double"))
           .as("mean_abs_resid"))
       .orderBy("seg")
   }
 
   private val sqlMedianPolish = {
-    val r4 = graft.text.TextFns.duckRound4 _
+    val cents = s"CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS DOUBLE)"
     s"""WITH cells AS (SELECT strftime(o_orderdate, '%Y-%m') AS m, c_mktsegment AS seg,
-       |                      floor(CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS DOUBLE)
-       |                        / 100.0 / CAST(count(*) AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS x
+       |                      ${duckRound6(s"$cents / 100.0 / CAST(count(*) AS DOUBLE)")} AS x
        |               FROM orders JOIN customer ON o_custkey = c_custkey
        |               GROUP BY 1, 2),
        |     r1 AS (SELECT m, quantile_cont(x, 0.5) AS rm FROM cells GROUP BY 1),
@@ -1259,12 +1250,12 @@ object Analytics {
        |     a4 AS (SELECT m, a3.seg, cm1, a3cm2.cm2, x3 - a3cm2.cm2 AS x4
        |            FROM a3 JOIN c2 a3cm2 ON a3.seg = a3cm2.seg),
        |     f AS (SELECT seg, cm1, cm2, CAST(count(*) AS BIGINT) AS n_months,
-       |                  sum(CAST(floor(abs(x4) * 1000000.0 + 0.5) / 1000000.0
+       |                  sum(CAST(${duckRound6("abs(x4)")}
        |                        AS DECIMAL(28,6))) AS ars
        |           FROM a4 GROUP BY 1, 2, 3)
        |SELECT seg, n_months,
-       |       ${r4("cm1 + cm2")} AS seg_effect,
-       |       ${r4("CAST(ars AS DOUBLE) / CAST(n_months AS DOUBLE)")} AS mean_abs_resid
+       |       ${duckRound4("cm1 + cm2")} AS seg_effect,
+       |       ${duckRound4("CAST(ars AS DOUBLE) / CAST(n_months AS DOUBLE)")} AS mean_abs_resid
        |FROM f ORDER BY seg""".stripMargin
   }
 
@@ -1289,7 +1280,7 @@ object Analytics {
     // re-read the day-grain aggregate (twice-read rule)
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderdate").as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("xc"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("xc"))
       .localCheckpoint(true)
     val med = daily.agg(expr("percentile(xc, 0.5)").as("med"))
     val wl = Window.orderBy("day")
@@ -1307,17 +1298,16 @@ object Analytics {
     val nD = d(col("nn"))
     agg.select(col("nn").as("n_days"), col("n1").as("n_above"),
       col("n2").as("n_below"), col("runs"),
-      graft.text.TextFns.round4(
+      round4(
         (d(col("runs")) - (lit(1.0) + two / nD)) /
           sqrt(two * (two - nD) / (nD * nD * (nD - 1.0)))).as("z_stat"))
   }
 
   private val sqlRunsTest = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val two = "(2.0 * CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))"
     val nD = "CAST(nn AS DOUBLE)"
     s"""WITH daily AS (SELECT o_orderdate AS day,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS xc
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS xc
        |               FROM orders GROUP BY 1),
        |     md AS (SELECT quantile_cont(xc, 0.5) AS med FROM daily),
        |     sg AS (SELECT day, CASE WHEN CAST(xc AS DOUBLE) > med THEN 1 ELSE 0 END AS sgn
@@ -1333,7 +1323,7 @@ object Analytics {
        |           FROM ch),
        |     b AS (SELECT nn, n1, CAST(nn - n1 AS BIGINT) AS n2, runs FROM a)
        |SELECT nn AS n_days, n1 AS n_above, n2 AS n_below, runs,
-       |       ${r4(s"(CAST(runs AS DOUBLE) - (1.0 + $two / $nD)) / " +
+       |       ${duckRound4(s"(CAST(runs AS DOUBLE) - (1.0 + $two / $nD)) / " +
                  s"sqrt($two * ($two - $nD) / ($nD * $nD * ($nD - 1.0)))")} AS z_stat
        |FROM b""".stripMargin
   }
@@ -1368,21 +1358,20 @@ object Analytics {
         max(col("days")).as("max_days"))
       .select(col("priority"), col("n_lines"), col("n_negative"),
         col("min_days"),
-        graft.text.TextFns.round4(element_at(col("ps"), 1)).as("p50_days"),
-        graft.text.TextFns.round4(element_at(col("ps"), 2)).as("p90_days"),
-        graft.text.TextFns.round4(element_at(col("ps"), 3)).as("p99_days"),
+        round4(element_at(col("ps"), 1)).as("p50_days"),
+        round4(element_at(col("ps"), 2)).as("p90_days"),
+        round4(element_at(col("ps"), 3)).as("p99_days"),
         col("max_days"))
       .orderBy("priority")
   }
 
   private val sqlOrderCycleTime = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""SELECT o_orderpriority AS priority, count(*) AS n_lines,
        |       CAST(count(CASE WHEN date_diff('day', o_orderdate, l_shipdate) < 0 THEN 1 END) AS BIGINT) AS n_negative,
        |       CAST(min(date_diff('day', o_orderdate, l_shipdate)) AS BIGINT) AS min_days,
-       |       ${r4("quantile_cont(date_diff('day', o_orderdate, l_shipdate), 0.5)")} AS p50_days,
-       |       ${r4("quantile_cont(date_diff('day', o_orderdate, l_shipdate), 0.9)")} AS p90_days,
-       |       ${r4("quantile_cont(date_diff('day', o_orderdate, l_shipdate), 0.99)")} AS p99_days,
+       |       ${duckRound4("quantile_cont(date_diff('day', o_orderdate, l_shipdate), 0.5)")} AS p50_days,
+       |       ${duckRound4("quantile_cont(date_diff('day', o_orderdate, l_shipdate), 0.9)")} AS p90_days,
+       |       ${duckRound4("quantile_cont(date_diff('day', o_orderdate, l_shipdate), 0.99)")} AS p99_days,
        |       CAST(max(date_diff('day', o_orderdate, l_shipdate)) AS BIGINT) AS max_days
        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
        |GROUP BY 1 ORDER BY 1""".stripMargin
@@ -1409,7 +1398,7 @@ object Analytics {
       .groupBy("o_custkey")
       .agg(max(col("o_orderdate")).as("last_d"),
         count(lit(1)).as("freq"),
-        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("cents"))
+        sum(units(col("o_totalprice"), 100.0).cast("long")).as("cents"))
     val maxD = cust.agg(max(col("last_d")).as("gmax"))
     val base = cust.crossJoin(broadcast(maxD))
       .select(col("o_custkey"),
@@ -1441,7 +1430,7 @@ object Analytics {
       .mkString(" + ") + " + 1)"
     s"""WITH cust AS (SELECT o_custkey, max(o_orderdate) AS last_d,
        |                     CAST(count(*) AS BIGINT) AS freq,
-       |                     CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+       |                     CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
        |              FROM orders GROUP BY 1),
        |     g AS (SELECT max(last_d) AS gmax FROM cust),
        |     b AS (SELECT o_custkey,
@@ -1476,7 +1465,7 @@ object Analytics {
   def rollingMedian(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderdate").as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("xc"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("xc"))
       .withColumn("di", datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))
     val fan = daily
       .select(col("di"), col("xc"),
@@ -1486,13 +1475,13 @@ object Analytics {
         percentile(col("xc"), lit(0.5)).as("medc"))
     windows.join(daily.select(col("di").as("wd"), col("day")), "wd")
       .select(col("day"), col("n_days"),
-        graft.text.TextFns.round4(col("medc") / 100.0).as("median_rev"))
+        round4(col("medc") / 100.0).as("median_rev"))
       .orderBy("day")
   }
 
   private val sqlRollingMedian =
     s"""WITH daily AS (SELECT o_orderdate AS day,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS xc,
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS xc,
        |                      CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS di
        |               FROM orders GROUP BY 1),
        |     fan AS (SELECT di, xc, unnest(range(di, di + 7)) AS wd FROM daily),
@@ -1500,7 +1489,7 @@ object Analytics {
        |                  quantile_cont(xc, 0.5) AS medc
        |           FROM fan GROUP BY wd)
        |SELECT day, n_days,
-       |       ${graft.text.TextFns.duckRound4("medc / 100.0")} AS median_rev
+       |       ${duckRound4("medc / 100.0")} AS median_rev
        |FROM w JOIN daily ON w.wd = daily.di
        |ORDER BY day""".stripMargin
 
@@ -1532,7 +1521,7 @@ object Analytics {
   def cusumDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderdate").as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("xc"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("xc"))
     val tot = daily.agg(sum(col("xc")).as("tc"), count(lit(1)).as("nd"))
     val w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily.crossJoin(broadcast(tot))
@@ -1540,16 +1529,15 @@ object Analytics {
       .withColumn("r", sum(col("dev")).over(w))
       .withColumn("m", least(min(col("r")).over(w), lit(0L)))
       .select(col("day"),
-        graft.text.TextFns.round4(col("xc").cast("double") / 100.0).as("daily_rev"),
-        graft.text.TextFns.round4((col("r") - col("m")).cast("double")
+        round4(col("xc").cast("double") / 100.0).as("daily_rev"),
+        round4((col("r") - col("m")).cast("double")
           / (lit(2000.0) * col("nd").cast("double"))).as("cusum"))
       .orderBy("day")
   }
 
   private val sqlCusumDrift = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH daily AS (SELECT o_orderdate AS day,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS xc
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS xc
        |               FROM orders GROUP BY 1),
        |     tot AS (SELECT CAST(sum(xc) AS BIGINT) AS tc,
        |                    CAST(count(*) AS BIGINT) AS nd FROM daily),
@@ -1562,8 +1550,8 @@ object Analytics {
        |     mm AS (SELECT day, xc, nd, r,
        |                   least(min(r) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS m
        |            FROM win)
-       |SELECT day, ${r4("CAST(xc AS DOUBLE) / 100.0")} AS daily_rev,
-       |       ${r4("CAST(r - m AS DOUBLE) / (2000.0 * CAST(nd AS DOUBLE))")} AS cusum
+       |SELECT day, ${duckRound4("CAST(xc AS DOUBLE) / 100.0")} AS daily_rev,
+       |       ${duckRound4("CAST(r - m AS DOUBLE) / (2000.0 * CAST(nd AS DOUBLE))")} AS cusum
        |FROM mm ORDER BY day""".stripMargin
   }
 

@@ -1,7 +1,7 @@
 package graft.olap
 
 import graft.schema.Tables
-import graft.text.TextFns
+import graft.text.TextFns.{duckRound4, duckRound6, round4, round6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,11 +23,6 @@ import org.apache.spark.sql.functions._
   * parameters in Spark and DuckDB.
   */
 object Inference {
-
-  private def r6d(c: Column): Column =
-    (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
-  private def duckR6d(e: String): String =
-    s"CAST(floor(($e) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(28,6))"
 
   // ---------- q_conformal: split-conformal calibration + coverage ----------
 
@@ -58,7 +53,7 @@ object Inference {
         (col("event_id") % 5).as("sp"))
     val yhat = ev.filter(col("sp") <= 2)
       .groupBy("event_type")
-      .agg((sum(r6d(col("value"))).cast("double") /
+      .agg((sum(round6(col("value")).cast("decimal(28,6)")).cast("double") /
         count(lit(1)).cast("double")).as("yhat"))
     val cal = ev.filter(col("sp") === 3)
       .join(broadcast(yhat), "event_type")
@@ -81,19 +76,18 @@ object Inference {
         sum(when(abs(col("value") - col("yhat")) <= col("qhat"), 1L)
           .otherwise(0L)).as("covered"))
       .select(col("event_type"), col("n_cal"),
-        TextFns.round4(col("qhat")).as("qhat"),
+        round4(col("qhat")).as("qhat"),
         col("n_test"), col("covered"),
-        TextFns.round4(col("covered").cast("double") /
+        round4(col("covered").cast("double") /
           col("n_test").cast("double")).as("coverage"))
       .orderBy("event_type")
   }
 
   private val sqlConformal = {
-    val r4 = TextFns.duckRound4 _
     s"""WITH ev AS (SELECT event_type, event_id, value, event_id % 5 AS sp
        |            FROM events WHERE value IS NOT NULL),
        |     yh AS (SELECT event_type,
-       |                   CAST(sum(${duckR6d("value")}) AS DOUBLE) /
+       |                   CAST(sum(CAST(${duckRound6("value")} AS DECIMAL(28,6))) AS DOUBLE) /
        |                   CAST(count(*) AS DOUBLE) AS yhat
        |            FROM ev WHERE sp <= 2 GROUP BY event_type),
        |     cal AS (SELECT ev.event_type, ev.event_id,
@@ -117,10 +111,10 @@ object Inference {
        |           FROM ev JOIN yh ON ev.event_type = yh.event_type
        |                   JOIN qh ON ev.event_type = qh.event_type
        |           WHERE ev.sp = 4)
-       |SELECT event_type, n_cal, ${r4("qhat")} AS qhat,
+       |SELECT event_type, n_cal, ${duckRound4("qhat")} AS qhat,
        |       CAST(count(*) AS BIGINT) AS n_test,
        |       CAST(sum(cov) AS BIGINT) AS covered,
-       |       ${r4("CAST(sum(cov) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS coverage
+       |       ${duckRound4("CAST(sum(cov) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS coverage
        |FROM t GROUP BY event_type, n_cal, qhat
        |ORDER BY event_type""".stripMargin
   }
@@ -208,8 +202,8 @@ object Inference {
         .withColumn("w", col("pm") / (col("pm") + col("pu")))
     def emStep(params: DataFrame): DataFrame =
       weighted(params)
-        .withColumn("tw", r6d(col("cnt").cast("double") * col("w")))
-        .withColumn("tu", r6d(col("cnt").cast("double") * (lit(1.0) - col("w"))))
+        .withColumn("tw", round6(col("cnt").cast("double") * col("w")).cast("decimal(28,6)"))
+        .withColumn("tu", round6(col("cnt").cast("double") * (lit(1.0) - col("w"))).cast("decimal(28,6)"))
         .agg(sum(col("cnt")).as("c"),
           sum(col("tw")).as("sw"), sum(col("tu")).as("su"),
           sum(col("tw") * col("g_type")).as("mw1"),
@@ -240,7 +234,7 @@ object Inference {
     val p2 = emStep(emStep(p0))
     weighted(p2)
       .select(col("g_type"), col("g_size"), col("g_price"), col("cnt"),
-        TextFns.round4(col("w")).as("p_match"))
+        round4(col("w")).as("p_match"))
       .orderBy("g_type", "g_size", "g_price")
   }
 
@@ -260,8 +254,8 @@ object Inference {
          |             tw * g_type AS mw1, tw * g_size AS mw2, tw * g_price AS mw3,
          |             tu * g_type AS uw1, tu * g_size AS uw2, tu * g_price AS uw3
          |      FROM (SELECT pat.*,
-         |              ${duckR6d("CAST(cnt AS DOUBLE) * w")} AS tw,
-         |              ${duckR6d("CAST(cnt AS DOUBLE) * (1.0 - w)")} AS tu
+         |              CAST(${duckRound6("CAST(cnt AS DOUBLE) * w")} AS DECIMAL(28,6)) AS tw,
+         |              CAST(${duckRound6("CAST(cnt AS DOUBLE) * (1.0 - w)")} AS DECIMAL(28,6)) AS tu
          |            FROM (SELECT pat.*, pm / (pm + pu) AS w
          |                  FROM (SELECT pat.*,
          |                          pi * ${fk("g_type", "m1")} * ${fk("g_size", "m2")} * ${fk("g_price", "m3")} AS pm,
@@ -283,7 +277,7 @@ object Inference {
        |     p1 AS (${step("p0")}),
        |     p2 AS (${step("p1")})
        |SELECT g_type, g_size, g_price, cnt,
-       |       ${TextFns.duckRound4("pm / (pm + pu)")} AS p_match
+       |       ${duckRound4("pm / (pm + pu)")} AS p_match
        |FROM (SELECT pat.*,
        |        pi * ${fk("g_type", "m1")} * ${fk("g_size", "m2")} * ${fk("g_price", "m3")} AS pm,
        |        (1.0 - pi) * ${fk("g_type", "u1")} * ${fk("g_size", "u2")} * ${fk("g_price", "u3")} AS pu

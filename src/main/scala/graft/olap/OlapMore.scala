@@ -2,6 +2,7 @@ package graft.olap
 
 import graft.etl.SurrogateKeys
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -307,7 +308,7 @@ object OlapMore {
     // the full orders scan + dim joins + aggregate (24 parquet scans
     // in the before-plan).
     val byNation = orderNations(spark, sfDir)
-      .withColumn("cents", floor(col("price") * 100 + 0.5).cast("long"))
+      .withColumn("cents", units(col("price"), 100.0).cast("long"))
       .groupBy("region", "nation")
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("cents"))
       .localCheckpoint(true)
@@ -317,11 +318,11 @@ object OlapMore {
     byNation.join(broadcast(byRegion), "region")
       .crossJoin(broadcast(total))
       .select(col("region"), col("nation"), col("n_orders"),
-        graft.text.TextFns.round4(col("cents").cast("double") / 100.0).as("revenue"),
-        graft.text.TextFns.round4(
+        round4(col("cents").cast("double") / 100.0).as("revenue"),
+        round4(
           col("cents").cast("double") / col("region_cents").cast("double"))
           .as("pct_of_region"),
-        graft.text.TextFns.round4(
+        round4(
           col("cents").cast("double") / col("total_cents").cast("double"))
           .as("pct_of_total"))
       .orderBy("region", "nation")
@@ -343,9 +344,8 @@ object OlapMore {
   }
 
   private val sqlRatioToParent = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH j AS (SELECT r_name AS region, n_name AS nation,
-       |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+       |             CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS cents
        |           FROM orders
        |             JOIN customer ON o_custkey = c_custkey
        |             JOIN nation ON c_nationkey = n_nationkey
@@ -357,9 +357,9 @@ object OlapMore {
        |            FROM g GROUP BY region),
        |     t AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents FROM g)
        |SELECT g.region, nation, n_orders,
-       |       ${r4("CAST(cents AS DOUBLE) / 100.0")} AS revenue,
-       |       ${r4("CAST(cents AS DOUBLE) / CAST(region_cents AS DOUBLE)")} AS pct_of_region,
-       |       ${r4("CAST(cents AS DOUBLE) / CAST(total_cents AS DOUBLE)")} AS pct_of_total
+       |       ${duckRound4("CAST(cents AS DOUBLE) / 100.0")} AS revenue,
+       |       ${duckRound4("CAST(cents AS DOUBLE) / CAST(region_cents AS DOUBLE)")} AS pct_of_region,
+       |       ${duckRound4("CAST(cents AS DOUBLE) / CAST(total_cents AS DOUBLE)")} AS pct_of_total
        |FROM g JOIN rg ON g.region = rg.region CROSS JOIN t
        |ORDER BY g.region, nation""".stripMargin
   }
@@ -676,7 +676,7 @@ object OlapMore {
       .select(col("a.p_brand").as("brand"),
         col("a.p_name").as("name_a"), col("b.p_name").as("name_b"),
         (col("a.m") * col("b.m")).as("n_part_pairs"),
-        graft.text.TextFns.round4(col("jw")).as("jw"))
+        round4(col("jw")).as("jw"))
       .orderBy("brand", "name_a", "name_b")
   }
 
@@ -691,7 +691,7 @@ object OlapMore {
        |                             AND a.noun_blk = b.noun_blk
        |                             AND a.p_name < b.p_name)
        |SELECT brand, name_a, name_b, n_part_pairs,
-       |       ${graft.text.TextFns.duckRound4("jwv")} AS jw
+       |       ${duckRound4("jwv")} AS jw
        |FROM pr WHERE jwv >= $JwThreshold
        |ORDER BY brand, name_a, name_b""".stripMargin
 
@@ -733,14 +733,13 @@ object OlapMore {
       .crossJoin(broadcast(captured))
       .select(col("n_parts"), col("n_cand_pairs"), col("n_true_pairs"),
         col("n_captured"),
-        graft.text.TextFns.round4(col("n_captured").cast("double") /
+        round4(col("n_captured").cast("double") /
           col("n_true_pairs").cast("double")).as("completeness"),
-        graft.text.TextFns.round4(lit(1.0) - col("n_cand_pairs").cast("double") /
+        round4(lit(1.0) - col("n_cand_pairs").cast("double") /
           c2("n_parts").cast("double")).as("reduction_ratio"))
   }
 
   private val sqlBlockingQuality = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH p AS (SELECT p_brand, string_split(p_name, ' ')[-1] AS noun_blk, p_name
        |           FROM part),
        |     n AS (SELECT CAST(count(*) AS BIGINT) AS n_parts FROM p),
@@ -751,8 +750,8 @@ object OlapMore {
        |     cap AS (SELECT CAST(sum(mb * (mb - 1) // 2) AS BIGINT) AS n_captured
        |             FROM (SELECT count(*) AS mb FROM p GROUP BY p_name, p_brand))
        |SELECT n_parts, n_cand_pairs, n_true_pairs, n_captured,
-       |       ${r4("CAST(n_captured AS DOUBLE) / CAST(n_true_pairs AS DOUBLE)")} AS completeness,
-       |       ${r4("1.0 - CAST(n_cand_pairs AS DOUBLE) / CAST(n_parts * (n_parts - 1) // 2 AS DOUBLE)")} AS reduction_ratio
+       |       ${duckRound4("CAST(n_captured AS DOUBLE) / CAST(n_true_pairs AS DOUBLE)")} AS completeness,
+       |       ${duckRound4("1.0 - CAST(n_cand_pairs AS DOUBLE) / CAST(n_parts * (n_parts - 1) // 2 AS DOUBLE)")} AS reduction_ratio
        |FROM n CROSS JOIN cand CROSS JOIN tru CROSS JOIN cap""".stripMargin
   }
 
@@ -833,16 +832,15 @@ object OlapMore {
       .join(broadcast(tot.select(col("brand").as("brand2"), col("cnt").as("cnt2"))), "brand2")
       .crossJoin(broadcast(n))
       .select(col("brand1"), col("brand2"), col("pair_cnt"),
-        graft.text.TextFns.round4(col("pair_cnt").cast("double")
+        round4(col("pair_cnt").cast("double")
           / col("n_baskets").cast("double")).as("support"),
-        graft.text.TextFns.round4(col("pair_cnt").cast("double")
+        round4(col("pair_cnt").cast("double")
           * col("n_baskets").cast("double")
           / (col("cnt1").cast("double") * col("cnt2").cast("double"))).as("lift"))
       .orderBy("brand1", "brand2")
   }
 
   private val sqlBasketPairs = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH ob AS (SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
        |            FROM lineitem JOIN part ON l_partkey = p_partkey),
        |     tot AS (SELECT brand, CAST(count(*) AS BIGINT) AS cnt FROM ob GROUP BY 1),
@@ -852,8 +850,8 @@ object OlapMore {
        |            FROM ob a JOIN ob b ON a.ok = b.ok AND a.brand < b.brand
        |            GROUP BY 1, 2)
        |SELECT brand1, brand2, pair_cnt,
-       |       ${r4("CAST(pair_cnt AS DOUBLE) / CAST(n_baskets AS DOUBLE)")} AS support,
-       |       ${r4("CAST(pair_cnt AS DOUBLE) * CAST(n_baskets AS DOUBLE) / " +
+       |       ${duckRound4("CAST(pair_cnt AS DOUBLE) / CAST(n_baskets AS DOUBLE)")} AS support,
+       |       ${duckRound4("CAST(pair_cnt AS DOUBLE) * CAST(n_baskets AS DOUBLE) / " +
                  "(CAST(t1.cnt AS DOUBLE) * CAST(t2.cnt AS DOUBLE))")} AS lift
        |FROM pr
        |JOIN tot t1 ON pr.brand1 = t1.brand
@@ -913,9 +911,9 @@ object OlapMore {
       .join(broadcast(tot.select(col("brand").as("b3"), col("cnt").as("c3"))), "b3")
       .crossJoin(broadcast(n))
       .select(col("b1"), col("b2"), col("b3"), col("cnt3"),
-        graft.text.TextFns.round4(col("cnt3").cast("double")
+        round4(col("cnt3").cast("double")
           / col("n_baskets").cast("double")).as("support"),
-        graft.text.TextFns.round4(col("cnt3").cast("double")
+        round4(col("cnt3").cast("double")
           * col("n_baskets").cast("double") * col("n_baskets").cast("double")
           / (col("c1").cast("double") * col("c2").cast("double")
             * col("c3").cast("double"))).as("lift"))
@@ -923,7 +921,6 @@ object OlapMore {
   }
 
   private val sqlItemsetTriples = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH ob AS (SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
        |            FROM lineitem JOIN part ON l_partkey = p_partkey),
        |     tot AS (SELECT brand, CAST(count(*) AS BIGINT) AS cnt FROM ob GROUP BY 1),
@@ -936,8 +933,8 @@ object OlapMore {
        |            GROUP BY 1, 2, 3
        |            HAVING count(*) >= $TripleMinSup)
        |SELECT b1, b2, b3, cnt3,
-       |       ${r4("CAST(cnt3 AS DOUBLE) / CAST(n_baskets AS DOUBLE)")} AS support,
-       |       ${r4("CAST(cnt3 AS DOUBLE) * CAST(n_baskets AS DOUBLE) * CAST(n_baskets AS DOUBLE) / " +
+       |       ${duckRound4("CAST(cnt3 AS DOUBLE) / CAST(n_baskets AS DOUBLE)")} AS support,
+       |       ${duckRound4("CAST(cnt3 AS DOUBLE) * CAST(n_baskets AS DOUBLE) * CAST(n_baskets AS DOUBLE) / " +
                  "(CAST(t1.cnt AS DOUBLE) * CAST(t2.cnt AS DOUBLE) * CAST(t3.cnt AS DOUBLE))")} AS lift
        |FROM tr
        |JOIN tot t1 ON tr.b1 = t1.brand
@@ -970,8 +967,7 @@ object OlapMore {
     * result on both engines.
     */
   def abcAnalysis(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      * 100.0 + 0.5).cast("long")
+    val cents = units(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 100.0).cast("long")
     val partRev = Tables.lineitem(spark, sfDir)
       .select(col("l_partkey").as("partkey"), cents.as("cents"))
       .groupBy("partkey").agg(sum(col("cents")).as("rev"))
@@ -987,7 +983,7 @@ object OlapMore {
       .groupBy("cls")
       .agg(count(lit(1)).as("n_parts"), sum(col("rev")).as("rev_cents"),
         max(col("tot")).as("tot"))
-      .withColumn("rev_share", graft.text.TextFns.round4(
+      .withColumn("rev_share", round4(
         col("rev_cents").cast("double") / col("tot").cast("double")))
       .select("cls", "n_parts", "rev_cents", "rev_share")
       .orderBy("cls")
@@ -995,7 +991,7 @@ object OlapMore {
 
   private val sqlAbcAnalysis =
     s"""WITH pr AS (SELECT l_partkey AS partkey,
-       |                   CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS rev
+       |                   CAST(sum(CAST(${duckUnits("l_extendedprice * (1.0 - l_discount)", 100.0)} AS BIGINT)) AS BIGINT) AS rev
        |            FROM lineitem GROUP BY 1),
        |     t AS (SELECT CAST(sum(rev) AS BIGINT) AS tot FROM pr),
        |     s AS (SELECT partkey, rev, tot,
@@ -1009,7 +1005,7 @@ object OlapMore {
        |           FROM s)
        |SELECT cls, CAST(count(*) AS BIGINT) AS n_parts,
        |       CAST(sum(rev) AS BIGINT) AS rev_cents,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(rev) AS DOUBLE) / CAST(max(tot) AS DOUBLE)")} AS rev_share
        |FROM c GROUP BY cls ORDER BY cls""".stripMargin
 
@@ -1039,7 +1035,7 @@ object OlapMore {
       .filter(col("yr").isin(PvYearA, PvYearB))
       .select(col("l_partkey").as("partkey"), col("yr"),
         col("l_quantity").cast("long").as("qty"),
-        floor(col("l_extendedprice") * 100.0 + 0.5).cast("long").as("centsv"))
+        units(col("l_extendedprice"), 100.0).cast("long").as("centsv"))
     def yearAgg(y: Int) = li.filter(col("yr") === y)
       .groupBy("partkey")
       .agg(sum(col("qty")).as(s"q$y"), sum(col("centsv")).as(s"c$y"))
@@ -1057,33 +1053,28 @@ object OlapMore {
         .otherwise(col("p1")))
       .withColumn("vol_eff", (col("q2") - col("q1")).cast("double") * col("p1"))
       .withColumn("price_eff", col("q2").cast("double") * (col("p2") - col("p1")))
-    val r6d = (c: Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     val p = Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand"))
     j.join(p, col("partkey") === col("p_partkey"))
       .groupBy(col("p_brand").as("brand"))
       .agg(count(lit(1)).as("n_parts"),
         sum(col("c1")).as("rev1c"), sum(col("c2")).as("rev2c"),
-        sum(r6d(col("vol_eff"))).as("vol_dec"),
-        sum(r6d(col("price_eff"))).as("price_dec"))
+        sum(round6(col("vol_eff")).cast("decimal(28,6)")).as("vol_dec"),
+        sum(round6(col("price_eff")).cast("decimal(28,6)")).as("price_dec"))
       .select(col("brand"), col("n_parts"),
-        graft.text.TextFns.round4(col("rev1c").cast("double") / 100.0).as("rev_a"),
-        graft.text.TextFns.round4(col("rev2c").cast("double") / 100.0).as("rev_b"),
-        graft.text.TextFns.round4((col("rev2c") - col("rev1c")).cast("double") / 100.0)
+        round4(col("rev1c").cast("double") / 100.0).as("rev_a"),
+        round4(col("rev2c").cast("double") / 100.0).as("rev_b"),
+        round4((col("rev2c") - col("rev1c")).cast("double") / 100.0)
           .as("delta_rev"),
-        graft.text.TextFns.round4(col("vol_dec").cast("double")).as("volume_effect"),
-        graft.text.TextFns.round4(col("price_dec").cast("double")).as("price_effect"))
+        round4(col("vol_dec").cast("double")).as("volume_effect"),
+        round4(col("price_dec").cast("double")).as("price_effect"))
       .orderBy("brand")
   }
 
   private val sqlPriceVolume = {
-    val r4 = graft.text.TextFns.duckRound4 _
-    val r6d = (e: String) =>
-      s"CAST((floor(($e) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(28,6))"
     s"""WITH li AS (SELECT l_partkey AS partkey,
        |                   date_part('year', l_shipdate) AS yr,
        |                   CAST(l_quantity AS BIGINT) AS qty,
-       |                   CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS centsv
+       |                   CAST(${duckUnits("l_extendedprice", 100.0)} AS BIGINT) AS centsv
        |            FROM lineitem
        |            WHERE date_part('year', l_shipdate) IN ($PvYearA, $PvYearB)),
        |     a AS (SELECT partkey, CAST(sum(qty) AS BIGINT) AS q1,
@@ -1109,11 +1100,11 @@ object OlapMore {
        |                  CAST(q2 AS DOUBLE) * (p2 - p1) AS price_eff
        |           FROM j2)
        |SELECT p_brand AS brand, CAST(count(*) AS BIGINT) AS n_parts,
-       |       ${r4("CAST(sum(c1) AS DOUBLE) / 100.0")} AS rev_a,
-       |       ${r4("CAST(sum(c2) AS DOUBLE) / 100.0")} AS rev_b,
-       |       ${r4("CAST(sum(c2) - sum(c1) AS DOUBLE) / 100.0")} AS delta_rev,
-       |       ${r4(s"CAST(sum(${r6d("vol_eff")}) AS DOUBLE)")} AS volume_effect,
-       |       ${r4(s"CAST(sum(${r6d("price_eff")}) AS DOUBLE)")} AS price_effect
+       |       ${duckRound4("CAST(sum(c1) AS DOUBLE) / 100.0")} AS rev_a,
+       |       ${duckRound4("CAST(sum(c2) AS DOUBLE) / 100.0")} AS rev_b,
+       |       ${duckRound4("CAST(sum(c2) - sum(c1) AS DOUBLE) / 100.0")} AS delta_rev,
+       |       ${duckRound4(s"CAST(sum(CAST(${duckRound6("vol_eff")} AS DECIMAL(28,6))) AS DOUBLE)")} AS volume_effect,
+       |       ${duckRound4(s"CAST(sum(CAST(${duckRound6("price_eff")} AS DECIMAL(28,6))) AS DOUBLE)")} AS price_effect
        |FROM e JOIN part ON partkey = p_partkey
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
@@ -1186,15 +1177,14 @@ object OlapMore {
     * pattern of OlapMore's other checkpointed aggregates).
     */
   def rankJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val round6 = (c: Column) => floor(c * 1000000.0 + 0.5) / 1000000.0
     val spend = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey").as("c_custkey"))
       .agg(sum(round6(col("o_totalprice")).cast("decimal(28,6)")).as("sd"))
       .select(col("c_custkey"),
-        graft.text.TextFns.round4(col("sd").cast("double")).as("sa"))
+        round4(col("sd").cast("double")).as("sa"))
       .localCheckpoint()
     val bal = Tables.customer(spark, sfDir)
-      .select(col("c_custkey"), graft.text.TextFns.round4(col("c_acctbal")).as("sb"))
+      .select(col("c_custkey"), round4(col("c_acctbal")).as("sb"))
       .localCheckpoint()
     val nA = spend.count()
     var m = 64L
@@ -1208,7 +1198,7 @@ object OlapMore {
       // balance list — fine at test SF, wrong at 100 TB
       val scored = broadcast(broadcast(cand).join(spend, "c_custkey"))
         .join(bal, "c_custkey")
-        .withColumn("combined", graft.text.TextFns.round4(col("sa") + col("sb")))
+        .withColumn("combined", round4(col("sa") + col("sb")))
       val topk = scored.orderBy(col("combined").desc, col("c_custkey"))
         .limit(RankJoinK)
       if (m >= nA) answer = Some(topk)
@@ -1231,13 +1221,11 @@ object OlapMore {
   }
 
   private val sqlRankJoin = {
-    val r4 = graft.text.TextFns.duckRound4 _
-    val r6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
     s"""WITH spend AS (SELECT o_custkey AS c_custkey,
-       |                      ${r4(s"CAST(sum(CAST(${r6("o_totalprice")} AS DECIMAL(28,6))) AS DOUBLE)")} AS sa
+       |                      ${duckRound4(s"CAST(sum(CAST(${duckRound6("o_totalprice")} AS DECIMAL(28,6))) AS DOUBLE)")} AS sa
        |               FROM orders GROUP BY 1),
-       |     j AS (SELECT s.c_custkey, s.sa, ${r4("c.c_acctbal")} AS sb,
-       |                  ${r4(s"s.sa + ${r4("c.c_acctbal")}")} AS combined
+       |     j AS (SELECT s.c_custkey, s.sa, ${duckRound4("c.c_acctbal")} AS sb,
+       |                  ${duckRound4(s"s.sa + ${duckRound4("c.c_acctbal")}")} AS combined
        |           FROM spend s JOIN customer c ON s.c_custkey = c.c_custkey),
        |     r AS (SELECT j.*, row_number() OVER (ORDER BY combined DESC, c_custkey) AS rank
        |           FROM j)

@@ -2,6 +2,7 @@ package graft.olap
 
 import graft.etl.CleanFns
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -116,8 +117,8 @@ object OlapQueries {
         sum(col("o_totalprice").cast("decimal(15,2)")).cast("double").as("total"),
         count(lit(1)).as("n_orders"))
       .select(col("month"),
-        graft.text.TextFns.round4(col("total")).as("total_revenue"),
-        graft.text.TextFns.round4(col("total") / col("n_orders").cast("double"))
+        round4(col("total")).as("total_revenue"),
+        round4(col("total") / col("n_orders").cast("double"))
           .as("avg_order_value"),
         col("n_orders"))
       .orderBy("month")
@@ -127,8 +128,8 @@ object OlapQueries {
        |                  CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) AS DOUBLE) AS total,
        |                  count(*) AS n_orders
        |           FROM orders GROUP BY 1)
-       |SELECT month, ${graft.text.TextFns.duckRound4("total")} AS total_revenue,
-       |       ${graft.text.TextFns.duckRound4("total / CAST(n_orders AS DOUBLE)")} AS avg_order_value,
+       |SELECT month, ${duckRound4("total")} AS total_revenue,
+       |       ${duckRound4("total / CAST(n_orders AS DOUBLE)")} AS avg_order_value,
        |       n_orders
        |FROM m ORDER BY 1""".stripMargin
 
@@ -282,20 +283,18 @@ object OlapQueries {
     * before the cross-row sum (order-independent), one rounded edge.
     */
   def discountRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     Tables.lineitem(spark, sfDir)
       .filter(year(col("l_shipdate")) === 1996
         && col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
       .agg(count(lit(1)).as("n_items"),
-        sum(r6d(col("l_extendedprice") * col("l_discount"))).as("rev_dec"))
+        sum(round6(col("l_extendedprice") * col("l_discount")).cast("decimal(28,6)")).as("rev_dec"))
       .select(col("n_items"),
         round(col("rev_dec").cast("double"), 4).as("promo_revenue"))
   }
 
   private val sqlDiscountRevenue =
-    """SELECT count(*) AS n_items,
-      |       round(CAST(sum(CAST((floor(l_extendedprice * l_discount * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(28,6))) AS DOUBLE), 4) AS promo_revenue
+    s"""SELECT count(*) AS n_items,
+      |       round(CAST(sum(CAST(${duckRound6("l_extendedprice * l_discount")} AS DECIMAL(28,6))) AS DOUBLE), 4) AS promo_revenue
       |FROM lineitem
       |WHERE date_part('year', l_shipdate) = 1996
       |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin
@@ -314,8 +313,6 @@ object OlapQueries {
     * nation table stays the only true broadcast.)
     */
   def localSupply(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     val li = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir).filter(year(col("o_orderdate")) === 1996)
     val c = Tables.customer(spark, sfDir)
@@ -328,7 +325,7 @@ object OlapQueries {
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name").as("nation"))
       .agg(count(lit(1)).as("n_items"),
-        sum(r6d(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
+        sum(round6(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(28,6)"))
           .as("rev_dec"))
       .select(col("nation"), col("n_items"),
         round(col("rev_dec").cast("double"), 4).as("revenue"))
@@ -336,8 +333,8 @@ object OlapQueries {
   }
 
   private val sqlLocalSupply =
-    """SELECT n_name AS nation, count(*) AS n_items,
-      |       round(CAST(sum(CAST((floor(l_extendedprice * (1.0 - l_discount) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(28,6))) AS DOUBLE), 4) AS revenue
+    s"""SELECT n_name AS nation, count(*) AS n_items,
+      |       round(CAST(sum(CAST(${duckRound6("l_extendedprice * (1.0 - l_discount)")} AS DECIMAL(28,6))) AS DOUBLE), 4) AS revenue
       |FROM lineitem
       |JOIN orders ON l_orderkey = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
@@ -364,8 +361,7 @@ object OlapQueries {
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"))
       .agg(count(lit(1)).as("n_items"),
-        sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100.0 + 0.5).cast("long")).as("cents"))
+        sum(units(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 100.0).cast("long")).as("cents"))
       .orderBy(col("cents").desc, col("c_custkey"))
       .limit(20)
       .select(col("c_custkey"), col("c_name"), col("n_items"),
@@ -373,8 +369,8 @@ object OlapQueries {
   }
 
   private val sqlTopReturners =
-    """WITH g AS (SELECT c_custkey, c_name, count(*) AS n_items,
-      |                  CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+    s"""WITH g AS (SELECT c_custkey, c_name, count(*) AS n_items,
+      |                  CAST(sum(CAST(${duckUnits("l_extendedprice * (1.0 - l_discount)", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |           FROM lineitem
       |           JOIN orders ON l_orderkey = o_orderkey
       |           JOIN customer ON o_custkey = c_custkey
@@ -397,7 +393,7 @@ object OlapQueries {
     * aggregate. Exact integer cents/counts; two rounded shares.
     */
   def returnRate(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = floor(col("l_extendedprice") * 100.0 + 0.5).cast("long")
+    val cents = units(col("l_extendedprice"), 100.0).cast("long")
     val li = Tables.lineitem(spark, sfDir)
     val p = Tables.part(spark, sfDir)
     li.join(p, li("l_partkey") === p("p_partkey"))
@@ -416,11 +412,11 @@ object OlapQueries {
   }
 
   private val sqlReturnRate =
-    """WITH g AS (SELECT p_brand AS brand, count(*) AS n_items,
+    s"""WITH g AS (SELECT p_brand AS brand, count(*) AS n_items,
       |                  CAST(count(CASE WHEN l_returnflag = 'R' THEN 1 END) AS BIGINT) AS n_returned,
-      |                  CAST(sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents_all,
+      |                  CAST(sum(CAST(${duckUnits("l_extendedprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents_all,
       |                  CAST(sum(CASE WHEN l_returnflag = 'R'
-      |                           THEN CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
+      |                           THEN CAST(${duckUnits("l_extendedprice", 100.0)} AS BIGINT)
       |                           ELSE 0 END) AS BIGINT) AS cents_returned
       |           FROM lineitem JOIN part ON l_partkey = p_partkey
       |           GROUP BY 1)
@@ -445,7 +441,7 @@ object OlapQueries {
     */
   def discountUplift(spark: SparkSession, sfDir: String): DataFrame = {
     val bands = Tables.lineitem(spark, sfDir)
-      .select(floor(col("l_discount") * 100.0 + 0.5).cast("long").as("disc_pct"),
+      .select(units(col("l_discount"), 100.0).cast("long").as("disc_pct"),
         col("l_quantity").cast("long").as("qty"))
       .groupBy("disc_pct")
       .agg(count(lit(1)).as("n_lines"), sum(col("qty")).as("units"))
@@ -462,7 +458,7 @@ object OlapQueries {
   }
 
   private val sqlDiscountUplift =
-    """WITH b AS (SELECT CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT) AS disc_pct,
+    s"""WITH b AS (SELECT CAST(${duckUnits("l_discount", 100.0)} AS BIGINT) AS disc_pct,
       |                  count(*) AS n_lines,
       |                  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS units
       |           FROM lineitem GROUP BY 1),
@@ -490,7 +486,7 @@ object OlapQueries {
   def hhi(spark: SparkSession, sfDir: String): DataFrame = {
     val supRev = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_suppkey"))
-      .agg(sum(floor(col("l_extendedprice") * 100.0 + 0.5).cast("long")).as("c"))
+      .agg(sum(units(col("l_extendedprice"), 100.0).cast("long")).as("c"))
     val s = Tables.supplier(spark, sfDir)
       .select(col("s_suppkey"), col("s_nationkey"))
     val n = Tables.nation(spark, sfDir).select(col("n_nationkey"), col("n_name"))
@@ -508,8 +504,8 @@ object OlapQueries {
   }
 
   private val sqlHhi =
-    """WITH sr AS (SELECT l_suppkey,
-      |                   CAST(sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS c
+    s"""WITH sr AS (SELECT l_suppkey,
+      |                   CAST(sum(CAST(${duckUnits("l_extendedprice", 100.0)} AS BIGINT)) AS BIGINT) AS c
       |            FROM lineitem GROUP BY 1),
       |     g AS (SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_suppliers,
       |                  CAST(sum(c) AS BIGINT) AS tot,
@@ -537,11 +533,11 @@ object OlapQueries {
     * quarter rows (bounded).
     */
   private val sharedSql =
-    """WITH rev AS (
+    s"""WITH rev AS (
       |  SELECT r_name AS region,
       |         CAST(year(o_orderdate) AS BIGINT) AS yr,
       |         CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-      |         CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |         CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey
       |       JOIN nation ON c_nationkey = n_nationkey
       |       JOIN region ON n_regionkey = r_regionkey
@@ -645,15 +641,15 @@ object OlapQueries {
       (d(col("s1")) / d(col("n1")) - d(col("s0")) / d(col("n0")))
     cells.crossJoin(broadcast(tot))
       .withColumn("t6",
-        (floor(term * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)"))
+        round6(term).cast("decimal(28,6)"))
       .groupBy("kb", "nt1", "nt0", "st1", "st0")
       .agg(sum(col("t6")).as("ate6"))
       .select(col("kb").as("n_strata"),
         col("nt1").as("n_treated"), col("nt0").as("n_control"),
-        graft.text.TextFns.round4(
+        round4(
           d(col("st1")) / d(col("nt1")) - d(col("st0")) / d(col("nt0")))
           .as("naive_diff"),
-        graft.text.TextFns.round4(col("ate6").cast("double")).as("strat_ate"))
+        round4(col("ate6").cast("double")).as("strat_ate"))
   }
 
   private val sqlStratAte = {
@@ -674,14 +670,14 @@ object OlapQueries {
        |                    CAST(sum(s0) AS BIGINT) AS st0, CAST(sum(n) AS BIGINT) AS nn
        |             FROM cells),
        |     a AS (SELECT kb, nt1, nt0, st1, st0,
-       |                  sum(CAST(floor($term * 1000000.0 + 0.5) / 1000000.0
+       |                  sum(CAST(${duckRound6(term)}
        |                        AS DECIMAL(28,6))) AS ate6
        |           FROM cells CROSS JOIN tot
        |           GROUP BY 1, 2, 3, 4, 5)
        |SELECT kb AS n_strata, nt1 AS n_treated, nt0 AS n_control,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(st1 AS DOUBLE) / CAST(nt1 AS DOUBLE) - CAST(st0 AS DOUBLE) / CAST(nt0 AS DOUBLE)")} AS naive_diff,
-       |       ${graft.text.TextFns.duckRound4("CAST(ate6 AS DOUBLE)")} AS strat_ate
+       |       ${duckRound4("CAST(ate6 AS DOUBLE)")} AS strat_ate
        |FROM a""".stripMargin
   }
 
@@ -711,8 +707,6 @@ object OlapQueries {
     * is fixed-shape doubles over those exact values.
     */
   def ipfRake(spark: SparkSession, sfDir: String): DataFrame = {
-    def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     def dd(c: org.apache.spark.sql.Column) = c.cast("double")
     val o = Tables.orders(spark, sfDir)
     val c = Tables.customer(spark, sfDir)
@@ -729,28 +723,26 @@ object OlapQueries {
     val s1 = cells
       .join(broadcast(cells.groupBy("m").agg(sum(col("c0")).as("rt0"))), "m")
       .join(broadcast(rowMargin), "m")
-      .withColumn("c1", r6(dd(col("c0")) * dd(col("tm")) / dd(col("rt0"))))
+      .withColumn("c1", round6(dd(col("c0")) * dd(col("tm")) / dd(col("rt0"))).cast("decimal(28,6)"))
       .localCheckpoint(true)
     val s2 = s1
       .join(broadcast(s1.groupBy("seg").agg(sum(col("c1")).as("ct1"))), "seg")
       .join(broadcast(colMargin), "seg")
-      .withColumn("c2", r6(dd(col("c1")) * dd(col("ts")) / dd(col("ct1"))))
+      .withColumn("c2", round6(dd(col("c1")) * dd(col("ts")) / dd(col("ct1"))).cast("decimal(28,6)"))
       .localCheckpoint(true)
     val s3 = s2
       .join(broadcast(s2.groupBy("m").agg(sum(col("c2")).as("rt2"))), "m")
-      .withColumn("c3", r6(dd(col("c2")) * dd(col("tm")) / dd(col("rt2"))))
+      .withColumn("c3", round6(dd(col("c2")) * dd(col("tm")) / dd(col("rt2"))).cast("decimal(28,6)"))
     s3.groupBy("seg", "ts")
       .agg(count(lit(1)).as("n_cells"), sum(col("c3")).as("mass"))
       .select(col("seg"), col("n_cells"), col("ts").as("target"),
-        graft.text.TextFns.round4(dd(col("mass"))).as("raked_mass"),
-        graft.text.TextFns.round4(
+        round4(dd(col("mass"))).as("raked_mass"),
+        round4(
           (dd(col("mass")) - dd(col("ts"))) / dd(col("ts"))).as("rel_gap"))
       .orderBy("seg")
   }
 
   private val sqlIpfRake = {
-    val r4 = graft.text.TextFns.duckRound4 _
-    def r6(e: String) = s"CAST(floor(($e) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(28,6))"
     s"""WITH al AS (SELECT strftime(o_orderdate, '%Y-%m') AS m, c_mktsegment AS seg,
        |                   o_orderkey
        |            FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -760,21 +752,21 @@ object OlapQueries {
        |               FROM al WHERE o_orderkey % 3 = 0 GROUP BY 1, 2),
        |     rt0 AS (SELECT m, sum(c0) AS rt0 FROM cells GROUP BY 1),
        |     s1 AS (SELECT cells.m, seg,
-       |                   ${r6("CAST(c0 AS DOUBLE) * CAST(tm AS DOUBLE) / CAST(rt0 AS DOUBLE)")} AS c1
+       |                   CAST(${duckRound6("CAST(c0 AS DOUBLE) * CAST(tm AS DOUBLE) / CAST(rt0 AS DOUBLE)")} AS DECIMAL(28,6)) AS c1
        |            FROM cells JOIN rt0 ON cells.m = rt0.m JOIN rmg ON cells.m = rmg.m),
        |     ct1 AS (SELECT seg, sum(c1) AS ct1 FROM s1 GROUP BY 1),
        |     s2 AS (SELECT m, s1.seg,
-       |                   ${r6("CAST(c1 AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(ct1 AS DOUBLE)")} AS c2
+       |                   CAST(${duckRound6("CAST(c1 AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(ct1 AS DOUBLE)")} AS DECIMAL(28,6)) AS c2
        |            FROM s1 JOIN ct1 ON s1.seg = ct1.seg JOIN cmg ON s1.seg = cmg.seg),
        |     rt2 AS (SELECT m, sum(c2) AS rt2 FROM s2 GROUP BY 1),
        |     s3 AS (SELECT s2.m, seg,
-       |                   ${r6("CAST(c2 AS DOUBLE) * CAST(tm AS DOUBLE) / CAST(rt2 AS DOUBLE)")} AS c3
+       |                   CAST(${duckRound6("CAST(c2 AS DOUBLE) * CAST(tm AS DOUBLE) / CAST(rt2 AS DOUBLE)")} AS DECIMAL(28,6)) AS c3
        |            FROM s2 JOIN rt2 ON s2.m = rt2.m JOIN rmg ON s2.m = rmg.m),
        |     f AS (SELECT seg, CAST(count(*) AS BIGINT) AS n_cells, sum(c3) AS mass
        |           FROM s3 GROUP BY 1)
        |SELECT f.seg, n_cells, ts AS target,
-       |       ${r4("CAST(mass AS DOUBLE)")} AS raked_mass,
-       |       ${r4("(CAST(mass AS DOUBLE) - CAST(ts AS DOUBLE)) / CAST(ts AS DOUBLE)")} AS rel_gap
+       |       ${duckRound4("CAST(mass AS DOUBLE)")} AS raked_mass,
+       |       ${duckRound4("(CAST(mass AS DOUBLE) - CAST(ts AS DOUBLE)) / CAST(ts AS DOUBLE)")} AS rel_gap
        |FROM f JOIN cmg ON f.seg = cmg.seg ORDER BY f.seg""".stripMargin
   }
 

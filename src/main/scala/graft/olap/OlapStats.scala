@@ -1,7 +1,7 @@
 package graft.olap
 
 import graft.schema.Tables
-import graft.text.TextFns.{round4, duckRound4}
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -331,8 +331,6 @@ object OlapStats {
     * edge — never a raw-double groupBy sum.
     */
   def winsorize(spark: SparkSession, sfDir: String): DataFrame = {
-    val round6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * 1000000.0 + 0.5) / 1000000.0
     val o = Tables.orders(spark, sfDir)
     val c = Tables.customer(spark, sfDir)
     // Staged once — same two-consumer fence shape as `outliers` above
@@ -363,7 +361,6 @@ object OlapStats {
   }
 
   private val sqlWinsorize = {
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
     s"""WITH p AS (SELECT c_mktsegment AS segment, o_totalprice AS price
        |           FROM orders JOIN customer ON o_custkey = c_custkey),
        |     f AS (SELECT segment, quantile_cont(price, 0.05) AS lo,
@@ -376,10 +373,10 @@ object OlapStats {
        |       count(CASE WHEN price < lo THEN 1 END) AS n_clipped_lo,
        |       count(CASE WHEN price > hi THEN 1 END) AS n_clipped_hi,
        |       ${duckRound4(
-                  s"CAST(sum(CAST(${round6("price")} AS DECIMAL(28,6))) AS DOUBLE)" +
+                  s"CAST(sum(CAST(${duckRound6("price")} AS DECIMAL(28,6))) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS mean_raw,
        |       ${duckRound4(
-                  s"CAST(sum(CAST(${round6("clipped")} AS DECIMAL(28,6))) AS DOUBLE)" +
+                  s"CAST(sum(CAST(${duckRound6("clipped")} AS DECIMAL(28,6))) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS mean_winsorized,
        |       ${duckRound4("min(lo)")} AS lo_fence,
        |       ${duckRound4("max(hi)")} AS hi_fence
@@ -533,7 +530,7 @@ object OlapStats {
     (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d))
 
   def benford(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+    val c = units(col("o_totalprice"), 100.0).cast("long")
     // fold ASCENDING so the largest power lands outermost — CASE
     // semantics check the outermost (= largest) threshold first,
     // mirroring the oracle's descending WHEN ladder
@@ -560,7 +557,7 @@ object OlapStats {
       .map(p => s"WHEN c >= $p THEN c // $p").mkString(" ")
     val expCase = BenfordExp
       .map { case (d, e) => s"WHEN digit = $d THEN $e" }.mkString(" ")
-    s"""WITH v AS (SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
+    s"""WITH v AS (SELECT CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS c
        |           FROM orders),
        |     f AS (SELECT CAST(CASE $ladder ELSE c END AS BIGINT) AS digit FROM v),
        |     g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY digit),
@@ -601,7 +598,7 @@ object OlapStats {
         when(col("l_returnflag") === f, lit(i.toLong)).otherwise(acc) }
     val rows = Tables.lineitem(spark, sfDir)
       .select(flagIdx.as("fi"),
-        floor(col("l_extendedprice") * 100.0 + 0.5).cast("long").as("cents"),
+        units(col("l_extendedprice"), 100.0).cast("long").as("cents"),
         col("l_quantity").cast("long").as("w"),
         (col("l_orderkey") * 10L + col("l_linenumber")).as("rid"))
       .withColumn("ord",
@@ -634,7 +631,7 @@ object OlapStats {
 
   private val sqlWeightedMedian =
     s"""WITH r AS (SELECT l_returnflag AS f,
-       |                  CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents,
+       |                  CAST(${duckUnits("l_extendedprice", 100.0)} AS BIGINT) AS cents,
        |                  CAST(l_quantity AS BIGINT) AS w,
        |                  l_orderkey * 10 + l_linenumber AS rid
        |           FROM lineitem),
@@ -1013,7 +1010,7 @@ object OlapStats {
   def simpsonSlopes(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"),
-        floor(col("l_discount") * 100.0 + 0.5).cast("long").as("x"),
+        units(col("l_discount"), 100.0).cast("long").as("x"),
         col("l_quantity").cast("long").as("y"))
     val o = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
     val c = Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_mktsegment"))
@@ -1050,7 +1047,7 @@ object OlapStats {
     val slope = "(CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) / " +
       "(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
     s"""WITH f AS (SELECT c_mktsegment AS segment,
-       |                  CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT) AS x,
+       |                  CAST(${duckUnits("l_discount", 100.0)} AS BIGINT) AS x,
        |                  CAST(l_quantity AS BIGINT) AS y
        |           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |                JOIN customer ON o_custkey = c_custkey),
@@ -1173,7 +1170,7 @@ object OlapStats {
     */
   def hillTail(spark: SparkSession, sfDir: String): DataFrame = {
     val topK1 = udaf(new graft.functions.TopKAgg(HillK + 1))
-    val cents = floor(col("o_totalprice") * 100.0 + 0.5).cast("long").cast("double")
+    val cents = units(col("o_totalprice"), 100.0).cast("long").cast("double")
     Tables.orders(spark, sfDir)
       .groupBy(col("o_orderpriority").as("priority"))
       .agg(topK1(cents).as("vals"))
@@ -1191,7 +1188,7 @@ object OlapStats {
 
   private val sqlHillTail =
     s"""WITH c AS (SELECT o_orderpriority AS priority,
-       |                  CAST(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS DOUBLE) AS x
+       |                  CAST(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS DOUBLE) AS x
        |           FROM orders),
        |     r AS (SELECT priority, x,
        |                  row_number() OVER (PARTITION BY priority ORDER BY x DESC) AS rn
@@ -1351,7 +1348,7 @@ object OlapStats {
       .select(col("c_mktsegment").as("seg"), col("o_totalprice").as("x"))
     val med = base.groupBy("seg")
       .agg(expr("percentile(x, 0.5)").as("med"))
-    val z6 = (floor(abs(col("x") - col("med")) * 1000000.0 + 0.5) / 1000000.0)
+    val z6 = round6(abs(col("x") - col("med")))
       .cast("decimal(18,6)")
     val m = base.join(broadcast(med), "seg")
       .withColumn("z", z6)
@@ -1385,7 +1382,7 @@ object OlapStats {
        |              FROM orders JOIN customer ON o_custkey = c_custkey),
        |     md AS (SELECT seg, quantile_cont(x, 0.5) AS med FROM base GROUP BY 1),
        |     zz AS (SELECT base.seg,
-       |                   CAST(floor(abs(x - med) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6)) AS z
+       |                   CAST(${duckRound6("abs(x - med)")} AS DECIMAL(18,6)) AS z
        |            FROM base JOIN md ON base.seg = md.seg),
        |     m AS (SELECT seg, count(*) AS n, sum(z) AS sx,
        |                  sum(CAST(z AS DECIMAL(19,6)) * z) AS sxx
@@ -1421,7 +1418,7 @@ object OlapStats {
     // Staged once — same two-consumer fence shape as `outliers`
     val base = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("o_totalprice").as("x"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("xc"))
+        units(col("o_totalprice"), 100.0).cast("long").as("xc"))
       .localCheckpoint(true)
     val fences = base.groupBy("seg")
       .agg(expr("percentile(x, 0.05)").as("lo"), expr("percentile(x, 0.95)").as("hi"))
@@ -1447,7 +1444,7 @@ object OlapStats {
     val mean = "(CAST(sc AS DOUBLE) / 100.0 / CAST(n AS DOUBLE))"
     val tmean = "(CAST(sk AS DOUBLE) / 100.0 / CAST(n_kept AS DOUBLE))"
     s"""WITH base AS (SELECT c_mktsegment AS seg, o_totalprice AS x,
-       |                     CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS xc
+       |                     CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS xc
        |              FROM orders JOIN customer ON o_custkey = c_custkey),
        |     f AS (SELECT seg, quantile_cont(x, 0.05) AS lo, quantile_cont(x, 0.95) AS hi
        |           FROM base GROUP BY 1),
@@ -1485,7 +1482,7 @@ object OlapStats {
   def kruskalWallis(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderdate").as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("xc"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("xc"))
       .withColumn("dow", dayofweek(col("day")).cast("long"))
       .localCheckpoint(true)
     val byVal = daily.groupBy("xc").agg(count(lit(1)).as("t"))
@@ -1519,7 +1516,7 @@ object OlapStats {
     val h = s"(3.0 * sr / ($nD * ($nD + 1.0)) - 3.0 * ($nD + 1.0))"
     val corr = s"(1.0 - CAST(tsum AS DOUBLE) / ($nD * $nD * $nD - $nD))"
     s"""WITH daily AS (SELECT o_orderdate AS day,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS xc,
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS xc,
        |                      CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow
        |               FROM orders GROUP BY 1, 3),
        |     bv AS (SELECT xc, CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY 1),
@@ -1569,7 +1566,7 @@ object OlapStats {
     val cells = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("m"),
         col("c_mktsegment").as("seg"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("sc"),
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("sc"),
         count(lit(1)).as("n"))
       .localCheckpoint(true)
     val k = cells.select(countDistinct(col("seg")).as("k"))
@@ -1603,7 +1600,7 @@ object OlapStats {
       "(CAST(n AS DOUBLE) * CAST(k AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)) " +
       "- 3.0 * CAST(n AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0))"
     s"""WITH cells AS (SELECT strftime(o_orderdate, '%Y-%m') AS m, c_mktsegment AS seg,
-       |                      CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS sc,
+       |                      CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS sc,
        |                      CAST(count(*) AS BIGINT) AS n
        |               FROM orders JOIN customer ON o_custkey = c_custkey
        |               GROUP BY 1, 2),
@@ -1709,7 +1706,7 @@ object OlapStats {
     val base = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "BUILDING"))
       .select((col("c_mktsegment") === "AUTOMOBILE").as("is_a"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("xc"))
+        units(col("o_totalprice"), 100.0).cast("long").as("xc"))
     val g = base.groupBy("xc").agg(
       sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
       sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
@@ -1747,7 +1744,7 @@ object OlapStats {
 
   private val sqlWasserstein =
     s"""WITH base AS (SELECT c_mktsegment = 'AUTOMOBILE' AS is_a,
-       |                     CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS xc
+       |                     CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) AS xc
        |              FROM orders JOIN customer ON o_custkey = c_custkey
        |              WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING')),
        |     g AS (SELECT xc,
@@ -1792,7 +1789,7 @@ object OlapStats {
     val g = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "BUILDING"))
       .select((col("c_mktsegment") === "AUTOMOBILE").as("is_a"),
-        least(expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) div 2500000"),
+        least(expr(s"CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) div 2500000"),
           lit(20L)).as("b"))
       .groupBy("b").agg(
         sum(when(col("is_a"), 1L).otherwise(0L)).as("pa"),
@@ -1814,7 +1811,7 @@ object OlapStats {
   private val sqlBhattacharyya = {
     val term = "sqrt(CAST(pa AS DOUBLE) / CAST(nat AS DOUBLE)) * " +
       "sqrt(CAST(pb AS DOUBLE) / CAST(nbt AS DOUBLE))"
-    s"""WITH g AS (SELECT LEAST(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) // 2500000, 20) AS b,
+    s"""WITH g AS (SELECT LEAST(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT) // 2500000, 20) AS b,
        |                  CAST(sum(CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END) AS BIGINT) AS pa,
        |                  CAST(sum(CASE WHEN c_mktsegment <> 'AUTOMOBILE' THEN 1 ELSE 0 END) AS BIGINT) AS pb
        |           FROM orders JOIN customer ON o_custkey = c_custkey

@@ -2,6 +2,7 @@ package graft.olap
 
 import graft.functions.TextHashUtil
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckUnits, round4, units}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -84,24 +85,23 @@ object Skew {
           .otherwise(lit(0L))).as("hot_rows"))
         .select(lit(k).as("key_name"), col("n_rows"), col("n_keys"),
           col("max_cnt"),
-          graft.text.TextFns.round4(col("p50_cnt")).as("p50_cnt"),
-          graft.text.TextFns.round4(col("p99_cnt")).as("p99_cnt"),
-          graft.text.TextFns.round4(col("max_cnt").cast("double")
+          round4(col("p50_cnt")).as("p50_cnt"),
+          round4(col("p99_cnt")).as("p99_cnt"),
+          round4(col("max_cnt").cast("double")
             * col("n_keys").cast("double") / col("n_rows").cast("double"))
             .as("skew_ratio"),
-          graft.text.TextFns.round4(col("hot_rows").cast("double")
+          round4(col("hot_rows").cast("double")
             / col("n_rows").cast("double")).as("hot_share"))
     }
     perKey.reduce(_ unionByName _).orderBy("key_name")
   }
 
   private val sqlKeySkew = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val blocks = SkewKeys.map { k =>
       s"""SELECT '$k' AS key_name, n_rows, n_keys, max_cnt,
-         |       ${r4("p50_cnt")} AS p50_cnt, ${r4("p99_cnt")} AS p99_cnt,
-         |       ${r4("CAST(max_cnt AS DOUBLE) * CAST(n_keys AS DOUBLE) / CAST(n_rows AS DOUBLE)")} AS skew_ratio,
-         |       ${r4("CAST(hot_rows AS DOUBLE) / CAST(n_rows AS DOUBLE)")} AS hot_share
+         |       ${duckRound4("p50_cnt")} AS p50_cnt, ${duckRound4("p99_cnt")} AS p99_cnt,
+         |       ${duckRound4("CAST(max_cnt AS DOUBLE) * CAST(n_keys AS DOUBLE) / CAST(n_rows AS DOUBLE)")} AS skew_ratio,
+         |       ${duckRound4("CAST(hot_rows AS DOUBLE) / CAST(n_rows AS DOUBLE)")} AS hot_share
          |FROM (
          |  SELECT max(n_keys) AS n_keys, max(n_rows) AS n_rows,
          |         max(max_cnt) AS max_cnt, max(p50_cnt) AS p50_cnt,
@@ -167,7 +167,7 @@ object Skew {
     exact.crossJoin(broadcast(est))
       .select(col("n_rows"), col("n_keys"), col("exact_pairs"),
         col("est_pairs"), (col("est_pairs") - col("exact_pairs")).as("overcount"),
-        graft.text.TextFns.round4(col("est_pairs").cast("double")
+        round4(col("est_pairs").cast("double")
           / col("exact_pairs").cast("double")).as("ratio"))
   }
 
@@ -188,7 +188,7 @@ object Skew {
        |     es AS (SELECT min(row_est) AS est_pairs FROM rowest)
        |SELECT n_rows, n_keys, exact_pairs, est_pairs,
        |       est_pairs - exact_pairs AS overcount,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(est_pairs AS DOUBLE) / CAST(exact_pairs AS DOUBLE)")} AS ratio
        |FROM ex CROSS JOIN es""".stripMargin
   }
@@ -220,7 +220,7 @@ object Skew {
         min(col("rows")).as("min_rows"), max(col("rows")).as("max_rows"))
       .select(lit(scheme).as("scheme"), col("n_buckets"), col("n_rows"),
         col("min_rows"), col("max_rows"),
-        graft.text.TextFns.round4(col("max_rows").cast("double")
+        round4(col("max_rows").cast("double")
           * lit(NumReducers.toDouble) / col("n_rows").cast("double"))
           .as("imbalance"))
     val hashed = li.withColumn("bucket",
@@ -231,12 +231,11 @@ object Skew {
   }
 
   private val sqlPartitionBalance = {
-    val r4 = graft.text.TextFns.duckRound4 _
     def block(bucket: String, scheme: String) =
       s"""SELECT '$scheme' AS scheme, CAST(count(*) AS BIGINT) AS n_buckets,
          |       CAST(sum(rows) AS BIGINT) AS n_rows,
          |       min(rows) AS min_rows, max(rows) AS max_rows,
-         |       ${r4(s"CAST(max(rows) AS DOUBLE) * $NumReducers.0 / CAST(sum(rows) AS DOUBLE)")} AS imbalance
+         |       ${duckRound4(s"CAST(max(rows) AS DOUBLE) * $NumReducers.0 / CAST(sum(rows) AS DOUBLE)")} AS imbalance
          |FROM (SELECT $bucket AS bucket, CAST(count(*) AS BIGINT) AS rows
          |      FROM lineitem GROUP BY 1)""".stripMargin
     val hash = s"(((l_partkey % ${TextHashUtil.P}) * ${TextHashUtil.aj(0)} + ${TextHashUtil.bj(0)}) % ${TextHashUtil.P}) % $NumReducers"
@@ -263,7 +262,7 @@ object Skew {
   def giniRevenue(spark: SparkSession, sfDir: String): DataFrame = {
     val cr = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey").as("custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("x"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("x"))
       // ord packs (cents, custkey) into one long for the prefix-scan
       // rank: collision-free while custkey < 1e8 (TPC-H custkey =
       // 150000·SF → SF < ~667) and x·1e8 stays in Long (per-customer
@@ -278,17 +277,16 @@ object Skew {
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum((col("rank0") + 1L) * col("x")).as("sxr"))
       .select(col("n").as("n_customers"),
-        graft.text.TextFns.round4(col("sx").cast("double") / 100.0).as("total_rev"),
-        graft.text.TextFns.round4(
+        round4(col("sx").cast("double") / 100.0).as("total_rev"),
+        round4(
           lit(2.0) * col("sxr").cast("double")
             / (col("n").cast("double") * col("sx").cast("double"))
             - (col("n") + 1).cast("double") / col("n").cast("double")).as("gini"))
   }
 
   private val sqlGiniRevenue = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH cr AS (SELECT o_custkey AS custkey,
-       |                   CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x
+       |                   CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS x
        |            FROM orders GROUP BY 1),
        |     rk AS (SELECT x, CAST(row_number() OVER (ORDER BY x * 100000000 + custkey) AS BIGINT) AS rank
        |            FROM cr),
@@ -296,8 +294,8 @@ object Skew {
        |                  CAST(sum(rank * x) AS BIGINT) AS sxr
        |           FROM rk)
        |SELECT n AS n_customers,
-       |       ${r4("CAST(sx AS DOUBLE) / 100.0")} AS total_rev,
-       |       ${r4("2.0 * CAST(sxr AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE)) " +
+       |       ${duckRound4("CAST(sx AS DOUBLE) / 100.0")} AS total_rev,
+       |       ${duckRound4("2.0 * CAST(sxr AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE)) " +
                  "- CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)")} AS gini
        |FROM a""".stripMargin
   }
@@ -323,7 +321,7 @@ object Skew {
   def hooverIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val cr = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey").as("custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("x"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("x"))
       // staged: consumed by the (n, T) totals AND the deviation pass —
       // without it the fact scan + customer aggregate runs twice
       .localCheckpoint(true)
@@ -335,17 +333,16 @@ object Skew {
       .groupBy(col("n"), col("t"))
       .agg(sum(col("dev")).as("sdev"))
       .select(col("n").as("n_customers"),
-        graft.text.TextFns.round4(col("t").cast("double") / 100.0).as("total_rev"),
-        graft.text.TextFns.round4(
+        round4(col("t").cast("double") / 100.0).as("total_rev"),
+        round4(
           col("sdev").cast("double") /
             (lit(2.0) * col("t").cast("double") * col("n").cast("double")))
           .as("hoover"))
   }
 
   private val sqlHoover = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH cr AS (SELECT o_custkey AS custkey,
-       |                   CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x
+       |                   CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS x
        |            FROM orders GROUP BY 1),
        |     tt AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS t
        |            FROM cr),
@@ -355,8 +352,8 @@ object Skew {
        |           FROM cr CROSS JOIN tt),
        |     a AS (SELECT n, t, sum(dev) AS sdev FROM d GROUP BY 1, 2)
        |SELECT n AS n_customers,
-       |       ${r4("CAST(t AS DOUBLE) / 100.0")} AS total_rev,
-       |       ${r4("CAST(sdev AS DOUBLE) / (2.0 * CAST(t AS DOUBLE) * CAST(n AS DOUBLE))")} AS hoover
+       |       ${duckRound4("CAST(t AS DOUBLE) / 100.0")} AS total_rev,
+       |       ${duckRound4("CAST(sdev AS DOUBLE) / (2.0 * CAST(t AS DOUBLE) * CAST(n AS DOUBLE))")} AS hoover
        |FROM a""".stripMargin
   }
 
@@ -382,7 +379,7 @@ object Skew {
   def lorenzCurve(spark: SparkSession, sfDir: String): DataFrame = {
     val cr = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey").as("custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("x"))
+      .agg(sum(units(col("o_totalprice"), 100.0).cast("long")).as("x"))
       // same collision-free packing bound as [[giniRevenue]] (custkey
       // < 1e8, i.e. SF < ~667; DECIMAL ord past that)
       .withColumn("ord", col("x") * 100000000L + col("custkey"))
@@ -402,17 +399,16 @@ object Skew {
     dec
       .withColumn("cum_rev", sum(col("rev")).over(w))
       .select(col("decile"), col("n_customers"),
-        graft.text.TextFns.round4(
+        round4(
           col("rev").cast("double") / col("t").cast("double")).as("rev_share"),
-        graft.text.TextFns.round4(
+        round4(
           col("cum_rev").cast("double") / col("t").cast("double")).as("cum_rev_share"))
       .orderBy("decile")
   }
 
   private val sqlLorenz = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH cr AS (SELECT o_custkey AS custkey,
-       |                   CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS x
+       |                   CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS x
        |            FROM orders GROUP BY 1),
        |     rk AS (SELECT x, CAST(row_number() OVER (ORDER BY x * 100000000 + custkey) AS BIGINT) - 1 AS rank0
        |            FROM cr),
@@ -423,8 +419,8 @@ object Skew {
        |                  sum(CAST(x AS DECIMAL(28,0))) AS rev
        |           FROM rk CROSS JOIN tt GROUP BY 1, 2, 3)
        |SELECT decile, n_customers,
-       |       ${r4("CAST(rev AS DOUBLE) / CAST(t AS DOUBLE)")} AS rev_share,
-       |       ${r4("CAST(sum(rev) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED " +
+       |       ${duckRound4("CAST(rev AS DOUBLE) / CAST(t AS DOUBLE)")} AS rev_share,
+       |       ${duckRound4("CAST(sum(rev) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED " +
                  "PRECEDING AND CURRENT ROW) AS DOUBLE) / CAST(t AS DOUBLE)")} AS cum_rev_share
        |FROM d ORDER BY decile""".stripMargin
   }

@@ -1,6 +1,7 @@
 package graft.olap
 
 import graft.schema.Tables
+import graft.text.TextFns.duckUnits
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The verbatim shared-ANSI-SQL surface (SURVEY.md §2.6 "SQL
@@ -19,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Dialect-safety rules that make one string work on both engines
   * (everything else in `SqlSurfaceSpec` stays same-engine-only, with
   * the blocker documented below):
-  *  - integer-cent money (`CAST(floor(x * 100.0 + 0.5) AS BIGINT)`):
+  *  - integer-cent money (`CAST(${duckUnits(x, 100.0)} AS BIGINT)`):
   *    Spark's `floor(double)` returns BIGINT, DuckDB's returns
   *    DOUBLE, and DuckDB's `sum(BIGINT)` returns HUGEINT — explicit
   *    casts at both places collapse the differences; no `round()`
@@ -79,9 +80,9 @@ object SqlSurface {
   /** Running-total frame window over the month spine, integer cents
     * end to end (exact on both engines, order-independent). */
   private val sqlMonthly =
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS ym,
-      |         CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |         CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |  FROM orders GROUP BY year(o_orderdate) * 100 + month(o_orderdate))
       |SELECT ym, cents,
       |       CAST(sum(cents) OVER (ORDER BY ym
@@ -107,8 +108,8 @@ object SqlSurface {
 
   /** HAVING over a hash aggregate, integer-cent money. */
   private val sqlHaving =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |       CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |       CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |FROM orders GROUP BY o_orderpriority HAVING count(*) > 10
       |ORDER BY o_orderpriority""".stripMargin
 
@@ -131,11 +132,11 @@ object SqlSurface {
   /** ROLLUP with per-column grouping flags (shared; Spark's zero-arg
     * grouping_id() is not). */
   private val sqlRollup =
-    """SELECT coalesce(r_name, 'ALL') AS region,
+    s"""SELECT coalesce(r_name, 'ALL') AS region,
       |       coalesce(o_orderpriority, 'ALL') AS priority,
       |       CAST(grouping(r_name) * 2 + grouping(o_orderpriority) AS BIGINT) AS gid,
       |       CAST(count(*) AS BIGINT) AS n_orders,
-      |       CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |       CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |     JOIN nation ON c_nationkey = n_nationkey
       |     JOIN region ON n_regionkey = r_regionkey
@@ -163,9 +164,9 @@ object SqlSurface {
   /** lag/lead with explicit defaults over the month spine — the
     * navigation-window shape, integer cents end to end. */
   private val sqlLag =
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS ym,
-      |         CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |         CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |  FROM orders GROUP BY year(o_orderdate) * 100 + month(o_orderdate))
       |SELECT ym, cents,
       |       CAST(lag(cents, 1, 0) OVER (ORDER BY ym) AS BIGINT) AS prev_cents,
@@ -210,7 +211,7 @@ object SqlSurface {
     * bounded literal table.
     */
   private val sqlRecursive =
-    """WITH RECURSIVE bounds AS (
+    s"""WITH RECURSIVE bounds AS (
       |  SELECT CAST(min(year(o_orderdate) * 12 + month(o_orderdate)) AS BIGINT) AS lo,
       |         CAST(max(year(o_orderdate) * 12 + month(o_orderdate)) AS BIGINT) AS hi
       |  FROM orders),
@@ -225,7 +226,7 @@ object SqlSurface {
       |  WHERE y * 12 + mn BETWEEN lo AND hi),
       |m AS (
       |  SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mkey,
-      |         CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |         CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |  FROM orders GROUP BY 1)
       |SELECT spine.mkey AS mkey,
       |       CAST(floor((spine.mkey - 1) / 12.0) AS BIGINT) AS year,
@@ -263,11 +264,11 @@ object SqlSurface {
     * marginals). Integer-cent money; same grouping() discipline.
     */
   private val sqlGroupingSets =
-    """SELECT coalesce(r_name, 'ALL') AS region,
+    s"""SELECT coalesce(r_name, 'ALL') AS region,
       |       coalesce(o_orderpriority, 'ALL') AS priority,
       |       CAST(grouping(r_name) * 2 + grouping(o_orderpriority) AS BIGINT) AS gid,
       |       CAST(count(*) AS BIGINT) AS n_orders,
-      |       CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |       CAST(sum(CAST(${duckUnits("o_totalprice", 100.0)} AS BIGINT)) AS BIGINT) AS cents
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |     JOIN nation ON c_nationkey = n_nationkey
       |     JOIN region ON n_regionkey = r_regionkey

@@ -1,7 +1,7 @@
 package graft.olap
 
 import graft.schema.Tables
-import graft.text.TextFns
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,12 +33,10 @@ import org.apache.spark.sql.functions._
   */
 object Subqueries {
 
-  /** floor-to-micro-units row term: exact DECIMAL accumulation. */
-  private def r6d(c: Column): Column =
-    (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
-  private def duckR6d(e: String): String =
-    s"CAST((floor(($e) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(28,6))"
   private val rev = "l_extendedprice * (1.0 - l_discount)"
+  /** The revenue row term in micro-units: exact DECIMAL accumulation. */
+  private val revDec = round6(expr(rev)).cast("decimal(28,6)")
+  private val duckRevDec = s"CAST(${duckRound6(rev)} AS DECIMAL(28,6))"
 
   // ---------- q_small_qty_revenue: correlated scalar subquery (TPC-H Q17) ----------
 
@@ -67,7 +65,7 @@ object Subqueries {
       .join(Tables.part(spark, sfDir), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand").as("brand"))
       .agg(count(lit(1)).as("n_small"),
-        sum(r6d(expr(rev))).as("rev_dec"))
+        sum(revDec).as("rev_dec"))
       .select(col("brand"), col("n_small"),
         round(col("rev_dec").cast("double"), 4).as("revenue"))
       .orderBy("brand")
@@ -77,7 +75,7 @@ object Subqueries {
     s"""WITH pp AS (SELECT l_partkey AS pk, count(*) AS n_i, sum(l_quantity) AS qty_i
        |            FROM lineitem GROUP BY 1)
        |SELECT p_brand AS brand, count(*) AS n_small,
-       |       round(CAST(sum(${duckR6d(rev)}) AS DOUBLE), 4) AS revenue
+       |       round(CAST(sum($duckRevDec) AS DOUBLE), 4) AS revenue
        |FROM lineitem JOIN pp ON l_partkey = pk
        |JOIN part ON l_partkey = p_partkey
        |WHERE l_quantity * 5.0 * n_i < qty_i
@@ -101,7 +99,7 @@ object Subqueries {
     */
   def lapsedAboveAvg(spark: SparkSession, sfDir: String): DataFrame = {
     val c = Tables.customer(spark, sfDir)
-      .withColumn("bal_cents", floor(col("c_acctbal") * 100.0 + 0.5).cast("long"))
+      .withColumn("bal_cents", units(col("c_acctbal"), 100.0).cast("long"))
     val stats = c.agg(count(lit(1)).as("n_cust"), sum(col("bal_cents")).as("tot_cents"))
     val recent = Tables.orders(spark, sfDir)
       .filter(col("o_orderdate") >= lit("2000-08-01").cast("timestamp"))
@@ -120,7 +118,7 @@ object Subqueries {
   }
 
   private val sqlLapsedAboveAvg =
-    """WITH c AS (SELECT *, CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS bal_cents
+    s"""WITH c AS (SELECT *, CAST(${duckUnits("c_acctbal", 100.0)} AS BIGINT) AS bal_cents
       |           FROM customer),
       |     st AS (SELECT count(*) AS n_cust, sum(bal_cents) AS tot_cents FROM c)
       |SELECT n_name AS nation, count(*) AS n_lapsed,
@@ -198,7 +196,7 @@ object Subqueries {
       }
     joined.withColumn("bracket", label)
       .groupBy("bracket")
-      .agg(count(lit(1)).as("n_items"), sum(r6d(expr(rev))).as("rev_dec"))
+      .agg(count(lit(1)).as("n_items"), sum(revDec).as("rev_dec"))
       .select(col("bracket"), col("n_items"),
         round(col("rev_dec").cast("double"), 4).as("revenue"))
       .orderBy("bracket")
@@ -212,7 +210,7 @@ object Subqueries {
     val label = Brackets.map(b => s"WHEN ${armSql(b)} THEN '${b.label}'")
       .mkString("CASE ", " ", " END")
     s"""SELECT $label AS bracket, count(*) AS n_items,
-       |       round(CAST(sum(${duckR6d(rev)}) AS DOUBLE), 4) AS revenue
+       |       round(CAST(sum($duckRevDec) AS DOUBLE), 4) AS revenue
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |WHERE ${arms.mkString("\n   OR ")}
        |GROUP BY 1 ORDER BY 1""".stripMargin
@@ -241,7 +239,7 @@ object Subqueries {
       .filter(col("supp_nation") =!= col("cust_nation"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).as("ship_year"))
-      .agg(count(lit(1)).as("n_items"), sum(r6d(expr(rev))).as("rev_dec"))
+      .agg(count(lit(1)).as("n_items"), sum(revDec).as("rev_dec"))
       .select(col("supp_nation"), col("cust_nation"), col("ship_year"),
         col("n_items"), round(col("rev_dec").cast("double"), 4).as("volume"))
       .orderBy("supp_nation", "cust_nation", "ship_year")
@@ -251,7 +249,7 @@ object Subqueries {
     s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
        |       CAST(date_part('year', l_shipdate) AS INT) AS ship_year,
        |       count(*) AS n_items,
-       |       round(CAST(sum(${duckR6d(rev)}) AS DOUBLE), 4) AS volume
+       |       round(CAST(sum($duckRevDec) AS DOUBLE), 4) AS volume
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -283,25 +281,25 @@ object Subqueries {
       .join(Tables.supplier(spark, sfDir), col("l_suppkey") === col("s_suppkey"))
       .groupBy(year(col("l_shipdate")).as("ship_year"))
       .agg(
-        sum(r6d(expr(rev))).as("tot_dec"),
-        sum(when(col("s_nationkey") === 3, r6d(expr(rev)))
+        sum(revDec).as("tot_dec"),
+        sum(when(col("s_nationkey") === 3, revDec)
           .otherwise(lit(0).cast("decimal(28,6)"))).as("nat_dec"))
       .select(col("ship_year"),
         round(col("nat_dec").cast("double"), 4).as("nation_rev"),
         round(col("tot_dec").cast("double"), 4).as("market_rev"),
-        TextFns.round4(col("nat_dec").cast("double") / col("tot_dec").cast("double"))
+        round4(col("nat_dec").cast("double") / col("tot_dec").cast("double"))
           .as("share"))
       .orderBy("ship_year")
   }
 
   private val sqlMarketShare =
     s"""SELECT CAST(date_part('year', l_shipdate) AS INT) AS ship_year,
-       |       round(CAST(sum(CASE WHEN s_nationkey = 3 THEN ${duckR6d(rev)}
+       |       round(CAST(sum(CASE WHEN s_nationkey = 3 THEN $duckRevDec
        |                           ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE), 4) AS nation_rev,
-       |       round(CAST(sum(${duckR6d(rev)}) AS DOUBLE), 4) AS market_rev,
-       |       ${TextFns.duckRound4(
-                  s"CAST(sum(CASE WHEN s_nationkey = 3 THEN ${duckR6d(rev)} ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) " +
-                    s"/ CAST(sum(${duckR6d(rev)}) AS DOUBLE)")} AS share
+       |       round(CAST(sum($duckRevDec) AS DOUBLE), 4) AS market_rev,
+       |       ${duckRound4(
+                  s"CAST(sum(CASE WHEN s_nationkey = 3 THEN $duckRevDec ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) " +
+                    s"/ CAST(sum($duckRevDec) AS DOUBLE)")} AS share
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -329,7 +327,7 @@ object Subqueries {
     // unstaged, each re-ran the full lineitem scan + aggregate.
     val perSupp = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_suppkey"))
-      .agg(sum(r6d(expr(rev))).as("rev_dec"))
+      .agg(sum(revDec).as("rev_dec"))
       .localCheckpoint(true)
     val mx = perSupp.agg(max(col("rev_dec")).as("max_dec"))
     perSupp.crossJoin(broadcast(mx))
@@ -341,7 +339,7 @@ object Subqueries {
   }
 
   private val sqlTopSupplier =
-    s"""WITH ps AS (SELECT l_suppkey AS suppkey, sum(${duckR6d(rev)}) AS rev_dec
+    s"""WITH ps AS (SELECT l_suppkey AS suppkey, sum($duckRevDec) AS rev_dec
        |            FROM lineitem GROUP BY 1)
        |SELECT suppkey, s_name, round(CAST(rev_dec AS DOUBLE), 4) AS revenue
        |FROM ps JOIN supplier ON suppkey = s_suppkey
@@ -399,7 +397,7 @@ object Subqueries {
   def havingShare(spark: SparkSession, sfDir: String): DataFrame = {
     val perPart = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_partkey").as("partkey"))
-      .agg(sum(r6d(expr(rev))).as("rev_dec"))
+      .agg(sum(revDec).as("rev_dec"))
     val tot = perPart.agg(sum(col("rev_dec")).as("tot_dec"),
       count(lit(1)).as("np"))
     perPart.crossJoin(broadcast(tot))
@@ -410,7 +408,7 @@ object Subqueries {
   }
 
   private val sqlHavingShare =
-    s"""WITH pp AS (SELECT l_partkey AS partkey, sum(${duckR6d(rev)}) AS rev_dec
+    s"""WITH pp AS (SELECT l_partkey AS partkey, sum($duckRevDec) AS rev_dec
        |            FROM lineitem GROUP BY 1),
        |     t AS (SELECT sum(rev_dec) AS tot_dec, count(*) AS np FROM pp)
        |SELECT partkey, round(CAST(rev_dec AS DOUBLE), 4) AS revenue
@@ -442,17 +440,17 @@ object Subqueries {
       .groupBy(col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
         col("o_orderpriority"))
-      .agg(sum(r6d(expr(rev))).as("rev_dec"))
+      .agg(sum(revDec).as("rev_dec"))
       .orderBy(col("rev_dec").desc, col("o_orderkey"))
       .limit(10)
       .select(col("o_orderkey"), col("order_date"), col("o_orderpriority"),
-        TextFns.round4(col("rev_dec").cast("double")).as("revenue"))
+        round4(col("rev_dec").cast("double")).as("revenue"))
       .orderBy(col("revenue").desc, col("o_orderkey"))
   }
 
   private val sqlShipPriority =
     s"""WITH a AS (SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-       |                  o_orderpriority, sum(${duckR6d(rev)}) AS rev_dec
+       |                  o_orderpriority, sum($duckRevDec) AS rev_dec
        |           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |           JOIN customer ON o_custkey = c_custkey
        |           WHERE c_mktsegment = 'BUILDING'
@@ -461,7 +459,7 @@ object Subqueries {
        |           GROUP BY 1, 2, 3
        |           ORDER BY rev_dec DESC, o_orderkey LIMIT 10)
        |SELECT o_orderkey, order_date, o_orderpriority,
-       |       ${TextFns.duckRound4("CAST(rev_dec AS DOUBLE)")} AS revenue
+       |       ${duckRound4("CAST(rev_dec AS DOUBLE)")} AS revenue
        |FROM a ORDER BY revenue DESC, o_orderkey""".stripMargin
 
   // ---------- q_priority_exists: correlated EXISTS (TPC-H Q4) ----------
@@ -522,16 +520,16 @@ object Subqueries {
       .join(Tables.orders(spark, sfDir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name").as("nation"),
         year(col("o_orderdate")).cast("long").as("yr"))
-      .agg(count(lit(1)).as("n_items"), sum(r6d(profit)).as("profit_dec"))
+      .agg(count(lit(1)).as("n_items"), sum(round6(profit).cast("decimal(28,6)")).as("profit_dec"))
       .select(col("nation"), col("yr"), col("n_items"),
-        TextFns.round4(col("profit_dec").cast("double")).as("profit"))
+        round4(col("profit_dec").cast("double")).as("profit"))
       .orderBy("nation", "yr")
   }
 
   private val sqlNationProfit =
     s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS yr,
        |       CAST(count(*) AS BIGINT) AS n_items,
-       |       ${TextFns.duckRound4(s"CAST(sum(${duckR6d(s"$rev - 0.6 * p_retailprice * l_quantity")}) AS DOUBLE)")} AS profit
+       |       ${duckRound4(s"CAST(sum(CAST(${duckRound6(s"$rev - 0.6 * p_retailprice * l_quantity")} AS DECIMAL(28,6))) AS DOUBLE)")} AS profit
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |JOIN supplier ON l_suppkey = s_suppkey
        |JOIN nation ON s_nationkey = n_nationkey
@@ -580,23 +578,23 @@ object Subqueries {
       .groupBy((year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
         .cast("long").as("ym"))
       .agg(
-        sum(when(col("p_type") === "PROMO", r6d(expr(rev)))
+        sum(when(col("p_type") === "PROMO", revDec)
           .otherwise(lit(0).cast("decimal(28,6)"))).as("promo_dec"),
-        sum(r6d(expr(rev))).as("tot_dec"))
+        sum(revDec).as("tot_dec"))
       .select(col("ym"),
-        TextFns.round4(col("promo_dec").cast("double") * 100.0 /
+        round4(col("promo_dec").cast("double") * 100.0 /
           col("tot_dec").cast("double")).as("promo_share"))
       .orderBy("ym")
   }
 
   private val sqlPromoShare =
     s"""WITH m AS (SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS BIGINT) AS ym,
-       |                  sum(CASE WHEN p_type = 'PROMO' THEN ${duckR6d(rev)}
+       |                  sum(CASE WHEN p_type = 'PROMO' THEN $duckRevDec
        |                           ELSE CAST(0 AS DECIMAL(28,6)) END) AS promo_dec,
-       |                  sum(${duckR6d(rev)}) AS tot_dec
+       |                  sum($duckRevDec) AS tot_dec
        |           FROM lineitem JOIN part ON l_partkey = p_partkey
        |           WHERE year(l_shipdate) = 1998 GROUP BY 1)
-       |SELECT ym, ${TextFns.duckRound4(
+       |SELECT ym, ${duckRound4(
                  "CAST(promo_dec AS DOUBLE) * 100.0 / CAST(tot_dec AS DOUBLE)")} AS promo_share
        |FROM m ORDER BY ym""".stripMargin
 
@@ -700,8 +698,7 @@ object Subqueries {
     * oracle-side only).
     */
   def minCostSupplier(spark: SparkSession, sfDir: String): DataFrame = {
-    val unit = floor(col("l_extendedprice") / col("l_quantity") * 1000000.0
-      + 0.5) / 1000000.0
+    val unit = round6(col("l_extendedprice") / col("l_quantity"))
     val cost = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(min(unit).as("c"))
@@ -720,14 +717,13 @@ object Subqueries {
         col("n_name"))).as("w"))
       .select(col("part_key"), col("p_name"),
         col("w.s_name").as("s_name"), col("w.n_name").as("nation"),
-        TextFns.round4(col("w.c")).as("cost"))
+        round4(col("w.c")).as("cost"))
       .orderBy("part_key")
   }
 
   private val sqlMinCostSupplier =
-    """WITH cost AS (SELECT l_partkey, l_suppkey,
-      |                     min(floor(l_extendedprice / l_quantity * 1000000.0 + 0.5)
-      |                         / 1000000.0) AS c
+    s"""WITH cost AS (SELECT l_partkey, l_suppkey,
+      |                     min(${duckRound6("l_extendedprice / l_quantity")}) AS c
       |              FROM lineitem GROUP BY 1, 2),
       |     eur AS (SELECT s_suppkey, s_name, n_name
       |             FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -739,7 +735,7 @@ object Subqueries {
       |     w AS (SELECT *, row_number() OVER (PARTITION BY l_partkey
       |                       ORDER BY c, s_suppkey) AS rk FROM j)
       |SELECT l_partkey AS part_key, p_name, s_name, n_name AS nation,
-      |       (floor(c * 10000.0 + 0.5) / 10000.0) AS cost
+      |       ${duckRound4("c")} AS cost
       |FROM w WHERE rk = 1 ORDER BY part_key""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,6 +1,7 @@
 package graft.stream
 
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -580,9 +581,9 @@ object EventQueries {
         sum(least(col("n"), coalesce(col("n_rev"), lit(0L)))).as("n_matched"))
       .select(col("n_edges"), col("n_reciprocated"),
         col("n_transitions"), col("n_matched"),
-        graft.text.TextFns.round4(col("n_reciprocated").cast("double") /
+        round4(col("n_reciprocated").cast("double") /
           col("n_edges").cast("double")).as("edge_reciprocity"),
-        graft.text.TextFns.round4(col("n_matched").cast("double") /
+        round4(col("n_matched").cast("double") /
           col("n_transitions").cast("double")).as("weight_reciprocity"))
   }
 
@@ -596,9 +597,9 @@ object EventQueries {
        |       CAST(count(n_rev) AS BIGINT) AS n_reciprocated,
        |       CAST(sum(n) AS BIGINT) AS n_transitions,
        |       CAST(sum(least(n, coalesce(n_rev, 0))) AS BIGINT) AS n_matched,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(count(n_rev) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS edge_reciprocity,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(least(n, coalesce(n_rev, 0))) AS DOUBLE) / CAST(sum(n) AS DOUBLE)")} AS weight_reciprocity
        |FROM j""".stripMargin
 
@@ -630,7 +631,7 @@ object EventQueries {
       .filter(col("event_type") === "purchase" && col("value").isNotNull)
       .select(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
         (hour(col("ts")) / 4).cast("int").as("seg"),
-        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
+        units(col("value"), 100.0).cast("long").as("cents"))
       .groupBy("day", "seg")
       .agg((sum(col("cents")).cast("double") / 100.0).as("x"))
     val m = seg.agg(count(lit(1)).as("n"),
@@ -640,7 +641,7 @@ object EventQueries {
     val mean = col("sx").cast("double") / nD
     val sd = sqrt((col("sxx").cast("double") -
       col("sx").cast("double") * col("sx").cast("double") / nD) / (nD - 1.0))
-    val z = graft.text.TextFns.round4((col("x") - col("mu")) / col("sigma"))
+    val z = round4((col("x") - col("mu")) / col("sigma"))
     val sym = when(z < SaxCuts(0), "a")
       .when(z < SaxCuts(1), "b")
       .when(z < SaxCuts(2), "c").otherwise("d")
@@ -657,10 +658,10 @@ object EventQueries {
   private val sqlSax = {
     val mean = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
     val sd = "sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0))"
-    val z = graft.text.TextFns.duckRound4(s"(x - mu) / sigma")
+    val z = duckRound4(s"(x - mu) / sigma")
     s"""WITH p AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)), '%Y-%m-%d') AS day,
        |                  CAST(hour(CAST(ts AS TIMESTAMP)) // 4 AS INT) AS seg,
-       |                  CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents
+       |                  CAST(${duckUnits("value", 100.0)} AS BIGINT) AS cents
        |           FROM events
        |           WHERE event_type = 'purchase' AND value IS NOT NULL),
        |     sg AS (SELECT day, seg, CAST(sum(cents) AS DOUBLE) / 100.0 AS x
@@ -709,9 +710,6 @@ object EventQueries {
     val fromTot = cell.groupBy("from_type").agg(sum(col("n")).as("nf"))
     val toTot = cell.groupBy("to_type").agg(sum(col("n")).as("nt"))
     val tot = cell.agg(sum(col("n")).as("ntot"))
-    val round6 = (x: org.apache.spark.sql.Column) =>
-      floor(x * 1000000.0 + 0.5) / 1000000.0
-    def dec(x: org.apache.spark.sql.Column) = round6(x).cast("decimal(18,6)")
     val totD = col("ntot").cast("double")
     // H(next|current) = -Σ_ij (n_ij/N) ln(n_ij/n_i)
     val hCond = cell.join(broadcast(fromTot), "from_type")
@@ -719,24 +717,21 @@ object EventQueries {
       .withColumn("term",
         -(col("n").cast("double") / totD) *
           log(col("n").cast("double") / col("nf").cast("double")))
-      .groupBy("ntot").agg(sum(dec(col("term"))).as("hcond_dec"))
+      .groupBy("ntot").agg(sum(round6(col("term")).cast("decimal(18,6)")).as("hcond_dec"))
     // H(next) = -Σ_j (n_j/N) ln(n_j/N)
     val hMarg = toTot.crossJoin(broadcast(tot))
       .withColumn("term",
         -(col("nt").cast("double") / totD) * log(col("nt").cast("double") / totD))
-      .groupBy("ntot").agg(sum(dec(col("term"))).as("hmarg_dec"))
+      .groupBy("ntot").agg(sum(round6(col("term")).cast("decimal(18,6)")).as("hmarg_dec"))
     hCond.join(hMarg, "ntot")
       .select(col("ntot").as("n_transitions"),
-        graft.text.TextFns.round4(col("hcond_dec").cast("double")).as("h_cond"),
-        graft.text.TextFns.round4(col("hmarg_dec").cast("double")).as("h_marginal"),
-        graft.text.TextFns.round4(col("hmarg_dec").cast("double") -
+        round4(col("hcond_dec").cast("double")).as("h_cond"),
+        round4(col("hmarg_dec").cast("double")).as("h_marginal"),
+        round4(col("hmarg_dec").cast("double") -
           col("hcond_dec").cast("double")).as("mi_state"))
   }
 
   private val sqlEntropyRate = {
-    val r4 = graft.text.TextFns.duckRound4 _
-    def dec(x: String) =
-      s"sum(CAST((floor(($x) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(18,6)))"
     s"""WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
        |           FROM events),
        |     nx AS (SELECT event_type AS from_type,
@@ -748,18 +743,18 @@ object EventQueries {
        |     ft AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS nf FROM cell GROUP BY 1),
        |     tt AS (SELECT to_type, CAST(sum(n) AS BIGINT) AS nt FROM cell GROUP BY 1),
        |     tot AS (SELECT CAST(sum(n) AS BIGINT) AS ntot FROM cell),
-       |     hc AS (SELECT ntot, ${dec(
+       |     hc AS (SELECT ntot, sum(CAST(${duckRound6(
                   "-(CAST(n AS DOUBLE) / CAST(ntot AS DOUBLE)) * " +
-                    "ln(CAST(n AS DOUBLE) / CAST(nf AS DOUBLE))")} AS hcond_dec
+                    "ln(CAST(n AS DOUBLE) / CAST(nf AS DOUBLE))")} AS DECIMAL(18,6))) AS hcond_dec
        |            FROM cell JOIN ft USING (from_type) CROSS JOIN tot GROUP BY 1),
-       |     hm AS (SELECT ntot, ${dec(
+       |     hm AS (SELECT ntot, sum(CAST(${duckRound6(
                   "-(CAST(nt AS DOUBLE) / CAST(ntot AS DOUBLE)) * " +
-                    "ln(CAST(nt AS DOUBLE) / CAST(ntot AS DOUBLE))")} AS hmarg_dec
+                    "ln(CAST(nt AS DOUBLE) / CAST(ntot AS DOUBLE))")} AS DECIMAL(18,6))) AS hmarg_dec
        |            FROM tt CROSS JOIN tot GROUP BY 1)
        |SELECT ntot AS n_transitions,
-       |       ${r4("CAST(hcond_dec AS DOUBLE)")} AS h_cond,
-       |       ${r4("CAST(hmarg_dec AS DOUBLE)")} AS h_marginal,
-       |       ${r4("CAST(hmarg_dec AS DOUBLE) - CAST(hcond_dec AS DOUBLE)")} AS mi_state
+       |       ${duckRound4("CAST(hcond_dec AS DOUBLE)")} AS h_cond,
+       |       ${duckRound4("CAST(hmarg_dec AS DOUBLE)")} AS h_marginal,
+       |       ${duckRound4("CAST(hmarg_dec AS DOUBLE) - CAST(hcond_dec AS DOUBLE)")} AS mi_state
        |FROM hc JOIN hm USING (ntot)""".stripMargin
   }
 
@@ -796,7 +791,7 @@ object EventQueries {
       .select(col("event_type"),
         size(col("cs")).cast("long").as("n_days"),
         element_at(col("cs"), -1).cast("long").as("last_cnt"),
-        graft.text.TextFns.round4(
+        round4(
           aggregate(slice(col("cs"), 2, 1000000), element_at(col("cs"), 1),
             (acc, x) => lit(0.3) * x + lit(0.7) * acc)).as("ewma"))
       .orderBy("event_type")
@@ -840,15 +835,14 @@ object EventQueries {
           }))
       .select(col("event_type"),
         size(col("cs")).cast("long").as("n_days"),
-        graft.text.TextFns.round4(element_at(col("lt"), 1)).as("level"),
-        graft.text.TextFns.round4(element_at(col("lt"), 2)).as("trend"),
-        graft.text.TextFns.round4(
+        round4(element_at(col("lt"), 1)).as("level"),
+        round4(element_at(col("lt"), 2)).as("trend"),
+        round4(
           element_at(col("lt"), 1) + element_at(col("lt"), 2)).as("forecast_next"))
       .orderBy("event_type")
   }
 
   private val sqlHolt = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val nl = "0.5 * e[1] + 0.5 * (acc[1] + acc[2])"
     s"""WITH d AS (SELECT event_type, date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
        |                  count(*) AS cnt
@@ -865,9 +859,9 @@ object EventQueries {
        |                                 0.5 * (($nl) - acc[1]) + 0.5 * acc[2]]) AS lt
        |           FROM s)
        |SELECT event_type, CAST(len(cs) AS BIGINT) AS n_days,
-       |       ${r4("lt[1]")} AS level,
-       |       ${r4("lt[2]")} AS trend,
-       |       ${r4("lt[1] + lt[2]")} AS forecast_next
+       |       ${duckRound4("lt[1]")} AS level,
+       |       ${duckRound4("lt[2]")} AS trend,
+       |       ${duckRound4("lt[1] + lt[2]")} AS forecast_next
        |FROM f ORDER BY event_type""".stripMargin
   }
 
@@ -911,16 +905,15 @@ object EventQueries {
           }))
       .select(col("event_type"),
         size(col("cs")).cast("long").as("n_days"),
-        graft.text.TextFns.round4(element_at(col("hw"), 1)).as("level"),
-        graft.text.TextFns.round4(element_at(col("hw"), 2)).as("trend"),
-        graft.text.TextFns.round4(element_at(col("hw"), 3)).as("seasonal_next"),
-        graft.text.TextFns.round4(element_at(col("hw"), 1) +
+        round4(element_at(col("hw"), 1)).as("level"),
+        round4(element_at(col("hw"), 2)).as("trend"),
+        round4(element_at(col("hw"), 3)).as("seasonal_next"),
+        round4(element_at(col("hw"), 1) +
           element_at(col("hw"), 2) + element_at(col("hw"), 3)).as("forecast_next"))
       .orderBy("event_type")
   }
 
   private val sqlHoltWinters = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val nl = "0.5 * (e[1] - acc[3]) + 0.5 * (acc[1] + acc[2])"
     val nt = s"0.5 * (($nl) - acc[1]) + 0.5 * acc[2]"
     val ns = s"0.5 * (e[1] - ($nl)) + 0.5 * acc[3]"
@@ -940,10 +933,10 @@ object EventQueries {
        |                                 $ns]) AS hw
        |           FROM s)
        |SELECT event_type, CAST(len(cs) AS BIGINT) AS n_days,
-       |       ${r4("hw[1]")} AS level,
-       |       ${r4("hw[2]")} AS trend,
-       |       ${r4("hw[3]")} AS seasonal_next,
-       |       ${r4("hw[1] + hw[2] + hw[3]")} AS forecast_next
+       |       ${duckRound4("hw[1]")} AS level,
+       |       ${duckRound4("hw[2]")} AS trend,
+       |       ${duckRound4("hw[3]")} AS seasonal_next,
+       |       ${duckRound4("hw[1] + hw[2] + hw[3]")} AS forecast_next
        |FROM f ORDER BY event_type""".stripMargin
   }
 
@@ -955,7 +948,7 @@ object EventQueries {
        |           FROM d GROUP BY 1)
        |SELECT event_type, CAST(len(cs) AS BIGINT) AS n_days,
        |       CAST(cs[-1] AS BIGINT) AS last_cnt,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "list_reduce(cs, (acc, x) -> 0.3 * x + 0.7 * acc)")} AS ewma
        |FROM s ORDER BY event_type""".stripMargin
 
@@ -990,7 +983,6 @@ object EventQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("ts"), col("value"))
     val mx = ev.agg(max(col("ts")).as("max_ts"))
-    val round6 = (c: org.apache.spark.sql.Column) => floor(c * 1000000.0 + 0.5) / 1000000.0
     ev.crossJoin(broadcast(mx))
       .withColumn("k",
         least(expr("(unix_micros(max_ts) - unix_micros(ts)) DIV 86400000000 DIV 7"),
@@ -1000,7 +992,7 @@ object EventQueries {
       .agg(count(lit(1)).as("n_events"),
         sum(round6(col("wv")).cast("decimal(18,6)")).as("dec"))
       .select(col("event_type"), col("n_events"),
-        graft.text.TextFns.round4(col("dec").cast("double")).as("decayed_value"))
+        round4(col("dec").cast("double")).as("decayed_value"))
       .orderBy("event_type")
   }
 
@@ -1015,8 +1007,8 @@ object EventQueries {
        |             value / CAST((CAST(1 AS BIGINT) << CAST(k AS INT)) AS DOUBLE) AS wv
        |           FROM k)
        |SELECT event_type, count(*) AS n_events,
-       |       ${graft.text.TextFns.duckRound4(
-                  "CAST(sum(CAST((floor(wv * 1000000.0 + 0.5) / 1000000.0)" +
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckRound6("wv")}" +
                     " AS DECIMAL(18,6))) AS DOUBLE)")} AS decayed_value
        |FROM w GROUP BY 1 ORDER BY event_type""".stripMargin
 
@@ -1096,8 +1088,6 @@ object EventQueries {
     * DECIMAL summed (order-independent), rounded once at the edge.
     */
   def valueDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6 = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(18,6)")
     val ev = Tables.events(spark, sfDir)
       .select(expr("unix_micros(date_trunc('day', ts))").as("day_us"), col("value"))
     // single array-percentile buffer (the q_equidepth_hist lesson)
@@ -1131,14 +1121,13 @@ object EventQueries {
         (col("obs").cast("double") - col("exp")) * (col("obs").cast("double") - col("exp"))
           / col("exp"))
       .groupBy("week")
-      .agg(max(col("wn")).as("n_events"), sum(r6(col("term"))).as("chi2_dec"))
+      .agg(max(col("wn")).as("n_events"), sum(round6(col("term")).cast("decimal(18,6)")).as("chi2_dec"))
       .select(col("week"), col("n_events"),
-        graft.text.TextFns.round4(col("chi2_dec").cast("double")).as("chi2"))
+        round4(col("chi2_dec").cast("double")).as("chi2"))
       .orderBy("week")
   }
 
   private val sqlValueDrift = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val decileExpr = (1 to 9)
       .map(d => s"(CASE WHEN value > q$d THEN 1 ELSE 0 END)").mkString(" + ")
     s"""WITH e AS (SELECT epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) AS day_us,
@@ -1163,7 +1152,7 @@ object EventQueries {
        |                  AS term
        |              FROM z)
        |SELECT week, max(wn) AS n_events,
-       |       ${r4("CAST(sum(CAST((floor(term * 1000000.0 + 0.5) / 1000000.0)" +
+       |       ${duckRound4(s"CAST(sum(CAST(${duckRound6("term")}" +
                 " AS DECIMAL(18,6))) AS DOUBLE)")} AS chi2
        |FROM term GROUP BY week ORDER BY week""".stripMargin
   }
@@ -1195,19 +1184,18 @@ object EventQueries {
     val med = hourly.groupBy("event_type")
       .agg(percentile(col("n_events"), lit(0.5)).as("med"))
     hourly.join(broadcast(med), "event_type")
-      .withColumn("ratio", graft.text.TextFns.round4(
+      .withColumn("ratio", round4(
         col("n_events").cast("double") / col("med")))
       .withColumn("flagged",
         col("n_events").cast("double") > col("med") + lit(3.0) * sqrt(col("med")))
       .select(col("event_type"), col("hour"), col("n_events"),
-        graft.text.TextFns.round4(col("med")).as("median_hourly"),
+        round4(col("med")).as("median_hourly"),
         col("ratio"), col("flagged"))
       .orderBy(col("ratio").desc, col("event_type"), col("hour"))
       .limit(PeakTopK)
   }
 
   private val sqlPeakDetect = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH h AS (SELECT strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)),
        |                           '%Y-%m-%d %H:%M:%S') AS hour,
        |                  event_type, CAST(count(*) AS BIGINT) AS n_events
@@ -1215,10 +1203,10 @@ object EventQueries {
        |     m AS (SELECT event_type, quantile_cont(n_events, 0.5) AS med
        |           FROM h GROUP BY 1),
        |     z AS (SELECT h.event_type, hour, n_events, med,
-       |             ${r4("CAST(n_events AS DOUBLE) / med")} AS ratio,
+       |             ${duckRound4("CAST(n_events AS DOUBLE) / med")} AS ratio,
        |             CAST(n_events AS DOUBLE) > med + 3.0 * sqrt(med) AS flagged
        |           FROM h JOIN m ON h.event_type = m.event_type)
-       |SELECT event_type, hour, n_events, ${r4("med")} AS median_hourly,
+       |SELECT event_type, hour, n_events, ${duckRound4("med")} AS median_hourly,
        |       ratio, flagged
        |FROM z ORDER BY ratio DESC, event_type, hour LIMIT $PeakTopK""".stripMargin
   }
@@ -1289,12 +1277,11 @@ object EventQueries {
           .otherwise(exp(sum(log(when(col("f") > 0.0, col("f")).otherwise(lit(1.0))))
             .over(wKm))))
       .select(col("t").as("day"), col("n_risk"), col("d").as("n_events"),
-        graft.text.TextFns.round4(col("km")).as("survival"))
+        round4(col("km")).as("survival"))
       .orderBy("day")
   }
 
   private val sqlKaplanMeier = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH e AS (SELECT user_id, event_type, value,
        |                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
        |           FROM events),
@@ -1335,7 +1322,7 @@ object EventQueries {
        |                  END AS km
        |           FROM f)
        |SELECT t AS day, CAST(n_risk AS BIGINT) AS n_risk, d AS n_events,
-       |       ${r4("km")} AS survival
+       |       ${duckRound4("km")} AS survival
        |FROM k ORDER BY day""".stripMargin
   }
 
@@ -1417,9 +1404,8 @@ object EventQueries {
         col("n_subjects") - coalesce(sum(col("leaving")).over(wCum), lit(0L)))
       .filter(col("d") > 0)
       .withColumn("h6",
-        floor(col("d").cast("double") / col("n_risk").cast("double")
-          * 1000000.0 + 0.5).cast("decimal(28,0)"))
-      .withColumn("cum_hazard", graft.text.TextFns.round4(
+        units(col("d").cast("double") / col("n_risk").cast("double"), 1e6).cast("decimal(28,0)"))
+      .withColumn("cum_hazard", round4(
         sum(col("h6")).over(wNa).cast("double") / 1000000.0))
       .select(col("t").as("day"), col("n_risk"), col("d").as("n_events"),
         col("cum_hazard"))
@@ -1427,7 +1413,6 @@ object EventQueries {
   }
 
   private val sqlNelsonAalen = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH $duckKmSubjects,
        |     census AS (SELECT t,
        |                       CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT) AS d,
@@ -1439,11 +1424,10 @@ object EventQueries {
        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
        |            FROM census CROSS JOIN nt),
        |     h AS (SELECT t, d, n_risk,
-       |                  CAST(floor(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)
-       |                    * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS h6
+       |                  CAST(${duckUnits("CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)", 1e6)} AS DECIMAL(28,0)) AS h6
        |           FROM rk WHERE d > 0)
        |SELECT t AS day, CAST(n_risk AS BIGINT) AS n_risk, d AS n_events,
-       |       ${r4(
+       |       ${duckRound4(
                  "CAST(sum(h6) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING " +
                    "AND CURRENT ROW) AS DOUBLE) / 1000000.0")} AS cum_hazard
        |FROM h ORDER BY day""".stripMargin
@@ -1481,7 +1465,6 @@ object EventQueries {
       sum(when(!col("ga"), 1L).otherwise(0L)).as("nb0"))
     val wCum = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val d6 = (c: org.apache.spark.sql.Column) => floor(c * 1000000.0 + 0.5).cast("decimal(28,0)")
     val rows = census.crossJoin(broadcast(nTotal))
       .withColumn("n1", col("na0") - coalesce(sum(col("l1")).over(wCum), lit(0L)))
       .withColumn("n2", col("nb0") - coalesce(sum(col("l2")).over(wCum), lit(0L)))
@@ -1491,23 +1474,21 @@ object EventQueries {
     val nD = col("n").cast("double")
     val agg = rows.agg(
       sum(col("d1")).as("o1"),
-      sum(d6(col("d").cast("double") * col("n1").cast("double") / nD)).as("e6"),
-      sum(d6(col("d").cast("double") * (col("n1").cast("double") / nD)
+      sum(units(col("d").cast("double") * col("n1").cast("double") / nD, 1e6).cast("decimal(28,0)")).as("e6"),
+      sum(units(col("d").cast("double") * (col("n1").cast("double") / nD)
         * (col("n2").cast("double") / nD)
-        * ((col("n") - col("d")).cast("double") / (nD - 1.0)))).as("v6"))
+        * ((col("n") - col("d")).cast("double") / (nD - 1.0)), 1e6).cast("decimal(28,0)")).as("v6"))
     val e = col("e6").cast("double") / 1000000.0
     val v = col("v6").cast("double") / 1000000.0
     agg.select(col("o1").as("observed_a"),
-      graft.text.TextFns.round4(e).as("expected_a"),
-      graft.text.TextFns.round4(v).as("variance"),
-      graft.text.TextFns.round4(
+      round4(e).as("expected_a"),
+      round4(v).as("variance"),
+      round4(
         (col("o1").cast("double") - e) * (col("o1").cast("double") - e) / v)
         .as("chi2"))
   }
 
   private val sqlLogRank = {
-    val r4 = graft.text.TextFns.duckRound4 _
-    def d6(x: String) = s"CAST(floor(($x) * 1000000.0 + 0.5) AS DECIMAL(28,0))"
     val e = "CAST(e6 AS DOUBLE) / 1000000.0"
     val v = "CAST(v6 AS DOUBLE) / 1000000.0"
     s"""WITH $duckKmSubjects,
@@ -1530,16 +1511,17 @@ object EventQueries {
        |     rows0 AS (SELECT d1, d1 + d2 AS d, n1, n2, n1 + n2 AS n
        |               FROM rk WHERE d1 + d2 > 0 AND n1 + n2 > 1),
        |     ag AS (SELECT CAST(sum(d1) AS BIGINT) AS o1,
-       |              sum(${d6("CAST(d AS DOUBLE) * CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE)")}) AS e6,
-       |              sum(${d6(
+       |              sum(CAST(${duckUnits("CAST(d AS DOUBLE) * CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE)", 1e6)}
+       |                AS DECIMAL(28,0))) AS e6,
+       |              sum(CAST(${duckUnits(
                        "CAST(d AS DOUBLE) * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE)) " +
                          "* (CAST(n2 AS DOUBLE) / CAST(n AS DOUBLE)) " +
-                         "* (CAST(n - d AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0))")}) AS v6
+                         "* (CAST(n - d AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0))", 1e6)} AS DECIMAL(28,0))) AS v6
        |            FROM rows0)
        |SELECT o1 AS observed_a,
-       |       ${r4(e)} AS expected_a,
-       |       ${r4(v)} AS variance,
-       |       ${r4(s"(CAST(o1 AS DOUBLE) - ($e)) * (CAST(o1 AS DOUBLE) - ($e)) / ($v)")} AS chi2
+       |       ${duckRound4(e)} AS expected_a,
+       |       ${duckRound4(v)} AS variance,
+       |       ${duckRound4(s"(CAST(o1 AS DOUBLE) - ($e)) * (CAST(o1 AS DOUBLE) - ($e)) / ($v)")} AS chi2
        |FROM ag""".stripMargin
   }
 
@@ -1571,7 +1553,7 @@ object EventQueries {
         sum(when(col("value") <= ApdexT, 1L).otherwise(0L)).as("n_satisfied"),
         sum(when(col("value") > ApdexT && col("value") <= 4 * ApdexT, 1L)
           .otherwise(0L)).as("n_tolerating"))
-      .withColumn("apdex", graft.text.TextFns.round4(
+      .withColumn("apdex", round4(
         (col("n_satisfied").cast("double") +
           col("n_tolerating").cast("double") / 2.0) /
           col("n_events").cast("double")))
@@ -1581,7 +1563,7 @@ object EventQueries {
     s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
        |       CAST(sum(CASE WHEN value <= $ApdexT THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
        |       CAST(sum(CASE WHEN value > $ApdexT AND value <= ${4 * ApdexT} THEN 1 ELSE 0 END) AS BIGINT) AS n_tolerating,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  s"(CAST(sum(CASE WHEN value <= $ApdexT THEN 1 ELSE 0 END) AS DOUBLE) " +
                    s"+ CAST(sum(CASE WHEN value > $ApdexT AND value <= ${4 * ApdexT} THEN 1 ELSE 0 END) AS DOUBLE) / 2.0) " +
                    "/ CAST(count(*) AS DOUBLE)")} AS apdex
@@ -1602,7 +1584,6 @@ object EventQueries {
     * (date_format ≡ strftime).
     */
   def latencyBands(spark: SparkSession, sfDir: String): DataFrame = {
-    val r4 = graft.text.TextFns.round4 _
     Tables.events(spark, sfDir)
       .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
         col("event_type"))
@@ -1610,19 +1591,18 @@ object EventQueries {
         percentile(col("value"),
           array(lit(0.5), lit(0.95), lit(0.99))).as("ps"))
       .select(col("day"), col("event_type"), col("n_events"),
-        r4(element_at(col("ps"), 1)).as("p50"),
-        r4(element_at(col("ps"), 2)).as("p95"),
-        r4(element_at(col("ps"), 3)).as("p99"))
+        round4(element_at(col("ps"), 1)).as("p50"),
+        round4(element_at(col("ps"), 2)).as("p95"),
+        round4(element_at(col("ps"), 3)).as("p99"))
       .orderBy("day", "event_type")
   }
 
   private val sqlLatencyBands = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)), '%Y-%m-%d') AS day,
        |       event_type, CAST(count(*) AS BIGINT) AS n_events,
-       |       ${r4("quantile_cont(value, 0.5)")} AS p50,
-       |       ${r4("quantile_cont(value, 0.95)")} AS p95,
-       |       ${r4("quantile_cont(value, 0.99)")} AS p99
+       |       ${duckRound4("quantile_cont(value, 0.5)")} AS p50,
+       |       ${duckRound4("quantile_cont(value, 0.95)")} AS p95,
+       |       ${duckRound4("quantile_cont(value, 0.99)")} AS p99
        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin
   }
 
@@ -1670,17 +1650,16 @@ object EventQueries {
             / col("n_gaps").cast("double"))
           / (col("n_gaps").cast("double") - lit(1.0)))
       .withColumn("std", sqrt(col("variance")))
-      .withColumn("burstiness", graft.text.TextFns.round4(
+      .withColumn("burstiness", round4(
         (col("std") - col("mean")) / (col("std") + col("mean"))))
-      .withColumn("cv", graft.text.TextFns.round4(col("std") / col("mean")))
-      .withColumn("mean_gap_s", graft.text.TextFns.round4(col("mean")))
+      .withColumn("cv", round4(col("std") / col("mean")))
+      .withColumn("mean_gap_s", round4(col("mean")))
       .select("user_id", "n_gaps", "mean_gap_s", "cv", "burstiness")
       .orderBy(col("burstiness").desc, col("user_id"))
       .limit(20)
   }
 
   private val sqlBurstiness = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
        |           FROM events),
        |     g AS (SELECT user_id,
@@ -1699,11 +1678,11 @@ object EventQueries {
        |                    / (CAST(n_gaps AS DOUBLE) - 1.0) AS variance
        |           FROM a WHERE n_gaps >= $BurstMinGaps)
        |SELECT user_id, n_gaps,
-       |       ${r4("mean")} AS mean_gap_s,
-       |       ${r4("sqrt(variance) / mean")} AS cv,
-       |       ${r4("(sqrt(variance) - mean) / (sqrt(variance) + mean)")} AS burstiness
+       |       ${duckRound4("mean")} AS mean_gap_s,
+       |       ${duckRound4("sqrt(variance) / mean")} AS cv,
+       |       ${duckRound4("(sqrt(variance) - mean) / (sqrt(variance) + mean)")} AS burstiness
        |FROM s
-       |ORDER BY ${r4("(sqrt(variance) - mean) / (sqrt(variance) + mean)")} DESC, user_id
+       |ORDER BY ${duckRound4("(sqrt(variance) - mean) / (sqrt(variance) + mean)")} DESC, user_id
        |LIMIT 20""".stripMargin
   }
 
@@ -1734,14 +1713,13 @@ object EventQueries {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_active_minutes"),
         max(col("gap")).as("max_gap_min"),
-        graft.text.TextFns.round4(percentile(col("gap"), lit(0.99)))
+        round4(percentile(col("gap"), lit(0.99)))
           .as("p99_gap_min"),
         count(when(col("gap") > 10, lit(1))).as("n_gaps_over_10"))
       .orderBy("event_type")
   }
 
   private val sqlEventGaps = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH a AS (SELECT DISTINCT event_type,
        |                  epoch_us(CAST(ts AS TIMESTAMP)) // 60000000 AS midx
        |           FROM events),
@@ -1750,7 +1728,7 @@ object EventQueries {
        |           FROM a)
        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_active_minutes,
        |       CAST(max(gap) AS BIGINT) AS max_gap_min,
-       |       ${r4("quantile_cont(gap, 0.99)")} AS p99_gap_min,
+       |       ${duckRound4("quantile_cont(gap, 0.99)")} AS p99_gap_min,
        |       CAST(count(CASE WHEN gap > 10 THEN 1 END) AS BIGINT) AS n_gaps_over_10
        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin
   }
@@ -1791,13 +1769,12 @@ object EventQueries {
         coalesce(col("n_retained"), lit(0L)).as("n_retained"),
         (col("n_active") - coalesce(col("n_retained"), lit(0L))).as("n_churned"),
         (col("n_active_next") - coalesce(col("n_retained"), lit(0L))).as("n_new"),
-        graft.text.TextFns.round4(coalesce(col("n_retained"), lit(0L)).cast("double")
+        round4(coalesce(col("n_retained"), lit(0L)).cast("double")
           / col("n_active").cast("double")).as("retention"))
       .orderBy("week")
   }
 
   private val sqlUserChurn = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH um AS (SELECT DISTINCT user_id,
        |                   epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS w
        |            FROM events),
@@ -1810,7 +1787,7 @@ object EventQueries {
        |       coalesce(n_retained, 0) AS n_retained,
        |       prev.n_active - coalesce(n_retained, 0) AS n_churned,
        |       cur.n_active - coalesce(n_retained, 0) AS n_new,
-       |       ${r4("CAST(coalesce(n_retained, 0) AS DOUBLE) / CAST(prev.n_active AS DOUBLE)")} AS retention
+       |       ${duckRound4("CAST(coalesce(n_retained, 0) AS DOUBLE) / CAST(prev.n_active AS DOUBLE)")} AS retention
        |FROM pm prev
        |JOIN pm cur ON cur.w = prev.w + 1
        |LEFT JOIN rt ON rt.w = prev.w
@@ -1855,7 +1832,7 @@ object EventQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"),
         expr("unix_micros(ts) div 604800000000").as("w"),
-        floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+        units(col("value"), 1e6).cast("long").as("vm"))
     val bounds = ev.agg(min(col("w")).as("wmin"), max(col("w")).as("wmax"))
     val cells = ev.crossJoin(broadcast(bounds))
       .withColumn("post", col("w") >= expr("(wmin + wmax + 1) div 2"))
@@ -1872,26 +1849,24 @@ object EventQueries {
         sum(when(!col("treated") && col("post"), col("vm").cast("decimal(28,0)"))).as("s_b_post"))
     def mean(p: String) =
       col(s"s_$p").cast("double") / 1000000.0 / col(s"n_$p").cast("double")
-    val r4 = graft.text.TextFns.round4 _
     cells.select(
-      col("n_a_pre"), r4(mean("a_pre")).as("mean_a_pre"),
-      col("n_a_post"), r4(mean("a_post")).as("mean_a_post"),
-      col("n_b_pre"), r4(mean("b_pre")).as("mean_b_pre"),
-      col("n_b_post"), r4(mean("b_post")).as("mean_b_post"),
-      r4((mean("a_post") - mean("a_pre")) - (mean("b_post") - mean("b_pre")))
+      col("n_a_pre"), round4(mean("a_pre")).as("mean_a_pre"),
+      col("n_a_post"), round4(mean("a_post")).as("mean_a_post"),
+      col("n_b_pre"), round4(mean("b_pre")).as("mean_b_pre"),
+      col("n_b_post"), round4(mean("b_post")).as("mean_b_post"),
+      round4((mean("a_post") - mean("a_pre")) - (mean("b_post") - mean("b_pre")))
         .as("did"))
   }
 
   private val sqlDid = {
     def mean(p: String) =
       s"(CAST(s_$p AS DOUBLE) / 1000000.0 / CAST(n_$p AS DOUBLE))"
-    val r4 = graft.text.TextFns.duckRound4 _
     def cell(name: String, cond: String) =
       s"CAST(sum(CASE WHEN $cond THEN 1 ELSE 0 END) AS BIGINT) AS n_$name,\n" +
         s"       |              sum(CASE WHEN $cond THEN CAST(vm AS DECIMAL(28,0)) END) AS s_$name"
     s"""WITH ev AS (SELECT user_id,
        |                   epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS w,
-       |                   CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS vm
+       |                   CAST(${duckUnits("value", 1e6)} AS BIGINT) AS vm
        |            FROM events),
        |     b AS (SELECT min(w) AS wmin, max(w) AS wmax FROM ev),
        |     f AS (SELECT vm, w >= (wmin + wmax + 1) // 2 AS post,
@@ -1902,11 +1877,11 @@ object EventQueries {
        |              ${cell("b_pre", "NOT treated AND NOT post")},
        |              ${cell("b_post", "NOT treated AND post")}
        |           FROM f)
-       |SELECT n_a_pre, ${r4(mean("a_pre"))} AS mean_a_pre,
-       |       n_a_post, ${r4(mean("a_post"))} AS mean_a_post,
-       |       n_b_pre, ${r4(mean("b_pre"))} AS mean_b_pre,
-       |       n_b_post, ${r4(mean("b_post"))} AS mean_b_post,
-       |       ${r4(s"(${mean("a_post")} - ${mean("a_pre")}) - (${mean("b_post")} - ${mean("b_pre")})")} AS did
+       |SELECT n_a_pre, ${duckRound4(mean("a_pre"))} AS mean_a_pre,
+       |       n_a_post, ${duckRound4(mean("a_post"))} AS mean_a_post,
+       |       n_b_pre, ${duckRound4(mean("b_pre"))} AS mean_b_pre,
+       |       n_b_post, ${duckRound4(mean("b_post"))} AS mean_b_post,
+       |       ${duckRound4(s"(${mean("a_post")} - ${mean("a_pre")}) - (${mean("b_post")} - ${mean("b_pre")})")} AS did
        |FROM c""".stripMargin
   }
 
@@ -1914,7 +1889,7 @@ object EventQueries {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"),
         expr("unix_micros(ts) div 604800000000").as("w"),
-        floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+        units(col("value"), 1e6).cast("long").as("vm"))
     val bounds = ev.agg(min(col("w")).as("wmin"), max(col("w")).as("wmax"))
     val u = ev.crossJoin(broadcast(bounds))
       .withColumn("pre", col("w") < expr("(wmin + wmax + 1) div 2"))
@@ -1933,8 +1908,8 @@ object EventQueries {
     val varxN = d("sxx") - d("sx") * d("sx") / nD
     val varyN = d("syy") - d("sy") * d("sy") / nD
     m.select(col("n").as("n_users"),
-      graft.text.TextFns.round4(covN / varxN).as("theta"),
-      graft.text.TextFns.round4(covN * covN / (varxN * varyN))
+      round4(covN / varxN).as("theta"),
+      round4(covN * covN / (varxN * varyN))
         .as("var_reduction"))
   }
 
@@ -1944,7 +1919,7 @@ object EventQueries {
     val varyN = "(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))"
     s"""WITH ev AS (SELECT user_id,
        |                   epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS w,
-       |                   CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS vm
+       |                   CAST(${duckUnits("value", 1e6)} AS BIGINT) AS vm
        |            FROM events),
        |     b AS (SELECT min(w) AS wmin, max(w) AS wmax FROM ev),
        |     u AS (SELECT user_id,
@@ -1959,8 +1934,8 @@ object EventQueries {
        |                  sum(CAST(y AS DECIMAL(18,0)) * CAST(y AS DECIMAL(20,0))) AS syy
        |           FROM u)
        |SELECT CAST(n AS BIGINT) AS n_users,
-       |       ${graft.text.TextFns.duckRound4(s"$covN / $varxN")} AS theta,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(s"$covN / $varxN")} AS theta,
+       |       ${duckRound4(
                  s"$covN * $covN / ($varxN * $varyN)")} AS var_reduction
        |FROM m""".stripMargin
   }
@@ -1997,37 +1972,34 @@ object EventQueries {
       .filter(col("nw") === 7)
       .withColumn("dow", pmod(col("dnum"), lit(7L)))
       .withColumn("detr", col("cnt").cast("double") - col("trend"))
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     val seas = det.groupBy("event_type", "dow")
-      .agg((sum(r6d(col("detr"))).cast("double") /
+      .agg((sum(round6(col("detr")).cast("decimal(28,6)")).cast("double") /
         count(lit(1)).cast("double")).as("s"))
     val rr = det.join(seas, Seq("event_type", "dow"))
       .withColumn("r", col("detr") - col("s"))
       .withColumn("tr", col("cnt").cast("double") - col("s"))
     val m = rr.groupBy("event_type").agg(
       count(lit(1)).as("n"),
-      sum(r6d(col("r"))).as("sr"), sum(r6d(col("r") * col("r"))).as("srr"),
-      sum(r6d(col("detr"))).as("sd"), sum(r6d(col("detr") * col("detr")))
-        .as("sdd"),
-      sum(r6d(col("tr"))).as("st"), sum(r6d(col("tr") * col("tr")))
-        .as("stt"))
+      sum(round6(col("r")).cast("decimal(28,6)")).as("sr"),
+      sum(round6(col("r") * col("r")).cast("decimal(28,6)")).as("srr"),
+      sum(round6(col("detr")).cast("decimal(28,6)")).as("sd"),
+      sum(round6(col("detr") * col("detr")).cast("decimal(28,6)")).as("sdd"),
+      sum(round6(col("tr")).cast("decimal(28,6)")).as("st"),
+      sum(round6(col("tr") * col("tr")).cast("decimal(28,6)")).as("stt"))
     val nD = col("n").cast("double")
     def varOf(s: String, ss: String) =
       (col(ss).cast("double") - col(s).cast("double") * col(s).cast("double") / nD) / nD
     m.select(col("event_type"), col("n").as("n_days"),
-        graft.text.TextFns.round4(greatest(lit(0.0),
+        round4(greatest(lit(0.0),
           lit(1.0) - varOf("sr", "srr") / varOf("sd", "sdd")))
           .as("seasonal_strength"),
-        graft.text.TextFns.round4(greatest(lit(0.0),
+        round4(greatest(lit(0.0),
           lit(1.0) - varOf("sr", "srr") / varOf("st", "stt")))
           .as("trend_strength"))
       .orderBy("event_type")
   }
 
   private val sqlStlStrength = {
-    def r6d(e: String) =
-      s"CAST(floor(($e) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(28,6))"
     def varOf(s: String, ss: String) =
       s"((CAST($ss AS DOUBLE) - CAST($s AS DOUBLE) * CAST($s AS DOUBLE) / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE))"
     s"""WITH d AS (SELECT event_type,
@@ -2043,21 +2015,24 @@ object EventQueries {
        |                    CAST(cnt AS DOUBLE) - trend AS detr
        |             FROM ma WHERE nw = 7),
        |     seas AS (SELECT event_type, dow,
-       |                     CAST(sum(${r6d("detr")}) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS s
+       |                     CAST(sum(CAST(${duckRound6("detr")} AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS s
        |              FROM det GROUP BY 1, 2),
        |     rr AS (SELECT det.event_type, detr, detr - s AS r,
        |                   CAST(cnt AS DOUBLE) - s AS tr
        |            FROM det JOIN seas ON det.event_type = seas.event_type
        |                               AND det.dow = seas.dow),
        |     m AS (SELECT event_type, count(*) AS n,
-       |                  sum(${r6d("r")}) AS sr, sum(${r6d("r * r")}) AS srr,
-       |                  sum(${r6d("detr")}) AS sd, sum(${r6d("detr * detr")}) AS sdd,
-       |                  sum(${r6d("tr")}) AS st, sum(${r6d("tr * tr")}) AS stt
+       |                  sum(CAST(${duckRound6("r")} AS DECIMAL(28,6))) AS sr,
+       |                  sum(CAST(${duckRound6("r * r")} AS DECIMAL(28,6))) AS srr,
+       |                  sum(CAST(${duckRound6("detr")} AS DECIMAL(28,6))) AS sd,
+       |                  sum(CAST(${duckRound6("detr * detr")} AS DECIMAL(28,6))) AS sdd,
+       |                  sum(CAST(${duckRound6("tr")} AS DECIMAL(28,6))) AS st,
+       |                  sum(CAST(${duckRound6("tr * tr")} AS DECIMAL(28,6))) AS stt
        |           FROM rr GROUP BY 1)
        |SELECT event_type, CAST(n AS BIGINT) AS n_days,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  s"greatest(0.0, 1.0 - ${varOf("sr", "srr")} / ${varOf("sd", "sdd")})")} AS seasonal_strength,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  s"greatest(0.0, 1.0 - ${varOf("sr", "srr")} / ${varOf("st", "stt")})")} AS trend_strength
        |FROM m ORDER BY event_type""".stripMargin
   }
@@ -2092,14 +2067,13 @@ object EventQueries {
       .crossJoin(broadcast(rep.agg(
         percentile(col("mean_gap"), array(lit(0.5), lit(0.9))).as("ps"))))
       .select(col("n_buyers"), col("n_repeat"),
-        graft.text.TextFns.round4(col("n_repeat").cast("double")
+        round4(col("n_repeat").cast("double")
           / col("n_buyers").cast("double")).as("repeat_rate"),
-        graft.text.TextFns.round4(element_at(col("ps"), 1)).as("p50_gap_min"),
-        graft.text.TextFns.round4(element_at(col("ps"), 2)).as("p90_gap_min"))
+        round4(element_at(col("ps"), 1)).as("p50_gap_min"),
+        round4(element_at(col("ps"), 2)).as("p90_gap_min"))
   }
 
   private val sqlRepeatPurchase = {
-    val r4 = graft.text.TextFns.round4 _
     s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
        |                   (max(epoch_us(CAST(ts AS TIMESTAMP)))
        |                     - min(epoch_us(CAST(ts AS TIMESTAMP)))) // 60000000 AS span_min
@@ -2113,9 +2087,9 @@ object EventQueries {
        |     g AS (SELECT quantile_cont(mean_gap, 0.5) AS p50,
        |                  quantile_cont(mean_gap, 0.9) AS p90 FROM rep)
        |SELECT n_buyers, n_repeat,
-       |       ${graft.text.TextFns.duckRound4("CAST(n_repeat AS DOUBLE) / CAST(n_buyers AS DOUBLE)")} AS repeat_rate,
-       |       ${graft.text.TextFns.duckRound4("p50")} AS p50_gap_min,
-       |       ${graft.text.TextFns.duckRound4("p90")} AS p90_gap_min
+       |       ${duckRound4("CAST(n_repeat AS DOUBLE) / CAST(n_buyers AS DOUBLE)")} AS repeat_rate,
+       |       ${duckRound4("p50")} AS p50_gap_min,
+       |       ${duckRound4("p90")} AS p90_gap_min
        |FROM a CROSS JOIN g""".stripMargin
   }
 
@@ -2147,13 +2121,12 @@ object EventQueries {
         percentile(col("mins"), array(lit(0.5), lit(0.9))).as("ps"),
         max(col("mins")).as("max_mins"))
       .select(col("n_converters"),
-        graft.text.TextFns.round4(element_at(col("ps"), 1)).as("p50_mins"),
-        graft.text.TextFns.round4(element_at(col("ps"), 2)).as("p90_mins"),
+        round4(element_at(col("ps"), 1)).as("p50_mins"),
+        round4(element_at(col("ps"), 2)).as("p90_mins"),
         col("max_mins"))
   }
 
   private val sqlTimeToConvert = {
-    val r4 = graft.text.TextFns.duckRound4 _
     s"""WITH e AS (SELECT user_id, event_type,
        |                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
        |           FROM events),
@@ -2164,8 +2137,8 @@ object EventQueries {
        |           WHERE e.event_type = 'purchase' AND e.us >= v_us
        |           GROUP BY e.user_id)
        |SELECT CAST(count(*) AS BIGINT) AS n_converters,
-       |       ${r4("quantile_cont(mins, 0.5)")} AS p50_mins,
-       |       ${r4("quantile_cont(mins, 0.9)")} AS p90_mins,
+       |       ${duckRound4("quantile_cont(mins, 0.5)")} AS p50_mins,
+       |       ${duckRound4("quantile_cont(mins, 0.9)")} AS p90_mins,
        |       CAST(max(mins) AS BIGINT) AS max_mins
        |FROM c""".stripMargin
   }
@@ -2285,15 +2258,14 @@ object EventQueries {
     val z = (pa - pb) / sqrt(pp * (lit(1.0) - pp)
       * (lit(1.0) / col("n_a").cast("double") + lit(1.0) / col("n_b").cast("double")))
     wide.select(col("n_a"), col("k_a"), col("n_b"), col("k_b"),
-        graft.text.TextFns.round4(pa).as("conv_a"),
-        graft.text.TextFns.round4(pb).as("conv_b"),
-        graft.text.TextFns.round4(z).as("z_score"))
+        round4(pa).as("conv_a"),
+        round4(pb).as("conv_b"),
+        round4(z).as("z_score"))
       .withColumn("significant",
         (abs(col("z_score")) > 1.96).cast("int"))
   }
 
   private val sqlAbTest = {
-    val r4 = graft.text.TextFns.duckRound4 _
     val pa = "CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE)"
     val pb = "CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE)"
     val pp = "CAST(k_a + k_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)"
@@ -2317,9 +2289,9 @@ object EventQueries {
        |                  max(CASE WHEN variant = 1 THEN k END) AS k_b
        |           FROM a)
        |SELECT n_a, k_a, n_b, k_b,
-       |       ${r4(pa)} AS conv_a, ${r4(pb)} AS conv_b,
-       |       ${r4(z)} AS z_score,
-       |       CAST(abs(${r4(z)}) > 1.96 AS INT) AS significant
+       |       ${duckRound4(pa)} AS conv_a, ${duckRound4(pb)} AS conv_b,
+       |       ${duckRound4(z)} AS z_score,
+       |       CAST(abs(${duckRound4(z)}) > 1.96 AS INT) AS significant
        |FROM w""".stripMargin
   }
 
@@ -2341,7 +2313,7 @@ object EventQueries {
     val tots = cells.groupBy("event_type").agg(sum(col("n")).as("t"))
     cells.join(broadcast(tots), "event_type")
       .select(col("event_type"), col("dow"), col("n"),
-        graft.text.TextFns.round4(col("n").cast("double") / col("t").cast("double"))
+        round4(col("n").cast("double") / col("t").cast("double"))
           .as("share"))
       .orderBy("event_type", "dow")
   }
@@ -2354,7 +2326,7 @@ object EventQueries {
        |           FROM e GROUP BY 1, 2),
        |     t AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS t FROM c GROUP BY 1)
        |SELECT event_type, dow, n,
-       |       ${graft.text.TextFns.duckRound4("CAST(n AS DOUBLE) / CAST(t AS DOUBLE)")} AS share
+       |       ${duckRound4("CAST(n AS DOUBLE) / CAST(t AS DOUBLE)")} AS share
        |FROM c JOIN t USING (event_type)
        |ORDER BY event_type, dow""".stripMargin
 
@@ -2394,7 +2366,7 @@ object EventQueries {
     val tot = a.agg(sum(col("n_users")).as("t"))
     a.crossJoin(broadcast(tot))
       .select(col("touch_type"), col("n_users"),
-        graft.text.TextFns.round4(
+        round4(
           col("n_users").cast("double") / col("t").cast("double")).as("share"))
       .orderBy("touch_type")
   }
@@ -2423,7 +2395,7 @@ object EventQueries {
        |           GROUP BY 1),
        |     tot AS (SELECT CAST(sum(n_users) AS BIGINT) AS t FROM a)
        |SELECT touch_type, n_users,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(n_users AS DOUBLE) / CAST(t AS DOUBLE)")} AS share
        |FROM a CROSS JOIN tot ORDER BY touch_type""".stripMargin
 
@@ -2469,11 +2441,11 @@ object EventQueries {
           .when(col("rn") === 1 || col("rn") === col("n"), lit(0.4))
           .otherwise(lit(0.2) / (col("n") - 2).cast("double")))
       .withColumn("wd",
-        (floor(col("w") * 1000000.0 + 0.5) / 1000000.0).cast("decimal(18,6)"))
+        round6(col("w")).cast("decimal(18,6)"))
     weighted.groupBy(col("event_type").as("touch_type"))
       .agg(count(lit(1)).as("n_touches"), sum(col("wd")).as("credit_dec"))
       .select(col("touch_type"), col("n_touches"),
-        graft.text.TextFns.round4(col("credit_dec").cast("double")).as("credit"))
+        round4(col("credit_dec").cast("double")).as("credit"))
       .orderBy("touch_type")
   }
 
@@ -2495,14 +2467,12 @@ object EventQueries {
        |               count(*) OVER (PARTITION BY user_id) AS n
        |             FROM touch),
        |     wt AS (SELECT event_type,
-       |              CAST(floor((CASE WHEN n = 1 THEN 1.0
-       |                               WHEN n = 2 THEN 0.5
-       |                               WHEN rn = 1 OR rn = n THEN 0.4
-       |                               ELSE 0.2 / CAST(n - 2 AS DOUBLE) END)
-       |                          * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6)) AS wd
+       |              CAST(${duckRound6("CASE WHEN n = 1 THEN 1.0 WHEN n = 2 THEN 0.5 " +
+                  "WHEN rn = 1 OR rn = n THEN 0.4 ELSE 0.2 / CAST(n - 2 AS DOUBLE) END")}
+       |                AS DECIMAL(18,6)) AS wd
        |            FROM pos)
        |SELECT event_type AS touch_type, CAST(count(*) AS BIGINT) AS n_touches,
-       |       ${graft.text.TextFns.duckRound4("CAST(sum(wd) AS DOUBLE)")} AS credit
+       |       ${duckRound4("CAST(sum(wd) AS DOUBLE)")} AS credit
        |FROM wt GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Runs `body` with the gated streaming runs' scoped settings, each
@@ -2647,7 +2617,7 @@ object EventQueries {
 
   /** The rounded value sum of micro-unit column `micros`. */
   private def sumValue(micros: String = "vm_sum"): Column =
-    graft.text.TextFns.round4(col(micros).cast("double") / 1000000.0).as("sum_value")
+    round4(col(micros).cast("double") / 1000000.0).as("sum_value")
 
   /** A [[Streaming.windowedCounts]] batch in the window gates' oracle
     * columns, its window start as text column `startAs`.
@@ -2697,8 +2667,8 @@ object EventQueries {
     s"""SELECT strftime(make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 21600000000)
        |                * 21600000000), '%Y-%m-%d %H:%M:%S') AS window_start,
        |       event_type, count(*) AS n_events,
-       |       ${graft.text.TextFns.duckRound4(
-                  "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value
        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // ---------- q_stream_session: streaming session merging, oracle-gated ----------
@@ -2727,7 +2697,7 @@ object EventQueries {
     val dir = graft.util.Scratch.dir("graft_stream_ss")
     val out = dir.resolve("out").toString
     val agg = evs
-      .withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("vm", units(col("value"), 1e6).cast("decimal(28,0)"))
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum"))
     runToEnd(agg, "complete", dir.resolve("cp")) { (b, _) =>
@@ -2746,7 +2716,7 @@ object EventQueries {
     */
   private val sqlStreamSession =
     s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-      |                  CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS vm
+      |                  CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0)) AS vm
       |           FROM events),
       |     flagged AS (
       |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
@@ -2759,7 +2729,7 @@ object EventQueries {
       |  FROM flagged)
       |SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
       |       count(*) AS n_events,
-      |       ${graft.text.TextFns.duckRound4(
+      |       ${duckRound4(
                  "CAST(sum(vm) AS DOUBLE) / 1000000.0")} AS sum_value
       |FROM sessions GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
 
@@ -2795,14 +2765,14 @@ object EventQueries {
     */
   private val sqlStreamSliding =
     s"""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type,
-      |                  CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS vm
+      |                  CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0)) AS vm
       |           FROM events),
       |     x AS (SELECT make_timestamp((epoch_us(ts) // 1800000000 - off) * 1800000000) AS ws,
       |                  event_type, vm
       |           FROM e CROSS JOIN (SELECT unnest([0, 1]) AS off))
       |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS win_start,
       |       event_type, count(*) AS n_events,
-      |       ${graft.text.TextFns.duckRound4(
+      |       ${duckRound4(
                  "CAST(sum(vm) AS DOUBLE) / 1000000.0")} AS sum_value
       |FROM x GROUP BY ws, event_type ORDER BY win_start, event_type""".stripMargin
 
@@ -2956,7 +2926,7 @@ object EventQueries {
     state.toDF("event_type", "event_id", "value")
       .withColumn("rank", row_number().over(byType))
       .select(col("event_type"), col("rank"), col("event_id"),
-        graft.text.TextFns.round4(col("value")).as("value"))
+        round4(col("value")).as("value"))
       .orderBy("event_type", "rank")
   }
 
@@ -2966,7 +2936,7 @@ object EventQueries {
        |               ORDER BY value DESC, event_id) AS rk
        |           FROM events)
        |SELECT event_type, CAST(rk AS INT) AS rank, event_id,
-       |       ${graft.text.TextFns.duckRound4("value")} AS value
+       |       ${duckRound4("value")} AS value
        |FROM r WHERE rk <= $StreamTopK
        |ORDER BY event_type, rank""".stripMargin
 
@@ -3253,7 +3223,7 @@ object EventQueries {
     val out = dir.resolve("out").toString
     val agg = Tables.eventTs(eventsStream(spark, schema, sfDir))
       .join(broadcast(cust), col("user_id") === col("c_custkey"))
-      .withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("vm", units(col("value"), 1e6).cast("decimal(28,0)"))
       .groupBy(col("c_mktsegment").as("segment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum"))
     runToEnd(agg, "complete", dir.resolve("cp")) { (b, _) =>
@@ -3266,8 +3236,8 @@ object EventQueries {
   private val sqlStreamEnrich =
     s"""SELECT c_mktsegment AS segment, event_type,
        |       CAST(count(*) AS BIGINT) AS n_events,
-       |       ${graft.text.TextFns.duckRound4(
-                  "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0))) AS DOUBLE) / 1000000.0")} AS sum_value
        |FROM events JOIN customer ON user_id = c_custkey
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
@@ -3450,7 +3420,7 @@ object EventQueries {
     val evs = Tables.eventTs(slicedStream(spark, batch.schema, inDir))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"),
-        floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"),
+        units(col("value"), 1e6).cast("long").as("vm"),
         (col("event_type") === "__sentinel").as("sentinel"))
       .as[SessEv]
     val GapUs = 30L * 60L * 1000000L
@@ -3560,7 +3530,7 @@ object EventQueries {
       val out = dir.resolve("out").toString
       val evs = slicedStream(spark, schema, inDir)
         .select(col("event_type"), col("event_id"),
-          floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+          units(col("value"), 1e6).cast("long").as("vm"))
         .as[TwsEv]
       val stats = evs.groupByKey(_.event_type)
         .transformWithState(new TwsTypeStats, TimeMode.None(), OutputMode.Update())
@@ -3579,9 +3549,9 @@ object EventQueries {
       .orderBy("event_type")
 
   private val sqlStreamTws =
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-      |       (floor(CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-      |          / 1000000.0 * 10000.0 + 0.5) / 10000.0) AS sum_value,
+    s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+      |       ${duckRound4(s"CAST(sum(CAST(${duckUnits("value", 1e6)} AS BIGINT)) AS DOUBLE) / 1000000.0")}
+      |         AS sum_value,
       |       CAST(max(event_id) AS BIGINT) AS max_event_id
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
@@ -3642,7 +3612,7 @@ object EventQueries {
       }
       val initAgg = batch.filter(col("event_id") % 3 === 0)
         .select(col("event_type"), col("event_id"),
-          floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+          units(col("value"), 1e6).cast("long").as("vm"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum"),
           max(col("event_id")).as("max_event_id"))
@@ -3659,7 +3629,7 @@ object EventQueries {
       val initState = initAgg.groupByKey(_.event_type)
       val evs = slicedStream(spark, batch.schema, inDir)
         .select(col("event_type"), col("event_id"),
-          floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+          units(col("value"), 1e6).cast("long").as("vm"))
         .as[TwsEv]
       val stats = evs.groupByKey(_.event_type)
         .transformWithState(new TwsInit, TimeMode.None(), OutputMode.Update(),
@@ -3763,7 +3733,7 @@ object EventQueries {
       val flushAtMs = maxTsMs + 12L * 3600 * 1000 // +12 h: past all data,
       // below sentinel-1's +24 h watermark — fires in sentinel-2's batch
       val slim = batch.select(col("event_type"), col("event_id"),
-        floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"), col("ts"))
+        units(col("value"), 1e6).cast("long").as("vm"), col("ts"))
       val inDir = StageCache.cachedIn("tmr1", sfDir) { (work, in) =>
         // ONE real-event batch (was two — and never more than two: a
         // third id-sliced batch would see the one-batch-lagged
@@ -3817,7 +3787,7 @@ object EventQueries {
       import org.apache.spark.sql.graftbridge.StreamClockBridge
       import spark.implicits._
       val slim = Tables.eventsRaw(spark, sfDir).select(col("event_type"), col("event_id"),
-        floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+        units(col("value"), 1e6).cast("long").as("vm"))
       val dir = graft.util.Scratch.dir("graft_stream_ptmr")
       val out = dir.resolve("out").toString
       val inDir = StageCache.cachedIn("ptmr", sfDir) { (work, in) =>
@@ -4030,7 +4000,7 @@ object EventQueries {
       val out = dir.resolve("out").toString
       val evs = Tables.eventTs(slicedStream(spark, schema, inDir))
         .select(col("event_type"), hour(col("ts")).cast("long").as("hour"),
-          floor(col("value") * 1000000.0 + 0.5).cast("long").as("vm"))
+          units(col("value"), 1e6).cast("long").as("vm"))
         .as[MsEv]
       val stats = evs.groupByKey(_.event_type)
         .transformWithState(new MsHourly, TimeMode.None(), OutputMode.Update())
@@ -4120,9 +4090,9 @@ object EventQueries {
     h1.withColumn("h6", (col("h1") / 6L).cast("long"))
       .join(h6, Seq("h6"))
       .withColumn("rate_1h",
-        graft.text.TextFns.round4(col("e1").cast("double") / col("n1").cast("double")))
+        round4(col("e1").cast("double") / col("n1").cast("double")))
       .withColumn("rate_6h",
-        graft.text.TextFns.round4(col("e6").cast("double") / col("n6").cast("double")))
+        round4(col("e6").cast("double") / col("n6").cast("double")))
       .select(
         date_format(to_timestamp(col("h1") * 3600L), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("n1").as("n_events"), col("rate_1h"), col("rate_6h"),
@@ -4140,9 +4110,9 @@ object EventQueries {
        |                   CAST(sum(CASE WHEN is_err THEN 1 ELSE 0 END) AS BIGINT) AS e6
        |            FROM e GROUP BY 1),
        |     j AS (SELECT h1.h1, h1.n1,
-       |                  ${graft.text.TextFns.duckRound4(
+       |                  ${duckRound4(
                             "CAST(e1 AS DOUBLE) / CAST(n1 AS DOUBLE)")} AS rate_1h,
-       |                  ${graft.text.TextFns.duckRound4(
+       |                  ${duckRound4(
                             "CAST(e6 AS DOUBLE) / CAST(n6 AS DOUBLE)")} AS rate_6h
        |           FROM h1 JOIN h6 ON h1.h1 // 6 = h6.h6)
        |SELECT strftime(make_timestamp(h1 * 3600 * 1000000), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -4171,7 +4141,7 @@ object EventQueries {
   def forgetPlan(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("user_id"),
-        floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)").as("vm"))
+        units(col("value"), 1e6).cast("decimal(28,0)").as("vm"))
       .withColumn("hit", col("user_id") % 97 === 0)
     ev.groupBy("event_type")
       .agg(count(lit(1)).as("n_total"),
@@ -4179,24 +4149,24 @@ object EventQueries {
         sum(when(col("hit"), col("vm")).otherwise(lit(0).cast("decimal(28,0)")))
           .as("vm_del"))
       .select(col("event_type"), col("n_total"), col("n_deleted"),
-        graft.text.TextFns.round4(
+        round4(
           col("n_deleted").cast("double") / col("n_total").cast("double"))
           .as("pct_rows"),
-        graft.text.TextFns.round4(col("vm_del").cast("double") / 1000000.0)
+        round4(col("vm_del").cast("double") / 1000000.0)
           .as("value_removed"))
       .orderBy("event_type")
   }
 
   private val sqlForgetPlan =
     s"""WITH e AS (SELECT event_type, user_id,
-       |                  CAST(floor(value * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS vm,
+       |                  CAST(${duckUnits("value", 1e6)} AS DECIMAL(28,0)) AS vm,
        |                  user_id % 97 = 0 AS hit
        |           FROM events)
        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_total,
        |       CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_deleted,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS pct_rows,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN hit THEN vm ELSE CAST(0 AS DECIMAL(28,0)) END) AS DOUBLE) / 1000000.0")} AS value_removed
        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin
 

@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.text.TextFns.{round4, units}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -37,12 +38,12 @@ object Streaming {
                      lateness: Option[String] = Some("1 hour")): DataFrame = {
     val win = slide.fold(window(col("ts"), windowLen))(window(col("ts"), windowLen, _))
     lateness.fold(events)(events.withWatermark("ts", _))
-      .withColumn("vm", floor(col("value") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("vm", units(col("value"), 1e6).cast("decimal(28,0)"))
       .groupBy(win, col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum"))
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
         col("event_type"), col("n_events"),
-        graft.text.TextFns.round4(col("vm_sum").cast("double") / 1000000.0).as("sum_value"))
+        round4(col("vm_sum").cast("double") / 1000000.0).as("sum_value"))
   }
 
   /** Stateful exact dedup within the watermark horizon — the streaming

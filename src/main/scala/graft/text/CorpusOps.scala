@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -217,7 +218,7 @@ object CorpusOps {
     }
     val perDoc = scored.groupBy("doc_id")
       .agg(perTerm.head, perTerm.tail :+ count(lit(1)).as("n_terms"): _*)
-      .withColumn("score", TextFns.round4(
+      .withColumn("score", round4(
         QueryTerms.indices.map(i => coalesce(col(s"s$i"), lit(0.0)))
           .reduceLeft(_ + _)))
     val phase1 = Window.partitionBy(pmod(col("doc_id"), lit(8L)))
@@ -254,7 +255,7 @@ object CorpusOps {
        |                    / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS contrib
        |                FROM tf JOIN dfreq USING (term) CROSS JOIN stats),
        |     perdoc AS (SELECT doc_id, count(*) AS n_terms,
-       |                  ${TextFns.duckRound4(sumTerms)} AS score
+       |                  ${duckRound4(sumTerms)} AS score
        |                FROM scored GROUP BY doc_id),
        |     ranked AS (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id) AS rk
        |                FROM perdoc)
@@ -366,7 +367,7 @@ object CorpusOps {
         sum(col("vm")).as("vocab"),
         sum(col("m") * col("m") * col("vm")).as("m2v"))
       .select(col("source"), col("n_tokens"), col("vocab"),
-        TextFns.round4(lit(10000.0) *
+        round4(lit(10000.0) *
           (col("m2v") - col("n_tokens")).cast("double") /
           (col("n_tokens").cast("double") * col("n_tokens").cast("double")))
           .as("yule_k"))
@@ -385,7 +386,7 @@ object CorpusOps {
        |                  CAST(sum(m * m * vm) AS BIGINT) AS m2v
        |           FROM sp GROUP BY 1)
        |SELECT source, n_tokens, vocab,
-       |       ${TextFns.duckRound4("10000.0 * CAST(m2v - n_tokens AS DOUBLE) / " +
+       |       ${duckRound4("10000.0 * CAST(m2v - n_tokens AS DOUBLE) / " +
                 "(CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE))")} AS yule_k
        |FROM a ORDER BY source""".stripMargin
 
@@ -609,7 +610,7 @@ object CorpusOps {
     pairs
       .join(broadcast(sizes.select(col("source").as("src_a"), col("n").as("n_a"))), "src_a")
       .join(broadcast(sizes.select(col("source").as("src_b"), col("n").as("n_b"))), "src_b")
-      .withColumn("jaccard", TextFns.round4(
+      .withColumn("jaccard", round4(
         col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")).cast("double")))
       .select("src_a", "src_b", "n_inter", "jaccard")
@@ -617,7 +618,7 @@ object CorpusOps {
   }
 
   private val sqlSourceOverlap = {
-    val jac = TextFns.duckRound4(
+    val jac = duckRound4(
       "CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE)")
     s"""WITH t AS (SELECT source, $duckTokens AS ts FROM documents),
        |     n AS (SELECT source, list_distinct(${TextQueries.duckNgramHashesOf(OverlapN)}) AS grams FROM t),
@@ -707,14 +708,13 @@ object CorpusOps {
       .withColumn("ex", col("imin").cast("double") /
         (col("tot_a") + col("tot_b") - col("imin")).cast("double"))
       .select(col("src_a"), col("src_b"),
-        TextFns.round4(col("est")).as("est_sim"),
-        TextFns.round4(col("ex")).as("exact_sim"),
-        TextFns.round4(abs(col("est") - col("ex"))).as("abs_err"))
+        round4(col("est")).as("est_sim"),
+        round4(col("ex")).as("exact_sim"),
+        round4(abs(col("est") - col("ex"))).as("abs_err"))
       .orderBy("src_a", "src_b")
   }
 
   private val sqlWeightedMinhash = {
-    val r4 = TextFns.duckRound4 _
     val sigCols = (0 until WmhHashes).map(j =>
       s"min((hp * ${TextFns.aj(j)} + ${TextFns.bj(j)}) % $p) AS s$j").mkString(", ")
     val matches = (0 until WmhHashes).map(j =>
@@ -734,9 +734,9 @@ object CorpusOps {
        |               FROM tf a JOIN tf b ON a.h = b.h AND a.source < b.source
        |               GROUP BY 1, 2)
        |SELECT src_a, src_b,
-       |       ${r4(est)} AS est_sim,
-       |       ${r4(ex)} AS exact_sim,
-       |       ${r4(s"abs($est - $ex)")} AS abs_err
+       |       ${duckRound4(est)} AS est_sim,
+       |       ${duckRound4(ex)} AS exact_sim,
+       |       ${duckRound4(s"abs($est - $ex)")} AS abs_err
        |FROM inter
        |JOIN tot ta ON inter.src_a = ta.source
        |JOIN tot tb ON inter.src_b = tb.source
@@ -822,8 +822,7 @@ object CorpusOps {
     val tot = counts.agg(sum(col("n_docs")).as("n_total"))
     val w = counts.crossJoin(broadcast(tot))
       .withColumn("w4",
-        floor(sqrt(col("n_docs").cast("double") / col("n_total").cast("double"))
-          * 10000.0 + 0.5).cast("long"))
+        units(sqrt(col("n_docs").cast("double") / col("n_total").cast("double")), 1e4).cast("long"))
     val sumW = w.agg(sum(col("w4")).as("sum_w"))
     val base = w.crossJoin(broadcast(sumW))
       .withColumn("alloc_floor", expr(s"CAST($TempBudget * w4 DIV sum_w AS BIGINT)"))
@@ -852,8 +851,7 @@ object CorpusOps {
     s"""WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY 1),
        |     tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_total FROM c),
        |     w AS (SELECT lang, n_docs,
-       |             CAST(floor(sqrt(CAST(n_docs AS DOUBLE) / CAST(n_total AS DOUBLE))
-       |                        * 10000.0 + 0.5) AS BIGINT) AS w4
+       |             CAST(${duckUnits("sqrt(CAST(n_docs AS DOUBLE) / CAST(n_total AS DOUBLE))", 1e4)} AS BIGINT) AS w4
        |           FROM c CROSS JOIN tot),
        |     sw AS (SELECT CAST(sum(w4) AS BIGINT) AS sum_w FROM w),
        |     b AS (SELECT lang, n_docs, w4,
@@ -889,18 +887,18 @@ object CorpusOps {
     val scored = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("source"),
-        floor(TextFns.qualityScore(col("text"), col("ts")) * 1000000.0 + 0.5)
+        units(TextFns.qualityScore(col("text"), col("ts")), 1e6)
           .cast("decimal(28,0)").as("qm"))
     val per = scored.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("qm")).as("s_qm"))
     val tot = per.agg(sum(col("n_docs")).as("n_all"), sum(col("s_qm")).as("s_all"))
     per.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"),
-        TextFns.round4(col("s_qm").cast("double") / 1000000.0 /
+        round4(col("s_qm").cast("double") / 1000000.0 /
           col("n_docs").cast("double")).as("mean_q"),
-        TextFns.round4((col("s_all") - col("s_qm")).cast("double") / 1000000.0 /
+        round4((col("s_all") - col("s_qm")).cast("double") / 1000000.0 /
           (col("n_all") - col("n_docs")).cast("double")).as("loo_mean"),
-        TextFns.round4(
+        round4(
           (col("s_all") - col("s_qm")).cast("double") / 1000000.0 /
             (col("n_all") - col("n_docs")).cast("double") -
           col("s_all").cast("double") / 1000000.0 /
@@ -912,18 +910,18 @@ object CorpusOps {
     val q = TextQueries.duckQuality
     s"""WITH t AS (SELECT source, text, $duckTokens AS ts FROM documents),
        |     d AS (SELECT source,
-       |             CAST(floor(($q) * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS qm
+       |             CAST(${duckUnits(q, 1e6)} AS DECIMAL(28,0)) AS qm
        |           FROM t),
        |     per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        |                    sum(qm) AS s_qm
        |             FROM d GROUP BY 1),
        |     tot AS (SELECT sum(n_docs) AS n_all, sum(s_qm) AS s_all FROM per)
        |SELECT source, n_docs,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(s_qm AS DOUBLE) / 1000000.0 / CAST(n_docs AS DOUBLE)")} AS mean_q,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(s_all - s_qm AS DOUBLE) / 1000000.0 / CAST(n_all - n_docs AS DOUBLE)")} AS loo_mean,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(s_all - s_qm AS DOUBLE) / 1000000.0 / CAST(n_all - n_docs AS DOUBLE) " +
                  "- CAST(s_all AS DOUBLE) / 1000000.0 / CAST(n_all AS DOUBLE)")} AS delta_q
        |FROM per CROSS JOIN tot ORDER BY source""".stripMargin
@@ -1050,12 +1048,10 @@ object CorpusOps {
     * aggregates — no RNG, no per-replicate pass.
     */
   def poissonBoot(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * 1000000.0 + 0.5) / 1000000.0
     val scored = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("doc_id"),
-        floor(TextFns.qualityScore(col("text"), col("ts")) * 1000000.0 + 0.5)
+        units(TextFns.qualityScore(col("text"), col("ts")), 1e6)
           .cast("decimal(28,0)").as("qm"))
       .localCheckpoint(true) // staged: replicate fan-out + the overall-mean pass
     val w = when(col("u") < 368, 0L).when(col("u") < 736, 1L)
@@ -1070,21 +1066,20 @@ object CorpusOps {
       .groupBy("b")
       .agg(sum(col("qm") * col("w").cast("decimal(10,0)")).as("swq"),
         sum(col("w")).as("sw"))
-      .withColumn("m6", r6(col("swq").cast("double") / 1000000.0 /
+      .withColumn("m6", round6(col("swq").cast("double") / 1000000.0 /
         col("sw").cast("double")))
     val bar = reps.agg(count(lit(1)).as("nb"),
         sum(col("m6").cast("decimal(28,6)")).as("ms"))
       .withColumn("m_bar", col("ms").cast("double") / col("nb").cast("double"))
     val se = reps.select(col("m6")).crossJoin(broadcast(bar))
-      .withColumn("dev2", floor((col("m6") - col("m_bar")) * (col("m6") - col("m_bar"))
-        * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("dev2", units((col("m6") - col("m_bar")) * (col("m6") - col("m_bar")), 1e6).cast("decimal(28,0)"))
       .groupBy("nb").agg(sum(col("dev2")).as("ss"))
-      .select(col("nb"), TextFns.round4(sqrt(
+      .select(col("nb"), round4(sqrt(
         col("ss").cast("double") / 1000000.0 / (col("nb") - 1).cast("double"))).as("boot_se"))
     val tot = scored.agg(count(lit(1)).as("n_docs"), sum(col("qm")).as("sq"))
     tot.crossJoin(broadcast(se))
       .select(col("n_docs"), col("nb").as("n_replicates"),
-        TextFns.round4(col("sq").cast("double") / 1000000.0 /
+        round4(col("sq").cast("double") / 1000000.0 /
           col("n_docs").cast("double")).as("mean_q"),
         col("boot_se"))
   }
@@ -1093,7 +1088,7 @@ object CorpusOps {
     val q = TextQueries.duckQuality
     s"""WITH t AS (SELECT doc_id, source, text, $duckTokens AS ts FROM documents),
        |     d AS (SELECT doc_id,
-       |             CAST(floor(($q) * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS qm
+       |             CAST(${duckUnits(q, 1e6)} AS DECIMAL(28,0)) AS qm
        |           FROM t),
        |     reps AS (SELECT doc_id, qm, unnest(range(1, ${BootReps + 1})) AS b FROM d),
        |     wt AS (SELECT b, qm,
@@ -1104,8 +1099,8 @@ object CorpusOps {
        |                   WHEN u < 920 THEN 2 WHEN u < 981 THEN 3 ELSE 4 END AS w
        |            FROM wt),
        |     rm AS (SELECT b,
-       |              CAST(floor(CAST(sum(qm * CAST(w AS DECIMAL(10,0))) AS DOUBLE)
-       |                / 1000000.0 / CAST(sum(w) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE)
+       |              CAST(${duckUnits("CAST(sum(qm * CAST(w AS DECIMAL(10,0))) AS DOUBLE) / 1000000.0" +
+                  " / CAST(sum(w) AS DOUBLE)", 1e6)} AS DOUBLE)
        |                / 1000000.0 AS m6
        |            FROM ww GROUP BY b),
        |     bar AS (SELECT CAST(count(*) AS BIGINT) AS nb,
@@ -1113,34 +1108,30 @@ object CorpusOps {
        |                      / CAST(count(*) AS DOUBLE) AS m_bar
        |             FROM rm),
        |     se AS (SELECT nb,
-       |              sum(CAST(floor((m6 - m_bar) * (m6 - m_bar) * 1000000.0 + 0.5)
+       |              sum(CAST(${duckUnits("(m6 - m_bar) * (m6 - m_bar)", 1e6)}
        |                    AS DECIMAL(28,0))) AS ss
        |            FROM rm CROSS JOIN bar GROUP BY nb),
        |     tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, sum(qm) AS sq FROM d)
        |SELECT n_docs, nb AS n_replicates,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sq AS DOUBLE) / 1000000.0 / CAST(n_docs AS DOUBLE)")} AS mean_q,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "sqrt(CAST(ss AS DOUBLE) / 1000000.0 / (CAST(nb AS DOUBLE) - 1.0))")} AS boot_se
        |FROM tot CROSS JOIN se""".stripMargin
   }
 
   def jackknifeSe(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * 1000000.0 + 0.5) / 1000000.0
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      r6(c).cast("decimal(28,6)")
     val scored = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("source"),
-        floor(TextFns.qualityScore(col("text"), col("ts")) * 1000000.0 + 0.5)
+        units(TextFns.qualityScore(col("text"), col("ts")), 1e6)
           .cast("decimal(28,0)").as("qm"))
     val per = scored.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("qm")).as("s_qm"))
     val tot = per.agg(sum(col("n_docs")).as("n_all"), sum(col("s_qm")).as("s_all"),
       count(lit(1)).as("g"))
     val loo = per.crossJoin(broadcast(tot))
-      .withColumn("loo6", r6((col("s_all") - col("s_qm")).cast("double") /
+      .withColumn("loo6", round6((col("s_all") - col("s_qm")).cast("double") /
         1000000.0 / (col("n_all") - col("n_docs")).cast("double")))
     val bar = loo.agg(first(col("g")).as("g"), first(col("n_all")).as("n_all"),
         first(col("s_all")).as("s_all"),
@@ -1148,14 +1139,14 @@ object CorpusOps {
       .withColumn("loo_bar", col("loo_sum").cast("double") / col("g").cast("double"))
     loo.select(col("loo6"))
       .crossJoin(broadcast(bar))
-      .withColumn("dev2", r6d((col("loo6") - col("loo_bar")) *
-        (col("loo6") - col("loo_bar"))))
+      .withColumn("dev2", round6((col("loo6") - col("loo_bar")) *
+        (col("loo6") - col("loo_bar"))).cast("decimal(28,6)"))
       .groupBy("g", "n_all", "s_all")
       .agg(sum(col("dev2")).as("ss"))
       .select(col("g").as("n_sources"),
-        TextFns.round4(col("s_all").cast("double") / 1000000.0 /
+        round4(col("s_all").cast("double") / 1000000.0 /
           col("n_all").cast("double")).as("mean_q"),
-        TextFns.round4(sqrt(
+        round4(sqrt(
           (col("g") - 1).cast("double") / col("g").cast("double") *
             col("ss").cast("double"))).as("jk_se"))
   }
@@ -1164,15 +1155,15 @@ object CorpusOps {
     val q = TextQueries.duckQuality
     s"""WITH t AS (SELECT source, text, $duckTokens AS ts FROM documents),
        |     d AS (SELECT source,
-       |             CAST(floor(($q) * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS qm
+       |             CAST(${duckUnits(q, 1e6)} AS DECIMAL(28,0)) AS qm
        |           FROM t),
        |     per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        |                    sum(qm) AS s_qm
        |             FROM d GROUP BY 1),
        |     tot AS (SELECT sum(n_docs) AS n_all, sum(s_qm) AS s_all,
        |                    CAST(count(*) AS BIGINT) AS g FROM per),
-       |     loo AS (SELECT CAST(floor(CAST(s_all - s_qm AS DOUBLE) / 1000000.0
-       |                      / CAST(n_all - n_docs AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE)
+       |     loo AS (SELECT CAST(${duckUnits("CAST(s_all - s_qm AS DOUBLE) / 1000000.0" +
+                  " / CAST(n_all - n_docs AS DOUBLE)", 1e6)} AS DOUBLE)
        |                      / 1000000.0 AS loo6
        |             FROM per CROSS JOIN tot),
        |     bar AS (SELECT g, n_all, s_all,
@@ -1180,13 +1171,12 @@ object CorpusOps {
        |                      / CAST(g AS DOUBLE) AS loo_bar
        |             FROM loo CROSS JOIN tot GROUP BY g, n_all, s_all),
        |     dv AS (SELECT g, n_all, s_all,
-       |              sum(CAST(floor((loo6 - loo_bar) * (loo6 - loo_bar) * 1000000.0 + 0.5)
-       |                    / 1000000.0 AS DECIMAL(28,6))) AS ss
+       |              sum(CAST(${duckRound6("(loo6 - loo_bar) * (loo6 - loo_bar)")} AS DECIMAL(28,6))) AS ss
        |            FROM loo CROSS JOIN bar GROUP BY g, n_all, s_all)
        |SELECT g AS n_sources,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(s_all AS DOUBLE) / 1000000.0 / CAST(n_all AS DOUBLE)")} AS mean_q,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "sqrt(CAST(g - 1 AS DOUBLE) / CAST(g AS DOUBLE) * CAST(ss AS DOUBLE))")} AS jk_se
        |FROM dv""".stripMargin
   }
@@ -1226,7 +1216,7 @@ object CorpusOps {
       .filter(!col("term").isInCollection(QueryTerms))
       .groupBy("term").agg(count(lit(1)).cast("double").as("tf_sum"))
     fbTf.join(dfreq, "term").crossJoin(broadcast(nn))
-      .withColumn("weight", TextFns.round4(col("tf_sum") *
+      .withColumn("weight", round4(col("tf_sum") *
         log(lit(1.0) + (col("n_docs").cast("double") - col("df").cast("double")
           + 0.5) / (col("df").cast("double") + 0.5))))
       .withColumn("rk",
@@ -1248,7 +1238,7 @@ object CorpusOps {
        |              FROM e JOIN fb USING (doc_id)
        |              WHERE term NOT IN ($exList) GROUP BY 1),
        |     w AS (SELECT term, df,
-       |             ${TextFns.duckRound4(
+       |             ${duckRound4(
                        "tf_sum * ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) " +
                          "/ (CAST(df AS DOUBLE) + 0.5))")} AS weight
        |           FROM fbtf JOIN dfreq USING (term) CROSS JOIN nn),
@@ -1300,7 +1290,7 @@ object CorpusOps {
       .withColumn("w", col("tf") * log((col("n_docs").cast("double") + 1.0) /
         (col("df").cast("double") + 1.0)))
       .groupBy("doc_id").agg(perTerm.head, perTerm.tail: _*)
-      .withColumn("score", TextFns.round4(
+      .withColumn("score", round4(
         QueryTerms.indices.map(i => coalesce(col(s"w$i"), lit(0.0)))
           .reduceLeft(_ + _)))
       // two-phase top-k (the q_bm25 discipline): per-hash-partition
@@ -1324,9 +1314,9 @@ object CorpusOps {
       .agg(count(when(col("a_id").isNotNull && col("b_id").isNotNull, 1)).as("n_common"),
         count(when(col("a_id").isNotNull || col("b_id").isNotNull, 1)).as("n_union"))
       .select(lit(OverlapK.toLong).as("k"), col("n_common"),
-        TextFns.round4(col("n_common").cast("double") / lit(OverlapK.toDouble))
+        round4(col("n_common").cast("double") / lit(OverlapK.toDouble))
           .as("overlap_at_k"),
-        TextFns.round4(col("n_common").cast("double") /
+        round4(col("n_common").cast("double") /
           col("n_union").cast("double")).as("jaccard"))
   }
 
@@ -1348,7 +1338,7 @@ object CorpusOps {
        |     wt AS (SELECT doc_id, term,
        |              tf * ln((CAST(n_docs AS DOUBLE) + 1.0) / (CAST(df AS DOUBLE) + 1.0)) AS w
        |            FROM tf JOIN dfreq USING (term) CROSS JOIN nn),
-       |     sc AS (SELECT doc_id, ${TextFns.duckRound4(sumTerms)} AS score
+       |     sc AS (SELECT doc_id, ${duckRound4(sumTerms)} AS score
        |            FROM wt GROUP BY doc_id),
        |     btop AS (SELECT doc_id, rk FROM (
        |             SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rk
@@ -1362,10 +1352,10 @@ object CorpusOps {
        |     j AS (SELECT a_id, b_id FROM a FULL JOIN b ON a.a_id = b.b_id)
        |SELECT CAST($OverlapK AS BIGINT) AS k,
        |       CAST(count(CASE WHEN a_id IS NOT NULL AND b_id IS NOT NULL THEN 1 END) AS BIGINT) AS n_common,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(count(CASE WHEN a_id IS NOT NULL AND b_id IS NOT NULL THEN 1 END) AS DOUBLE) " +
                    s"/ $OverlapK.0")} AS overlap_at_k,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(count(CASE WHEN a_id IS NOT NULL AND b_id IS NOT NULL THEN 1 END) AS DOUBLE) " +
                    "/ CAST(count(CASE WHEN a_id IS NOT NULL OR b_id IS NOT NULL THEN 1 END) AS DOUBLE)")} AS jaccard
        |FROM j""".stripMargin
@@ -1398,8 +1388,8 @@ object CorpusOps {
       .filter(col("word").isNotNull)
       .groupBy("word").agg(count(lit(1)).as("freq"))
     val w = counts.withColumn("w6",
-      floor(sqrt(col("freq").cast("double")) *
-        sqrt(sqrt(col("freq").cast("double"))) * 1000000.0 + 0.5).cast("long"))
+      units(sqrt(col("freq").cast("double")) *
+        sqrt(sqrt(col("freq").cast("double"))), 1e6).cast("long"))
     val sumW = w.agg(sum(col("w6")).as("sum_w"))
     val base = w.crossJoin(broadcast(sumW))
       .withColumn("alloc_floor", expr(s"CAST($NegSlots * w6 DIV sum_w AS BIGINT)"))
@@ -1420,8 +1410,8 @@ object CorpusOps {
        |     e AS (SELECT unnest(ts) AS word FROM t),
        |     c AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM e GROUP BY 1),
        |     w AS (SELECT word, freq,
-       |             CAST(floor(sqrt(CAST(freq AS DOUBLE)) * sqrt(sqrt(CAST(freq AS DOUBLE)))
-       |                        * 1000000.0 + 0.5) AS BIGINT) AS w6
+       |             CAST(${duckUnits("sqrt(CAST(freq AS DOUBLE))" +
+                  " * sqrt(sqrt(CAST(freq AS DOUBLE)))", 1e6)} AS BIGINT) AS w6
        |           FROM c),
        |     sw AS (SELECT CAST(sum(w6) AS BIGINT) AS sum_w FROM w),
        |     b AS (SELECT word, freq, w6,
@@ -1466,15 +1456,15 @@ object CorpusOps {
     val terms = common
       .select(explode_outer(sequence(col("d0"), lit(OverlapK.toLong))).as("d"))
       .withColumn("t6",
-        (floor(lit(1.0) /
+        round6(lit(1.0) /
           (expr("shiftleft(cast(1 as bigint), cast(d - 1 as int))") * col("d"))
-            .cast("double") * 1000000.0 + 0.5) / 1000000.0)
+            .cast("double"))
           .cast("decimal(28,6)"))
     common.agg(count(lit(1)).as("n_common"))
       .crossJoin(terms.agg(
         coalesce(sum(col("t6")), lit(0).cast("decimal(28,6)")).as("ssum")))
       .select(lit(OverlapK.toLong).as("k"), col("n_common"),
-        TextFns.round4(lit(0.5) * col("ssum").cast("double")).as("rbo"))
+        round4(lit(0.5) * col("ssum").cast("double")).as("rbo"))
   }
 
   private val sqlRbo = {
@@ -1486,12 +1476,12 @@ object CorpusOps {
        |     common AS (SELECT a.doc_id, greatest(ra, rb) AS d0
        |                FROM a JOIN bb ON a.doc_id = bb.doc_id),
        |     dpt AS (SELECT unnest(range(d0, $OverlapK + 1)) AS d FROM common),
-       |     trm AS (SELECT CAST(floor(1.0 / CAST((CAST(1 AS BIGINT) << CAST(d - 1 AS INT)) * d AS DOUBLE)
-       |                    * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(28,6)) AS t6
+       |     trm AS (SELECT CAST(${duckRound6(
+                  "1.0 / CAST((CAST(1 AS BIGINT) << CAST(d - 1 AS INT)) * d AS DOUBLE)")} AS DECIMAL(28,6)) AS t6
        |           FROM dpt)
        |SELECT CAST($OverlapK AS BIGINT) AS k,
        |       (SELECT CAST(count(*) AS BIGINT) FROM common) AS n_common,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "0.5 * CAST(coalesce(sum(t6), 0) AS DOUBLE)")} AS rbo
        |FROM trm""".stripMargin
   }
@@ -1549,9 +1539,9 @@ object CorpusOps {
         Seq("r"), "left")
       .withColumn("nr1", coalesce(col("nr1"), lit(0L)))
       .select(col("r"), col("nr").as("n_r"), col("nr1").as("n_r1"),
-        TextFns.round4((col("r") + 1).cast("double") * col("nr1").cast("double")
+        round4((col("r") + 1).cast("double") * col("nr1").cast("double")
           / col("nr").cast("double")).as("r_star"),
-        TextFns.round4((col("r") + 1).cast("double") * col("nr1").cast("double")
+        round4((col("r") + 1).cast("double") * col("nr1").cast("double")
           / col("nr").cast("double") / col("r").cast("double")).as("discount"))
       .orderBy("r")
   }
@@ -1566,8 +1556,8 @@ object CorpusOps {
        |           FROM coc a LEFT JOIN coc b ON b.r = a.r + 1
        |           WHERE a.r <= 8)
        |SELECT CAST(r AS BIGINT) AS r, nr AS n_r, nr1 AS n_r1,
-       |       ${TextFns.duckRound4(rs)} AS r_star,
-       |       ${TextFns.duckRound4(s"$rs / CAST(r AS DOUBLE)")} AS discount
+       |       ${duckRound4(rs)} AS r_star,
+       |       ${duckRound4(s"$rs / CAST(r AS DOUBLE)")} AS discount
        |FROM j ORDER BY r""".stripMargin
   }
 
@@ -1604,8 +1594,6 @@ object CorpusOps {
     val tot = st.agg(sum(col("a")).as("nn"))
     def dd(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       c.cast("double")
-    def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)")
     val joined = st
       .join(broadcast(srcTot), "source")
       .join(termTot, "term")
@@ -1614,11 +1602,11 @@ object CorpusOps {
       .withColumn("bt", col("nn") - col("sa"))
       // exact-integer over-representation screen BEFORE any float
       .filter(col("a") * col("nn") > col("sa") * col("ab"))
-      .withColumn("ta", r6(dd(col("a")) * log(dd(col("a"))
-        / (dd(col("sa")) * dd(col("ab")) / dd(col("nn"))))))
+      .withColumn("ta", round6(dd(col("a")) * log(dd(col("a"))
+        / (dd(col("sa")) * dd(col("ab")) / dd(col("nn"))))).cast("decimal(28,6)"))
       .withColumn("tb", when(col("b") > 0,
-        r6(dd(col("b")) * log(dd(col("b"))
-          / (dd(col("bt")) * dd(col("ab")) / dd(col("nn"))))))
+        round6(dd(col("b")) * log(dd(col("b"))
+          / (dd(col("bt")) * dd(col("ab")) / dd(col("nn"))))).cast("decimal(28,6)"))
         .otherwise(lit(0.0).cast("decimal(28,6)")))
       .withColumn("g2", (col("ta") + col("tb")) * 2)
     val w = org.apache.spark.sql.expressions.Window
@@ -1628,16 +1616,15 @@ object CorpusOps {
       .filter(col("rk") <= 5)
       .select(col("source"), col("rk"), col("term"),
         col("a").as("cnt_in"), col("b").as("cnt_rest"),
-        TextFns.round4(col("g2").cast("double")).as("g2"))
+        round4(col("g2").cast("double")).as("g2"))
       .orderBy("source", "rk")
   }
 
   private val sqlKeyness = {
-    def r6(e: String) = s"CAST(floor(($e) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(28,6))"
-    val ta = r6("CAST(a AS DOUBLE) * ln(CAST(a AS DOUBLE) " +
-      "/ (CAST(sa AS DOUBLE) * CAST(ab AS DOUBLE) / CAST(nn AS DOUBLE)))")
-    val tb = r6("CAST(b AS DOUBLE) * ln(CAST(b AS DOUBLE) " +
-      "/ (CAST(bt AS DOUBLE) * CAST(ab AS DOUBLE) / CAST(nn AS DOUBLE)))")
+    val ta = s"CAST(${duckRound6("CAST(a AS DOUBLE) * ln(CAST(a AS DOUBLE) " +
+      "/ (CAST(sa AS DOUBLE) * CAST(ab AS DOUBLE) / CAST(nn AS DOUBLE)))")} AS DECIMAL(28,6))"
+    val tb = s"CAST(${duckRound6("CAST(b AS DOUBLE) * ln(CAST(b AS DOUBLE) " +
+      "/ (CAST(bt AS DOUBLE) * CAST(ab AS DOUBLE) / CAST(nn AS DOUBLE)))")} AS DECIMAL(28,6))"
     s"""WITH t AS (SELECT source, $duckTokens AS ts FROM documents),
        |     terms AS (SELECT source, unnest(ts) AS term FROM t),
        |     st AS (SELECT source, term, count(*) AS a FROM terms GROUP BY 1, 2),
@@ -1660,7 +1647,7 @@ object CorpusOps {
        |           FROM g)
        |SELECT source, CAST(rk AS BIGINT) AS rk, term,
        |       CAST(a AS BIGINT) AS cnt_in, CAST(b AS BIGINT) AS cnt_rest,
-       |       ${TextFns.duckRound4("CAST(g2 AS DOUBLE)")} AS g2
+       |       ${duckRound4("CAST(g2 AS DOUBLE)")} AS g2
        |FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin
   }
 
@@ -1705,8 +1692,7 @@ object CorpusOps {
     val cells = srcTot.crossJoin(broadcast(topM))
       .join(st, Seq("source", "term"), "left")
       .withColumn("f6",
-        (floor(lit(1000.0) * coalesce(dd(col("a")), lit(0.0)) / dd(col("sa"))
-          * 1000000.0 + 0.5) / 1000000.0).cast("decimal(18,6)"))
+        round6(lit(1000.0) * coalesce(dd(col("a")), lit(0.0)) / dd(col("sa"))).cast("decimal(18,6)"))
       .localCheckpoint(true) // bounded sources×M grid; term stats + both z legs read it
     val tstats = cells.groupBy("term")
       .agg(count(lit(1)).as("k"), sum(col("f6")).as("sf"),
@@ -1726,19 +1712,19 @@ object CorpusOps {
     z.as("x").join(z.as("y"),
         col("x.term") === col("y.term") && col("x.source") < col("y.source"))
       .select(col("x.source").as("source_a"), col("y.source").as("source_b"),
-        (floor(abs(col("x.z") - col("y.z")) * 1000000.0 + 0.5) / 1000000.0)
+        round6(abs(col("x.z") - col("y.z")))
           .cast("decimal(28,6)").as("d6"))
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_terms"), sum(col("d6")).as("ds"))
       .select(col("source_a"), col("source_b"), col("n_terms"),
-        TextFns.round4(col("ds").cast("double") / col("n_terms").cast("double"))
+        round4(col("ds").cast("double") / col("n_terms").cast("double"))
           .as("delta"))
       .orderBy("source_a", "source_b")
   }
 
   private val sqlBurrowsDelta = {
-    val f6 = "CAST(floor(1000.0 * COALESCE(CAST(a AS DOUBLE), 0.0) / CAST(sa AS DOUBLE) " +
-      "* 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))"
+    val f6 =
+      s"CAST(${duckRound6("1000.0 * COALESCE(CAST(a AS DOUBLE), 0.0) / CAST(sa AS DOUBLE)")} AS DECIMAL(18,6))"
     s"""WITH t AS (SELECT source, $duckTokens AS ts FROM documents),
        |     terms AS (SELECT source, unnest(ts) AS term FROM t),
        |     st AS (SELECT source, term, count(*) AS a FROM terms GROUP BY 1, 2),
@@ -1763,11 +1749,11 @@ object CorpusOps {
        |                  (CAST(f6 AS DOUBLE) - mu) / sg AS z
        |           FROM cells JOIN tstats ON cells.term = tstats.term),
        |     pr AS (SELECT x.source AS source_a, y.source AS source_b,
-       |                   CAST(floor(abs(x.z - y.z) * 1000000.0 + 0.5) / 1000000.0
+       |                   CAST(${duckRound6("abs(x.z - y.z)")}
        |                     AS DECIMAL(28,6)) AS d6
        |            FROM z x JOIN z y ON x.term = y.term AND x.source < y.source)
        |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_terms,
-       |       ${TextFns.duckRound4("CAST(sum(d6) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS delta
+       |       ${duckRound4("CAST(sum(d6) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS delta
        |FROM pr GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin
   }
 
@@ -1788,12 +1774,10 @@ object CorpusOps {
     * bar.
     */
   def bootCi(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * 1000000.0 + 0.5) / 1000000.0
     val scored = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("doc_id"),
-        floor(TextFns.qualityScore(col("text"), col("ts")) * 1000000.0 + 0.5)
+        units(TextFns.qualityScore(col("text"), col("ts")), 1e6)
           .cast("decimal(28,0)").as("qm"))
     val w = when(col("u") < 368, 0L).when(col("u") < 736, 1L)
       .when(col("u") < 920, 2L).when(col("u") < 981, 3L).otherwise(4L)
@@ -1807,24 +1791,24 @@ object CorpusOps {
       .groupBy("b")
       .agg(sum(col("qm") * col("w").cast("decimal(10,0)")).as("swq"),
         sum(col("w")).as("sw"))
-      .withColumn("m6", r6(col("swq").cast("double") / 1000000.0 /
+      .withColumn("m6", round6(col("swq").cast("double") / 1000000.0 /
         col("sw").cast("double")))
     reps.agg(count(lit(1)).as("n_replicates"),
         sum(col("m6").cast("decimal(28,6)")).as("ms"),
         expr("percentile(m6, 0.025)").as("lo"),
         expr("percentile(m6, 0.975)").as("hi"))
       .select(col("n_replicates"),
-        TextFns.round4(col("ms").cast("double")
+        round4(col("ms").cast("double")
           / col("n_replicates").cast("double")).as("boot_mean"),
-        TextFns.round4(col("lo")).as("ci_lo"),
-        TextFns.round4(col("hi")).as("ci_hi"))
+        round4(col("lo")).as("ci_lo"),
+        round4(col("hi")).as("ci_hi"))
   }
 
   private val sqlBootCi = {
     val q = TextQueries.duckQuality
     s"""WITH t AS (SELECT doc_id, source, text, $duckTokens AS ts FROM documents),
        |     d AS (SELECT doc_id,
-       |             CAST(floor(($q) * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS qm
+       |             CAST(${duckUnits(q, 1e6)} AS DECIMAL(28,0)) AS qm
        |           FROM t),
        |     reps AS (SELECT doc_id, qm, unnest(range(1, ${BootReps + 1})) AS b FROM d),
        |     wt AS (SELECT b, qm,
@@ -1835,8 +1819,8 @@ object CorpusOps {
        |                   WHEN u < 920 THEN 2 WHEN u < 981 THEN 3 ELSE 4 END AS w
        |            FROM wt),
        |     rm AS (SELECT b,
-       |              CAST(floor(CAST(sum(qm * CAST(w AS DECIMAL(10,0))) AS DOUBLE)
-       |                / 1000000.0 / CAST(sum(w) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE)
+       |              CAST(${duckUnits("CAST(sum(qm * CAST(w AS DECIMAL(10,0))) AS DOUBLE) / 1000000.0" +
+                  " / CAST(sum(w) AS DOUBLE)", 1e6)} AS DOUBLE)
        |                / 1000000.0 AS m6
        |            FROM ww GROUP BY b),
        |     a AS (SELECT CAST(count(*) AS BIGINT) AS n_replicates,
@@ -1846,9 +1830,9 @@ object CorpusOps {
        |                  quantile_cont(m6, 0.975) AS hi
        |           FROM rm)
        |SELECT n_replicates,
-       |       ${TextFns.duckRound4("mb")} AS boot_mean,
-       |       ${TextFns.duckRound4("lo")} AS ci_lo,
-       |       ${TextFns.duckRound4("hi")} AS ci_hi
+       |       ${duckRound4("mb")} AS boot_mean,
+       |       ${duckRound4("lo")} AS ci_lo,
+       |       ${duckRound4("hi")} AS ci_hi
        |FROM a""".stripMargin
   }
 

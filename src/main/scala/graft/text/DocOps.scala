@@ -2,6 +2,7 @@ package graft.text
 
 import graft.functions.TextHashUtil
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, round4, round6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,7 +89,7 @@ object DocOps {
         count(lit(1)).as("n_segments"),
         sum(col("kept")).as("n_kept"))
       .withColumn("kept_ratio",
-        TextFns.round4(col("n_kept").cast("double") / col("n_segments").cast("double")))
+        round4(col("n_kept").cast("double") / col("n_segments").cast("double")))
       .orderBy("source")
   }
 
@@ -110,7 +111,7 @@ object DocOps {
        |           FROM h)
        |SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
        |       count(*) AS n_segments, CAST(sum(kept) AS BIGINT) AS n_kept,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(kept) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS kept_ratio
        |FROM w GROUP BY source ORDER BY source""".stripMargin
 
@@ -200,7 +201,7 @@ object DocOps {
         sum(lit(1L) - col("p_rep")).as("n_fail_repetition"),
         sum(col("p_all")).as("n_pass"))
       .withColumn("pass_rate",
-        TextFns.round4(col("n_pass").cast("double") / col("n_docs").cast("double")))
+        round4(col("n_pass").cast("double") / col("n_docs").cast("double")))
       .orderBy("source")
   }
 
@@ -228,7 +229,7 @@ object DocOps {
        |       CAST(sum(1 - p_stop) AS BIGINT) AS n_fail_stopword,
        |       CAST(sum(1 - p_rep) AS BIGINT) AS n_fail_repetition,
        |       CAST(sum(p_wc * p_mwl * p_stop * p_rep) AS BIGINT) AS n_pass,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(p_wc * p_mwl * p_stop * p_rep) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS pass_rate
        |FROM r GROUP BY source ORDER BY source""".stripMargin
   }
@@ -569,7 +570,7 @@ object DocOps {
         sum(col("freq") * (length(col("word")).cast("long") + 1L)).as("raw_bytes"),
         sum(col("freq") * col("code_bytes")).as("encoded_bytes"))
       .withColumn("ratio",
-        TextFns.round4(col("encoded_bytes").cast("double") / col("raw_bytes").cast("double")))
+        round4(col("encoded_bytes").cast("double") / col("raw_bytes").cast("double")))
       .select(col("n_vocab"), col("n_tokens"), col("raw_bytes"),
         col("encoded_bytes"), col("ratio"))
   }
@@ -587,7 +588,7 @@ object DocOps {
        |SELECT count(*) AS n_vocab, CAST(sum(freq) AS BIGINT) AS n_tokens,
        |       CAST(sum(freq * (length(word) + 1)) AS BIGINT) AS raw_bytes,
        |       CAST(sum(freq * code_bytes) AS BIGINT) AS encoded_bytes,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(freq * code_bytes) AS DOUBLE) / CAST(sum(freq * (length(word) + 1)) AS DOUBLE)")} AS ratio
        |FROM b""".stripMargin
 
@@ -641,7 +642,7 @@ object DocOps {
         count(lit(1)).as("n_grams"),
         sum(col("novel")).as("n_novel"))
       .withColumn("novelty",
-        TextFns.round4(col("n_novel").cast("double") / col("n_grams").cast("double")))
+        round4(col("n_novel").cast("double") / col("n_grams").cast("double")))
       .orderBy("source")
   }
 
@@ -655,7 +656,7 @@ object DocOps {
        |SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
        |       count(*) AS n_grams,
        |       CAST(sum(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS novelty
        |FROM g JOIN f USING (gram)
@@ -703,7 +704,7 @@ object DocOps {
       .join(novel, Seq("source"), "left_outer")
       .withColumn("n_novel", coalesce(col("n_novel"), lit(0L)))
       .withColumn("novelty",
-        TextFns.round4(col("n_novel").cast("double") / col("n_grams").cast("double")))
+        round4(col("n_novel").cast("double") / col("n_grams").cast("double")))
       .select("source", "n_docs", "n_grams", "n_novel", "novelty")
   }
 
@@ -722,7 +723,7 @@ object DocOps {
        |             FROM b GROUP BY 1)
        |SELECT tot.source, n_docs, n_grams,
        |       CAST(coalesce(n_novel, 0) AS BIGINT) AS n_novel,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(coalesce(n_novel, 0) AS DOUBLE) / CAST(n_grams AS DOUBLE)")} AS novelty
        |FROM tot LEFT JOIN nv ON tot.source = nv.source
        |ORDER BY tot.source""".stripMargin
@@ -765,10 +766,10 @@ object DocOps {
       .agg(count(col("h")).as("n_chunks"), countDistinct(col("h")).as("n_distinct"))
     ag.join(tb, Seq("source"))
       .select(col("source"), col("n_chunks"), col("n_distinct"),
-        TextFns.round4(lit(1.0) -
+        round4(lit(1.0) -
           col("n_distinct").cast("double") / col("n_chunks").cast("double"))
           .as("dup_rate"),
-        TextFns.round4(col("total_bytes").cast("double") /
+        round4(col("total_bytes").cast("double") /
           col("n_chunks").cast("double")).as("avg_chunk_bytes"))
       .orderBy("source")
   }
@@ -805,9 +806,9 @@ object DocOps {
        |                   CAST(count(DISTINCT h) AS BIGINT) AS n_distinct
        |            FROM ch GROUP BY 1)
        |SELECT ag.source, ag.n_chunks, ag.n_distinct,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "1.0 - CAST(ag.n_distinct AS DOUBLE) / CAST(ag.n_chunks AS DOUBLE)")} AS dup_rate,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(tb.total_bytes AS DOUBLE) / CAST(ag.n_chunks AS DOUBLE)")} AS avg_chunk_bytes
        |FROM ag JOIN tb ON ag.source = tb.source ORDER BY ag.source""".stripMargin
   }
@@ -967,7 +968,6 @@ object DocOps {
     val bySource = docs.groupBy("source").agg(count(lit(1)).as("n_source"))
     val byLang = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
     val total = docs.agg(count(lit(1)).as("n_total"))
-    val round6 = (c: Column) => floor(c * 1000000.0 + 0.5) / 1000000.0
     cell
       .join(broadcast(byLang), "lang")
       .join(bySource, "source")
@@ -984,7 +984,7 @@ object DocOps {
         count(lit(1)).as("n_langs"),
         sum(round6(col("term")).cast("decimal(18,6)")).as("chi2_dec"))
       .select(col("source"), col("n_docs"), col("n_langs"),
-        TextFns.round4(col("chi2_dec").cast("double")).as("chi2"))
+        round4(col("chi2_dec").cast("double")).as("chi2"))
       .orderBy("source")
   }
 
@@ -1003,8 +1003,8 @@ object DocOps {
        |           FROM e)
        |SELECT source, CAST(max(n_source) AS BIGINT) AS n_docs,
        |       count(*) AS n_langs,
-       |       ${TextFns.duckRound4(
-                  "CAST(sum(CAST((floor(term * 1000000.0 + 0.5) / 1000000.0)" +
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckRound6("term")}" +
                     " AS DECIMAL(18,6))) AS DOUBLE)")} AS chi2
        |FROM t GROUP BY source ORDER BY source""".stripMargin
 
@@ -1031,7 +1031,6 @@ object DocOps {
     val byLang = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
     val dims = docs.agg(count(lit(1)).as("n_total"),
       countDistinct(col("source")).as("r"), countDistinct(col("lang")).as("c"))
-    val round6 = (x: Column) => floor(x * 1000000.0 + 0.5) / 1000000.0
     cell
       .join(broadcast(byLang), "lang")
       .join(broadcast(bySource), "source")
@@ -1046,8 +1045,8 @@ object DocOps {
       .agg(sum(round6(col("term")).cast("decimal(18,6)")).as("chi2_dec"))
       .select(col("n_total").as("n_docs"),
         ((col("r") - 1) * (col("c") - 1)).as("dof"),
-        TextFns.round4(col("chi2_dec").cast("double")).as("chi2"),
-        TextFns.round4(sqrt(col("chi2_dec").cast("double")
+        round4(col("chi2_dec").cast("double")).as("chi2"),
+        round4(sqrt(col("chi2_dec").cast("double")
           / (col("n_total").cast("double")
             * least(col("r") - 1, col("c") - 1).cast("double")))).as("cramers_v"))
   }
@@ -1065,12 +1064,12 @@ object DocOps {
        |               / (CAST(n_source AS DOUBLE) * CAST(n_lang AS DOUBLE) / CAST(n_total AS DOUBLE)) AS term
        |           FROM cell JOIN bl USING (lang) JOIN bs USING (source) CROSS JOIN d),
        |     a AS (SELECT n_total, r, c,
-       |                  sum(CAST((floor(term * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(18,6))) AS chi2_dec
+       |                  sum(CAST(${duckRound6("term")} AS DECIMAL(18,6))) AS chi2_dec
        |           FROM t GROUP BY 1, 2, 3)
        |SELECT CAST(n_total AS BIGINT) AS n_docs,
        |       CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
-       |       ${TextFns.duckRound4("CAST(chi2_dec AS DOUBLE)")} AS chi2,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("CAST(chi2_dec AS DOUBLE)")} AS chi2,
+       |       ${duckRound4(
                  "sqrt(CAST(chi2_dec AS DOUBLE) / (CAST(n_total AS DOUBLE) * CAST(least(r - 1, c - 1) AS DOUBLE)))")} AS cramers_v
        |FROM a""".stripMargin
 
@@ -1102,8 +1101,6 @@ object DocOps {
     val bySource = cell.groupBy("source").agg(sum(col("obs")).as("n_source"))
     val byLang = cell.groupBy("lang").agg(sum(col("obs")).as("n_lang"))
     val tot = cell.agg(sum(col("obs")).as("n_total"))
-    val round6 = (x: Column) => floor(x * 1000000.0 + 0.5) / 1000000.0
-    def dec(x: Column) = round6(x).cast("decimal(18,6)")
     val nD = col("n_total").cast("double")
     val mi = cell
       .join(broadcast(byLang), "lang")
@@ -1113,51 +1110,49 @@ object DocOps {
         (col("obs").cast("double") / nD) *
           log(col("obs").cast("double") * nD /
             (col("n_source").cast("double") * col("n_lang").cast("double"))))
-      .groupBy("n_total").agg(sum(dec(col("term"))).as("mi_dec"))
+      .groupBy("n_total").agg(sum(round6(col("term")).cast("decimal(18,6)")).as("mi_dec"))
     val hl = byLang.crossJoin(broadcast(tot))
       .withColumn("term",
         -(col("n_lang").cast("double") / nD) * log(col("n_lang").cast("double") / nD))
-      .groupBy("n_total").agg(sum(dec(col("term"))).as("hl_dec"))
+      .groupBy("n_total").agg(sum(round6(col("term")).cast("decimal(18,6)")).as("hl_dec"))
     val hs = bySource.crossJoin(broadcast(tot))
       .withColumn("term",
         -(col("n_source").cast("double") / nD) * log(col("n_source").cast("double") / nD))
-      .groupBy("n_total").agg(sum(dec(col("term"))).as("hs_dec"))
+      .groupBy("n_total").agg(sum(round6(col("term")).cast("decimal(18,6)")).as("hs_dec"))
     mi.join(hl, "n_total").join(hs, "n_total")
       .select(col("n_total").as("n_docs"),
-        TextFns.round4(col("mi_dec").cast("double")).as("mi"),
-        TextFns.round4(col("hl_dec").cast("double")).as("h_lang"),
-        TextFns.round4(col("hs_dec").cast("double")).as("h_source"),
-        TextFns.round4(col("mi_dec").cast("double") /
+        round4(col("mi_dec").cast("double")).as("mi"),
+        round4(col("hl_dec").cast("double")).as("h_lang"),
+        round4(col("hs_dec").cast("double")).as("h_source"),
+        round4(col("mi_dec").cast("double") /
           (sqrt(col("hl_dec").cast("double")) * sqrt(col("hs_dec").cast("double"))))
           .as("nmi"))
   }
 
   private val sqlMutualInfo = {
-    def dec(x: String) =
-      s"sum(CAST((floor(($x) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(18,6)))"
     s"""WITH cell AS (SELECT source, lang, count(*) AS obs FROM documents GROUP BY 1, 2),
        |     bs AS (SELECT source, count(*) AS n_source FROM documents GROUP BY 1),
        |     bl AS (SELECT lang, count(*) AS n_lang FROM documents GROUP BY 1),
        |     d AS (SELECT count(*) AS n_total FROM documents),
-       |     mi AS (SELECT n_total, ${dec(
+       |     mi AS (SELECT n_total, sum(CAST(${duckRound6(
                   "(CAST(obs AS DOUBLE) / CAST(n_total AS DOUBLE)) * " +
                     "ln(CAST(obs AS DOUBLE) * CAST(n_total AS DOUBLE) / " +
-                    "(CAST(n_source AS DOUBLE) * CAST(n_lang AS DOUBLE)))")} AS mi_dec
+                    "(CAST(n_source AS DOUBLE) * CAST(n_lang AS DOUBLE)))")} AS DECIMAL(18,6))) AS mi_dec
        |            FROM cell JOIN bl USING (lang) JOIN bs USING (source) CROSS JOIN d
        |            GROUP BY 1),
-       |     hl AS (SELECT n_total, ${dec(
+       |     hl AS (SELECT n_total, sum(CAST(${duckRound6(
                   "-(CAST(n_lang AS DOUBLE) / CAST(n_total AS DOUBLE)) * " +
-                    "ln(CAST(n_lang AS DOUBLE) / CAST(n_total AS DOUBLE))")} AS hl_dec
+                    "ln(CAST(n_lang AS DOUBLE) / CAST(n_total AS DOUBLE))")} AS DECIMAL(18,6))) AS hl_dec
        |            FROM bl CROSS JOIN d GROUP BY 1),
-       |     hs AS (SELECT n_total, ${dec(
+       |     hs AS (SELECT n_total, sum(CAST(${duckRound6(
                   "-(CAST(n_source AS DOUBLE) / CAST(n_total AS DOUBLE)) * " +
-                    "ln(CAST(n_source AS DOUBLE) / CAST(n_total AS DOUBLE))")} AS hs_dec
+                    "ln(CAST(n_source AS DOUBLE) / CAST(n_total AS DOUBLE))")} AS DECIMAL(18,6))) AS hs_dec
        |            FROM bs CROSS JOIN d GROUP BY 1)
        |SELECT CAST(n_total AS BIGINT) AS n_docs,
-       |       ${TextFns.duckRound4("CAST(mi_dec AS DOUBLE)")} AS mi,
-       |       ${TextFns.duckRound4("CAST(hl_dec AS DOUBLE)")} AS h_lang,
-       |       ${TextFns.duckRound4("CAST(hs_dec AS DOUBLE)")} AS h_source,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("CAST(mi_dec AS DOUBLE)")} AS mi,
+       |       ${duckRound4("CAST(hl_dec AS DOUBLE)")} AS h_lang,
+       |       ${duckRound4("CAST(hs_dec AS DOUBLE)")} AS h_source,
+       |       ${duckRound4(
                  "CAST(mi_dec AS DOUBLE) / (sqrt(CAST(hl_dec AS DOUBLE)) * sqrt(CAST(hs_dec AS DOUBLE)))")} AS nmi
        |FROM mi JOIN hl USING (n_total) JOIN hs USING (n_total)""".stripMargin
   }
@@ -1210,7 +1205,7 @@ object DocOps {
       .join(uni.select(col("w").as("w2"), col("n_w").as("n_b")), "w2")
       .crossJoin(broadcast(tot))
       .withColumn("lift",
-        TextFns.round4((col("n_ab") * col("n_total")).cast("double")
+        round4((col("n_ab") * col("n_total")).cast("double")
           / (col("n_a") * col("n_b")).cast("double")))
       .select(col("w1"), col("w2"), col("n_ab"), col("lift"))
       .orderBy(col("lift").desc, col("w1"), col("w2"))
@@ -1228,7 +1223,7 @@ object DocOps {
        |              count(*) AS n_ab
        |            FROM b0 GROUP BY 1, 2 HAVING count(*) >= $ColMinCount)
        |SELECT bi.w1, bi.w2, CAST(n_ab AS BIGINT) AS n_ab,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(n_ab * n_total AS DOUBLE) / CAST(a.n_w * b.n_w AS DOUBLE)")} AS lift
        |FROM bi JOIN uni a ON bi.w1 = a.w JOIN uni b ON bi.w2 = b.w CROSS JOIN tot
        |ORDER BY lift DESC, w1, w2 LIMIT $ColTopK""".stripMargin
@@ -1254,7 +1249,6 @@ object DocOps {
     * the round6-DECIMAL exact-sum rule.
     */
   def charGini(spark: SparkSession, sfDir: String): DataFrame = {
-    val round6 = (c: Column) => floor(c * 1000000.0 + 0.5) / 1000000.0
     val perDoc = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),
         greatest(length(col("text")), lit(1)).cast("long").as("len"),
@@ -1267,15 +1261,14 @@ object DocOps {
         sum(round6(col("gini")).cast("decimal(18,6)")).as("sg"),
         min(col("gini")).as("mn"), max(col("gini")).as("mx"))
       .select(col("lang"), col("n_docs"),
-        TextFns.round4(col("sg").cast("double") / col("n_docs").cast("double"))
+        round4(col("sg").cast("double") / col("n_docs").cast("double"))
           .as("avg_gini"),
-        TextFns.round4(col("mn")).as("min_gini"),
-        TextFns.round4(col("mx")).as("max_gini"))
+        round4(col("mn")).as("min_gini"),
+        round4(col("mx")).as("max_gini"))
       .orderBy("lang")
   }
 
   private val sqlCharGini = {
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
     s"""WITH c AS (SELECT doc_id, lang, unnest(${duckCodesOf("text")}) AS code
        |           FROM documents),
        |     k AS (SELECT doc_id, lang, code, count(*) AS cnt
@@ -1287,11 +1280,11 @@ object DocOps {
        |                  1.0 - CAST(ss AS DOUBLE) / CAST(len * len AS DOUBLE) AS gini
        |           FROM d)
        |SELECT lang, count(*) AS n_docs,
-       |       ${TextFns.duckRound4(
-                  s"CAST(sum(CAST(${round6("gini")} AS DECIMAL(18,6))) AS DOUBLE)" +
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckRound6("gini")} AS DECIMAL(18,6))) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS avg_gini,
-       |       ${TextFns.duckRound4("min(gini)")} AS min_gini,
-       |       ${TextFns.duckRound4("max(gini)")} AS max_gini
+       |       ${duckRound4("min(gini)")} AS min_gini,
+       |       ${duckRound4("max(gini)")} AS max_gini
        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
@@ -1376,7 +1369,7 @@ object DocOps {
         sum(when(col("n_hits") > 0, 1L).otherwise(0L)).as("n_contam"),
         sum(col("n_hits")).as("hit_grams"))
       .withColumn("contam_ratio",
-        TextFns.round4(col("n_contam").cast("double") / col("n_train").cast("double")))
+        round4(col("n_contam").cast("double") / col("n_train").cast("double")))
       .orderBy("source")
   }
 
@@ -1400,7 +1393,7 @@ object DocOps {
        |SELECT source, CAST(count(*) AS BIGINT) AS n_train,
        |       CAST(sum(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_contam,
        |       CAST(sum(n_hits) AS BIGINT) AS hit_grams,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS contam_ratio
        |FROM pd GROUP BY source ORDER BY source""".stripMargin
@@ -1514,7 +1507,6 @@ object DocOps {
     * round4 at the output edge.
     */
   def softDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val round6 = (c: Column) => floor(c * 1000000.0 + 0.5) / 1000000.0
     val cell = Tables.documents(spark, sfDir)
       .select(col("source"), graft.functions.TextHashes.polyHash(col("text")).as("h"))
       .groupBy("h", "source").agg(count(lit(1)).as("c"))
@@ -1527,26 +1519,25 @@ object DocOps {
         sum(when(col("mult") > 1, col("c")).otherwise(0L)).as("n_duped"),
         sum(col("w")).as("wsum"))
       .select(col("source"), col("n_docs"), col("n_duped"),
-        TextFns.round4(col("wsum").cast("double")).as("eff_docs"),
-        TextFns.round4(col("wsum").cast("double") / col("n_docs").cast("double"))
+        round4(col("wsum").cast("double")).as("eff_docs"),
+        round4(col("wsum").cast("double") / col("n_docs").cast("double"))
           .as("eff_ratio"))
       .orderBy("source")
   }
 
   private val sqlSoftDedup = {
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
     s"""WITH c AS (SELECT source, ${duckCodesOf("text")} AS cs FROM documents),
        |     h AS (SELECT source, $duckPolyHash AS h FROM c),
        |     cell AS (SELECT h, source, count(*) AS c FROM h GROUP BY 1, 2),
        |     m AS (SELECT h, CAST(sum(c) AS BIGINT) AS mult FROM cell GROUP BY 1),
        |     j AS (SELECT cell.source, cell.c, m.mult,
-       |             cell.c * CAST(${round6("1.0 / CAST(mult AS DOUBLE)")}
+       |             cell.c * CAST(${duckRound6("1.0 / CAST(mult AS DOUBLE)")}
        |               AS DECIMAL(18,6)) AS w
        |           FROM cell JOIN m ON cell.h = m.h)
        |SELECT source, CAST(sum(c) AS BIGINT) AS n_docs,
        |       CAST(sum(CASE WHEN mult > 1 THEN c ELSE 0 END) AS BIGINT) AS n_duped,
-       |       ${TextFns.duckRound4("CAST(sum(w) AS DOUBLE)")} AS eff_docs,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("CAST(sum(w) AS DOUBLE)")} AS eff_docs,
+       |       ${duckRound4(
                   "CAST(sum(w) AS DOUBLE) / CAST(sum(c) AS DOUBLE)")} AS eff_ratio
        |FROM j GROUP BY source ORDER BY source""".stripMargin
   }
@@ -1596,7 +1587,7 @@ object DocOps {
       .groupBy(col("source"), col("n1"), col("n_all"))
       .agg(max(col("dint")).as("d_scaled"))
       .select(col("source"), col("n1").as("n_docs"), col("d_scaled"),
-        TextFns.round4(col("d_scaled").cast("double") /
+        round4(col("d_scaled").cast("double") /
           (col("n1").cast("double") * (col("n_all") - col("n1")).cast("double"))).as("ks_d"))
       .orderBy("source")
   }
@@ -1618,7 +1609,7 @@ object DocOps {
        |                   abs(c1 * (n_all - n1) - (call - c1) * n1) AS dint
        |            FROM cum JOIN n1 ON cum.source = n1.source CROSS JOIN nall)
        |SELECT source, n1 AS n_docs, CAST(max(dint) AS BIGINT) AS d_scaled,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(max(dint) AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n_all - n1 AS DOUBLE))")} AS ks_d
        |FROM dm GROUP BY source, n1, n_all ORDER BY source""".stripMargin
 
@@ -1686,7 +1677,7 @@ object DocOps {
       .crossJoin(broadcast(tots))
       .groupBy("doc_id")
       .agg(sum(col("tf")).as("n_tokens"),
-        TextFns.round4(
+        round4(
           sum(col("tf").cast("double") * lnRatio) /
             sum(col("tf")).cast("double")).as("dsir_w"))
       .orderBy("doc_id")
@@ -1695,7 +1686,7 @@ object DocOps {
   private val sqlDsirWeights = {
     val hashTerm = s"list_reduce([CAST(0 AS BIGINT)] || ${duckCodesOf("term")}, " +
       s"(acc, c) -> (acc * 31 + c) % ${TextFns.P})"
-    val w = TextFns.duckRound4(
+    val w = duckRound4(
       "sum(CAST(tf AS DOUBLE) * (ln(CAST(COALESCE(tc, 0) + 1 AS DOUBLE) " +
         s"/ CAST(tt + $DsirBuckets AS DOUBLE)) " +
         "- ln(CAST(rc + 1 AS DOUBLE) " +
@@ -1754,13 +1745,13 @@ object DocOps {
       ((log(col("n_chars").cast("double")) - log(col("nc").cast("double"))) /
         log(lit(2.0)))
     counts.join(tot, "source")
-      .withColumn("t6", (floor(term * 1000000.0 + 0.5) / 1000000.0)
+      .withColumn("t6", round6(term)
         .cast("decimal(28,6)"))
       .groupBy("source", "n_chars", "n_symbols")
       .agg(sum(col("t6")).as("h0"))
       .select(col("source"), col("n_chars"), col("n_symbols"),
-        TextFns.round4(col("h0").cast("double")).as("h0_bits"),
-        TextFns.round4(col("h0").cast("double") / 8.0).as("best_ratio"))
+        round4(col("h0").cast("double")).as("h0_bits"),
+        round4(col("h0").cast("double") / 8.0).as("best_ratio"))
       .orderBy("source")
   }
 
@@ -1781,13 +1772,13 @@ object DocOps {
        |                  CAST(count(*) AS BIGINT) AS n_symbols
        |           FROM k GROUP BY 1),
        |     s AS (SELECT k.source, n_chars, n_symbols,
-       |                  sum(CAST(floor(($term) * 1000000.0 + 0.5) / 1000000.0
+       |                  sum(CAST(${duckRound6(term)}
        |                        AS DECIMAL(28,6))) AS h0
        |           FROM k JOIN t ON k.source = t.source
        |           GROUP BY 1, 2, 3)
        |SELECT source, n_chars, n_symbols,
-       |       ${TextFns.duckRound4("CAST(h0 AS DOUBLE)")} AS h0_bits,
-       |       ${TextFns.duckRound4("CAST(h0 AS DOUBLE) / 8.0")} AS best_ratio
+       |       ${duckRound4("CAST(h0 AS DOUBLE)")} AS h0_bits,
+       |       ${duckRound4("CAST(h0 AS DOUBLE) / 8.0")} AS best_ratio
        |FROM s ORDER BY source""".stripMargin
   }
 
@@ -1892,7 +1883,7 @@ object DocOps {
         coalesce(col("docs_hit"), lit(0L)).as("docs_hit"),
         coalesce(col("dup_chars"), lit(0L)).as("dup_chars"),
         col("total_chars"),
-        TextFns.round4(coalesce(col("dup_chars"), lit(0L)).cast("double") /
+        round4(coalesce(col("dup_chars"), lit(0L)).cast("double") /
           col("total_chars").cast("double")).as("dup_cover"))
       .orderBy("source")
   }
@@ -1932,7 +1923,7 @@ object DocOps {
        |       coalesce(docs_hit, 0) AS docs_hit,
        |       coalesce(dup_chars, 0) AS dup_chars,
        |       total_chars,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(coalesce(dup_chars, 0) AS DOUBLE) / CAST(total_chars AS DOUBLE)")} AS dup_cover
        |FROM tot LEFT JOIN ps USING (source)
        |ORDER BY source""".stripMargin
@@ -1967,9 +1958,9 @@ object DocOps {
     val half = (lit(1.96) * sqrt(phat * (lit(1.0) - phat) / nD +
       lit(0.9604) / (nD * nD))) / denom
     g.select(col("source"), col("n_docs"), col("n_pass"),
-        TextFns.round4(phat).as("pass_rate"),
-        TextFns.round4(center - half).as("wilson_lo"),
-        TextFns.round4(center + half).as("wilson_hi"))
+        round4(phat).as("pass_rate"),
+        round4(center - half).as("wilson_lo"),
+        round4(center + half).as("wilson_hi"))
       .orderBy("source")
   }
 
@@ -1982,9 +1973,9 @@ object DocOps {
       s"0.9604 / ($nD * $nD))) / $denom)"
     s"""WITH base AS ($sqlGopherRules)
        |SELECT source, n_docs, n_pass,
-       |       ${TextFns.duckRound4(phat)} AS pass_rate,
-       |       ${TextFns.duckRound4(s"$center - $half")} AS wilson_lo,
-       |       ${TextFns.duckRound4(s"$center + $half")} AS wilson_hi
+       |       ${duckRound4(phat)} AS pass_rate,
+       |       ${duckRound4(s"$center - $half")} AS wilson_lo,
+       |       ${duckRound4(s"$center + $half")} AS wilson_hi
        |FROM base ORDER BY source""".stripMargin
   }
 
@@ -2028,7 +2019,7 @@ object DocOps {
         sum(coalesce(col("nsp"), lit(0L))).as("total_spans"),
         sum(coalesce(col("masked"), lit(0L))).as("masked_tokens"))
       .withColumn("mask_ratio",
-        when(col("total_tokens") === 0, lit(0.0)).otherwise(TextFns.round4(
+        when(col("total_tokens") === 0, lit(0.0)).otherwise(round4(
           col("masked_tokens").cast("double") / col("total_tokens").cast("double"))))
       .orderBy("source")
   }
@@ -2059,7 +2050,7 @@ object DocOps {
        |       CAST(sum(coalesce(m.nsp, 0)) AS BIGINT) AS total_spans,
        |       CAST(sum(coalesce(m.masked, 0)) AS BIGINT) AS masked_tokens,
        |       CASE WHEN sum(t.n) = 0 THEN 0.0
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "CAST(sum(coalesce(m.masked, 0)) AS DOUBLE) / CAST(sum(t.n) AS DOUBLE)")}
        |       END AS mask_ratio
        |FROM t LEFT JOIN m ON t.doc_id = m.doc_id

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, round4, round6}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object GrowthOps {
       .groupBy("decile")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
     docCum.join(vocabCum, "decile")
-      .withColumn("ttr", TextFns.round4(
+      .withColumn("ttr", round4(
         col("vocab").cast("double") / col("n_tokens").cast("double")))
       .select("decile", "n_docs", "n_tokens", "vocab", "ttr")
       .orderBy("decile")
@@ -85,7 +86,7 @@ object GrowthOps {
        |            FROM d JOIN fe ON CAST(doc_id AS DOUBLE) <= fence
        |            GROUP BY decile)
        |SELECT dc.decile AS decile, n_docs, n_tokens, vocab,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(vocab AS DOUBLE) / CAST(n_tokens AS DOUBLE)")} AS ttr
        |FROM dc JOIN vc ON dc.decile = vc.decile
        |ORDER BY dc.decile""".stripMargin
@@ -125,7 +126,7 @@ object GrowthOps {
         sum(col("n")).as("sum_tokens"),
         count(when(col("n") > col("bucket"), lit(1))).as("n_clamped"))
       .withColumn("padded_slots", col("bucket") * col("n_docs"))
-      .withColumn("waste", TextFns.round4(
+      .withColumn("waste", round4(
         lit(1.0) - col("sum_tokens").cast("double") / col("padded_slots").cast("double")))
       .select("bucket", "n_docs", "sum_tokens", "padded_slots", "n_clamped", "waste")
       .orderBy("bucket")
@@ -145,7 +146,7 @@ object GrowthOps {
        |           FROM b GROUP BY bucket)
        |SELECT bucket, n_docs, sum_tokens,
        |       bucket * n_docs AS padded_slots, n_clamped,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "1.0 - CAST(sum_tokens AS DOUBLE) / CAST(bucket * n_docs AS DOUBLE)")} AS waste
        |FROM g ORDER BY bucket""".stripMargin
   }
@@ -177,9 +178,9 @@ object GrowthOps {
         sum(col("n_words")).as("words"),
         sum(col("n_toks")).as("tokens"),
         sum(col("n_chars").cast("long")).as("chars"))
-      .withColumn("fertility", TextFns.round4(
+      .withColumn("fertility", round4(
         col("tokens").cast("double") / col("words").cast("double")))
-      .withColumn("chars_per_token", TextFns.round4(
+      .withColumn("chars_per_token", round4(
         col("chars").cast("double") / col("tokens").cast("double")))
       .select("lang", "n_docs", "words", "tokens", "chars",
         "fertility", "chars_per_token")
@@ -196,8 +197,8 @@ object GrowthOps {
        |                  CAST(sum(n_chars) AS BIGINT) AS chars
        |           FROM d GROUP BY lang)
        |SELECT lang, n_docs, words, tokens, chars,
-       |       ${TextFns.duckRound4("CAST(tokens AS DOUBLE) / CAST(words AS DOUBLE)")} AS fertility,
-       |       ${TextFns.duckRound4("CAST(chars AS DOUBLE) / CAST(tokens AS DOUBLE)")} AS chars_per_token
+       |       ${duckRound4("CAST(tokens AS DOUBLE) / CAST(words AS DOUBLE)")} AS fertility,
+       |       ${duckRound4("CAST(chars AS DOUBLE) / CAST(tokens AS DOUBLE)")} AS chars_per_token
        |FROM g ORDER BY lang""".stripMargin
 
   // ---------- q_vocab_drift: snapshot-over-snapshot vocabulary drift ----------
@@ -230,7 +231,7 @@ object GrowthOps {
         sum(col("in_old") * (lit(1L) - col("in_new"))).as("n_died"),
         sum((lit(1L) - col("in_old")) * col("in_new")).as("n_born"),
         count(lit(1)).as("n_union"))
-      .withColumn("jaccard", TextFns.round4(
+      .withColumn("jaccard", round4(
         col("n_both").cast("double") / col("n_union").cast("double")))
       .select("source", "n_both", "n_born", "n_died", "n_union", "jaccard")
       .orderBy("source")
@@ -249,7 +250,7 @@ object GrowthOps {
        |       CAST(sum((1 - in_old) * in_new) AS BIGINT) AS n_born,
        |       CAST(sum(in_old * (1 - in_new)) AS BIGINT) AS n_died,
        |       CAST(count(*) AS BIGINT) AS n_union,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(in_old * in_new) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS jaccard
        |FROM v GROUP BY source ORDER BY source""".stripMargin
 
@@ -277,8 +278,6 @@ object GrowthOps {
     */
   def zipfFit(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val r6d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * 1000000.0 + 0.5) / 1000000.0).cast("decimal(18,6)")
     val vocab = Tables.documents(spark, sfDir)
       .select(explode_outer(TextFns.tokens(col("text"))).as("word"))
       .filter(col("word").isNotNull)
@@ -287,8 +286,8 @@ object GrowthOps {
     val ranked = vocab
       .withColumn("rank", row_number().over(
         Window.orderBy(col("freq").desc, col("word"))))
-      .withColumn("x", r6d(log(col("rank").cast("double"))))
-      .withColumn("y", r6d(log(col("freq").cast("double"))))
+      .withColumn("x", round6(log(col("rank").cast("double"))).cast("decimal(18,6)"))
+      .withColumn("y", round6(log(col("freq").cast("double"))).cast("decimal(18,6)"))
     ranked.agg(
         count(lit(1)).as("n"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -296,19 +295,19 @@ object GrowthOps {
         sum((col("x") * col("y")).cast("decimal(38,12)")).as("sxy"),
         sum((col("y") * col("y")).cast("decimal(38,12)")).as("syy"))
       .select(col("n").as("n_terms"),
-        TextFns.round4(
+        round4(
           (col("n").cast("double") * col("sxy").cast("double")
             - col("sx").cast("double") * col("sy").cast("double"))
           / (col("n").cast("double") * col("sxx").cast("double")
             - col("sx").cast("double") * col("sx").cast("double"))).as("slope"),
-        TextFns.round4(
+        round4(
           (col("sy").cast("double") - col("sx").cast("double")
             * ((col("n").cast("double") * col("sxy").cast("double")
               - col("sx").cast("double") * col("sy").cast("double"))
             / (col("n").cast("double") * col("sxx").cast("double")
               - col("sx").cast("double") * col("sx").cast("double"))))
           / col("n").cast("double")).as("intercept"),
-        TextFns.round4(
+        round4(
           ((col("n").cast("double") * col("sxy").cast("double")
             - col("sx").cast("double") * col("sy").cast("double"))
             * (col("n").cast("double") * col("sxy").cast("double")
@@ -320,8 +319,6 @@ object GrowthOps {
   }
 
   private val sqlZipfFit = {
-    val r6d = (e: String) =>
-      s"CAST((floor(($e) * 1000000.0 + 0.5) / 1000000.0) AS DECIMAL(18,6))"
     val nD = "CAST(n AS DOUBLE)"
     val sxD = "CAST(sx AS DOUBLE)"; val syD = "CAST(sy AS DOUBLE)"
     val sxxD = "CAST(sxx AS DOUBLE)"; val sxyD = "CAST(sxy AS DOUBLE)"
@@ -332,8 +329,8 @@ object GrowthOps {
        |     v AS (SELECT word, count(*) AS freq FROM e GROUP BY 1
        |           ORDER BY freq DESC, word LIMIT $ZipfTopN),
        |     r AS (SELECT freq, row_number() OVER (ORDER BY freq DESC, word) AS rank FROM v),
-       |     p AS (SELECT ${r6d("ln(CAST(rank AS DOUBLE))")} AS x,
-       |                  ${r6d("ln(CAST(freq AS DOUBLE))")} AS y
+       |     p AS (SELECT CAST(${duckRound6("ln(CAST(rank AS DOUBLE))")} AS DECIMAL(18,6)) AS x,
+       |                  CAST(${duckRound6("ln(CAST(freq AS DOUBLE))")} AS DECIMAL(18,6)) AS y
        |           FROM r),
        |     a AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(x) AS sx, sum(y) AS sy,
        |                  sum(CAST(x * x AS DECIMAL(38,12))) AS sxx,
@@ -341,9 +338,9 @@ object GrowthOps {
        |                  sum(CAST(y * y AS DECIMAL(38,12))) AS syy
        |           FROM p)
        |SELECT n AS n_terms,
-       |       ${TextFns.duckRound4(s"$num / $den")} AS slope,
-       |       ${TextFns.duckRound4(s"($syD - $sxD * ($num / $den)) / $nD")} AS intercept,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(s"$num / $den")} AS slope,
+       |       ${duckRound4(s"($syD - $sxD * ($num / $den)) / $nD")} AS intercept,
+       |       ${duckRound4(
                  s"($num * $num) / ($den * ($nD * $syyD - $syD * $syD))")} AS r2
        |FROM a""".stripMargin
   }
@@ -383,7 +380,7 @@ object GrowthOps {
     val scored = st.join(ct, "term")
       .join(broadcast(srcTot), "source")
       .crossJoin(broadcast(tot))
-      .withColumn("lift", TextFns.round4(
+      .withColumn("lift", round4(
         (col("tf").cast("double") * col("t_all").cast("double"))
           / (col("t_src").cast("double") * col("ctf").cast("double"))))
     scored
@@ -404,7 +401,7 @@ object GrowthOps {
        |     stot AS (SELECT source, CAST(sum(tf) AS BIGINT) AS t_src FROM st GROUP BY 1),
        |     tot AS (SELECT CAST(sum(ctf) AS BIGINT) AS t_all FROM ct),
        |     sc AS (SELECT source, term, tf,
-       |              ${TextFns.duckRound4(
+       |              ${duckRound4(
                   "(CAST(tf AS DOUBLE) * CAST(t_all AS DOUBLE)) / (CAST(t_src AS DOUBLE) * CAST(ctf AS DOUBLE))")} AS lift
        |            FROM st JOIN ct USING (term) JOIN stot USING (source) CROSS JOIN tot),
        |     rk AS (SELECT source, term, tf, lift,
@@ -439,7 +436,7 @@ object GrowthOps {
       .groupBy("source")
       .agg(count(lit(1)).as("n_types"), sum(col("f")).as("n_tokens"),
         sum(col("f") * (col("f") - 1L)).as("rep_mass"))
-      .withColumn("simpson", TextFns.round4(
+      .withColumn("simpson", round4(
         col("rep_mass").cast("double")
           / (col("n_tokens").cast("double") * (col("n_tokens") - 1L).cast("double"))))
       .select("source", "n_types", "n_tokens", "simpson")
@@ -454,7 +451,7 @@ object GrowthOps {
        |                  CAST(sum(f * (f - 1)) AS BIGINT) AS rep_mass
        |           FROM tf GROUP BY source)
        |SELECT source, n_types, n_tokens,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(rep_mass AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens - 1 AS DOUBLE))")} AS simpson
        |FROM g ORDER BY source""".stripMargin
 
@@ -483,7 +480,7 @@ object GrowthOps {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("words"),
         sum(col("s")).as("sentences"), sum(col("syl")).as("syllables"))
-      .withColumn("flesch", TextFns.round4(
+      .withColumn("flesch", round4(
         lit(206.835)
           - lit(1.015) * (col("words").cast("double") / col("sentences").cast("double"))
           - lit(84.6) * (col("syllables").cast("double") / col("words").cast("double"))))
@@ -502,7 +499,7 @@ object GrowthOps {
        |                  CAST(sum(syl) AS BIGINT) AS syllables
        |           FROM d GROUP BY source)
        |SELECT source, n_docs, words, sentences, syllables,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "206.835 - 1.015 * (CAST(words AS DOUBLE) / CAST(sentences AS DOUBLE)) " +
                    "- 84.6 * (CAST(syllables AS DOUBLE) / CAST(words AS DOUBLE))")} AS flesch
        |FROM g ORDER BY source""".stripMargin
@@ -536,10 +533,10 @@ object GrowthOps {
         sum(when(col("c") === 1, 1L).otherwise(0L)).as("f1"),
         sum(when(col("c") === 2, 1L).otherwise(0L)).as("f2"))
       .select(col("lang"), col("n_tokens"), col("v_obs"), col("f1"), col("f2"),
-        TextFns.round4(col("v_obs").cast("double") +
+        round4(col("v_obs").cast("double") +
           col("f1").cast("double") * (col("f1").cast("double") - lit(1.0)) /
             (lit(2.0) * (col("f2").cast("double") + lit(1.0)))).as("chao1"),
-        TextFns.round4(col("f1").cast("double") /
+        round4(col("f1").cast("double") /
           col("n_tokens").cast("double")).as("gt_unseen_mass"))
       .orderBy("lang")
   }
@@ -554,10 +551,10 @@ object GrowthOps {
        |                  CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2
        |           FROM tf GROUP BY 1)
        |SELECT lang, n_tokens, v_obs, f1, f2,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(v_obs AS DOUBLE) + CAST(f1 AS DOUBLE) * (CAST(f1 AS DOUBLE) - 1.0) " +
                    "/ (2.0 * (CAST(f2 AS DOUBLE) + 1.0))")} AS chao1,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(f1 AS DOUBLE) / CAST(n_tokens AS DOUBLE)")} AS gt_unseen_mass
        |FROM g ORDER BY lang""".stripMargin
 

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckUnits, round4, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +42,7 @@ object TextAnalytics {
     val scored = tf.join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
       .withColumn("score",
-        TextFns.round4(col("tf") * log(col("n_docs").cast("double") / col("df"))))
+        round4(col("tf") * log(col("n_docs").cast("double") / col("df"))))
     val byDoc = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("term"))
     scored.withColumn("rk", row_number().over(byDoc))
@@ -51,7 +52,7 @@ object TextAnalytics {
   }
 
   private val sqlTfidf = {
-    val score = TextFns.duckRound4("tf * ln(CAST(n_docs AS DOUBLE) / df)")
+    val score = duckRound4("tf * ln(CAST(n_docs AS DOUBLE) / df)")
     s"""WITH t AS (SELECT doc_id, ${TextQueries.duckTokens} AS ts FROM documents),
        |     terms AS (SELECT doc_id, unnest(ts) AS term FROM t),
        |     tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
@@ -173,7 +174,7 @@ object TextAnalytics {
     docs.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         count(when(col("kept"), lit(1))).as("n_kept"),
-        TextFns.round4(avg(when(col("kept"), col("q")))).as("avg_kept_q"))
+        round4(avg(when(col("kept"), col("q")))).as("avg_kept_q"))
       .orderBy("lang")
   }
 
@@ -185,7 +186,7 @@ object TextAnalytics {
        |           FROM t)
        |SELECT lang, count(*) AS n_docs,
        |       count(CASE WHEN hfrac < q THEN 1 END) AS n_kept,
-       |       ${TextFns.duckRound4("avg(CASE WHEN hfrac < q THEN q END)")} AS avg_kept_q
+       |       ${duckRound4("avg(CASE WHEN hfrac < q THEN q END)")} AS avg_kept_q
        |FROM q GROUP BY lang ORDER BY lang""".stripMargin
 
   // ---------- q_cross_entropy: unigram-LM quality scoring ----------
@@ -228,11 +229,11 @@ object TextAnalytics {
   def crossEntropy(spark: SparkSession, sfDir: String): DataFrame =
     docXent(spark, sfDir)
       .select(col("doc_id"), col("n_tokens"),
-        TextFns.round4(col("xent_raw")).as("xent"))
+        round4(col("xent_raw")).as("xent"))
       .orderBy("doc_id")
 
   private val sqlCrossEntropy = {
-    val xent = TextFns.duckRound4(
+    val xent = duckRound4(
       "sum(CAST(tf AS DOUBLE) * -ln(CAST(c AS DOUBLE) / CAST(tot AS DOUBLE))) " +
         "/ CAST(sum(tf) AS DOUBLE)")
     s"""WITH t AS (SELECT doc_id, ${TextQueries.duckTokens} AS ts FROM documents),
@@ -346,7 +347,7 @@ object TextAnalytics {
     val docs = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("source"), col("doc_id"),
-        floor(TextFns.qualityScore(col("text"), col("ts")) * 10000.0 + 0.5)
+        units(TextFns.qualityScore(col("text"), col("ts")), 1e4)
           .cast("long").as("q4"))
     val kept = quotaSelect(docs, QuotaK, "q4")
       .groupBy("source")
@@ -355,10 +356,10 @@ object TextAnalytics {
       .agg(count(lit(1)).as("n_docs"), sum(col("q4")).as("all_q4"))
     all.join(kept, "source")
       .select(col("source"), col("n_docs"), col("n_kept"),
-        TextFns.round4(col("kept_q4").cast("double") /
+        round4(col("kept_q4").cast("double") /
           col("n_kept").cast("double") / 10000.0).as("kept_avg_quality"),
         when(col("n_docs") > col("n_kept"),
-          TextFns.round4((col("all_q4") - col("kept_q4")).cast("double") /
+          round4((col("all_q4") - col("kept_q4")).cast("double") /
             (col("n_docs") - col("n_kept")).cast("double") / 10000.0))
           .as("dropped_avg_quality"))
       .orderBy("source")
@@ -367,7 +368,7 @@ object TextAnalytics {
   private val sqlSourceQuota =
     s"""WITH t AS (SELECT source, doc_id, text, ${TextQueries.duckTokens} AS ts FROM documents),
        |     q AS (SELECT source, doc_id,
-       |                  CAST(floor((${TextQueries.duckQuality}) * 10000.0 + 0.5) AS BIGINT) AS q4
+       |                  CAST(${duckUnits(TextQueries.duckQuality, 1e4)} AS BIGINT) AS q4
        |           FROM t),
        |     r AS (SELECT source, doc_id, q4,
        |                  row_number() OVER (PARTITION BY source
@@ -380,10 +381,10 @@ object TextAnalytics {
        |                     CAST(sum(q4) AS BIGINT) AS all_q4
        |              FROM q GROUP BY source)
        |SELECT alld.source, n_docs, n_kept,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(kept_q4 AS DOUBLE) / CAST(n_kept AS DOUBLE) / 10000.0")} AS kept_avg_quality,
        |       CASE WHEN n_docs > n_kept THEN
-       |         ${TextFns.duckRound4(
+       |         ${duckRound4(
                    "CAST(all_q4 - kept_q4 AS DOUBLE) / CAST(n_docs - n_kept AS DOUBLE) / 10000.0")}
        |       ELSE NULL END AS dropped_avg_quality
        |FROM alld JOIN kept ON alld.source = kept.source
@@ -429,7 +430,7 @@ object TextAnalytics {
         sum(when(col("sz") < 5, col("sz")).otherwise(lit(0L))).as("rows_at_risk"))
       .select(col("lvl"), col("n_classes"), col("min_class"),
         col("n_violating_k5"), col("rows_at_risk"),
-        TextFns.round4(col("rows_at_risk").cast("double")
+        round4(col("rows_at_risk").cast("double")
           / col("n_rows").cast("double")).as("risk_share"))
       .orderBy("lvl")
   }
@@ -453,7 +454,7 @@ object TextAnalytics {
        |                  CAST(sum(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT) AS rows_at_risk
        |           FROM cls GROUP BY 1)
        |SELECT CAST(lvl AS BIGINT) AS lvl, n_classes, min_class, n_violating_k5, rows_at_risk,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(rows_at_risk AS DOUBLE) / CAST(n_rows AS DOUBLE)")} AS risk_share
        |FROM a ORDER BY lvl""".stripMargin
 
@@ -489,7 +490,7 @@ object TextAnalytics {
         count(when(col("sz") < col("k"), lit(1))).as("n_violating"),
         sum(when(col("sz") < col("k"), col("sz")).otherwise(lit(0L)))
           .as("rows_at_risk"))
-      .withColumn("risk_share", TextFns.round4(
+      .withColumn("risk_share", round4(
         col("rows_at_risk").cast("double") / col("n_rows").cast("double")))
       .select("k", "n_classes", "n_violating", "rows_at_risk", "risk_share")
       .orderBy("k")
@@ -504,7 +505,7 @@ object TextAnalytics {
        |SELECT k, CAST(count(*) AS BIGINT) AS n_classes,
        |       CAST(count(CASE WHEN sz < k THEN 1 END) AS BIGINT) AS n_violating,
        |       CAST(sum(CASE WHEN sz < k THEN sz ELSE 0 END) AS BIGINT) AS rows_at_risk,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(CASE WHEN sz < k THEN sz ELSE 0 END) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)")} AS risk_share
        |FROM f GROUP BY k ORDER BY k""".stripMargin
 
@@ -540,7 +541,7 @@ object TextAnalytics {
         sum(when(col("l") < col("lmin"), col("sz")).otherwise(lit(0L)))
           .as("rows_at_risk"),
         sum(col("sz")).as("nr"))
-      .withColumn("risk_share", TextFns.round4(
+      .withColumn("risk_share", round4(
         col("rows_at_risk").cast("double") / col("nr").cast("double")))
       .select("lmin", "n_classes", "n_violating", "rows_at_risk", "risk_share")
       .orderBy("lmin")
@@ -555,7 +556,7 @@ object TextAnalytics {
        |SELECT lmin, CAST(count(*) AS BIGINT) AS n_classes,
        |       CAST(count(CASE WHEN l < lmin THEN 1 END) AS BIGINT) AS n_violating,
        |       CAST(sum(CASE WHEN l < lmin THEN sz ELSE 0 END) AS BIGINT) AS rows_at_risk,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(CASE WHEN l < lmin THEN sz ELSE 0 END) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)")} AS risk_share
        |FROM f GROUP BY lmin ORDER BY lmin""".stripMargin
 
@@ -608,7 +609,7 @@ object TextAnalytics {
         sum(when(col("num") * 100L > col("t_pct") * 2L * col("sz") * col("t"),
           col("sz")).otherwise(lit(0L))).as("rows_at_risk"),
         sum(col("sz")).as("nr"))
-      .withColumn("risk_share", TextFns.round4(
+      .withColumn("risk_share", round4(
         col("rows_at_risk").cast("double") / col("nr").cast("double")))
       .select("t_pct", "n_classes", "n_violating", "rows_at_risk", "risk_share")
       .orderBy("t_pct")
@@ -640,7 +641,7 @@ object TextAnalytics {
        |SELECT t_pct, CAST(count(*) AS BIGINT) AS n_classes,
        |       CAST(count(CASE WHEN num * 100 > t_pct * 2 * sz * t THEN 1 END) AS BIGINT) AS n_violating,
        |       CAST(sum(CASE WHEN num * 100 > t_pct * 2 * sz * t THEN sz ELSE 0 END) AS BIGINT) AS rows_at_risk,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(CASE WHEN num * 100 > t_pct * 2 * sz * t THEN sz ELSE 0 END) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)")} AS risk_share
        |FROM f GROUP BY t_pct ORDER BY t_pct""".stripMargin
 
@@ -670,16 +671,16 @@ object TextAnalytics {
     val nD = col("n").cast("double")
     val varX = (col("sxx").cast("double") -
       col("sx").cast("double") * col("sx").cast("double") / nD) / (nD - 1.0)
-    val w6 = floor(nD * sqrt(varX) * 1000000.0 + 0.5).cast("decimal(28,0)")
+    val w6 = units(nD * sqrt(varX), 1e6).cast("decimal(28,0)")
     val weighted = m.withColumn("w6", w6)
     val tot = weighted.agg(sum(col("w6")).as("tw"))
     weighted.crossJoin(broadcast(tot))
-      .withColumn("share", TextFns.round4(
+      .withColumn("share", round4(
         col("w6").cast("double") / col("tw").cast("double")))
       .select(col("source"), col("n").as("n_docs"),
-        TextFns.round4(sqrt(varX)).as("sigma_chars"),
+        round4(sqrt(varX)).as("sigma_chars"),
         col("share"),
-        floor(col("share") * 1000.0 + 0.5).cast("long").as("n_alloc"))
+        units(col("share"), 1000.0).cast("long").as("n_alloc"))
       .orderBy("source")
   }
 
@@ -691,15 +692,15 @@ object TextAnalytics {
        |                           CAST(n_chars AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS sxx
        |           FROM documents GROUP BY 1),
        |     w AS (SELECT source, n, sx, sxx,
-       |                  CAST(floor(CAST(n AS DOUBLE) * sqrt($varX) * 1000000.0 + 0.5)
+       |                  CAST(${duckUnits(s"CAST(n AS DOUBLE) * sqrt($varX)", 1e6)}
        |                    AS DECIMAL(28,0)) AS w6
        |           FROM m),
        |     tot AS (SELECT sum(w6) AS tw FROM w)
        |SELECT source, n AS n_docs,
-       |       ${TextFns.duckRound4(s"sqrt($varX)")} AS sigma_chars,
-       |       ${TextFns.duckRound4("CAST(w6 AS DOUBLE) / CAST(tw AS DOUBLE)")} AS share,
-       |       CAST(floor(${TextFns.duckRound4(
-                  "CAST(w6 AS DOUBLE) / CAST(tw AS DOUBLE)")} * 1000.0 + 0.5) AS BIGINT) AS n_alloc
+       |       ${duckRound4(s"sqrt($varX)")} AS sigma_chars,
+       |       ${duckRound4("CAST(w6 AS DOUBLE) / CAST(tw AS DOUBLE)")} AS share,
+       |       CAST(${duckUnits(duckRound4("CAST(w6 AS DOUBLE) / CAST(tw AS DOUBLE)"), 1000.0)}
+       |         AS BIGINT) AS n_alloc
        |FROM w CROSS JOIN tot ORDER BY source""".stripMargin
   }
 
@@ -751,7 +752,7 @@ object TextAnalytics {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("pred") === col("lang"), lit(1L)).otherwise(lit(0L)))
           .as("n_correct"))
-      .withColumn("acc", TextFns.round4(
+      .withColumn("acc", round4(
         col("n_correct").cast("double") / col("n_docs").cast("double")))
       .orderBy("lang")
   }
@@ -775,7 +776,7 @@ object TextAnalytics {
        |     d AS (SELECT doc_id, lang FROM documents WHERE doc_id % 2 = 1)
        |SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(CASE WHEN p.pred = d.lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN p.pred = d.lang THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS acc
        |FROM d LEFT JOIN p ON d.doc_id = p.doc_id
        |GROUP BY d.lang ORDER BY d.lang""".stripMargin
@@ -809,7 +810,7 @@ object TextAnalytics {
     val dx = docXent(spark, sfDir)
       .join(Tables.documents(spark, sfDir).select(col("doc_id"), col("lang")),
         "doc_id")
-      .withColumn("xq", TextFns.round4(col("xent_raw")))
+      .withColumn("xq", round4(col("xent_raw")))
       .select(col("lang"), col("xq"))
       .localCheckpoint(true)
     val cuts = dx.groupBy("lang")
@@ -820,10 +821,10 @@ object TextAnalytics {
         when(col("xq") <= col("t1"), lit("head"))
           .when(col("xq") <= col("t2"), lit("middle"))
           .otherwise(lit("tail")))
-      .withColumn("wd", floor(col("xq") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("wd", units(col("xq"), 1e6).cast("decimal(28,0)"))
       .groupBy("lang", "bucket")
       .agg(count(lit(1)).as("n_docs"),
-        TextFns.round4(sum(col("wd")).cast("double") / 1000000.0 /
+        round4(sum(col("wd")).cast("double") / 1000000.0 /
           count(lit(1)).cast("double")).as("mean_xent"))
       .orderBy("lang", "bucket")
   }
@@ -839,7 +840,7 @@ object TextAnalytics {
        |                 / CAST(sum(tf) AS DOUBLE) AS xent_raw
        |             FROM tf JOIN cnt USING (term) CROSS JOIN tot
        |             GROUP BY doc_id),
-       |     dx AS (SELECT d.lang, ${TextFns.duckRound4("xent_raw")} AS xq
+       |     dx AS (SELECT d.lang, ${duckRound4("xent_raw")} AS xq
        |            FROM dx0 JOIN documents d USING (doc_id)),
        |     cuts AS (SELECT lang, quantile_cont(xq, 1.0 / 3.0) AS t1,
        |                quantile_cont(xq, 2.0 / 3.0) AS t2
@@ -848,10 +849,10 @@ object TextAnalytics {
        |             CASE WHEN xq <= t1 THEN 'head'
        |                  WHEN xq <= t2 THEN 'middle'
        |                  ELSE 'tail' END AS bucket,
-       |             CAST(floor(xq * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS wd
+       |             CAST(${duckUnits("xq", 1e6)} AS DECIMAL(28,0)) AS wd
        |           FROM dx JOIN cuts ON dx.lang = cuts.lang)
        |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(wd) AS DOUBLE) / 1000000.0 / CAST(count(*) AS DOUBLE)")} AS mean_xent
        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
@@ -889,12 +890,12 @@ object TextAnalytics {
         sum(col("n_chars")).as("chars_all"),
         sum(when(col("sampled"), col("n_chars")).otherwise(0L)).as("chars_s"))
       .select(col("source"), col("n_docs"), col("n_sampled"),
-        TextFns.round4(col("n_sampled").cast("double") /
+        round4(col("n_sampled").cast("double") /
           col("n_docs").cast("double")).as("rate"),
-        TextFns.round4(col("chars_all").cast("double") /
+        round4(col("chars_all").cast("double") /
           col("n_docs").cast("double")).as("mean_chars_all"),
         when(col("n_sampled") > 0,
-          TextFns.round4(col("chars_s").cast("double") /
+          round4(col("chars_s").cast("double") /
             col("n_sampled").cast("double"))).as("mean_chars_sampled"))
       .orderBy("source")
 
@@ -910,10 +911,10 @@ object TextAnalytics {
        |           FROM h GROUP BY 1)
        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
        |       CAST(n_sampled AS BIGINT) AS n_sampled,
-       |       ${TextFns.duckRound4("CAST(n_sampled AS DOUBLE) / CAST(n_docs AS DOUBLE)")} AS rate,
-       |       ${TextFns.duckRound4("CAST(chars_all AS DOUBLE) / CAST(n_docs AS DOUBLE)")} AS mean_chars_all,
+       |       ${duckRound4("CAST(n_sampled AS DOUBLE) / CAST(n_docs AS DOUBLE)")} AS rate,
+       |       ${duckRound4("CAST(chars_all AS DOUBLE) / CAST(n_docs AS DOUBLE)")} AS mean_chars_all,
        |       CASE WHEN n_sampled > 0 THEN
-       |         ${TextFns.duckRound4("CAST(chars_s AS DOUBLE) / CAST(n_sampled AS DOUBLE)")}
+       |         ${duckRound4("CAST(chars_s AS DOUBLE) / CAST(n_sampled AS DOUBLE)")}
        |       END AS mean_chars_sampled
        |FROM g ORDER BY source""".stripMargin
 
@@ -956,7 +957,7 @@ object TextAnalytics {
       .crossJoin(broadcast(v))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
-        TextFns.round4(
+        round4(
           sum(-log((col("c12").cast("double") + 0.5) /
             (col("c1").cast("double") + lit(0.5) * col("v").cast("double")))) /
             count(lit(1)).cast("double")).as("xent2"))
@@ -974,7 +975,7 @@ object TextAnalytics {
        |     c1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY 1),
        |     vv AS (SELECT count(DISTINCT w2) AS v FROM bg)
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       |       ${TextFns.duckRound4(s"sum(-ln($p)) / CAST(count(*) AS DOUBLE)")} AS xent2
+       |       ${duckRound4(s"sum(-ln($p)) / CAST(count(*) AS DOUBLE)")} AS xent2
        |FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vv
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
@@ -1025,7 +1026,7 @@ object TextAnalytics {
       .crossJoin(broadcast(b))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
-        TextFns.round4(sum(-log(p)) / count(lit(1)).cast("double")).as("xent_kn"))
+        round4(sum(-log(p)) / count(lit(1)).cast("double")).as("xent_kn"))
       .orderBy("doc_id")
   }
 
@@ -1044,7 +1045,7 @@ object TextAnalytics {
        |     n1r AS (SELECT w2, count(*) AS n1r FROM c12 GROUP BY 1),
        |     bb AS (SELECT count(*) AS b FROM c12)
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       |       ${TextFns.duckRound4(s"sum(-ln($p)) / CAST(count(*) AS DOUBLE)")} AS xent_kn
+       |       ${duckRound4(s"sum(-ln($p)) / CAST(count(*) AS DOUBLE)")} AS xent_kn
        |FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1)
        |        JOIN n1f USING (w1) JOIN n1r USING (w2) CROSS JOIN bb
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -1093,10 +1094,10 @@ object TextAnalytics {
           col("pb") * log(col("pb") / col("m")) * 0.5).as("core"),
         sum(col("pa")).as("sp"), sum(col("pb")).as("sq"))
       .select(col("lang_a"), col("lang_b"), col("n_shared"),
-        TextFns.round4(col("core") +
+        round4(col("core") +
           lit(0.5 * ln2) * (lit(2.0) - col("sp") - col("sq"))).as("jsd"),
-        TextFns.round4(col("sp")).as("shared_mass_a"),
-        TextFns.round4(col("sq")).as("shared_mass_b"))
+        round4(col("sp")).as("shared_mass_a"),
+        round4(col("sq")).as("shared_mass_b"))
       .orderBy("lang_a", "lang_b")
   }
 
@@ -1117,9 +1118,9 @@ object TextAnalytics {
        |                  sum(pa) AS sp, sum(pb) AS sq
        |           FROM pr GROUP BY 1, 2)
        |SELECT lang_a, lang_b, n_shared,
-       |       ${TextFns.duckRound4(s"core + $halfLn2 * (2.0 - sp - sq)")} AS jsd,
-       |       ${TextFns.duckRound4("sp")} AS shared_mass_a,
-       |       ${TextFns.duckRound4("sq")} AS shared_mass_b
+       |       ${duckRound4(s"core + $halfLn2 * (2.0 - sp - sq)")} AS jsd,
+       |       ${duckRound4("sp")} AS shared_mass_a,
+       |       ${duckRound4("sq")} AS shared_mass_b
        |FROM g ORDER BY lang_a, lang_b""".stripMargin
   }
 

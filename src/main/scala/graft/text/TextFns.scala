@@ -259,19 +259,39 @@ object TextFns {
     */
   val bpeTokenRegex: String = "[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]+"
 
-  /** Explicit 4-decimal rounding: floor(x*1e4 + 0.5)/1e4, mirrored
-    * verbatim in the oracle. Spark's `round` on doubles goes through
-    * the decimal STRING (BigDecimal.valueOf → HALF_UP) while DuckDB
-    * rounds the binary value, so a score whose nearest double sits
-    * just below an .xxxx5 boundary (e.g. 0.31525 → 0.31524999…)
-    * rounds differently. This form evaluates identical IEEE ops on
-    * both engines. For negative inputs it rounds halves toward +inf
-    * (not away from zero) — fine for parity, since both engines
-    * evaluate the same formula; callers who need away-from-zero
-    * semantics for display should not feed negatives.
+  /** The cross-engine parity rounding, in integer units of 1/scale:
+    * floor(x*scale + 0.5) (cents at 100.0, micro-units at 1e6).
+    * Spark's `round` on doubles goes through the decimal STRING
+    * (BigDecimal.valueOf → HALF_UP) while DuckDB rounds the binary
+    * value, so a value whose nearest double sits just below a …5
+    * boundary (e.g. 0.31525 → 0.31524999…) rounds differently. This
+    * form evaluates identical IEEE ops on both engines. For negative
+    * inputs it rounds halves toward +inf (not away from zero) — fine
+    * for parity, since both engines evaluate the same formula; callers
+    * who need away-from-zero semantics for display should not feed
+    * negatives. Callers cast the result (`long`, `decimal(28,0)`) for
+    * order-independent exact sums.
     */
-  def round4(c: Column): Column = floor(c * 10000.0 + 0.5) / 10000.0
+  def units(c: Column, scale: Double): Column = floor(c * scale + 0.5)
+
+  /** The DuckDB/SQL mirror of [[units]]. The scale prints as a plain
+    * decimal literal (`1000000.0`, never `1.0E6`): both engines type
+    * that as DECIMAL, which keeps DECIMAL operands exact.
+    */
+  def duckUnits(e: String, scale: Double): String =
+    s"floor(($e) * ${java.math.BigDecimal.valueOf(scale).setScale(1).toPlainString} + 0.5)"
+
+  /** Explicit 4-decimal rounding: floor(x*1e4 + 0.5)/1e4 ([[units]]),
+    * mirrored verbatim in the oracle by [[duckRound4]].
+    */
+  def round4(c: Column): Column = units(c, 10000.0) / 10000.0
 
   /** The DuckDB mirror of [[round4]]. */
-  def duckRound4(e: String): String = s"(floor(($e) * 10000.0 + 0.5) / 10000.0)"
+  def duckRound4(e: String): String = s"(${duckUnits(e, 10000.0)} / 10000.0)"
+
+  /** 6-decimal form of [[round4]]: floor(x*1e6 + 0.5)/1e6. */
+  def round6(c: Column): Column = units(c, 1000000.0) / 1000000.0
+
+  /** The DuckDB mirror of [[round6]]. */
+  def duckRound6(e: String): String = s"(${duckUnits(e, 1000000.0)} / 1000000.0)"
 }

@@ -3,6 +3,7 @@ package graft.text
 import graft.Stage
 import graft.graph.ConnectedComponents
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -299,9 +300,9 @@ object TextQueries {
       .withColumn("uni", (col("nsh_a") + col("nsh_b")).cast("double") - col("inter"))
       .withColumn("ex", when(col("uni") === 0, lit(1.0)).otherwise(col("inter") / col("uni")))
       .select(col("doc_a"), col("doc_b"),
-        TextFns.round4(col("est")).as("est_sim"),
-        TextFns.round4(col("ex")).as("exact_sim"),
-        TextFns.round4(abs(col("est") - col("ex"))).as("abs_err"))
+        round4(col("est")).as("est_sim"),
+        round4(col("ex")).as("exact_sim"),
+        round4(abs(col("est") - col("ex"))).as("abs_err"))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -326,9 +327,9 @@ object TextQueries {
        |             CASE WHEN tot - inter = 0 THEN 1.0
        |                  ELSE inter / (tot - inter) END AS ex
        |           FROM m)
-       |SELECT doc_a, doc_b, ${TextFns.duckRound4("est")} AS est_sim,
-       |       ${TextFns.duckRound4("ex")} AS exact_sim,
-       |       ${TextFns.duckRound4("abs(est - ex)")} AS abs_err
+       |SELECT doc_a, doc_b, ${duckRound4("est")} AS est_sim,
+       |       ${duckRound4("ex")} AS exact_sim,
+       |       ${duckRound4("abs(est - ex)")} AS abs_err
        |FROM e ORDER BY doc_a, doc_b""".stripMargin
 
   // ---------- 3a⁻¹. q_bbit_minhash: b-bit minwise hashing audit ----------
@@ -389,11 +390,11 @@ object TextQueries {
       .withColumn("uni", (col("nsh_a") + col("nsh_b")).cast("double") - col("inter"))
       .withColumn("ex", when(col("uni") === 0, lit(1.0)).otherwise(col("inter") / col("uni")))
       .select(col("doc_a"), col("doc_b"),
-        TextFns.round4(col("ex")).as("exact_sim"),
-        TextFns.round4(col("est_full")).as("est_full"),
-        TextFns.round4(col("est_bbit")).as("est_bbit"),
-        TextFns.round4(abs(col("est_full") - col("ex"))).as("err_full"),
-        TextFns.round4(abs(col("est_bbit") - col("ex"))).as("err_bbit"))
+        round4(col("ex")).as("exact_sim"),
+        round4(col("est_full")).as("est_full"),
+        round4(col("est_bbit")).as("est_bbit"),
+        round4(abs(col("est_full") - col("ex"))).as("err_full"),
+        round4(abs(col("est_bbit") - col("ex"))).as("err_bbit"))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -425,11 +426,11 @@ object TextQueries {
        |                  ELSE inter / (tot - inter) END AS ex
        |           FROM m)
        |SELECT doc_a, doc_b,
-       |       ${TextFns.duckRound4("ex")} AS exact_sim,
-       |       ${TextFns.duckRound4("est_full")} AS est_full,
-       |       ${TextFns.duckRound4("est_bbit")} AS est_bbit,
-       |       ${TextFns.duckRound4("abs(est_full - ex)")} AS err_full,
-       |       ${TextFns.duckRound4("abs(est_bbit - ex)")} AS err_bbit
+       |       ${duckRound4("ex")} AS exact_sim,
+       |       ${duckRound4("est_full")} AS est_full,
+       |       ${duckRound4("est_bbit")} AS est_bbit,
+       |       ${duckRound4("abs(est_full - ex)")} AS err_full,
+       |       ${duckRound4("abs(est_bbit - ex)")} AS err_bbit
        |FROM e ORDER BY doc_a, doc_b""".stripMargin
   }
 
@@ -493,7 +494,7 @@ object TextQueries {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         count(when(col("doc_id") =!= col("cluster_id"), lit(1))).as("n_dupes"))
-      .withColumn("dup_rate", TextFns.round4(
+      .withColumn("dup_rate", round4(
         col("n_dupes").cast("double") / col("n_docs").cast("double")))
       .orderBy("source")
   }
@@ -511,7 +512,7 @@ object TextQueries {
        |           FROM clusters JOIN documents ON clusters.doc_id = documents.doc_id)
        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(count(CASE WHEN doc_id <> cluster_id THEN 1 END) AS BIGINT) AS n_dupes,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(count(CASE WHEN doc_id <> cluster_id THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS dup_rate
        |FROM j GROUP BY source ORDER BY source""".stripMargin
 
@@ -536,7 +537,7 @@ object TextQueries {
       .agg(sum(col("nc")).as("bytes_total"),
         sum(when(col("doc_id") =!= col("cluster_id"), col("nc"))
           .otherwise(lit(0L))).as("bytes_dropped"))
-      .withColumn("save_rate", TextFns.round4(
+      .withColumn("save_rate", round4(
         col("bytes_dropped").cast("double") / col("bytes_total").cast("double")))
       .orderBy("source")
   }
@@ -554,7 +555,7 @@ object TextQueries {
        |           FROM clusters JOIN documents ON clusters.doc_id = documents.doc_id)
        |SELECT source, CAST(sum(nc) AS BIGINT) AS bytes_total,
        |       CAST(sum(CASE WHEN doc_id <> cluster_id THEN nc ELSE 0 END) AS BIGINT) AS bytes_dropped,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(CASE WHEN doc_id <> cluster_id THEN nc ELSE 0 END) AS DOUBLE) / CAST(sum(nc) AS DOUBLE)")} AS save_rate
        |FROM j GROUP BY source ORDER BY source""".stripMargin
 
@@ -602,7 +603,7 @@ object TextQueries {
       .select(col("source"), col("n_raw"),
         coalesce(col("n_exact"), lit(0L)).as("n_exact"),
         coalesce(col("n_near"), lit(0L)).as("n_near"),
-        TextFns.round4(coalesce(col("n_near"), lit(0L)).cast("double") /
+        round4(coalesce(col("n_near"), lit(0L)).cast("double") /
           col("n_raw").cast("double")).as("retention"))
       .orderBy("source")
   }
@@ -631,7 +632,7 @@ object TextQueries {
        |SELECT raw.source, raw.n_raw,
        |       COALESCE(e.n_exact, 0) AS n_exact,
        |       COALESCE(nn.n_near, 0) AS n_near,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(COALESCE(nn.n_near, 0) AS DOUBLE) / CAST(raw.n_raw AS DOUBLE)")} AS retention
        |FROM raw LEFT JOIN e ON raw.source = e.source
        |         LEFT JOIN nn ON raw.source = nn.source
@@ -670,7 +671,7 @@ object TextQueries {
           .as("n_neither"))
       .select(col("n_docs"), col("n_both"), col("n_lsh_only"),
         col("n_sim_only"), col("n_neither"),
-        TextFns.round4((col("n_both") + col("n_neither")).cast("double") /
+        round4((col("n_both") + col("n_neither")).cast("double") /
           col("n_docs").cast("double")).as("agreement"))
   }
 
@@ -713,7 +714,7 @@ object TextQueries {
        |       CAST(sum(CASE WHEN lsh_dup AND NOT sim_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_lsh_only,
        |       CAST(sum(CASE WHEN NOT lsh_dup AND sim_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_sim_only,
        |       CAST(sum(CASE WHEN NOT lsh_dup AND NOT sim_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_neither,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN lsh_dup = sim_dup THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS agreement
        |FROM j""".stripMargin
   }
@@ -745,11 +746,11 @@ object TextQueries {
     val tot = cnt.agg(sum(col("n_before")).as("tb"), sum(col("n_after")).as("ta"))
     cnt.crossJoin(broadcast(tot))
       .select(col("lang"), col("n_before"), col("n_after"),
-        TextFns.round4(col("n_before").cast("double") / col("tb").cast("double"))
+        round4(col("n_before").cast("double") / col("tb").cast("double"))
           .as("share_before"),
-        TextFns.round4(col("n_after").cast("double") / col("ta").cast("double"))
+        round4(col("n_after").cast("double") / col("ta").cast("double"))
           .as("share_after"),
-        TextFns.round4(
+        round4(
           abs(col("n_before") * col("ta") - col("n_after") * col("tb")).cast("double") /
             (lit(2.0) * col("tb").cast("double") * col("ta").cast("double")))
           .as("tv_contrib"))
@@ -774,9 +775,9 @@ object TextQueries {
        |     tot AS (SELECT CAST(sum(n_before) AS BIGINT) AS tb,
        |                    CAST(sum(n_after) AS BIGINT) AS ta FROM cnt)
        |SELECT lang, n_before, n_after,
-       |       ${TextFns.duckRound4("CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE)")} AS share_before,
-       |       ${TextFns.duckRound4("CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE)")} AS share_after,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE)")} AS share_before,
+       |       ${duckRound4("CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE)")} AS share_after,
+       |       ${duckRound4(
                   "CAST(abs(n_before * ta - n_after * tb) AS DOUBLE) / (2.0 * CAST(tb AS DOUBLE) * CAST(ta AS DOUBLE))")} AS tv_contrib
        |FROM cnt CROSS JOIN tot ORDER BY lang""".stripMargin
 
@@ -829,7 +830,7 @@ object TextQueries {
     mRow.crossJoin(broadcast(nNodes)).crossJoin(broadcast(dc2))
       .select(col("n_nodes"), col("m").as("n_edges"),
         col("intra").as("intra_edges"), (col("m") - col("intra")).as("cut_edges"),
-        TextFns.round4(
+        round4(
           ((lit(4).cast("decimal(19,0)") * iD * mD).cast("double") -
             col("sum_dc2").cast("double")) /
           (lit(4).cast("decimal(19,0)") * mD * mD).cast("double")).as("modularity"))
@@ -863,7 +864,7 @@ object TextQueries {
        |             FROM dc)
        |SELECT nn.n_nodes, mrow.m AS n_edges, mrow.intra AS intra_edges,
        |       mrow.m - mrow.intra AS cut_edges,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "(CAST(CAST(4 AS DECIMAL(19,0)) * CAST(mrow.intra AS DECIMAL(19,0)) * CAST(mrow.m AS DECIMAL(19,0)) AS DOUBLE) - CAST(dc2.sum_dc2 AS DOUBLE)) / CAST(CAST(4 AS DECIMAL(19,0)) * CAST(mrow.m AS DECIMAL(19,0)) * CAST(mrow.m AS DECIMAL(19,0)) AS DOUBLE)")} AS modularity
        |FROM mrow CROSS JOIN nn CROSS JOIN dc2""".stripMargin
 
@@ -947,11 +948,10 @@ object TextQueries {
     val cs = joined.groupBy("cluster_id").agg(count(lit(1)).as("csz"))
     val gs = joined.groupBy("h").agg(count(lit(1)).as("gsz"))
     val cont = joined.groupBy("cluster_id", "h").agg(count(lit(1)).as("n"))
-    val d6 = (c: Column) => floor(c * 1000000.0 + 0.5).cast("decimal(28,0)")
     val terms = cont.join(cs, "cluster_id").join(gs, "h")
       .select(col("n"),
-        d6((col("n") * col("n")).cast("double") / col("csz").cast("double")).as("p6"),
-        d6((col("n") * col("n")).cast("double") / col("gsz").cast("double")).as("r6"))
+        units((col("n") * col("n")).cast("double") / col("csz").cast("double"), 1e6).cast("decimal(28,0)").as("p6"),
+        units((col("n") * col("n")).cast("double") / col("gsz").cast("double"), 1e6).cast("decimal(28,0)").as("r6"))
     val agg = terms.agg(sum(col("n")).as("n_docs"),
       sum(col("p6")).as("pd"), sum(col("r6")).as("rd"))
     val nCl = cs.agg(count(lit(1)).as("n_clusters"))
@@ -960,15 +960,14 @@ object TextQueries {
     val r = col("rd").cast("double") / 1000000.0 / col("n_docs").cast("double")
     agg.crossJoin(broadcast(nCl)).crossJoin(broadcast(nGo))
       .select(col("n_docs"), col("n_clusters"), col("n_gold"),
-        TextFns.round4(p).as("b3_precision"),
-        TextFns.round4(r).as("b3_recall"),
-        TextFns.round4(lit(2.0) * p * r / (p + r)).as("b3_f1"))
+        round4(p).as("b3_precision"),
+        round4(r).as("b3_recall"),
+        round4(lit(2.0) * p * r / (p + r)).as("b3_f1"))
   }
 
   private val sqlBcubed = {
     val p = "CAST(pd AS DOUBLE) / 1000000.0 / CAST(n_docs AS DOUBLE)"
     val r = "CAST(rd AS DOUBLE) / 1000000.0 / CAST(n_docs AS DOUBLE)"
-    def d6(e: String) = s"CAST(floor(($e) * 1000000.0 + 0.5) AS DECIMAL(28,0))"
     s"""WITH c AS (SELECT doc_id, text, $duckCodes AS cs FROM documents),
        |     s AS (SELECT doc_id, $duckShingles AS shs FROM c),
        |     g AS (SELECT doc_id, $duckSignature AS sig FROM s),
@@ -985,17 +984,19 @@ object TextQueries {
        |     cont AS (SELECT cluster_id, h, CAST(count(*) AS BIGINT) AS n
        |              FROM jn GROUP BY 1, 2),
        |     terms AS (SELECT n,
-       |                 ${d6("CAST(n * n AS DOUBLE) / CAST(csz.csz AS DOUBLE)")} AS p6,
-       |                 ${d6("CAST(n * n AS DOUBLE) / CAST(gsz.gsz AS DOUBLE)")} AS r6
+       |                 CAST(${duckUnits("CAST(n * n AS DOUBLE) / CAST(csz.csz AS DOUBLE)", 1e6)}
+       |                   AS DECIMAL(28,0)) AS p6,
+       |                 CAST(${duckUnits("CAST(n * n AS DOUBLE) / CAST(gsz.gsz AS DOUBLE)", 1e6)}
+       |                   AS DECIMAL(28,0)) AS r6
        |               FROM cont JOIN csz USING (cluster_id) JOIN gsz USING (h)),
        |     ag AS (SELECT CAST(sum(n) AS BIGINT) AS n_docs, sum(p6) AS pd, sum(r6) AS rd
        |            FROM terms),
        |     nc AS (SELECT CAST(count(*) AS BIGINT) AS n_clusters FROM csz),
        |     ng AS (SELECT CAST(count(*) AS BIGINT) AS n_gold FROM gsz)
        |SELECT n_docs, n_clusters, n_gold,
-       |       ${TextFns.duckRound4(p)} AS b3_precision,
-       |       ${TextFns.duckRound4(r)} AS b3_recall,
-       |       ${TextFns.duckRound4(s"2.0 * ($p) * ($r) / (($p) + ($r))")} AS b3_f1
+       |       ${duckRound4(p)} AS b3_precision,
+       |       ${duckRound4(r)} AS b3_recall,
+       |       ${duckRound4(s"2.0 * ($p) * ($r) / (($p) + ($r))")} AS b3_f1
        |FROM ag CROSS JOIN nc CROSS JOIN ng""".stripMargin
   }
 
@@ -1036,7 +1037,7 @@ object TextQueries {
           sum(when(col("cnt") > 1, 1L).otherwise(0L)).as("n_dup_groups"))
         .select(lit(n.toLong).as("gram_n"), col("n_docs"), col("n_dup_docs"),
           col("n_dup_groups"),
-          TextFns.round4(col("n_dup_docs").cast("double") /
+          round4(col("n_dup_docs").cast("double") /
             col("n_docs").cast("double")).as("dup_rate"))
     }
     branches.reduce(_ unionByName _).orderBy("gram_n")
@@ -1048,7 +1049,7 @@ object TextQueries {
          |       CAST(sum(cnt) AS BIGINT) AS n_docs,
          |       CAST(sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS n_dup_docs,
          |       CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_groups,
-         |       ${TextFns.duckRound4(
+         |       ${duckRound4(
                    "CAST(sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE)")} AS dup_rate
          |FROM (SELECT sig, count(*) AS cnt FROM (
          |        SELECT doc_id, list_sort(list_distinct(${duckNgramHashesOf(n)})) AS sig
@@ -1125,7 +1126,7 @@ object TextQueries {
           col("shs_a"), col("shs_b")).cast("double"))
       .withColumn("uni", (col("nsh_a") + col("nsh_b")).cast("double") - col("inter"))
       .withColumn("ex", when(col("uni") === 0, lit(1.0)).otherwise(col("inter") / col("uni")))
-      .withColumn("is_true", TextFns.round4(col("ex")) >= LshCurveTau)
+      .withColumn("is_true", round4(col("ex")) >= LshCurveTau)
       .select(col("is_true"),
         collide(2).as("c2"), collide(4).as("c4"), collide(8).as("c8"))
     def caught(c: String) = sum(when(col("is_true") && col(c), 1L).otherwise(0L))
@@ -1142,7 +1143,7 @@ object TextQueries {
           .stripMargin))
       .withColumn("catch_rate",
         when(col("n_true") === 0, lit(null).cast("double"))
-          .otherwise(TextFns.round4(
+          .otherwise(round4(
             col("n_caught").cast("double") / col("n_true").cast("double"))))
       .select(col("r"), col("b"), col("n_candidates"), col("n_true"),
         col("n_caught"), col("catch_rate"))
@@ -1173,7 +1174,7 @@ object TextQueries {
        |             CAST(len(ga.dsh) + len(gb.dsh) AS DOUBLE) AS tot
        |           FROM pairs JOIN g ga ON pairs.doc_a = ga.doc_id
        |                      JOIN g gb ON pairs.doc_b = gb.doc_id),
-       |     f AS (SELECT ${TextFns.duckRound4(
+       |     f AS (SELECT ${duckRound4(
                     "CASE WHEN tot - inter = 0 THEN 1.0 ELSE inter / (tot - inter) END")}
        |               >= $LshCurveTau AS is_true,
        |             ${collideSql(2)} AS c2, ${collideSql(4)} AS c4,
@@ -1196,7 +1197,7 @@ object TextQueries {
        |            SELECT 8, 2, cand_8, n_true, caught_8 FROM agg)
        |SELECT r, b, n_candidates, n_true, n_caught,
        |       CASE WHEN n_true = 0 THEN NULL
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "CAST(n_caught AS DOUBLE) / CAST(n_true AS DOUBLE)")}
        |       END AS catch_rate
        |FROM lv ORDER BY r""".stripMargin
@@ -1365,9 +1366,9 @@ object TextQueries {
         col("m").cast("double") * col("sxx").cast("double")
           - col("sx").cast("double") * col("sx").cast("double"))
       .select(col("n_nodes"), col("n_edges"), col("max_deg"),
-        TextFns.round4(lit(2.0) * col("n_edges").cast("double")
+        round4(lit(2.0) * col("n_edges").cast("double")
           / col("n_nodes").cast("double")).as("avg_deg"),
-        TextFns.round4(when(col("den") === 0.0, lit(null))
+        round4(when(col("den") === 0.0, lit(null))
           .otherwise(col("num") / col("den"))).as("assortativity"))
   }
 
@@ -1395,9 +1396,9 @@ object TextQueries {
        |               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den
        |           FROM su CROSS JOIN ds CROSS JOIN ec)
        |SELECT n_nodes, n_edges, max_deg,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "2.0 * CAST(n_edges AS DOUBLE) / CAST(n_nodes AS DOUBLE)")} AS avg_deg,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CASE WHEN den = 0.0 THEN NULL ELSE num / den END")} AS assortativity
        |FROM z""".stripMargin
 
@@ -2211,7 +2212,7 @@ object TextQueries {
       .select(col("da"), explode(col("ids")).as("db"), col("jac"))
       .select(least(col("da"), col("db")).as("doc_a"),
         greatest(col("da"), col("db")).as("doc_b"),
-        TextFns.round4(col("jac")).as("jaccard"))
+        round4(col("jac")).as("jaccard"))
     val same = dist.filter(size(col("ids")) >= 2)
       .select(explode(col("ids")).as("da"), col("ids"))
       .select(col("da"), explode(col("ids")).as("db"))
@@ -2261,7 +2262,7 @@ object TextQueries {
        |     j AS (SELECT doc_a, doc_b,
        |                  CASE WHEN tot - inter = 0 THEN 1.0 ELSE inter / (tot - inter) END AS jac
        |           FROM pairs)
-       |SELECT doc_a, doc_b, ${TextFns.duckRound4("jac")} AS jaccard
+       |SELECT doc_a, doc_b, ${duckRound4("jac")} AS jaccard
        |FROM j WHERE jac >= 0.3 ORDER BY doc_a, doc_b""".stripMargin
 
   // ---------- 4a2. q_ppjoin: EXACT set-similarity join (prefix filter) ----------
@@ -2480,7 +2481,7 @@ object TextQueries {
         greatest(col("s1"), col("s2")).as("set_b"),
         when(col("s1") < col("s2"), col("nd1")).otherwise(col("nd2")).as("n_docs_a"),
         when(col("s1") < col("s2"), col("nd2")).otherwise(col("nd1")).as("n_docs_b"),
-        TextFns.round4(col("inter").cast("double") /
+        round4(col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")).cast("double")).as("jaccard"))
       .orderBy("set_a", "set_b")
   }
@@ -2498,7 +2499,7 @@ object TextQueries {
        |                    a.ng + b.ng AS tot
        |             FROM n a JOIN n b ON a.sid < b.sid)
        |SELECT set_a, set_b, n_docs_a, n_docs_b,
-       |       ${TextFns.duckRound4("CAST(inter AS DOUBLE) / CAST(tot - inter AS DOUBLE)")} AS jaccard
+       |       ${duckRound4("CAST(inter AS DOUBLE) / CAST(tot - inter AS DOUBLE)")} AS jaccard
        |FROM prs WHERE inter * ${PpDen + 1} >= tot
        |ORDER BY set_a, set_b""".stripMargin
 
@@ -2564,7 +2565,7 @@ object TextQueries {
       .join(docs.select(col("doc_id").as("db"),
         col("grams").as("gb"), col("ng").as("nb")), "db")
       .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .withColumn("containment", TextFns.round4(
+      .withColumn("containment", round4(
         col("inter").cast("double") / least(col("na"), col("nb")).cast("double")))
       .filter(col("containment") >= ContainThreshold)
     verified
@@ -2590,7 +2591,7 @@ object TextQueries {
        |             FROM cand JOIN n na ON na.doc_id = da
        |                       JOIN n nb ON nb.doc_id = db),
        |     s AS (SELECT da AS doc_a, db AS doc_b, inter AS n_shared,
-       |             ${TextFns.duckRound4(
+       |             ${duckRound4(
                        "CAST(inter AS DOUBLE) / CAST(least(la, lb) AS DOUBLE)")} AS containment
        |           FROM ver)
        |SELECT doc_a, doc_b, n_shared, containment FROM s
@@ -2697,7 +2698,7 @@ object TextQueries {
       sum(when(!col("pp") && col("tt"), 1L).otherwise(0L)).as("fn"),
       sum(when(!col("pp") && !col("tt"), 1L).otherwise(0L)).as("tn"))
     cells.select(col("tp"), col("fp"), col("fn"), col("tn"),
-      TextFns.round4(
+      round4(
         (col("tp") * col("tn") - col("fp") * col("fn")).cast("double") /
           (sqrt((col("tp") + col("fp")).cast("double")) *
             sqrt((col("tp") + col("fn")).cast("double")) *
@@ -2728,7 +2729,7 @@ object TextQueries {
        |              CAST(sum(CASE WHEN NOT pp AND NOT tt THEN 1 ELSE 0 END) AS BIGINT) AS tn
        |            FROM f)
        |SELECT tp, fp, fn, tn,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(tp * tn - fp * fn AS DOUBLE) / " +
                    "(sqrt(CAST(tp + fp AS DOUBLE)) * sqrt(CAST(tp + fn AS DOUBLE)) * " +
                    "sqrt(CAST(tn + fp AS DOUBLE)) * sqrt(CAST(tn + fn AS DOUBLE)))")} AS mcc
@@ -2772,17 +2773,16 @@ object TextQueries {
     val conf = col("hb").cast("double") / col("th").cast("double")
     val y = when(col("pred") === col("lang"), lit(1.0)).otherwise(lit(0.0))
     val err = (conf - y) * (conf - y)
-    val d6 = (c: Column) => floor(c * 1000000.0 + 0.5).cast("decimal(28,0)")
     scored
       .groupBy("lang")
       .agg(sum(when(col("th") > 0, 1L).otherwise(0L)).as("n_scored"),
         sum(when(col("th") === 0, 1L).otherwise(0L)).as("n_abstain"),
-        sum(when(col("th") > 0, d6(conf))).as("c_dec"),
-        sum(when(col("th") > 0, d6(err))).as("e_dec"))
+        sum(when(col("th") > 0, units(conf, 1e6).cast("decimal(28,0)"))).as("c_dec"),
+        sum(when(col("th") > 0, units(err, 1e6).cast("decimal(28,0)"))).as("e_dec"))
       .select(col("lang"), col("n_scored"), col("n_abstain"),
-        TextFns.round4(col("c_dec").cast("double") / 1000000.0 /
+        round4(col("c_dec").cast("double") / 1000000.0 /
           col("n_scored").cast("double")).as("mean_conf"),
-        TextFns.round4(col("e_dec").cast("double") / 1000000.0 /
+        round4(col("e_dec").cast("double") / 1000000.0 /
           col("n_scored").cast("double")).as("brier"))
       .orderBy("lang")
   }
@@ -2800,7 +2800,6 @@ object TextQueries {
     val conf = "CAST(hb AS DOUBLE) / CAST(th AS DOUBLE)"
     val y = "(CASE WHEN pred = lang THEN 1.0 ELSE 0.0 END)"
     val err = s"(($conf) - $y) * (($conf) - $y)"
-    def d6(e: String) = s"CAST(floor(($e) * 1000000.0 + 0.5) AS DECIMAL(28,0))"
     s"""WITH t AS (SELECT doc_id, lang, $duckTokens AS ts FROM documents),
        |     h AS (SELECT doc_id, lang, $hitSel FROM t),
        |     u AS (SELECT doc_id, lang, unnest($structs) AS s FROM h),
@@ -2813,11 +2812,11 @@ object TextQueries {
        |SELECT lang,
        |       CAST(sum(CASE WHEN th > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_scored,
        |       CAST(sum(CASE WHEN th = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_abstain,
-       |       ${TextFns.duckRound4(
-                 s"CAST(sum(CASE WHEN th > 0 THEN ${d6(conf)} END) AS DOUBLE)" +
+       |       ${duckRound4(
+                 s"CAST(sum(CASE WHEN th > 0 THEN CAST(${duckUnits(conf, 1e6)} AS DECIMAL(28,0)) END) AS DOUBLE)" +
                    " / 1000000.0 / CAST(sum(CASE WHEN th > 0 THEN 1 ELSE 0 END) AS DOUBLE)")} AS mean_conf,
-       |       ${TextFns.duckRound4(
-                 s"CAST(sum(CASE WHEN th > 0 THEN ${d6(err)} END) AS DOUBLE)" +
+       |       ${duckRound4(
+                 s"CAST(sum(CASE WHEN th > 0 THEN CAST(${duckUnits(err, 1e6)} AS DECIMAL(28,0)) END) AS DOUBLE)" +
                    " / 1000000.0 / CAST(sum(CASE WHEN th > 0 THEN 1 ELSE 0 END) AS DOUBLE)")} AS brier
        |FROM p GROUP BY lang ORDER BY lang""".stripMargin
   }
@@ -2835,13 +2834,13 @@ object TextQueries {
         coalesce(col("n_pred"), lit(0L)).as("n_pred"),
         coalesce(col("n_correct"), lit(0L)).as("n_correct"))
       .withColumn("precision",
-        when(col("n_pred") === 0, lit(0.0)).otherwise(TextFns.round4(
+        when(col("n_pred") === 0, lit(0.0)).otherwise(round4(
           col("n_correct").cast("double") / col("n_pred").cast("double"))))
       .withColumn("recall",
-        when(col("n_true") === 0, lit(0.0)).otherwise(TextFns.round4(
+        when(col("n_true") === 0, lit(0.0)).otherwise(round4(
           col("n_correct").cast("double") / col("n_true").cast("double"))))
       .withColumn("f1",
-        when(col("n_true") + col("n_pred") === 0, lit(0.0)).otherwise(TextFns.round4(
+        when(col("n_true") + col("n_pred") === 0, lit(0.0)).otherwise(round4(
           lit(2.0) * col("n_correct").cast("double")
             / (col("n_true") + col("n_pred")).cast("double"))))
       .orderBy("lang")
@@ -2871,13 +2870,13 @@ object TextQueries {
        |       CAST(coalesce(n_pred, 0) AS BIGINT) AS n_pred,
        |       CAST(coalesce(n_correct, 0) AS BIGINT) AS n_correct,
        |       CASE WHEN coalesce(n_pred, 0) = 0 THEN 0.0
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "CAST(coalesce(n_correct, 0) AS DOUBLE) / CAST(n_pred AS DOUBLE)")} END AS precision,
        |       CASE WHEN coalesce(n_true, 0) = 0 THEN 0.0
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "CAST(coalesce(n_correct, 0) AS DOUBLE) / CAST(n_true AS DOUBLE)")} END AS recall,
        |       CASE WHEN coalesce(n_true, 0) + coalesce(n_pred, 0) = 0 THEN 0.0
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "2.0 * CAST(coalesce(n_correct, 0) AS DOUBLE) " +
                         "/ CAST(coalesce(n_true, 0) + coalesce(n_pred, 0) AS DOUBLE)")} END AS f1
        |FROM tr FULL JOIN pr ON tr.lang = pr.plang
@@ -2908,7 +2907,7 @@ object TextQueries {
     val rows = cells.groupBy("lang").agg(sum(col("n")).as("nt"))
     cells.join(broadcast(rows), "lang")
       .select(col("lang"), col("pred"), col("n"),
-        TextFns.round4(col("n").cast("double") / col("nt").cast("double"))
+        round4(col("n").cast("double") / col("nt").cast("double"))
           .as("row_share"))
       .orderBy("lang", "pred")
   }
@@ -2932,7 +2931,7 @@ object TextQueries {
        |               FROM p GROUP BY 1, 2),
        |     r AS (SELECT lang, CAST(sum(n) AS BIGINT) AS nt FROM cells GROUP BY 1)
        |SELECT cells.lang, pred, n,
-       |       ${TextFns.duckRound4("CAST(n AS DOUBLE) / CAST(nt AS DOUBLE)")} AS row_share
+       |       ${duckRound4("CAST(n AS DOUBLE) / CAST(nt AS DOUBLE)")} AS row_share
        |FROM cells JOIN r ON cells.lang = r.lang
        |ORDER BY cells.lang, pred""".stripMargin
   }
@@ -2963,11 +2962,11 @@ object TextQueries {
       .agg(sum(col("nt") * col("np")).as("pe_num"))
     tot.crossJoin(broadcast(pe))
       .select(col("n").as("n_docs"), col("n_agree"),
-        TextFns.round4(col("n_agree").cast("double") /
+        round4(col("n_agree").cast("double") /
           col("n").cast("double")).as("p_observed"),
-        TextFns.round4(col("pe_num").cast("double") /
+        round4(col("pe_num").cast("double") /
           (col("n") * col("n")).cast("double")).as("p_expected"),
-        TextFns.round4((col("n_agree") * col("n") - col("pe_num")).cast("double") /
+        round4((col("n_agree") * col("n") - col("pe_num")).cast("double") /
           (col("n") * col("n") - col("pe_num")).cast("double")).as("kappa"))
   }
 
@@ -2995,9 +2994,9 @@ object TextQueries {
        |     pe AS (SELECT CAST(sum(nt * np) AS BIGINT) AS pe_num
        |            FROM nt JOIN np ON nt.lang = np.pred)
        |SELECT n AS n_docs, n_agree,
-       |       ${TextFns.duckRound4("CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE)")} AS p_observed,
-       |       ${TextFns.duckRound4("CAST(pe_num AS DOUBLE) / CAST(n * n AS DOUBLE)")} AS p_expected,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE)")} AS p_observed,
+       |       ${duckRound4("CAST(pe_num AS DOUBLE) / CAST(n * n AS DOUBLE)")} AS p_expected,
+       |       ${duckRound4(
                  "CAST(n_agree * n - pe_num AS DOUBLE) / CAST(n * n - pe_num AS DOUBLE)")} AS kappa
        |FROM tot CROSS JOIN pe""".stripMargin
   }
@@ -3159,7 +3158,7 @@ object TextQueries {
       .select(col("doc_id"),
         col("bs.n_grams").as("n_grams"),
         col("bs.n_distinct").as("n_distinct"),
-        TextFns.round4(lit(1.0) -
+        round4(lit(1.0) -
           col("bs.n_distinct").cast("double") /
             col("bs.n_grams").cast("double")).as("rep_ratio"))
       .withColumn("is_repetitive", col("rep_ratio") >= RepetitionThreshold)
@@ -3175,7 +3174,7 @@ object TextQueries {
        |                  CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct
        |           FROM g),
        |     s AS (SELECT doc_id, n_grams, n_distinct,
-       |                  ${TextFns.duckRound4(
+       |                  ${duckRound4(
                             "1.0 - CAST(n_distinct AS DOUBLE) / CAST(n_grams AS DOUBLE)")} AS rep_ratio
        |           FROM r)
        |SELECT doc_id, n_grams, n_distinct, rep_ratio,
@@ -3229,7 +3228,7 @@ object TextQueries {
       .join(broadcast(probe), col("gram") === col("pgram"))
       .groupBy("doc_id")
       .agg(max(col("n_grams")).as("n_grams"), count(lit(1)).as("n_hits"))
-      .withColumn("contamination", TextFns.round4(
+      .withColumn("contamination", round4(
         col("n_hits").cast("double") / col("n_grams").cast("double")))
       .select("doc_id", "n_grams", "n_hits", "contamination")
       .orderBy("doc_id")
@@ -3245,7 +3244,7 @@ object TextQueries {
        |                  count(*) AS n_hits
        |           FROM x JOIN p ON x.gram = p.pgram GROUP BY x.doc_id)
        |SELECT doc_id, n_grams, n_hits,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(n_hits AS DOUBLE) / CAST(n_grams AS DOUBLE)")} AS contamination
        |FROM h ORDER BY doc_id""".stripMargin
 
@@ -3290,7 +3289,7 @@ object TextQueries {
     perDoc.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("n_dup") > 0, 1L).otherwise(0L)).as("docs_with_dup"),
-        TextFns.round4(sum(col("n_dup")).cast("double") /
+        round4(sum(col("n_dup")).cast("double") /
           sum(col("n_grams")).cast("double")).as("dup_frac"))
       .orderBy("source")
   }
@@ -3307,7 +3306,7 @@ object TextQueries {
        |           FROM x JOIN c ON x.gram = c.gram GROUP BY x.doc_id, x.source)
        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(CASE WHEN n_dup > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_dup,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(n_dup) AS DOUBLE) / CAST(sum(n_grams) AS DOUBLE)")} AS dup_frac
        |FROM d GROUP BY source ORDER BY source""".stripMargin
   }
@@ -3338,7 +3337,7 @@ object TextQueries {
     val w = Window.orderBy(col("n").desc, col("token"))
     top.crossJoin(broadcast(total))
       .withColumn("rank", row_number().over(w))
-      .withColumn("cum_share", TextFns.round4(
+      .withColumn("cum_share", round4(
         sum(col("n")).over(
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .cast("double") / col("total").cast("double")))
@@ -3354,7 +3353,7 @@ object TextQueries {
        |     top AS (SELECT token, n FROM c ORDER BY n DESC, token LIMIT $VocabTopK)
        |SELECT CAST(row_number() OVER (ORDER BY n DESC, token) AS INT) AS rank,
        |       token, n,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(sum(n) OVER (ORDER BY n DESC, token " +
                  "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)" +
                  " / CAST((SELECT total FROM tot) AS DOUBLE)")} AS cum_share
@@ -3400,12 +3399,12 @@ object TextQueries {
     Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("doc_id"),
-        TextFns.round4(TextFns.qualityScore(col("text"), col("ts"))).as("quality"))
+        round4(TextFns.qualityScore(col("text"), col("ts"))).as("quality"))
       .orderBy("doc_id")
 
   private val sqlQualityScore =
     s"""WITH t AS (SELECT doc_id, text, $duckTokens AS ts FROM documents)
-       |SELECT doc_id, ${TextFns.duckRound4(duckQuality)} AS quality
+       |SELECT doc_id, ${duckRound4(duckQuality)} AS quality
        |FROM t ORDER BY doc_id""".stripMargin
 
   // ---------- q_dataset_card: per-source datasheet row ----------
@@ -3433,7 +3432,7 @@ object TextQueries {
     val base = docs
       .withColumn("ts", TextFns.tokens(col("text")))
       .withColumn("qm",
-        floor(TextFns.qualityScore(col("text"), col("ts")) * 1000000.0 + 0.5)
+        units(TextFns.qualityScore(col("text"), col("ts")), 1e6)
           .cast("decimal(18,0)"))
       .withColumn("h", sha2(normText(col("text")), 256))
     val agg = base.groupBy("source").agg(
@@ -3451,8 +3450,8 @@ object TextQueries {
     agg.join(topLang, Seq("source"))
       .select(col("source"), col("n_docs"), col("total_chars"),
         col("n_langs"), col("top_lang"), col("n_dups"),
-        TextFns.round4(col("p50")).as("p50_chars"),
-        TextFns.round4(col("qsum").cast("double") / 1000000.0 /
+        round4(col("p50")).as("p50_chars"),
+        round4(col("qsum").cast("double") / 1000000.0 /
           col("n_docs").cast("double")).as("mean_quality"))
       .orderBy("source")
   }
@@ -3461,7 +3460,7 @@ object TextQueries {
     s"""WITH t AS (SELECT doc_id, source, lang, n_chars, text, $duckTokens AS ts
        |           FROM documents),
        |     q AS (SELECT source, lang, n_chars,
-       |                  CAST(floor(($duckQuality) * 1000000.0 + 0.5) AS DECIMAL(18,0)) AS qm,
+       |                  CAST(${duckUnits(duckQuality, 1e6)} AS DECIMAL(18,0)) AS qm,
        |                  sha256(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
        |           FROM t),
        |     a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -3476,8 +3475,8 @@ object TextQueries {
        |            QUALIFY row_number() OVER (PARTITION BY source
        |                                       ORDER BY c DESC, lang) = 1)
        |SELECT a.source, a.n_docs, a.total_chars, a.n_langs, tl.top_lang, a.n_dups,
-       |       ${TextFns.duckRound4("p50")} AS p50_chars,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("p50")} AS p50_chars,
+       |       ${duckRound4(
                   "CAST(qsum AS DOUBLE) / 1000000.0 / CAST(n_docs AS DOUBLE)")} AS mean_quality
        |FROM a JOIN tl ON a.source = tl.source ORDER BY a.source""".stripMargin
 
@@ -3507,7 +3506,7 @@ object TextQueries {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
-      .withColumn("q", TextFns.round4(TextFns.qualityScore(col("text"), col("ts"))))
+      .withColumn("q", round4(TextFns.qualityScore(col("text"), col("ts"))))
       .select(col("doc_id"), col("source"), col("n_chars"), col("q"))
     val wq = Window.partitionBy("source").orderBy(col("q"), col("doc_id"))
     val wl = Window.partitionBy("source").orderBy(col("n_chars"), col("doc_id"))
@@ -3521,7 +3520,7 @@ object TextQueries {
       .filter(col("n_docs") > 1)
       .withColumn("nd", col("n_docs").cast("decimal(19,0)"))
       .select(col("source"), col("n_docs"),
-        TextFns.round4(lit(1.0) -
+        round4(lit(1.0) -
           (lit(6.0) * col("sd2").cast("double")) /
             (col("nd") * (col("nd") * col("nd") - lit(1).cast("decimal(19,0)")))
               .cast("double")).as("rho"))
@@ -3532,7 +3531,7 @@ object TextQueries {
     s"""WITH t AS (SELECT doc_id, source, n_chars, text, $duckTokens AS ts
        |           FROM documents),
        |     q AS (SELECT doc_id, source, n_chars,
-       |                  ${TextFns.duckRound4(duckQuality)} AS q FROM t),
+       |                  ${duckRound4(duckQuality)} AS q FROM t),
        |     r AS (SELECT source,
        |                  CAST(row_number() OVER (PARTITION BY source
        |                         ORDER BY q, doc_id) AS BIGINT) AS rq,
@@ -3543,7 +3542,7 @@ object TextQueries {
        |                  sum(CAST((rq - rl) * (rq - rl) AS DECIMAL(28,0))) AS sd2
        |           FROM r GROUP BY 1 HAVING count(*) > 1)
        |SELECT source, n_docs,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "1.0 - (6.0 * CAST(sd2 AS DOUBLE)) / CAST(CAST(n_docs AS DECIMAL(19,0)) * (CAST(n_docs AS DECIMAL(19,0)) * CAST(n_docs AS DECIMAL(19,0)) - CAST(1 AS DECIMAL(19,0))) AS DOUBLE)")} AS rho
        |FROM a ORDER BY source""".stripMargin
 
@@ -3569,7 +3568,7 @@ object TextQueries {
     val docs = Tables.documents(spark, sfDir)
       .withColumn("ts", TextFns.tokens(col("text")))
       .select(col("doc_id"),
-        TextFns.round4(TextFns.qualityScore(col("text"), col("ts"))).as("quality"),
+        round4(TextFns.qualityScore(col("text"), col("ts"))).as("quality"),
         sha2(normText(col("text")), 256).as("nh"))
     val wFirst = Window.partitionBy("nh").orderBy("doc_id")
     val kept = docs.withColumn("kept", row_number().over(wFirst) === 1)
@@ -3585,13 +3584,13 @@ object TextQueries {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
       .withColumn("kept_ratio",
-        TextFns.round4(col("n_kept").cast("double") / col("n_docs").cast("double")))
+        round4(col("n_kept").cast("double") / col("n_docs").cast("double")))
       .orderBy("quartile")
   }
 
   private val sqlQualitySurvival =
     s"""WITH t AS (SELECT doc_id, text, $duckTokens AS ts FROM documents),
-       |     q AS (SELECT doc_id, ${TextFns.duckRound4(duckQuality)} AS quality,
+       |     q AS (SELECT doc_id, ${duckRound4(duckQuality)} AS quality,
        |             sha256(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS nh
        |           FROM t),
        |     k AS (SELECT doc_id, quality,
@@ -3607,7 +3606,7 @@ object TextQueries {
        |           FROM k CROSS JOIN f)
        |SELECT quartile, CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                   "CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS kept_ratio
        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin
@@ -3631,7 +3630,7 @@ object TextQueries {
     docs.join(dupKeys, Seq("h"), "left_anti")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_unique"),
-        TextFns.round4(avg(col("n_chars"))).as("avg_chars"))
+        round4(avg(col("n_chars"))).as("avg_chars"))
       .orderBy("lang")
   }
 
@@ -3641,7 +3640,7 @@ object TextQueries {
        |            FROM documents),
        |     d AS (SELECT h FROM hs GROUP BY h HAVING count(*) > 1)
        |SELECT lang, count(*) AS n_unique,
-       |       ${TextFns.duckRound4("avg(n_chars)")} AS avg_chars
+       |       ${duckRound4("avg(n_chars)")} AS avg_chars
        |FROM hs WHERE NOT EXISTS (SELECT 1 FROM d WHERE d.h = hs.h)
        |GROUP BY 1 ORDER BY lang""".stripMargin
 
@@ -3680,7 +3679,7 @@ object TextQueries {
         sum(when(!col("a_ok") && !col("b_ok"), 1L).otherwise(0L)).as("n_neither"))
       .withColumn("mcnemar_chi2",
         when(col("n_a_only") + col("n_b_only") === 0, lit(0.0))
-          .otherwise(TextFns.round4(
+          .otherwise(round4(
             ((col("n_a_only") - col("n_b_only")) *
               (col("n_a_only") - col("n_b_only"))).cast("double") /
               (col("n_a_only") + col("n_b_only")).cast("double"))))
@@ -3717,7 +3716,7 @@ object TextQueries {
        |       CAST(n_b_only AS BIGINT) AS n_b_only,
        |       CAST(n_neither AS BIGINT) AS n_neither,
        |       CASE WHEN n_a_only + n_b_only = 0 THEN 0.0
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "CAST((n_a_only - n_b_only) * (n_a_only - n_b_only) AS DOUBLE) " +
                         "/ CAST(n_a_only + n_b_only AS DOUBLE)")} END AS mcnemar_chi2
        |FROM g""".stripMargin
@@ -3764,13 +3763,13 @@ object TextQueries {
         sum(col("nd") * col("nd") + (lit(3L) - col("nd")) * (lit(3L) - col("nd")))
           .as("s2"))
       .select(col("n").as("n_docs"), col("d").as("n_dup_votes"),
-        TextFns.round4((col("s2") - lit(3L) * col("n")).cast("double") /
+        round4((col("s2") - lit(3L) * col("n")).cast("double") /
           (lit(6L) * col("n")).cast("double")).as("p_bar"),
-        TextFns.round4((col("d") * col("d") +
+        round4((col("d") * col("d") +
           (lit(3L) * col("n") - col("d")) * (lit(3L) * col("n") - col("d")))
           .cast("double") / (lit(9L) * col("n") * col("n")).cast("double"))
           .as("p_expected"),
-        TextFns.round4(
+        round4(
           (lit(3L) * col("n") * (col("s2") - lit(3L) * col("n")) -
             lit(2L) * (col("d") * col("d") +
               (lit(3L) * col("n") - col("d")) * (lit(3L) * col("n") - col("d"))))
@@ -3829,12 +3828,12 @@ object TextQueries {
        |                    CAST(sum(nd * nd + (3 - nd) * (3 - nd)) AS BIGINT) AS s2
        |             FROM votes)
        |SELECT n AS n_docs, d AS n_dup_votes,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(s2 - 3 * n AS DOUBLE) / CAST(6 * n AS DOUBLE)")} AS p_bar,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(d * d + (3 * n - d) * (3 * n - d) AS DOUBLE) " +
                    "/ CAST(9 * n * n AS DOUBLE)")} AS p_expected,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "CAST(3 * n * (s2 - 3 * n) - 2 * (d * d + (3 * n - d) * (3 * n - d)) AS DOUBLE) " +
                    "/ CAST(18 * n * n - 2 * (d * d + (3 * n - d) * (3 * n - d)) AS DOUBLE)")} AS kappa
        |FROM agg""".stripMargin
@@ -3873,13 +3872,13 @@ object TextQueries {
     votes.agg(count(lit(1)).as("n"), sum(col("nd")).as("d"),
         sum(col("nd") * (lit(3L) - col("nd"))).as("p"))
       .select(col("n").as("n_docs"), col("d").as("n_dup_votes"),
-        TextFns.round4(col("p").cast("double") /
+        round4(col("p").cast("double") /
           (lit(3L) * col("n")).cast("double")).as("d_observed"),
-        TextFns.round4((lit(2L) * col("d") * (lit(3L) * col("n") - col("d")))
+        round4((lit(2L) * col("d") * (lit(3L) * col("n") - col("d")))
           .cast("double") /
           (lit(3L) * col("n") * (lit(3L) * col("n") - lit(1L))).cast("double"))
           .as("d_expected"),
-        TextFns.round4(lit(1.0) -
+        round4(lit(1.0) -
           (col("p") * (lit(3L) * col("n") - lit(1L))).cast("double") /
           (lit(2L) * col("d") * (lit(3L) * col("n") - col("d"))).cast("double"))
           .as("alpha"))
@@ -3892,10 +3891,10 @@ object TextQueries {
        |                    CAST(sum(nd * (3 - nd)) AS BIGINT) AS p
        |             FROM votes)
        |SELECT n AS n_docs, d AS n_dup_votes,
-       |       ${TextFns.duckRound4("CAST(p AS DOUBLE) / CAST(3 * n AS DOUBLE)")} AS d_observed,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4("CAST(p AS DOUBLE) / CAST(3 * n AS DOUBLE)")} AS d_observed,
+       |       ${duckRound4(
                  "CAST(2 * d * (3 * n - d) AS DOUBLE) / CAST(3 * n * (3 * n - 1) AS DOUBLE)")} AS d_expected,
-       |       ${TextFns.duckRound4(
+       |       ${duckRound4(
                  "1.0 - CAST(p * (3 * n - 1) AS DOUBLE) / CAST(2 * d * (3 * n - d) AS DOUBLE)")} AS alpha
        |FROM agg""".stripMargin
 
@@ -3945,20 +3944,19 @@ object TextQueries {
       .withColumn("score",
         sqrt(col("h1").cast("double") / col("ng1").cast("double")) *
           sqrt(col("h2").cast("double") / col("ng2").cast("double")))
-      .withColumn("s6", (floor(col("score") * 1000000.0 + 0.5) / 1000000.0)
+      .withColumn("s6", round6(col("score"))
         .cast("decimal(28,6)"))
     per.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("score") === 1.0, 1L).otherwise(0L)).as("n_saturated"),
         sum(col("s6")).as("ssum"))
       .select(col("source"), col("n_docs"), col("n_saturated"),
-        TextFns.round4(col("ssum").cast("double") /
+        round4(col("ssum").cast("double") /
           col("n_docs").cast("double")).as("mean_self_bleu"))
       .orderBy("source")
   }
 
   private def sqlSelfBleu = {
-    val r4 = TextFns.duckRound4 _
     s"""WITH t AS (SELECT doc_id, source, $duckTokens AS ts FROM documents),
        |     d AS (SELECT doc_id, source, list_distinct(ts) AS g1arr,
        |                  list_distinct(${duckNgramHashesOf(2)}) AS g2arr
@@ -3982,7 +3980,7 @@ object TextQueries {
        |                    JOIN h2 ON d.doc_id = h2.doc_id)
        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(CASE WHEN score = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_saturated,
-       |       ${r4("CAST(sum(CAST(floor(score * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS mean_self_bleu
+       |       ${duckRound4(s"CAST(sum(CAST(${duckRound6("score")} AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS mean_self_bleu
        |FROM per GROUP BY source ORDER BY source""".stripMargin
   }
 
@@ -4037,7 +4035,7 @@ object TextQueries {
       .select(col("r.method").as("method"), col("r.n_edges").as("n_edges"),
         col("r.n_cross").as("n_cross"))
       .withColumn("leak_pct",
-        when(col("n_edges") === 0, lit(0.0)).otherwise(TextFns.round4(
+        when(col("n_edges") === 0, lit(0.0)).otherwise(round4(
           col("n_cross").cast("double") / col("n_edges").cast("double"))))
       .orderBy("method")
     // materialize the 2-row result, then free the checkpointed
@@ -4071,7 +4069,7 @@ object TextQueries {
        |           FROM j)
        |SELECT method, n_edges, n_cross,
        |       CASE WHEN n_edges = 0 THEN 0.0
-       |            ELSE ${TextFns.duckRound4(
+       |            ELSE ${duckRound4(
                       "CAST(n_cross AS DOUBLE) / CAST(n_edges AS DOUBLE)")} END AS leak_pct
        |FROM (SELECT 'cluster_atomic' AS method, n_edges, x_cluster AS n_cross FROM t
        |      UNION ALL

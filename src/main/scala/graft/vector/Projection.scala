@@ -2,6 +2,7 @@ package graft.vector
 
 import graft.functions.TextHashUtil
 import graft.schema.Tables
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,12 +43,6 @@ object Projection {
     (1 to Dim).foldLeft("CAST(0.0 AS DOUBLE)") { (acc, i) =>
       s"($acc + $v[$i] * ${sign(j, i)})"
     }
-
-  /** Same explicit 6-decimal rounding as VectorQueries.round6 (floor
-    * form, identical IEEE ops both engines) — collapses ulp noise
-    * before the order-independent DECIMAL mean.
-    */
-  private def round6(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
 
   /** JL distortion audit: project every embedding to [[ProjK]]-d with
     * the hash-sign matrix, pair each vector with the one
@@ -91,10 +86,10 @@ object Projection {
       .select(
         col("n_pairs"),
         col("n_within_25pct"),
-        graft.text.TextFns.round4(
+        round4(
           col("ratio_dec").cast("double") / col("n_pairs").cast("double")).as("avg_ratio"),
-        graft.text.TextFns.round4(col("min_r")).as("min_ratio"),
-        graft.text.TextFns.round4(col("max_r")).as("max_ratio"))
+        round4(col("min_r")).as("min_ratio"),
+        round4(col("max_r")).as("max_ratio"))
   }
 
   private val sqlRandProj = {
@@ -105,7 +100,6 @@ object Projection {
     val dProj2 = (0 until ProjK).foldLeft("CAST(0.0 AS DOUBLE)") { (acc, j) =>
       s"($acc + (a.p$j - b.p$j) * (a.p$j - b.p$j))"
     }
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     p AS (SELECT vec_id, v, $projA FROM e),
        |     r AS (SELECT sqrt($dProj2) / (4.0 * sqrt($dOrig2)) AS ratio
@@ -113,11 +107,11 @@ object Projection {
        |SELECT count(*) AS n_pairs,
        |       CAST(sum(CASE WHEN ratio BETWEEN 0.75 AND 1.25 THEN 1 ELSE 0 END) AS BIGINT)
        |         AS n_within_25pct,
-       |       ${graft.text.TextFns.duckRound4(
-                  s"CAST(sum(CAST(${round6("ratio")} AS DECIMAL(18,6))) AS DOUBLE)" +
+       |       ${duckRound4(
+                  s"CAST(sum(CAST(${duckRound6("ratio")} AS DECIMAL(18,6))) AS DOUBLE)" +
                     " / CAST(count(*) AS DOUBLE)")} AS avg_ratio,
-       |       ${graft.text.TextFns.duckRound4("min(ratio)")} AS min_ratio,
-       |       ${graft.text.TextFns.duckRound4("max(ratio)")} AS max_ratio
+       |       ${duckRound4("min(ratio)")} AS min_ratio,
+       |       ${duckRound4("max(ratio)")} AS max_ratio
        |FROM r""".stripMargin
   }
 
@@ -157,7 +151,6 @@ object Projection {
     */
   def centroidDrift(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.VectorNative
-    val round6 = (c: Column) => floor(c * 1000000.0 + 0.5) / 1000000.0
     val dims = Tables.embeddings(spark, sfDir)
       .select(col("label"), posexplode(VectorFns.toDouble(col("embedding"))).as(Seq("dim", "x")))
     def centroidOf(grouped: DataFrame, keys: Seq[String]): DataFrame =
@@ -179,17 +172,16 @@ object Projection {
           / (sqrt(VectorNative.dot(col("cv"), col("cv")))
             * sqrt(VectorNative.dot(col("gv"), col("gv")))))
       .select(col("label"), col("n_vecs"),
-        graft.text.TextFns.round4(col("cos")).as("drift_cos"))
+        round4(col("cos")).as("drift_cos"))
       .orderBy("label")
   }
 
   private val sqlCentroidDrift = {
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
     s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     x AS (SELECT label, CAST(i - 1 AS INT) AS dim, v[CAST(i AS INT)] AS x
        |           FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
        |     lc AS (SELECT label, dim,
-       |              CAST(sum(CAST(${round6("x")} AS DECIMAL(28,6))) AS DOUBLE)
+       |              CAST(sum(CAST(${duckRound6("x")} AS DECIMAL(28,6))) AS DOUBLE)
        |                / count(*) AS c,
        |              count(*) AS n
        |            FROM x GROUP BY 1, 2),
@@ -197,13 +189,13 @@ object Projection {
        |              list_transform(list_sort(list({'dim': dim, 'c': c})), p -> p.c) AS cv
        |            FROM lc GROUP BY label),
        |     gc AS (SELECT dim,
-       |              CAST(sum(CAST(${round6("x")} AS DECIMAL(28,6))) AS DOUBLE)
+       |              CAST(sum(CAST(${duckRound6("x")} AS DECIMAL(28,6))) AS DOUBLE)
        |                / count(*) AS c
        |            FROM x GROUP BY 1),
        |     ga AS (SELECT list_transform(list_sort(list({'dim': dim, 'c': c})), p -> p.c) AS gv
        |            FROM gc)
        |SELECT label, n_vecs,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                   s"${duckDot("cv", "gv")} / (sqrt(${duckDot("cv", "cv")})" +
                     s" * sqrt(${duckDot("gv", "gv")}))")} AS drift_cos
        |FROM la CROSS JOIN ga ORDER BY label""".stripMargin
@@ -231,45 +223,44 @@ object Projection {
     * input width multiplier.
     */
   def dimStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val r6 = (c: Column) => round6(c).cast("decimal(18,6)")
+    val x6 = round6(col("x")).cast("decimal(18,6)")
     Tables.embeddings(spark, sfDir)
       .select(posexplode(VectorFns.toDouble(col("embedding"))).as(Seq("dim", "x")))
       .groupBy(col("dim").cast("long").as("dim"))
       .agg(count(lit(1)).as("n_vecs"),
-        sum(r6(col("x"))).as("sx"),
-        sum((r6(col("x")) * r6(col("x"))).cast("decimal(38,12)")).as("sxx"),
+        sum(x6).as("sx"),
+        sum((x6 * x6).cast("decimal(38,12)")).as("sxx"),
         min(col("x")).as("mn"), max(col("x")).as("mx"))
       .withColumn("mean", col("sx").cast("double") / col("n_vecs").cast("double"))
       .select(col("dim"), col("n_vecs"),
-        graft.text.TextFns.round4(col("mean")).as("mean"),
-        graft.text.TextFns.round4(
+        round4(col("mean")).as("mean"),
+        round4(
           col("sxx").cast("double") / col("n_vecs").cast("double")
             - col("mean") * col("mean")).as("variance"),
-        graft.text.TextFns.round4(col("mn")).as("min_x"),
-        graft.text.TextFns.round4(col("mx")).as("max_x"))
+        round4(col("mn")).as("min_x"),
+        round4(col("mx")).as("max_x"))
       .orderBy("dim")
   }
 
   private val sqlDimStats = {
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
-    val r6 = (e: String) => s"CAST(${round6(e)} AS DECIMAL(18,6))"
+    val x6 = s"CAST(${duckRound6("x")} AS DECIMAL(18,6))"
     s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     x AS (SELECT CAST(i - 1 AS BIGINT) AS dim, v[CAST(i AS INT)] AS x
        |           FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
        |     a AS (SELECT dim, count(*) AS n_vecs,
-       |                  sum(${r6("x")}) AS sx,
-       |                  sum(CAST(${r6("x")} * ${r6("x")} AS DECIMAL(38,12))) AS sxx,
+       |                  sum($x6) AS sx,
+       |                  sum(CAST($x6 * $x6 AS DECIMAL(38,12))) AS sxx,
        |                  min(x) AS mn, max(x) AS mx
        |           FROM x GROUP BY 1),
        |     m AS (SELECT dim, n_vecs, mn, mx, sxx,
        |                  CAST(sx AS DOUBLE) / CAST(n_vecs AS DOUBLE) AS mean
        |           FROM a)
        |SELECT dim, CAST(n_vecs AS BIGINT) AS n_vecs,
-       |       ${graft.text.TextFns.duckRound4("mean")} AS mean,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4("mean")} AS mean,
+       |       ${duckRound4(
                   "CAST(sxx AS DOUBLE) / CAST(n_vecs AS DOUBLE) - mean * mean")} AS variance,
-       |       ${graft.text.TextFns.duckRound4("mn")} AS min_x,
-       |       ${graft.text.TextFns.duckRound4("mx")} AS max_x
+       |       ${duckRound4("mn")} AS min_x,
+       |       ${duckRound4("mx")} AS max_x
        |FROM m ORDER BY dim""".stripMargin
   }
 
@@ -315,20 +306,19 @@ object Projection {
     // rounded image of the identical rational). Headroom note: µ²-unit
     // sums reach 2⁵³ around 9e15 ⇒ ~10¹⁰ unit-scale vectors per
     // cell; past that, widen to DECIMAL in the same shape.
-    def m6(c: Column): Column =
-      floor(c.cast("double") * 1000000.0 + 0.5).cast("long")
+    val x6 = units(col("x").cast("double"), 1e6).cast("long")
     val base = Tables.embeddings(spark, sfDir).select(col("embedding"))
     val marg = base
       .select(posexplode_outer(col("embedding")).as(Seq("d", "x")))
       .groupBy(col("d").cast("long").as("d"))
-      .agg(count(lit(1)).as("n"), sum(m6(col("x"))).as("s6"),
-        sum(m6(col("x")) * m6(col("x"))).as("ss6"))
+      .agg(count(lit(1)).as("n"), sum(x6).as("s6"), sum(x6 * x6).as("ss6"))
     val cross = base
       .withColumn("da", explode_outer(sequence(lit(0), lit(Dim - 2))))
       .withColumn("db", explode_outer(sequence(col("da") + 1, lit(Dim - 1))))
       .select(col("da"), col("db"),
-        (m6(element_at(col("embedding"), col("da") + 1))
-          * m6(element_at(col("embedding"), col("db") + 1))).as("ab6"))
+        (units(element_at(col("embedding"), col("da") + 1).cast("double"), 1e6).cast("long")
+          * units(element_at(col("embedding"), col("db") + 1).cast("double"), 1e6).cast("long"))
+          .as("ab6"))
       .groupBy(col("da").cast("long").as("dim_a"),
         col("db").cast("long").as("dim_b"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("ab6")).as("sab6"))
@@ -350,19 +340,18 @@ object Projection {
       .withColumn("denb", nd * col("sbbD") - col("sbD") * col("sbD"))
       .withColumn("corr", when(col("dena") === 0.0 || col("denb") === 0.0, lit(null))
         .otherwise(col("num") / (sqrt(col("dena")) * sqrt(col("denb")))))
-      .withColumn("acorr", graft.text.TextFns.round4(abs(col("corr"))))
+      .withColumn("acorr", round4(abs(col("corr"))))
     scored
       .select(col("dim_a"), col("dim_b"), col("n_vecs"),
-        graft.text.TextFns.round4(col("corr")).as("corr"), col("acorr"))
+        round4(col("corr")).as("corr"), col("acorr"))
       .orderBy(col("acorr").desc, col("dim_a"), col("dim_b"))
       .limit(DimCorrTopK)
       .select("dim_a", "dim_b", "n_vecs", "corr")
   }
 
   private val sqlDimCorr = {
-    val round6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
-    val r6 = (e: String) => s"CAST(${round6(e)} AS DECIMAL(18,6))"
-    val r4 = graft.text.TextFns.duckRound4 _
+    val a6 = s"CAST(${duckRound6("xa")} AS DECIMAL(18,6))"
+    val b6 = s"CAST(${duckRound6("xb")} AS DECIMAL(18,6))"
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     p AS (SELECT CAST(i - 1 AS BIGINT) AS dim_a, CAST(j - 1 AS BIGINT) AS dim_b,
        |                  v[CAST(i AS INT)] AS xa, v[CAST(j AS INT)] AS xb
@@ -370,10 +359,10 @@ object Projection {
        |                  CROSS JOIN range(1, ${Dim + 1}) u(j)
        |           WHERE i < j),
        |     c AS (SELECT dim_a, dim_b, CAST(count(*) AS BIGINT) AS n_vecs,
-       |                  sum(${r6("xa")}) AS sa, sum(${r6("xb")}) AS sb,
-       |                  sum(CAST(${r6("xa")} * ${r6("xa")} AS DECIMAL(38,12))) AS saa,
-       |                  sum(CAST(${r6("xb")} * ${r6("xb")} AS DECIMAL(38,12))) AS sbb,
-       |                  sum(CAST(${r6("xa")} * ${r6("xb")} AS DECIMAL(38,12))) AS sab
+       |                  sum($a6) AS sa, sum($b6) AS sb,
+       |                  sum(CAST($a6 * $a6 AS DECIMAL(38,12))) AS saa,
+       |                  sum(CAST($b6 * $b6 AS DECIMAL(38,12))) AS sbb,
+       |                  sum(CAST($a6 * $b6 AS DECIMAL(38,12))) AS sab
        |           FROM p GROUP BY 1, 2),
        |     z AS (SELECT dim_a, dim_b, n_vecs,
        |             CAST(n_vecs AS DOUBLE) * CAST(sab AS DOUBLE)
@@ -387,9 +376,9 @@ object Projection {
        |             CASE WHEN dena = 0.0 OR denb = 0.0 THEN NULL
        |                  ELSE num / (sqrt(dena) * sqrt(denb)) END AS corr0
        |           FROM z)
-       |SELECT dim_a, dim_b, n_vecs, ${r4("corr0")} AS corr
+       |SELECT dim_a, dim_b, n_vecs, ${duckRound4("corr0")} AS corr
        |FROM s
-       |ORDER BY ${r4("abs(corr0)")} DESC, dim_a, dim_b
+       |ORDER BY ${duckRound4("abs(corr0)")} DESC, dim_a, dim_b
        |LIMIT $DimCorrTopK""".stripMargin
   }
 
@@ -417,17 +406,17 @@ object Projection {
     */
   def isotropy(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.VectorNative
-    val r6d = (c: Column) => round6(c).cast("decimal(18,6)")
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("v", VectorFns.toDouble(col("embedding")))
       .withColumn("nrm", sqrt(VectorNative.dot(col("v"), col("v"))))
     val dims = e
       .select(col("label"), col("nrm"), posexplode_outer(col("v")).as(Seq("dim", "x")))
       .withColumn("u", col("x") / col("nrm"))
+    val u6 = round6(col("u")).cast("decimal(18,6)")
     val grouped = dims
       .groupBy("label", "dim")
-      .agg(sum(r6d(col("u"))).as("s"),
-        sum((r6d(col("u")) * r6d(col("u"))).cast("decimal(38,12)")).as("q"),
+      .agg(sum(u6).as("s"),
+        sum((u6 * u6).cast("decimal(38,12)")).as("q"),
         count(lit(1)).as("n"))
     grouped
       .groupBy("label")
@@ -435,7 +424,7 @@ object Projection {
         sum(col("q")).as("sq"),
         transform(sort_array(collect_list(struct(col("dim"),
           col("s").cast("double").as("s")))), p => p.getField("s")).as("sv"))
-      .withColumn("mean_cos", graft.text.TextFns.round4(
+      .withColumn("mean_cos", round4(
         (VectorNative.dot(col("sv"), col("sv")) - col("sq").cast("double"))
           / (col("n_vecs").cast("double") * (col("n_vecs") - 1).cast("double"))))
       .select(col("label"), col("n_vecs"), col("mean_cos"))
@@ -443,15 +432,14 @@ object Projection {
   }
 
   private val sqlIsotropy = {
-    val r6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
-    val r6d = (e: String) => s"CAST(${r6(e)} AS DECIMAL(18,6))"
+    val u6 = s"CAST(${duckRound6("u")} AS DECIMAL(18,6))"
     s"""WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     e AS (SELECT vec_id, label, v, sqrt(${duckDot("v", "v")}) AS nrm FROM e0),
        |     x AS (SELECT label, CAST(i - 1 AS INT) AS dim,
        |                  v[CAST(i AS INT)] / nrm AS u
        |           FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
-       |     g AS (SELECT label, dim, sum(${r6d("u")}) AS s,
-       |                  sum(CAST(${r6d("u")} * ${r6d("u")} AS DECIMAL(38,12))) AS q,
+       |     g AS (SELECT label, dim, sum($u6) AS s,
+       |                  sum(CAST($u6 * $u6 AS DECIMAL(38,12))) AS q,
        |                  count(*) AS n
        |           FROM x GROUP BY 1, 2),
        |     l AS (SELECT label, CAST(max(n) AS BIGINT) AS n_vecs,
@@ -460,7 +448,7 @@ object Projection {
        |                    p -> p.s) AS sv
        |           FROM g GROUP BY label)
        |SELECT label, n_vecs,
-       |       ${graft.text.TextFns.duckRound4(
+       |       ${duckRound4(
                  s"(${duckDot("sv", "sv")} - sq) / (CAST(n_vecs AS DOUBLE) * CAST(n_vecs - 1 AS DOUBLE))")} AS mean_cos
        |FROM l ORDER BY label""".stripMargin
   }
@@ -484,13 +472,12 @@ object Projection {
     */
   def centroidOutliers(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.VectorNative
-    val r6d = (c: Column) => round6(c).cast("decimal(28,6)")
     val dims = Tables.embeddings(spark, sfDir)
       .select(col("label"), posexplode_outer(VectorFns.toDouble(col("embedding")))
         .as(Seq("dim", "x")))
     val cents = dims
       .groupBy("label", "dim")
-      .agg(sum(r6d(col("x"))).as("sx"), count(lit(1)).as("n"))
+      .agg(sum(round6(col("x")).cast("decimal(28,6)")).as("sx"), count(lit(1)).as("n"))
       .withColumn("c", col("sx").cast("double") / col("n").cast("double"))
       .groupBy("label")
       .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
@@ -500,10 +487,11 @@ object Projection {
         VectorFns.toDouble(col("embedding")).as("v"))
       .join(broadcast(cents), "label")
       .withColumn("d2", VectorNative.sqDist(col("v"), col("cv")))
+    val d6 = round6(col("d2")).cast("decimal(28,6)")
     val stats = dists.groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
-        sum(r6d(col("d2"))).as("sd"),
-        sum((r6d(col("d2")) * r6d(col("d2"))).cast("decimal(38,12)")).as("sdd"))
+        sum(d6).as("sd"),
+        sum((d6 * d6).cast("decimal(38,12)")).as("sdd"))
       .withColumn("mean_d2", col("sd").cast("double") / col("n_vecs").cast("double"))
       .withColumn("sigma", sqrt(col("sdd").cast("double") / col("n_vecs").cast("double")
         - col("mean_d2") * col("mean_d2")))
@@ -511,22 +499,21 @@ object Projection {
         col("mean_d2"), col("sigma"))), "label")
       .groupBy("label")
       .agg(max(col("n_vecs")).as("n_vecs"),
-        graft.text.TextFns.round4(max(col("mean_d2"))).as("mean_d2"),
+        round4(max(col("mean_d2"))).as("mean_d2"),
         count(when(round6(col("d2")) >
           round6(col("mean_d2") + lit(2.0) * col("sigma")), lit(1))).as("n_outliers"))
       .orderBy("label")
   }
 
   private val sqlCentroidOutliers = {
-    val r6 = (e: String) => s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
-    val r6d = (e: String) => s"CAST(${r6(e)} AS DECIMAL(28,6))"
+    val d6 = s"CAST(${duckRound6("d2")} AS DECIMAL(28,6))"
     val sqd = "list_reduce([CAST(0 AS DOUBLE)] || list_transform(range(1, len(v) + 1), " +
       "i -> (v[CAST(i AS INT)] - cv[CAST(i AS INT)]) * (v[CAST(i AS INT)] - cv[CAST(i AS INT)])), (acc, y) -> acc + y)"
     s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     x AS (SELECT label, CAST(i - 1 AS INT) AS dim, v[CAST(i AS INT)] AS x
        |           FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
        |     lc AS (SELECT label, dim,
-       |              CAST(sum(${r6d("x")}) AS DOUBLE) / count(*) AS c
+       |              CAST(sum(CAST(${duckRound6("x")} AS DECIMAL(28,6))) AS DOUBLE) / count(*) AS c
        |            FROM x GROUP BY 1, 2),
        |     ce AS (SELECT label,
        |              list_transform(list_sort(list({'dim': dim, 'c': c})), p -> p.c) AS cv
@@ -534,14 +521,14 @@ object Projection {
        |     d AS (SELECT e.vec_id, e.label, $sqd AS d2
        |           FROM e JOIN ce ON e.label = ce.label),
        |     st AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-       |                   CAST(sum(${r6d("d2")}) AS DOUBLE) / count(*) AS mean_d2,
-       |                   sqrt(CAST(sum(CAST(${r6d("d2")} * ${r6d("d2")} AS DECIMAL(38,12))) AS DOUBLE) / count(*)
-       |                     - (CAST(sum(${r6d("d2")}) AS DOUBLE) / count(*))
-       |                       * (CAST(sum(${r6d("d2")}) AS DOUBLE) / count(*))) AS sigma
+       |                   CAST(sum($d6) AS DOUBLE) / count(*) AS mean_d2,
+       |                   sqrt(CAST(sum(CAST($d6 * $d6 AS DECIMAL(38,12))) AS DOUBLE) / count(*)
+       |                     - (CAST(sum($d6) AS DOUBLE) / count(*))
+       |                       * (CAST(sum($d6) AS DOUBLE) / count(*))) AS sigma
        |            FROM d GROUP BY label)
        |SELECT d.label AS label, max(n_vecs) AS n_vecs,
-       |       ${graft.text.TextFns.duckRound4("max(mean_d2)")} AS mean_d2,
-       |       CAST(count(CASE WHEN ${r6("d2")} > ${r6("mean_d2 + 2.0 * sigma")} THEN 1 END) AS BIGINT) AS n_outliers
+       |       ${duckRound4("max(mean_d2)")} AS mean_d2,
+       |       CAST(count(CASE WHEN ${duckRound6("d2")} > ${duckRound6("mean_d2 + 2.0 * sigma")} THEN 1 END) AS BIGINT) AS n_outliers
        |FROM d JOIN st ON d.label = st.label
        |GROUP BY d.label ORDER BY d.label""".stripMargin
   }
@@ -574,14 +561,12 @@ object Projection {
     * start vector; outputs round once at the edge.
     */
   def pcaPower(spark: SparkSession, sfDir: String): DataFrame = {
-    def m6(c: Column): Column =
-      floor(c.cast("double") * 1000000.0 + 0.5).cast("long")
+    val x6 = units(col("x").cast("double"), 1e6).cast("long")
     val base = Tables.embeddings(spark, sfDir).select(col("embedding"))
     val marg = base
       .select(posexplode_outer(col("embedding")).as(Seq("d", "x")))
       .groupBy(col("d"))
-      .agg(count(lit(1)).as("n"), sum(m6(col("x"))).as("s6"),
-        sum(m6(col("x")) * m6(col("x"))).as("ss6"))
+      .agg(count(lit(1)).as("n"), sum(x6).as("s6"), sum(x6 * x6).as("ss6"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
     val dimN = marg.length
@@ -591,8 +576,9 @@ object Projection {
       .withColumn("da", explode_outer(sequence(lit(0), lit(Dim - 2))))
       .withColumn("db", explode_outer(sequence(col("da") + 1, lit(Dim - 1))))
       .select(col("da"), col("db"),
-        (m6(element_at(col("embedding"), col("da") + 1))
-          * m6(element_at(col("embedding"), col("db") + 1))).as("ab6"))
+        (units(element_at(col("embedding"), col("da") + 1).cast("double"), 1e6).cast("long")
+          * units(element_at(col("embedding"), col("db") + 1).cast("double"), 1e6).cast("long"))
+          .as("ab6"))
       .groupBy("da", "db").agg(sum(col("ab6")).as("p6"))
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
     def p(i: Int, j: Int): Long =
@@ -618,15 +604,15 @@ object Projection {
       lambda = math.sqrt(nrm2)
       v = w.map(_ / lambda)
     }
-    def r4(x: Double): Double = math.floor(x * 10000.0 + 0.5) / 10000.0
     import spark.implicits._
-    v.zipWithIndex.map { case (l, i) => (i.toLong, r4(l), r4(lambda)) }
+    v.zipWithIndex.map { case (l, i) => (i.toLong, l, lambda) }
       .toSeq.toDF("dim", "loading", "eigenvalue")
+      .select(col("dim"), round4(col("loading")).as("loading"),
+        round4(col("eigenvalue")).as("eigenvalue"))
       .orderBy("dim")
   }
 
   private val sqlPcaPower = {
-    val m6 = (e: String) => s"CAST(floor(($e) * 1000000.0 + 0.5) AS BIGINT)"
     // one unrolled power iteration: (cl rows, v list) -> (w list, λ)
     def iter(k: Int, vPrev: String): String =
       s"""w$k AS (SELECT i, list_reduce([CAST(0.0 AS DOUBLE)] ||
@@ -640,7 +626,7 @@ object Projection {
          |        FROM wl$k),
          |     v$k AS (SELECT list_transform(w, y -> y / lam) AS v, lam FROM nm$k)""".stripMargin
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |     x AS (SELECT vec_id, CAST(i - 1 AS INT) AS d, ${m6("v[CAST(i AS INT)]")} AS m
+       |     x AS (SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(${duckUnits("v[CAST(i AS INT)]", 1e6)} AS BIGINT) AS m
        |           FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
        |     mg AS (SELECT d, CAST(count(*) AS BIGINT) AS n, CAST(sum(m) AS BIGINT) AS s6
        |            FROM x GROUP BY d),
@@ -658,8 +644,8 @@ object Projection {
        |     ${iter(2, "v1")},
        |     ${iter(3, "v2")}
        |SELECT CAST(i - 1 AS BIGINT) AS dim,
-       |       ${graft.text.TextFns.duckRound4("v[CAST(i AS INT)]")} AS loading,
-       |       ${graft.text.TextFns.duckRound4("lam")} AS eigenvalue
+       |       ${duckRound4("v[CAST(i AS INT)]")} AS loading,
+       |       ${duckRound4("lam")} AS eigenvalue
        |FROM v3 CROSS JOIN range(1, ${Dim + 1}) t(i)
        |ORDER BY dim""".stripMargin
   }
@@ -699,7 +685,7 @@ object Projection {
       .select(col("label"),
         posexplode(slice(col("embedding"), 1, StumpDims)).as(Seq("dim", "xf")))
       .select(col("dim").cast("long").as("dim"), col("label"),
-        floor(col("xf").cast("double") * 1000000.0 + 0.5).as("x6"))
+        units(col("xf").cast("double"), 1e6).as("x6"))
     val rng = vals.groupBy("dim").agg(min("x6").as("mn"), max("x6").as("mx"))
     val cnt = vals.join(broadcast(rng), "dim")
       .withColumn("bucket",
@@ -731,7 +717,7 @@ object Projection {
         col("nl").as("l"), (col("n") - col("nl")).as("r"))).as("best"))
       .select(col("dim"), (-col("best.nb")).as("thr_bucket"),
         col("best.l").as("n_left"), col("best.r").as("n_right"),
-        graft.text.TextFns.round4(col("best.g")).as("gain"))
+        round4(col("best.g")).as("gain"))
       .orderBy("dim")
   }
 
@@ -744,7 +730,7 @@ object Projection {
         "- CAST(s_all AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))"
     s"""WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     vals AS (SELECT CAST(d.range AS BIGINT) AS dim, label,
-       |                     CAST(floor(v[CAST(d.range + 1 AS INT)] * 1000000.0 + 0.5) AS BIGINT) AS x6
+       |                     CAST(${duckUnits("v[CAST(d.range + 1 AS INT)]", 1e6)} AS BIGINT) AS x6
        |              FROM e CROSS JOIN range(0, $StumpDims) d),
        |     rng AS (SELECT dim, min(x6) AS mn, max(x6) AS mx FROM vals GROUP BY 1),
        |     bkt AS (SELECT vals.dim, label,
@@ -773,7 +759,7 @@ object Projection {
        |              FROM gn GROUP BY dim)
        |SELECT dim, CAST(-(bs.nb) AS BIGINT) AS thr_bucket,
        |       CAST(bs.l AS BIGINT) AS n_left, CAST(bs.r AS BIGINT) AS n_right,
-       |       ${graft.text.TextFns.duckRound4("bs.g")} AS gain
+       |       ${duckRound4("bs.g")} AS gain
        |FROM best ORDER BY dim""".stripMargin
   }
 

@@ -3,7 +3,7 @@ package graft.vector
 import graft.Stage
 import graft.graph.ConnectedComponents
 import graft.schema.Tables
-import graft.text.TextFns.{duckRound4, round4}
+import graft.text.TextFns.{duckRound4, duckRound6, duckUnits, round4, round6, units}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,16 +58,6 @@ object VectorQueries {
   private def duckDot(a: String, b: String): String =
     s"list_reduce([CAST(0 AS DOUBLE)] || list_transform(range(1, len($a) + 1), " +
       s"i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)]), (acc, v) -> acc + v)"
-
-  /** Explicit 6-decimal HALF-UP-toward-+inf rounding, identical IEEE
-    * ops on both engines (same rationale as TextFns.round4) — used
-    * only to collapse ulp noise before an argmin rank, never in
-    * output.
-    */
-  private def round6(c: org.apache.spark.sql.Column) =
-    floor(c * 1000000.0 + 0.5) / 1000000.0
-  private def duckRound6(e: String): String =
-    s"(floor(($e) * 1000000.0 + 0.5) / 1000000.0)"
 
   private val duckBucket =
     (0 until LshBits).map { j =>
@@ -2511,8 +2501,7 @@ object VectorQueries {
     val wedges = undD.as("e1").join(undD.select(col("u"), col("w")).as("e2"),
         col("e1.u") === col("e2.u") && col("e1.w") < col("e2.w"))
       .select(col("e1.w").as("x"), col("e2.w").as("z"),
-        (floor(lit(1.0) / col("e1.du").cast("double") * 1000000.0 + 0.5)
-          / 1000000.0).cast("decimal(28,6)").as("ra6"))
+        round6(lit(1.0) / col("e1.du").cast("double")).cast("decimal(28,6)").as("ra6"))
       .groupBy("x", "z")
       .agg(count(lit(1)).as("cn"), sum(col("ra6")).as("ra"))
     wedges.join(edges,
@@ -2537,8 +2526,7 @@ object VectorQueries {
        |              FROM und JOIN deg ON und.u = deg.node
        |              WHERE deg.deg <= 64),
        |     wedges AS (SELECT e1.w AS x, e2.w AS z, CAST(count(*) AS BIGINT) AS cn,
-       |                       sum(CAST(floor(1.0 / CAST(e1.du AS DOUBLE) * 1000000.0 + 0.5)
-       |                         / 1000000.0 AS DECIMAL(28,6))) AS ra
+       |                       sum(CAST(${duckRound6("1.0 / CAST(e1.du AS DOUBLE)")} AS DECIMAL(28,6))) AS ra
        |                FROM undd e1 JOIN undd e2 ON e1.u = e2.u AND e1.w < e2.w
        |                GROUP BY 1, 2),
        |     cand AS (SELECT x, z, cn, ra FROM wedges
@@ -2605,9 +2593,9 @@ object VectorQueries {
         (lit(CoinM.toDouble) / col("pa").cast("double")) *
           (lit(CoinM.toDouble) / col("pa").cast("double")))
       .withColumn("wt6",
-        (floor(col("wt") * 1000000.0 + 0.5) / 1000000.0).cast("decimal(28,6)"))
+        round6(col("wt")).cast("decimal(28,6)"))
       .withColumn("vt6",
-        (floor(col("wt") * (col("wt") - 1.0) * 1000000.0 + 0.5) / 1000000.0)
+        round6(col("wt") * (col("wt") - 1.0))
           .cast("decimal(28,6)"))
     val wedges = sampled.as("e1")
       .join(sampled.select(col("u"), col("w")).as("e2"),
@@ -2639,10 +2627,9 @@ object VectorQueries {
        |     und AS (SELECT u, w FROM edges UNION ALL SELECT w AS u, u AS w FROM edges),
        |     deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS deg FROM und GROUP BY 1),
        |     sampled AS (SELECT u, w, pa,
-       |                        CAST(floor($wtSql * 1000000.0 + 0.5) / 1000000.0
+       |                        CAST(${duckRound6(wtSql)}
        |                          AS DECIMAL(28,6)) AS wt6,
-       |                        CAST(floor($wtSql * ($wtSql - 1.0) * 1000000.0 + 0.5)
-       |                          / 1000000.0 AS DECIMAL(28,6)) AS vt6
+       |                        CAST(${duckRound6(s"$wtSql * ($wtSql - 1.0)")} AS DECIMAL(28,6)) AS vt6
        |                 FROM (SELECT und.u, und.w,
        |                              CASE WHEN deg.deg <= $LpSampleCap THEN $CoinM
        |                                   ELSE (${LpSampleCap * CoinM} - 1) // deg.deg + 1
@@ -2847,7 +2834,7 @@ object VectorQueries {
         struct(col("v"), col("cv")).as("p"))).as("w"))
       // ONE residual array per winning row (corpus-sized, not ×codes)
       .withColumn("r", zip_with(col("w.p.v"), col("w.p.cv"),
-        (x, y) => floor((x - y) * 1000000.0 + 0.5) / 1000000.0))
+        (x, y) => round6(x - y)))
       .select(col("vec_id"), col("w.k2").as("c1"), col("r"))
     val withB = a1
       .withColumn("b2", VectorFns.signBucket(col("r"), RqBits, RqStride))
@@ -2894,7 +2881,7 @@ object VectorQueries {
        |            FROM s1),
        |     a1 AS (SELECT vec_id, c_label AS c1,
        |                   list_transform(range(1, 65),
-       |                     i -> floor((v[CAST(i AS INT)] - cv[CAST(i AS INT)]) * 1000000.0 + 0.5) / 1000000.0) AS r
+       |                     i -> ${duckRound6("v[CAST(i AS INT)] - cv[CAST(i AS INT)]")}) AS r
        |            FROM b1 WHERE rk = 1),
        |     wb AS (SELECT vec_id, c1, r, $bucket AS b2,
        |                   ${duckDot("r", "r")} AS rr
@@ -3428,7 +3415,7 @@ object VectorQueries {
         VectorFns.cosineStaged(col("v"), col("pv"), col("nrm"), col("pnrm")))
       .groupBy(col("probe_id"), col("src_lang"), col("lang").as("tgt_lang"))
       .agg(max(col("sim")).as("b"))
-      .withColumn("wd", floor(col("b") * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("wd", units(col("b"), 1e6).cast("decimal(28,0)"))
     best.groupBy("src_lang", "tgt_lang")
       .agg(count(lit(1)).as("n_probes"),
         round4(sum(col("wd")).cast("double") / 1000000.0 /
@@ -3443,8 +3430,7 @@ object VectorQueries {
        |     p AS (SELECT vec_id AS probe_id, lang AS src_lang, v AS pv, nrm AS pnrm
        |           FROM ev WHERE vec_id % $RecallProbeStep = 0 AND vec_id < $ProbeIdCap),
        |     b AS (SELECT probe_id, src_lang, ev.lang AS tgt_lang,
-       |             CAST(floor(max(${duckDot("ev.v", "pv")} / (ev.nrm * pnrm))
-       |                        * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS wd
+       |             CAST(${duckUnits(s"max(${duckDot("ev.v", "pv")} / (ev.nrm * pnrm))", 1e6)} AS DECIMAL(28,0)) AS wd
        |           FROM ev, p WHERE ev.lang <> src_lang
        |           GROUP BY 1, 2, 3)
        |SELECT src_lang, tgt_lang, CAST(count(*) AS BIGINT) AS n_probes,
@@ -3853,10 +3839,10 @@ object VectorQueries {
       .agg((sum(when(col("ham") < col("g_ham")
         || (col("ham") === col("g_ham") && col("vec_id") < col("g_id")),
         1L).otherwise(0L)) + 1L).as("qrank"))
-    val r6d = (c: org.apache.spark.sql.Column) => round6(c).cast("decimal(18,6)")
     ranked.groupBy("probe_id")
-      .agg(sum(r6d(col("rel").cast("double")
-        / (log(col("qrank").cast("double") + 1.0) / math.log(2.0)))).as("dcg_dec"))
+      .agg(sum(round6(col("rel").cast("double")
+        / (log(col("qrank").cast("double") + 1.0) / math.log(2.0))).cast("decimal(18,6)"))
+        .as("dcg_dec"))
       .select(col("probe_id"),
         round4(col("dcg_dec").cast("double") / idcg).as("ndcg"))
       .orderBy("probe_id")
@@ -4040,9 +4026,8 @@ object VectorQueries {
         "CAST(bit_count(lo ^ plo) + bit_count(hi ^ phi) AS BIGINT)"))
       .withColumn("rk", row_number().over(byHam))
       .filter(col("rk") <= TopK)
-      .withColumn("w6", floor(lit(1.0) /
-        (log(col("rk").cast("double") + 1.0) / math.log(2.0))
-        * 1000000.0 + 0.5).cast("decimal(28,0)"))
+      .withColumn("w6", units(lit(1.0) /
+        (log(col("rk").cast("double") + 1.0) / math.log(2.0)), 1e6).cast("decimal(28,0)"))
     // label-grain frames staged (a handful of rows each): without the
     // checkpoints the exposure TOTAL re-ran the whole slots window fan
     // and the corpus total re-ran the corpus aggregate (24 parquet
@@ -4081,8 +4066,7 @@ object VectorQueries {
        |                  CAST(bit_count(xor(lo, plo)) + bit_count(xor(hi, phi)) AS BIGINT) AS ham
        |           FROM b, p WHERE vec_id <> probe_id),
        |     sl AS (SELECT label,
-       |              CAST(floor(1.0 / (ln(CAST(rk AS DOUBLE) + 1.0) / $ln2)
-       |                * 1000000.0 + 0.5) AS DECIMAL(28,0)) AS w6
+       |              CAST(${duckUnits(s"1.0 / (ln(CAST(rk AS DOUBLE) + 1.0) / $ln2)", 1e6)} AS DECIMAL(28,0)) AS w6
        |            FROM (SELECT label, row_number() OVER (PARTITION BY probe_id
        |                    ORDER BY ham, vec_id) AS rk
        |                  FROM j) WHERE rk <= $TopK),
@@ -4380,8 +4364,8 @@ object VectorQueries {
     val w = Window.partitionBy("p_id").orderBy(col("s6i").desc, col("vec_id"))
     val nbrs = vecs.join(probes,
         col("bucket") === col("pbucket") && col("vec_id") =!= col("p_id"))
-      .withColumn("s6i", floor(VectorFns.cosineStaged(
-        col("v"), col("pv"), col("nrm"), col("pnrm")) * 1000000.0 + 0.5))
+      .withColumn("s6i", units(VectorFns.cosineStaged(
+        col("v"), col("pv"), col("nrm"), col("pnrm")), 1e6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= CalK)
     nbrs.groupBy("p_id", "p_label", "label")
@@ -4422,7 +4406,7 @@ object VectorQueries {
        |                  bucket AS pbucket
        |           FROM b WHERE vec_id % $CalProbeStep = 0 AND vec_id < $ProbeIdCap),
        |     s AS (SELECT p.p_id, p.p_label, b.vec_id, b.label,
-       |                  CAST(floor((${duckDot("b.v", "p.pv")} / (b.nrm * p.pnrm)) * 1000000.0 + 0.5) AS BIGINT) AS s6i
+       |                  CAST(${duckUnits(s"${duckDot("b.v", "p.pv")} / (b.nrm * p.pnrm)", 1e6)} AS BIGINT) AS s6i
        |           FROM b JOIN p ON b.bucket = p.pbucket AND b.vec_id <> p.p_id),
        |     nb AS (SELECT p_id, p_label, label FROM (
        |              SELECT p_id, p_label, label,
@@ -4962,7 +4946,7 @@ object VectorQueries {
     val m = Tables.embeddings(spark, sfDir)
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .withColumn("x6",
-        (floor(col("x").cast("double") * 1000000.0 + 0.5) / 1000000.0)
+        round6(col("x").cast("double"))
           .cast("decimal(18,6)"))
       .groupBy("label", "dim")
       .agg(count(lit(1)).as("n"), sum(col("x6")).as("s"))
@@ -4988,7 +4972,7 @@ object VectorQueries {
   private val sqlEmbedDrift =
     s"""WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |     x AS (SELECT label, CAST(i - 1 AS INT) AS dim,
-       |                  CAST(floor(v[CAST(i AS INT)] * 1000000.0 + 0.5) / 1000000.0
+       |                  CAST(${duckRound6("v[CAST(i AS INT)]")}
        |                    AS DECIMAL(18,6)) AS x6
        |           FROM e CROSS JOIN range(1, 65) t(i)),
        |     m AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS n, sum(x6) AS s

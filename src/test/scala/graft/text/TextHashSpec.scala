@@ -310,6 +310,22 @@ class TextHashSpec extends SparkSpec {
     val got = Seq(0.31525, 0.125, 0.12345).toDF("x")
       .select(TextFns.round4(col("x"))).collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(0.3152, 0.125, 0.1235))
+    // The same rule at each scale, on doubles just below a …5 tie:
+    // 1.005·100 = 100.49999999999999, 0.0001245·1e6 = 124.49999999999999.
+    def jvm(x: Double, s: Double): Long = math.floor(x * s + 0.5).toLong
+    val r = Seq((1.005, 0.31525, 0.0001245)).toDF("c", "q", "m")
+      .select(TextFns.units(col("c"), 100.0), TextFns.units(col("q"), 1e4),
+        TextFns.units(col("m"), 1e6), TextFns.round6(col("m"))).head
+    assert(Seq(r.getLong(0), r.getLong(1), r.getLong(2)) ==
+      Seq(jvm(1.005, 100.0), jvm(0.31525, 1e4), jvm(0.0001245, 1e6)))
+    assert(Seq(r.getLong(0), r.getLong(1), r.getLong(2)) == Seq(100L, 3152L, 124L))
+    assert(r.getDouble(3) == jvm(0.0001245, 1e6) / 1e6 && r.getDouble(3) == 0.000124)
+    // The SQL mirrors print the DECIMAL literals the oracles always
+    // used (a 1.0E6 would be a DOUBLE and change DECIMAL arithmetic).
+    assert(TextFns.duckRound6("x") == "(floor((x) * 1000000.0 + 0.5) / 1000000.0)")
+    assert(TextFns.duckUnits("x", 100.0) == "floor((x) * 100.0 + 0.5)")
+    assert(TextFns.duckUnits("x", 1e4) == "floor((x) * 10000.0 + 0.5)")
+    assert(TextFns.duckUnits("x", 1e6) == "floor((x) * 1000000.0 + 0.5)")
   }
 
   test("native hash functions are SQL-callable after registration") {
