@@ -487,11 +487,11 @@ object Projection {
         VectorFns.toDouble(col("embedding")).as("v"))
       .join(broadcast(cents), "label")
       .withColumn("d2", VectorNative.sqDist(col("v"), col("cv")))
-    val d6 = round6(col("d2")).cast("decimal(28,6)")
+    val d2dec = round6(col("d2")).cast("decimal(28,6)")
     val stats = dists.groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
-        sum(d6).as("sd"),
-        sum((d6 * d6).cast("decimal(38,12)")).as("sdd"))
+        sum(d2dec).as("sd"),
+        sum((d2dec * d2dec).cast("decimal(38,12)")).as("sdd"))
       .withColumn("mean_d2", col("sd").cast("double") / col("n_vecs").cast("double"))
       .withColumn("sigma", sqrt(col("sdd").cast("double") / col("n_vecs").cast("double")
         - col("mean_d2") * col("mean_d2")))
@@ -506,7 +506,7 @@ object Projection {
   }
 
   private val sqlCentroidOutliers = {
-    val d6 = s"CAST(${duckRound6("d2")} AS DECIMAL(28,6))"
+    val d2dec = s"CAST(${duckRound6("d2")} AS DECIMAL(28,6))"
     val sqd = "list_reduce([CAST(0 AS DOUBLE)] || list_transform(range(1, len(v) + 1), " +
       "i -> (v[CAST(i AS INT)] - cv[CAST(i AS INT)]) * (v[CAST(i AS INT)] - cv[CAST(i AS INT)])), (acc, y) -> acc + y)"
     s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -521,10 +521,10 @@ object Projection {
        |     d AS (SELECT e.vec_id, e.label, $sqd AS d2
        |           FROM e JOIN ce ON e.label = ce.label),
        |     st AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-       |                   CAST(sum($d6) AS DOUBLE) / count(*) AS mean_d2,
-       |                   sqrt(CAST(sum(CAST($d6 * $d6 AS DECIMAL(38,12))) AS DOUBLE) / count(*)
-       |                     - (CAST(sum($d6) AS DOUBLE) / count(*))
-       |                       * (CAST(sum($d6) AS DOUBLE) / count(*))) AS sigma
+       |                   CAST(sum($d2dec) AS DOUBLE) / count(*) AS mean_d2,
+       |                   sqrt(CAST(sum(CAST($d2dec * $d2dec AS DECIMAL(38,12))) AS DOUBLE) / count(*)
+       |                     - (CAST(sum($d2dec) AS DOUBLE) / count(*))
+       |                       * (CAST(sum($d2dec) AS DOUBLE) / count(*))) AS sigma
        |            FROM d GROUP BY label)
        |SELECT d.label AS label, max(n_vecs) AS n_vecs,
        |       ${duckRound4("max(mean_d2)")} AS mean_d2,
